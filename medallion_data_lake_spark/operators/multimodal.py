@@ -359,6 +359,15 @@ PHASH_BANDS = 8
 PHASH_BAND_BITS = PHASH_BITS // PHASH_BANDS   # 7
 
 
+def payload_tokens(text_col) -> "F.Column":
+    """The payload's whitespace tokens (empty strings dropped) — what
+    :func:`fake_thumbnail_expr` reads and what a query's has-a-token
+    guard counts."""
+    return F.filter(
+        F.split(F.trim(text_col), r"\s+"), lambda t: t != F.lit("")
+    )
+
+
 def fake_thumbnail_expr(text_col) -> "F.Column":
     """Deterministic fake 'decode + resample': a 63-pixel grid whose
     pixel i is the LENGTH of token (i mod n_tokens) of the payload text
@@ -368,18 +377,27 @@ def fake_thumbnail_expr(text_col) -> "F.Column":
     CONTENT-CORRELATED: near-duplicate payloads produce mostly-equal
     grids, so dHash distances are small exactly when the payloads are
     near-identical — which is what makes the fake honest for exercising
-    the banding/pair plan. Pure codegen expressions, no Python.
+    the banding/pair plan.
 
-    PRECONDITION: the text must have >= 1 token (filter rows on token
-    count first — ``i % size(tokens)`` divides by zero on a
-    whitespace-only payload; ANSI mode aborts the query on it). The
-    kernel path (:func:`thumbnail_pixels_batch`) drops such rows."""
-    toks = F.filter(
-        F.split(F.trim(text_col), r"\s+"), lambda t: t != F.lit("")
+    Shape: the payload is tokenized ONCE per row into the lengths of its
+    first 63 tokens, and the grid is those lengths repeated end to end
+    and cut at 63 (``slice(flatten(array_repeat(lens, 63)), 1, 63)``),
+    so pixel i = lens[i mod n] for n < 63 and lens[i] otherwise. No
+    lambda captures an outer expression: Spark interprets higher-order
+    functions and does not share subexpressions across a lambda, so a
+    per-pixel lambda reading the token array re-splits the payload on
+    every read.
+
+    A payload with no tokens yields an EMPTY grid, which
+    :func:`dhash_expr` cannot read (63 ``element_at`` probes): filter
+    rows on ``size(payload_tokens(text)) > 0`` first. The kernel path
+    (:func:`thumbnail_pixels_batch`) drops such rows."""
+    lens = F.transform(
+        F.slice(payload_tokens(text_col), 1, PHASH_NPIX),
+        lambda t: F.length(t),
     )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(PHASH_NPIX - 1)),
-        lambda i: F.length(F.element_at(toks, (i % F.size(toks)) + F.lit(1))),
+    return F.slice(
+        F.flatten(F.array_repeat(lens, PHASH_NPIX)), 1, PHASH_NPIX
     )
 
 

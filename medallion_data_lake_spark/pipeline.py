@@ -72,13 +72,19 @@ def run_silver(
             continue
         bronze = read_bronze_json(spark, path, table)
         clean, corrupt = split_corrupt(bronze)
-        silver = conform(clean, SAKILA_RULES[table])
-        write_partitioned(silver, os.path.join(silver_root, table))
+        try:
+            silver = conform(clean, SAKILA_RULES[table])
+            write_partitioned(silver, os.path.join(silver_root, table))
+            n_corrupt = corrupt.count()
+        finally:
+            # a cached bronze read left behind would answer every later
+            # read of this path, hiding files added since
+            bronze.unpersist()
         # one count per table, from the already-written data — not the
         # reference's recompute-the-whole-lineage double count
         rows = spark.read.parquet(os.path.join(silver_root, table)).count()
         report.add("silver", table, rows, round(time.perf_counter() - t0, 2),
-                   corrupt_rows=corrupt.count())
+                   corrupt_rows=n_corrupt)
     return report
 
 
@@ -124,9 +130,8 @@ def reconcile(spark: SparkSession, bronze_root: str, silver_root: str, table: st
               amount_col: str | None = None) -> DataFrame:
     """Cross-layer QA reconciliation (A9, reference ``query_datalake.py:199-214``):
     UNION ALL of per-layer counts (+ exact amount sums when given)."""
-    bronze, _ = split_corrupt(
-        read_bronze_json(spark, os.path.join(bronze_root, table), table)
-    )
+    raw = read_bronze_json(spark, os.path.join(bronze_root, table), table)
+    bronze, _ = split_corrupt(raw)
     silver = read_layer(spark, os.path.join(silver_root, table))
     def agg(df: DataFrame, layer: str, amount_expr) -> DataFrame:
         cols = [F.lit(layer).alias("layer"), F.count(F.lit(1)).alias("record_count")]
@@ -138,7 +143,14 @@ def reconcile(spark: SparkSession, bronze_root: str, silver_root: str, table: st
         return df.agg(*cols)
     b_amount = F.col(f"data.{amount_col}").try_cast("double") if amount_col else None
     s_amount = F.col(amount_col) if amount_col else None
-    return agg(bronze, "bronze", b_amount).unionByName(agg(silver, "silver", s_amount))
+    try:
+        # computed now, not when the caller collects, so that the split's
+        # cache can be released before returning
+        b = agg(bronze, "bronze", b_amount)
+        b = spark.createDataFrame(b.collect(), b.schema)
+    finally:
+        raw.unpersist()
+    return b.unionByName(agg(silver, "silver", s_amount))
 
 
 def run_pipeline(

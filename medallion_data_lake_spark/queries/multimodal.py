@@ -127,19 +127,19 @@ def media_near_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multimodal story honest (the hash consumes DECODED content)
     text = F.decode(F.encode("text", "utf-8"), "utf-8")
     # TWO projections, deliberately: dhash_expr reads its pixel array
-    # 112 times (56 bits x 2 element_at); inlining the thumbnail
-    # transform into every read blows up the codegen tree and costs 2x
-    # (measured 2.0s -> 1.0s at sf0.1). CollapseProject keeps the
-    # boundary because the aliased transform is non-cheap and
-    # multiply-referenced.
+    # 112 times (56 bits x 2 element_at); inlining the thumbnail into
+    # every read would rebuild the grid per read. CollapseProject keeps
+    # the boundary because the aliased grid is non-cheap and
+    # multiply-referenced. The grid projection tokenizes each payload
+    # once (fake_thumbnail_expr's docstring has the shape).
     # the guard must be TOKEN-count-based like the oracle's len(t) > 0:
     # trim() strips only 0x20, so a tab/newline-only text would pass a
-    # trim()-based filter with ZERO tokens and hit i % 0 inside the
-    # thumbnail grid (DIVIDE_BY_ZERO under Spark 4's default ANSI mode;
-    # spurious phash-0 pairs without it) — r10 review finding
-    n_tokens = F.size(
-        F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != F.lit(""))
-    )
+    # trim()-based filter with ZERO tokens and reach the thumbnail with
+    # an empty grid, which dhash_expr cannot read (r10 review finding).
+    # It tokenizes once more: Catalyst pushes a filter below the
+    # projection it reads, inlining the aliased expression, so a guard on
+    # a projected token array would not share it anyway.
+    n_tokens = F.size(multimodal.payload_tokens(text))
     px = (
         d.filter(n_tokens > 0)
         .select(

@@ -43,7 +43,10 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean, corrupt) — corrupt rows quarantined, never dropped silently.
 
     Spark refuses corrupt-column-only queries on raw JSON (the column is
-    populated during parsing), so the split materializes through a cache.
+    populated during parsing), so the split materializes through a cache
+    of ``df``. The caller releases it with ``df.unpersist()`` once both
+    parts are consumed: until then every read of the same path is served
+    from the cache, which misses files added since.
     """
     if CORRUPT_COL not in df.columns:
         return df, df.limit(0)

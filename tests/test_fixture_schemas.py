@@ -55,6 +55,19 @@ def test_fixture_matches_declared_schema(sf_dir, table):
         )
 
 
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_customer_key_is_unique(sf_dir):
+    """customer_value_tiers aggregates orders per o_custkey and then
+    joins customer, so it relies on c_custkey being the primary key: a
+    repeated key would emit that customer's totals once per copy."""
+    path = os.path.join(sf_dir, "customer.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"{path} absent")
+    keys = pq.read_table(path, columns=["c_custkey"]).column(0).to_pylist()
+    assert None not in keys
+    assert len(set(keys)) == len(keys), f"{path}: duplicate c_custkey"
+
+
 def test_events_cache_key_sees_nested_rewrites(tmp_path):
     """The footer-cache freshness key must change when a data file
     nested inside a partition subdirectory is rewritten in place

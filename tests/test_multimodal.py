@@ -174,7 +174,20 @@ def test_thumbnail_kernel_matches_expression_path(spark):
     """The mapInPandas fake-decode kernel and the pure-expression fake
     thumbnail agree bit-for-bit on text payloads (the deterministic
     contract that makes the gated query's oracle honest)."""
-    texts = [(1, "the cat sat on the mat"), (2, "a bb ccc dddd"), (3, "x")]
+    words = ["a", "bb", "ccc", "dddd", "eeeee", "ffffff", "ggggggg"]
+
+    def payload(n, sep=" "):
+        return sep.join(words[i % len(words)] * (1 + i // 7) for i in range(n))
+
+    texts = [
+        (1, "the cat sat on the mat"), (2, "a bb ccc dddd"), (3, "x"),
+        # the grid cycles tokens below 63, reads the first 63 above
+        (4, payload(62)), (5, payload(63)), (6, payload(64)),
+        (7, payload(200)),
+        # every separator the tokenizer splits on, runs of them, edges
+        (8, payload(40, "\t")), (9, payload(70, "\n")),
+        (10, payload(30, "   ")), (11, "  a\tbb \n ccc\t\t dddd  \n"),
+    ]
     d = spark.createDataFrame(texts, "media_id long, text string")
     via_expr = {
         r["media_id"]: r["px"]
@@ -191,6 +204,12 @@ def test_thumbnail_kernel_matches_expression_path(spark):
     }
     assert via_kernel == via_expr
     assert all(len(v) == multimodal.PHASH_NPIX for v in via_kernel.values())
+    # and both equal the definition: pixel i = len(token i mod n)
+    for mid, text in texts:
+        toks = text.split()
+        assert via_expr[mid] == [
+            len(toks[i % len(toks)]) for i in range(multimodal.PHASH_NPIX)
+        ], mid
 
 
 def test_thumbnail_kernel_real_decoder_parity(spark):
@@ -235,9 +254,7 @@ def test_whitespace_only_payload_is_guarded(spark):
     # the query builder only takes sf_dir; drive the same expressions
     # directly over a frame containing the hostile rows
     text = F.col("text")
-    n_tokens = F.size(
-        F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != F.lit(""))
-    )
+    n_tokens = F.size(multimodal.payload_tokens(text))
     d = spark.createDataFrame(
         [(1, "\t"), (2, "\n \n"), (3, "a bb ccc " * 20), (4, "a bb ccc " * 20)],
         "doc_id long, text string",

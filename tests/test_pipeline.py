@@ -5,10 +5,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from medallion_data_lake_spark.pipeline import reconcile, run_pipeline
+from medallion_data_lake_spark.pipeline import reconcile, run_pipeline, run_silver
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_run_pipeline_end_to_end(spark, bronze_root, tmp_path_factory):
+    before = _persisted_rdds(spark)
     silver_root = str(tmp_path_factory.mktemp("lake_silver"))
     gold_root = str(tmp_path_factory.mktemp("lake_gold"))
     result = run_pipeline(spark, bronze_root, silver_root, gold_root)
@@ -33,6 +38,44 @@ def test_run_pipeline_end_to_end(spark, bronze_root, tmp_path_factory):
     rec = {r["layer"]: r for r in reconcile(spark, bronze_root, silver_root, "payment", "amount").collect()}
     assert rec["bronze"]["record_count"] == rec["silver"]["record_count"] == 30
     assert rec["bronze"]["total_amount"] == rec["silver"]["total_amount"]
+    # split_corrupt's bronze cache is released (the session is shared, so
+    # only RDDs persisted by this run count)
+    assert _persisted_rdds(spark) - before == set()
+
+
+def test_run_silver_reads_a_grown_bronze_root(spark, bronze_root, tmp_path):
+    """A second run_silver in the same session sees files added to the
+    bronze root since the first: a bronze read left cached by the first
+    run would answer the second with the old rows."""
+    import json
+    import shutil
+
+    before = _persisted_rdds(spark)
+    root = tmp_path / "bronze"
+    shutil.copytree(f"{bronze_root}/payment", root / "payment")
+    first = run_silver(spark, str(root), str(tmp_path / "s1"),
+                       tables=("payment",))
+    day2 = root / "payment" / "year=2024" / "month=1" / "day=2"
+    day2.mkdir(parents=True)
+    (day2 / "batch.json").write_text("\n".join(
+        json.dumps({"table": "payment", "operation": "INSERT",
+                    "timestamp": "2024-01-02T00:00:00",
+                    "data": {"payment_id": str(i), "customer_id": "1",
+                             "staff_id": "1", "rental_id": str(i),
+                             "amount": "1.00",
+                             "payment_date": "2024-01-02 10:00:00",
+                             "last_update": "2024-01-02 00:00:00"}})
+        for i in range(31, 51)
+    ))
+    second = run_silver(spark, str(root), str(tmp_path / "s2"),
+                        tables=("payment",))
+    assert [s.rows for s in first.stages] == [30]
+    assert [s.rows for s in second.stages] == [50]
+    rec = {r["layer"]: r["record_count"]
+           for r in reconcile(spark, str(root), str(tmp_path / "s2"),
+                              "payment").collect()}
+    assert rec == {"bronze": 50, "silver": 50}
+    assert _persisted_rdds(spark) - before == set()
 
 
 def test_cli_sql_over_fixtures(capsys):
