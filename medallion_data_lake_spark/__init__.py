@@ -15,7 +15,7 @@ Package map:
   session     SparkSession factory (AQE, Arrow, UTC, scale-aware configs)
   schemas     explicit StructTypes (no runtime inference at scale)
   catalog     layer-aware view registry over the lake + test star schema
-  functions   shared column expressions (tiering, safe division, cosine, ...)
+  functions   shared column expressions (tiering, cosine, ...)
   operators   cleaning rules, gold builders, dedup/similarity/text/multimodal
   sources     batch readers, partitioned sinks, CDC upsert
   streaming   Structured Streaming jobs over the events stream

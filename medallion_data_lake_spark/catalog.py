@@ -4,7 +4,7 @@ The reference registers every layer table as a ``{layer}_{table}`` temp view
 and serves SQL over the session catalog (reference
 ``sakila-data-lake/query_datalake.py:32-94``). We keep that surface:
 
-- ``load_star_tables`` registers the driver's star-schema fixtures,
+- ``register_star_views`` registers the driver's star-schema fixtures,
 - ``Catalog`` registers medallion layers with the same naming convention,
 - listing/describe helpers mirror the reference CLI (S12/S13).
 
@@ -21,46 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schemas import BROADCASTABLE_DIMS, STAR_SCHEMAS, STAR_TABLES
+from .schemas import STAR_SCHEMAS, STAR_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# events.ts footer-type probe results, keyed by (path, mtime, size) (see
-# load_star_table): the probed TYPE is a constant per file version.
-# Metadata only — never rows.
-_EVENTS_TS_TYPE: dict[tuple, str] = {}
 
 
 def star_path(sf_dir: str, table: str) -> str:
     return os.path.join(sf_dir, f"{table}.parquet")
-
-
-def _events_cache_key(path: str) -> tuple:
-    """Freshness key for the events ts-type footer cache. File-backed:
-    (path, mtime, size). Directory-backed (a Spark-written table):
-    os.stat on the DIRECTORY succeeds but its entry can stay unchanged
-    when a data file is rewritten in place (r15 ADVICE) — key on the
-    data files themselves (count + max mtime + total size), RECURSIVELY
-    (r16 review: partitioned layouts nest data files one level down,
-    where a rewrite leaves the top-level entries unchanged). Raises
-    OSError for unreachable paths (caller probes fresh)."""
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return (path, st.st_mtime_ns, st.st_size)
-    files = []
-    for root, dirs, names in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        files.extend(
-            os.stat(os.path.join(root, f))
-            for f in names
-            if not f.startswith(("_", "."))
-        )
-    return (
-        path,
-        len(files),
-        max((f.st_mtime_ns for f in files), default=0),
-        sum(f.st_size for f in files),
-    )
 
 
 def load_star_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -72,27 +39,12 @@ def load_star_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ``events.ts`` has shipped in two fixture generations: TIMESTAMP(MICROS)
     (a native Spark type) and TIMESTAMP(NANOS), which Spark has no type
     for — under ``nanosAsLong`` the latter surfaces as raw long nanos. We
-    schema-infer just that file's footer and convert only when the nanos
-    form appears, matching DuckDB's own ns→µs read truncation.
+    let Spark infer just that file's schema and convert only when the
+    nanos form appears, matching DuckDB's own ns→µs read truncation.
     """
     if table == "events":
         raw = spark.read.parquet(star_path(sf_dir, table))
-        # footer-type probe cached per path (r15): `.dtypes` analyzes the
-        # relation (a driver-side footer read, ~0.1 s) and the answer is a
-        # property of the immutable fixture FILE, not of any query — every
-        # query build was re-paying it. Schema metadata only; no query
-        # results are cached (the DataFrame itself is rebuilt per call).
-        path = star_path(sf_dir, table)
-        try:  # mtime+size in the key: a rewritten fixture re-probes
-            key = _events_cache_key(path)
-        except OSError:  # remote/racing path: probe fresh
-            key = None
-        ts_type = _EVENTS_TS_TYPE.get(key) if key else None
-        if ts_type is None:
-            ts_type = dict(raw.dtypes)["ts"]
-            if key:
-                _EVENTS_TS_TYPE[key] = ts_type
-        if ts_type == "bigint":
+        if isinstance(raw.schema["ts"].dataType, T.LongType):
             # TIMESTAMP(NANOS) generation: integer `div`, not `/` —
             # epoch-nanos (~1.7e18) overflow double's 53-bit mantissa,
             # so a float division would corrupt microseconds.
@@ -124,86 +76,27 @@ def load_star_table_spread(
     return df.repartition(n, F.col(key)) if key else df.repartition(n)
 
 
-class _LazyStarTables(dict):
-    """dict of table -> DataFrame that builds entries on first access.
-
-    Loading a fixture table costs a driver-side relation resolution
-    (file listing; for events also a footer probe) — ~25 ms per table.
-    Eagerly loading all ten put ~0.25 s of pure driver work into EVERY
-    query build even when the query touches one table (guide §5: the
-    driver should do almost no data work). Entries are per-instance, so
-    nothing is shared across builds — each call still constructs fresh
-    DataFrames.
-    """
+class StarTables:
+    """Fixture tables for one query build: ``t["orders"]`` loads a table
+    on first use and returns that same DataFrame on every later use, so
+    a builder that reads a table twice plans over one relation."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
-        super().__init__()
         self._spark = spark
         self._sf_dir = sf_dir
+        self._loaded: dict[str, DataFrame] = {}
 
-    def __missing__(self, table: str) -> DataFrame:
-        if table not in STAR_TABLES:
-            raise KeyError(table)
-        df = load_star_table(self._spark, self._sf_dir, table)
-        self[table] = df
-        return df
-
-    # the FULL dict contract must see through laziness (r15 ADVICE):
-    # dict.get / `in` / copy() bypass __missing__, so without these a
-    # valid-but-unloaded table read as absent and copies snapshotted
-    # only the loaded subset
-    def get(self, table, default=None):
-        try:
-            return self[table]
-        except KeyError:
-            return default
-
-    def __contains__(self, table) -> bool:
-        return table in STAR_TABLES or dict.__contains__(self, table)
-
-    def copy(self) -> dict:
-        return {t: self[t] for t in STAR_TABLES}
-
-    # iteration/len reflect the full fixture set, not just what loaded
-    def __iter__(self):
-        return iter(STAR_TABLES)
-
-    def __len__(self) -> int:
-        return len(STAR_TABLES)
-
-    def keys(self):
-        return list(STAR_TABLES)
-
-    def items(self):
-        return [(t, self[t]) for t in STAR_TABLES]
-
-    def values(self):
-        return [self[t] for t in STAR_TABLES]
+    def __getitem__(self, table: str) -> DataFrame:
+        if table not in self._loaded:
+            self._loaded[table] = load_star_table(self._spark, self._sf_dir, table)
+        return self._loaded[table]
 
 
-def load_star_tables(
-    spark: SparkSession, sf_dir: str, register: bool = True
-) -> dict[str, DataFrame]:
-    """Load every fixture table; optionally register plain-name temp views.
-
-    ``register=False`` (the query-builder path) returns a LAZY mapping —
-    tables resolve on first access, so a single-table query pays for one
-    relation resolution, not ten. ``register=True`` stays eager: the CLI
-    surface registers every view up front, like the reference.
-    """
-    if not register:
-        return _LazyStarTables(spark, sf_dir)
-    out: dict[str, DataFrame] = {}
+def register_star_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register every fixture table as a plain-name temp view (the CLI
+    surface, like the reference's catalog)."""
     for t in STAR_TABLES:
-        df = load_star_table(spark, sf_dir, t)
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out
-
-
-def is_broadcast_dim(table: str) -> bool:
-    """True for dimensions that should broadcast at any data scale."""
-    return table in BROADCASTABLE_DIMS
+        load_star_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 class Catalog:

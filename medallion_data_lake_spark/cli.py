@@ -23,7 +23,7 @@ import os
 import sys
 import time
 
-from .catalog import Catalog, load_star_tables
+from .catalog import Catalog, register_star_views
 from .session import get_spark
 
 SAMPLES: dict[str, str] = {
@@ -51,7 +51,7 @@ SAMPLES: dict[str, str] = {
 
 def _mount(spark, args) -> Catalog | None:
     if args.sf:
-        load_star_tables(spark, args.sf, register=True)
+        register_star_views(spark, args.sf)
         return None
     roots = {layer: os.path.join(args.lake, layer) for layer in Catalog.LAYERS}
     cat = Catalog(spark, roots)

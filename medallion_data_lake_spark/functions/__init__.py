@@ -13,26 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def round_money(col: Column | str, scale: int = 2) -> Column:
-    """Money display rounding (reference ``query_datalake.py:190-192``).
-
-    Doubles are also rounded before oracle comparison so that
-    summation-order differences between engines can't flip the hash
-    (SURVEY.md §7.4.1: DOUBLE + ROUND(x,2) in both engines).
-    """
-    return F.round(F.col(col) if isinstance(col, str) else col, scale)
-
-
-def safe_div(num: Column, den: Column, default: Column | None = None) -> Column:
-    """Division with a zero-denominator guard.
-
-    The reference guards revenue/day with when/otherwise (reference
-    ``sakila-data-lake/silver_to_gold.py:119-121``).
-    """
-    fallback = default if default is not None else F.lit(None)
-    return F.when(den != 0, num / den).otherwise(fallback)
-
-
 def value_tier(total: Column, bounds: tuple[float, float, float]) -> Column:
     """Customer value tiering CASE ladder.
 
@@ -80,37 +60,8 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product for a KNOWN dimension, unrolled to straight-line
-    multiply-adds.
-
-    Left-associated additions — the same summation order as the fold, so
-    results are bit-identical to ``dot`` and to the oracle's sequential
-    ``list_dot_product``.
-
-    MEASURED CAVEAT: at dim=64 this is ~60% SLOWER than the HOF ``dot``
-    in Spark 4 — the 64-term tree with per-element null/bounds checks
-    overflows the codegen budget and falls back to interpreted eval,
-    while zip_with+aggregate stays in its specialized loop. Kept for
-    LOW dimensions (≤16, e.g. quantizer sub-vectors) where unrolling
-    does win; use ``dot`` for full embeddings.
-    """
-    terms = [
-        F.element_at(a, i + 1).cast("double") * F.element_at(b, i + 1).cast("double")
-        for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def l2_norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))
 
 
 def cosine(a: Column, b: Column) -> Column:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_star_tables
+from ..catalog import StarTables
 from ..functions import group_concat, value_tier
 from . import query
 from ._parity import (
@@ -44,10 +44,6 @@ _SQL_GROWTH = sql_stable_round(
 )
 
 
-def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return load_star_tables(spark, sf_dir, register=False)
-
-
 # ---------------------------------------------------------------------------
 # Aggregation over a filtered scan (reference A1/P8; TPC-H Q1 shape)
 # ---------------------------------------------------------------------------
@@ -74,7 +70,7 @@ def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # brand_small_qty_revenue + discount_revenue_delta (first gated r10)
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir)["lineitem"]
+    l = StarTables(spark, sf_dir)["lineitem"]
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.filter(F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp_ntz"))
@@ -120,7 +116,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rounded sum so both engines see identical boundary values.",
 )
 def customer_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     # Aggregate the fact FIRST on the int key (o_custkey is the grouping
     # key — c_name/c_mktsegment are functionally dependent on the
     # customer PK), then left-join the dim (r16, guide §2.3: aggregate
@@ -182,7 +178,7 @@ def customer_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-gated via large_volume_orders + suppliers_kept_waiting
 )
 def top_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     # Aggregate the fact FIRST on the int key (600k rows -> ~#parts,
     # partial agg map-side), then join the small aggregate to the dim —
     # never carry p_name strings through the hash aggregate. p_partkey
@@ -235,7 +231,7 @@ def top_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + part_supplier_counts (first gated r10)
 )
 def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     orders = t["orders"].filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
@@ -276,7 +272,7 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def order_priority_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("order_count"),
@@ -318,7 +314,7 @@ def order_priority_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def daily_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .groupBy(F.to_date("o_orderdate").alias("order_date"))
         .agg(
             F.count(F.lit(1)).alias("total_transactions"),
@@ -361,7 +357,7 @@ def daily_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def calendar_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .groupBy(
             F.year("o_orderdate").alias("order_year"),
             F.month("o_orderdate").alias("order_month"),
@@ -400,7 +396,7 @@ def calendar_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def big_spenders_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("order_count"),
@@ -436,7 +432,7 @@ def big_spenders_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(SURVEY.md §7.4.2). J4 dim join (nation broadcast).",
 )
 def nation_customer_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     return (
         t["customer"]
         .filter(F.col("c_acctbal") > 9000)
@@ -469,7 +465,7 @@ def nation_customer_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-gated r13 (gated r1-r11, out since the r12 rotation — oldest-first sweep)
 )
 def layer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     o = t["orders"].agg(
         F.lit("orders").alias("src"),
         F.count(F.lit(1)).alias("record_count"),
@@ -509,7 +505,7 @@ def layer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def segment_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return (
-        _t(spark, sf_dir)["customer"]
+        StarTables(spark, sf_dir)["customer"]
         .select(
             "c_mktsegment",
             "c_custkey",
@@ -544,7 +540,7 @@ def segment_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-gated via suppliers_kept_waiting + priority_late_ship_exists
 )
 def customers_without_early_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     early = t["orders"].filter(
         F.col("o_orderdate") < F.lit("1995-07-01 00:00:00").cast("timestamp_ntz")
     )
@@ -575,7 +571,7 @@ def customers_without_early_orders(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def segment_balance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["customer"]
+        StarTables(spark, sf_dir)["customer"]
         .filter(
             F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")
             & F.col("c_acctbal").between(1000, 5000)
@@ -606,7 +602,7 @@ def segment_balance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned = F.when(F.col("l_returnflag") == "R", F.col("l_extendedprice"))
-    return _t(spark, sf_dir)["lineitem"].agg(
+    return StarTables(spark, sf_dir)["lineitem"].agg(
         F.count(F.lit(1)).alias("line_count"),
         stable_round(
             F.coalesce(dsum(returned), F.lit(0)).cast("double"), 2
@@ -641,7 +637,7 @@ def scalar_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_events_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_id").orderBy("ts", "value", "event_type")
     return (
-        _t(spark, sf_dir)["events"]
+        StarTables(spark, sf_dir)["events"]
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -670,7 +666,7 @@ def dedup_events_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stay driver-gated via nation_value_concentration + brand_small_qty_revenue
 )
 def above_nation_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     t["customer"].createOrReplaceTempView("customer")
     return spark.sql(
         """
@@ -706,7 +702,7 @@ def above_nation_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layer_reconciliation
 )
 def conform_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir)["events"]
+    e = StarTables(spark, sf_dir)["events"]
     return e.select(
         "event_id",
         F.upper(F.trim("event_type")).alias("event_type_norm"),
@@ -735,7 +731,7 @@ def conform_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import EVENT_PROPS
 
-    e = _t(spark, sf_dir)["events"]
+    e = StarTables(spark, sf_dir)["events"]
     return e.select(
         "event_id",
         F.from_json("props", EVENT_PROPS).getField("k").alias("prop_k"),

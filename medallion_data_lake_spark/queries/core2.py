@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_star_tables
+from ..catalog import StarTables
 from . import query
 from ._parity import (
     dsum,
@@ -25,10 +25,6 @@ from ._parity import (
     sql_stable_round,
     stable_round,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return load_star_tables(spark, sf_dir, register=False)
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +45,7 @@ def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # re-gated r12 (out since r1 — oldest-first rotation)
 )
 def customers_with_jumbo_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     jumbo = t["orders"].filter(F.col("o_totalprice") > 450_000)
     return (
         t["customer"]
@@ -80,7 +76,7 @@ def customers_with_jumbo_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def priority_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .rollup("o_orderpriority", "o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("order_count"),
@@ -125,7 +121,7 @@ def priority_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def price_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pcts = F.percentile("l_extendedprice", F.array(F.lit(0.5), F.lit(0.9)))
     return (
-        _t(spark, sf_dir)["lineitem"]
+        StarTables(spark, sf_dir)["lineitem"]
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -157,7 +153,7 @@ def price_distribution_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice", F.array(F.lit(0.5), F.lit(0.9)), F.lit(1000)
     )
     return (
-        _t(spark, sf_dir)["lineitem"]
+        StarTables(spark, sf_dir)["lineitem"]
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -198,7 +194,7 @@ def price_distribution_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def order_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .filter(F.col("o_orderkey") % 100 == 0)
         .select(
             "o_orderkey",
@@ -239,7 +235,7 @@ def order_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 def customer_name_formatting(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = F.col("c_name")
     return (
-        _t(spark, sf_dir)["customer"]
+        StarTables(spark, sf_dir)["customer"]
         .filter(F.col("c_custkey") % 10 == 0)
         .select(
             "c_custkey",
@@ -287,7 +283,7 @@ def customer_name_formatting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # U1/set-ops driver row while layer_reconciliation rotates out
 )
 def status_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir)["orders"]
+    o = StarTables(spark, sf_dir)["orders"]
     flags = (
         o.filter(F.col("o_orderstatus").isin("F", "O"))
         .groupBy("o_custkey")
@@ -398,7 +394,7 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-gated r12 (out since r1 — oldest-first rotation)
 )
 def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     cutoff = F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
     c = t["customer"].filter(F.col("c_mktsegment") == "BUILDING")
     o = t["orders"].filter(F.col("o_orderdate") < cutoff)
@@ -445,7 +441,7 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r1-r3, out since the r4 rotation via the regional_revenue twin)
 )
 def supplier_customer_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     l = t["lineitem"].filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp_ntz"))
@@ -512,7 +508,7 @@ def supplier_customer_nation_volume(spark: SparkSession, sf_dir: str) -> DataFra
 def customer_open_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     ordered = t["orders"].groupBy("o_custkey").agg(dsum("o_totalprice").alias("tot"))
     shipped = (
         t["lineitem"]
@@ -571,7 +567,7 @@ def customer_open_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def segment_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     spend = (
         t["customer"]
         .join(t["orders"], t["customer"].c_custkey == t["orders"].o_custkey)
@@ -613,7 +609,7 @@ def segment_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def order_priority_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("order_count"),
@@ -649,7 +645,7 @@ def order_priority_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def priority_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .cube("o_orderpriority", "o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("order_count"),
@@ -700,7 +696,7 @@ def rolling_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = (
-        _t(spark, sf_dir)["orders"]
+        StarTables(spark, sf_dir)["orders"]
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(money_sum("o_totalprice").alias("daily_revenue"))
     )
@@ -747,7 +743,7 @@ def rolling_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     per_nation = (
         t["orders"]
         .join(t["customer"], t["orders"].o_custkey == t["customer"].c_custkey)
@@ -795,7 +791,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # priority_status_cube (re-gated r11, same GROUPING-expansion shape)
 )
 def priority_status_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     return (
         t["orders"]
         .groupingSets(

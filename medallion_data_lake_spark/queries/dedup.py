@@ -307,22 +307,15 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_pairs(signature_df(spark, sf_dir))
 
 
-def lsh_pairs(sigs: DataFrame, keys_only: bool = False) -> DataFrame:
-    """Banded LSH candidate pairs from a (doc_id, mh0..mhN) signature
-    frame (see the registry query's doc for the plan rationale).
-
-    ``keys_only=True`` returns just ``(doc_a, doc_b)`` — NOT distinct,
-    one row per colliding band — for consumers that only need pair
-    MEMBERSHIP (connected components): the band rows then carry no
-    signature columns (the self-join shuffles ~doc_id+band+bkey instead
-    of +N_MINHASH longs per row — §2.3, fewer shuffled bytes at corpus
-    scale), the per-pair match count is never computed, and the dedup
-    shuffle is left to the consumer, which symmetrizes-then-distincts
-    anyway (the default path's distinct PLUS that one paid two full
-    shuffles of the pair stream)."""
+def _band_self_join(sigs: DataFrame, keep_signatures: bool) -> DataFrame:
+    """Self-join of a (doc_id, mh0..mhN) signature frame on colliding
+    LSH bands, ``a.doc_id < b.doc_id``: one row per colliding band, so a
+    pair that collides in several bands repeats. Each side carries the
+    signature columns only if ``keep_signatures``."""
+    mh = [f"mh{j}" for j in range(N_MINHASH)] if keep_signatures else []
     bands = sigs.select(
         "doc_id",
-        *([] if keys_only else [F.col(f"mh{j}") for j in range(N_MINHASH)]),
+        *[F.col(c) for c in mh],
         F.explode(
             F.array(
                 *[
@@ -340,12 +333,7 @@ def lsh_pairs(sigs: DataFrame, keys_only: bool = False) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select(
-        "doc_id",
-        *([] if keys_only else [f"mh{j}" for j in range(N_MINHASH)]),
-        "bk.band",
-        "bk.bkey",
-    )
+    ).select("doc_id", *mh, "bk.band", "bk.bkey")
     # shuffle-hash self-join (r15): identical banded subtrees on both
     # sides — forcing the shuffle join makes the two Exchanges
     # canonically equal, so ReuseExchange computes the signature fold
@@ -353,15 +341,18 @@ def lsh_pairs(sigs: DataFrame, keys_only: bool = False) -> DataFrame:
     # scale the join must shuffle anyway). Same rationale as
     # operators/multimodal.phash_band_pairs.
     a, b = bands.alias("a").hint("shuffle_hash"), bands.alias("b")
-    if keys_only:
-        return a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bkey") == F.col("b.bkey"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+
+
+def lsh_pairs(sigs: DataFrame) -> DataFrame:
+    """Banded LSH candidate pairs ``(doc_a, doc_b, est_jaccard)``,
+    distinct, from a (doc_id, mh0..mhN) signature frame (see the
+    registry query's doc for the plan rationale)."""
     matches = reduce(
         lambda acc, j: acc
         + F.when(F.col(f"a.mh{j}") == F.col(f"b.mh{j}"), 1).otherwise(0),
@@ -372,18 +363,28 @@ def lsh_pairs(sigs: DataFrame, keys_only: bool = False) -> DataFrame:
     # signatures -> same est_jaccard), so distinct() on the final triple
     # equals the original distinct-pairs-then-score result
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_self_join(sigs, keep_signatures=True)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             stable_round(matches / F.lit(float(N_MINHASH)), 4).alias("est_jaccard"),
         )
         .distinct()
+    )
+
+
+def lsh_pair_keys(sigs: DataFrame) -> DataFrame:
+    """The pairs of :func:`lsh_pairs` as bare ``(doc_a, doc_b)`` keys,
+    NOT distinct: one row per colliding band. For consumers that only
+    need pair MEMBERSHIP (connected components): the band rows carry no
+    signature columns (the self-join shuffles ~doc_id+band+bkey instead
+    of +N_MINHASH longs per row — §2.3, fewer shuffled bytes at corpus
+    scale), the per-pair match count is never computed, and the dedup
+    shuffle is left to the consumer, which symmetrizes-then-distincts
+    anyway (a distinct here PLUS that one would pay two full shuffles
+    of the pair stream)."""
+    return _band_self_join(sigs, keep_signatures=False).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
 
 
@@ -558,15 +559,15 @@ _CC_ORACLE = (
 def dedup_groups_connected(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup_graph import connected_components
 
-    # keys_only (r16): CC needs pair MEMBERSHIP, not est_jaccard — the
-    # full lsh_pairs form carried all N_MINHASH signature longs through
+    # bare pair keys (r16): CC needs pair MEMBERSHIP, not est_jaccard —
+    # the full lsh_pairs form carried all N_MINHASH signature longs through
     # the band self-join, computed the match fraction per pair, and
     # distinct'ed the scored triple, only for this select to drop the
     # score; connected_components re-deduped anyway when symmetrizing.
     # Same candidate set (band collision alone defines it — no jaccard
     # threshold here or in the oracle), proven by
-    # tests/test_dedup_graph.py::test_lsh_keys_only_pair_set.
-    pairs = lsh_pairs(signature_df(spark, sf_dir), keys_only=True)
+    # tests/test_dedup_graph.py::test_lsh_pair_keys_match_lsh_pairs.
+    pairs = lsh_pair_keys(signature_df(spark, sf_dir))
     return connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), "component"
     )

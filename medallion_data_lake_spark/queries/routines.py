@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_star_tables
+from ..catalog import StarTables
 from . import query
 
 PART_STRIDE = 100  # l_partkey % stride == 0 -> deterministic "probe" subset
@@ -52,7 +52,7 @@ PART_STRIDE = 100  # l_partkey % stride == 0 -> deterministic "probe" subset
     # via customer_open_balance (get_customer_balance shape)
 )
 def part_stock_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_star_tables(spark, sf_dir, register=False)["lineitem"]
+    l = StarTables(spark, sf_dir)["lineitem"]
     is_out = F.col("l_linestatus") == "O"
     return (
         l.filter(F.col("l_partkey") % PART_STRIDE == 0)
@@ -87,7 +87,7 @@ def part_stock_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.10 routines driver row while customer_open_balance rotates out
 )
 def parts_held_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_star_tables(spark, sf_dir, register=False)
+    t = StarTables(spark, sf_dir)
     l = t["lineitem"].filter(F.col("l_partkey") % PART_STRIDE == 0)
     held_key = F.when(F.col("l_linestatus") == "O", F.col("o_custkey"))
     with_holder = (

@@ -19,13 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_star_tables
+from ..catalog import StarTables
 from . import query
 from ._parity import money_sum, sql_money_sum, sql_stable_round, stable_round
-
-
-def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return load_star_tables(spark, sf_dir, register=False)
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +59,7 @@ _STATUSES = ["F", "O", "P"]  # orders.o_orderstatus domain (TPC-H fixed)
     # (re-gated this round)
 )
 def order_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     wide = (
         t["orders"]
         .groupBy("o_orderpriority")
@@ -124,7 +120,7 @@ def order_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stay gated via quarter_top_revenue_supplier + segment_order_window_stats
 )
 def part_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     unit = F.col("l_extendedprice") / F.col("l_quantity")
     best = (
         t["lineitem"]
@@ -183,7 +179,7 @@ def part_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def brand_revenue_share_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     branded = F.when(F.col("p_brand") == "Brand#7", rev).otherwise(F.lit(0.0))
     joined = t["lineitem"].join(
@@ -240,7 +236,7 @@ def brand_revenue_share_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def order_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     wide = t["orders"].groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("double").alias("n_orders"),
         money_sum("o_totalprice").alias("revenue"),
@@ -288,7 +284,7 @@ def order_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gap fill had no driver row before)
 )
 def daily_order_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     daily = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
@@ -409,7 +405,7 @@ def signup_purchase_attribution_pairs(
     # re-gated r14 (gated r9-r12, out since the r13 rotation — oldest-first sweep)
 )
 def customer_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     # pre-aggregate the fact to (custkey, n) BEFORE joining: the join's
     # right side is #active-customers rows, never the raw orders table
     per_cust = (
@@ -459,7 +455,7 @@ def customer_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays gated via daily_order_spine (P9) + suppliers' J7 twins below
 )
 def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     c = t["customer"]
     avg_pos = (
         c.filter(F.col("c_acctbal") > 0.0)
@@ -517,7 +513,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays gated via nation_value_concentration + dominant_volume_suppliers
 )
 def priority_late_ship_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     o = t["orders"].filter(
         (F.col("o_orderdate") >= "1997-01-01")
         & (F.col("o_orderdate") < "1998-01-01")
@@ -557,7 +553,7 @@ def priority_late_ship_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     per_nation = (
         t["supplier"]
         .join(F.broadcast(t["nation"]),
@@ -607,7 +603,7 @@ def nation_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def brand_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     brand_keys = (
         t["part"].filter(F.col("p_brand") == "Brand#19").select("p_partkey")
     )
@@ -657,7 +653,7 @@ def brand_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-gated r14 (gated r7-r12, out since the r13 rotation — oldest-first sweep)
 )
 def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     big = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -715,7 +711,7 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT-EXISTS stays gated via large_volume_orders + nation_value_concentration
 )
 def suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     lf = (
         t["lineitem"]
         .join(
@@ -788,7 +784,7 @@ def suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quarter_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     rev = (
         t["lineitem"]
         .filter(
@@ -845,7 +841,7 @@ def quarter_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dominant_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     # ONE exchange serves both keyed operators (r16, guide §2.4): hash-
     # partitioning on l_partkey alone satisfies the (l_partkey,
     # l_suppkey) aggregate's clustering (partition keys ⊆ grouping
@@ -918,7 +914,7 @@ def dominant_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def segment_order_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     base = (
         t["orders"]
         .join(
@@ -991,7 +987,7 @@ _Q7_NATIONS = ("NATION_1", "NATION_2")  # fixture nation-name domain
     # supplier_customer_nation_volume (re-gated this round)
 )
 def two_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     pair = t["nation"].filter(F.col("n_name").isin(*_Q7_NATIONS))
     sup = (
         t["supplier"]
@@ -1078,7 +1074,7 @@ def two_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._parity import dsum
 
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     region_nations = (
         t["nation"]
         .join(
@@ -1159,7 +1155,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sweep); becomes the A5 group-order gate while large_volume_orders rotates out
 )
 def product_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     red_parts = (
         t["part"].filter(F.col("p_name").like("%red%")).select("p_partkey")
     )
@@ -1215,7 +1211,7 @@ def product_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame
     extra=True,  # r14 rotation (gated r10-r13, green): A7/IFNULL twin customer_open_balance stays gated; range pushdown stays plan-asserted (test_plans)
 )
 def discount_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     return (
         t["lineitem"]
         .filter(
@@ -1261,7 +1257,7 @@ def discount_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra=True,  # r14 rotation (gated r10-r13, green): J7 subquery-family twins customers_with_jumbo_orders + nation_value_concentration stay gated
 )
 def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     o = t["orders"].filter(
         (F.col("o_orderdate")
          >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
@@ -1314,7 +1310,7 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra=True,  # r14 rotation (gated r10-r13, green): A1 multi-metric twin order_priority_stats stays gated
 )
 def linestatus_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     l = t["lineitem"].filter(
         (F.col("l_shipdate")
          >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
@@ -1360,7 +1356,7 @@ def linestatus_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra=True,  # r14 rotation (gated r10-r13, green): count-distinct twin calendar_trends (unique_customers) re-gated r14; weekly_retention_cohorts stays gated
 )
 def part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     parts = t["part"].filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 4, 9, 14, 19)
@@ -1405,7 +1401,7 @@ def part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra=True,  # r14 rotation (gated r10-r13, green): P8 predicate twin segment_balance_filter stays gated
 )
 def disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
+    t = StarTables(spark, sf_dir)
     part_box = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 5))
         | ((F.col("p_brand") == "Brand#7") & F.col("p_size").between(1, 10))

@@ -37,11 +37,6 @@ STAR_TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor: a region/
-# nation/part/supplier dim stays KB..GB while facts grow to TB, so joins
-# against them should never shuffle the fact side.
-BROADCASTABLE_DIMS = frozenset({"region", "nation", "supplier", "part"})
-
 REGION = T.StructType(
     [
         T.StructField("r_regionkey", T.IntegerType()),

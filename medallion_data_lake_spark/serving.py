@@ -26,7 +26,6 @@ itself so there is no second engine to keep in sync:
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -191,22 +190,3 @@ def serve_repl(
             emit(f"error: {exc}")
     return executed
 
-
-_SERVING: ServingLayer | None = None
-
-
-def get_serving(
-    gold_root: str,
-    spark_factory: Callable[[], SparkSession] | None = None,
-    cache_tables: bool = True,
-) -> ServingLayer:
-    """Process-wide cached serving layer (reference ``query_interface.py``
-    caches its session the same way: @st.cache_resource)."""
-    global _SERVING
-    if _SERVING is None:
-        if spark_factory is None:
-            from .session import get_spark
-
-            spark_factory = get_spark
-        _SERVING = ServingLayer(spark_factory(), gold_root, cache_tables=cache_tables)
-    return _SERVING

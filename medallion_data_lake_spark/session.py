@@ -111,9 +111,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def local_session(cpus: int | None = None) -> SparkSession:
-    """The test-harness session: local[cpus], defaults from the env."""
-    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return get_spark(master=f"local[{n}]")

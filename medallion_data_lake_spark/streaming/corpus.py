@@ -644,18 +644,6 @@ def run_incremental_corpus_ingest_near(
 # for it.
 
 
-def segment_counts(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", sep: str = "\n") -> DataFrame:
-    """(seg key ``_k``, distinct-doc count ``_nd``) for one batch."""
-    from ..operators.curation_pipeline import _exploded_segments
-
-    return (
-        _exploded_segments(docs, id_col, text_col, sep)
-        .groupBy("_k")
-        .agg(F.count_distinct(id_col).alias("_nd"))
-    )
-
-
 def compact_segment_ledger_base(
     spark: SparkSession,
     seg_ledger_dir: str,

@@ -125,22 +125,6 @@ def deduped_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def run_available_now(
-    stream_df: DataFrame, checkpoint_dir: str, query_name: str = "events_rollup"
-) -> None:
-    """Process everything currently available, then stop (the reference's
-    bounded 60-second ingest window, done with exactly-once semantics)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete" if stream_df.isStreaming else "append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_to_parquet(
     stream_df: DataFrame,
     out_path: str,

@@ -87,12 +87,16 @@ def test_ml_minhash_finds_planted_near_dup(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_lsh_keys_only_pair_set(spark):
-    """keys_only lsh_pairs yields exactly the full form's distinct pair
-    set (it drops only the score and the dedup — membership identical),
-    so dedup_groups_connected's CC input is unchanged by the r16
+def test_lsh_pair_keys_match_lsh_pairs(spark):
+    """lsh_pair_keys yields exactly lsh_pairs' distinct pair set (it
+    drops only the score and the dedup — membership identical), so
+    dedup_groups_connected's CC input is unchanged by the r16
     narrow-shuffle form."""
-    from medallion_data_lake_spark.queries.dedup import lsh_pairs, signatures
+    from medallion_data_lake_spark.queries.dedup import (
+        lsh_pair_keys,
+        lsh_pairs,
+        signatures,
+    )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
     docs = spark.createDataFrame(
@@ -112,9 +116,9 @@ def test_lsh_keys_only_pair_set(spark):
     }
     keys = [
         (r["doc_a"], r["doc_b"])
-        for r in lsh_pairs(sigs, keys_only=True).collect()
+        for r in lsh_pair_keys(sigs).collect()
     ]
     assert set(keys) == full
     assert full  # the fixture must actually produce collisions
-    # keys_only keeps a<b (no self-pairs, no reversed duplicates)
+    # the keys keep a<b (no self-pairs, no reversed duplicates)
     assert all(a < b for a, b in keys)

@@ -68,36 +68,38 @@ def test_customer_key_is_unique(sf_dir):
     assert len(set(keys)) == len(keys), f"{path}: duplicate c_custkey"
 
 
-def test_events_cache_key_sees_nested_rewrites(tmp_path):
-    """The footer-cache freshness key must change when a data file
-    nested inside a partition subdirectory is rewritten in place
-    (partitioned layouts put data one level down, where the top-level
-    entries stay unchanged — r16 review)."""
-    import os
-    import time
+def test_events_nanos_and_micros_load_alike(spark, tmp_path):
+    """Both events.ts fixture generations load to the same frame: the
+    TIMESTAMP(NANOS) file (Spark reads it as long nanos) goes through
+    load_star_table's ns->us conversion, which drops the sub-microsecond
+    part exactly as DuckDB's read does."""
+    import pyarrow as pa
 
-    from medallion_data_lake_spark.catalog import _events_cache_key
+    from pyspark.sql import types as T
 
-    root = tmp_path / "events.parquet"
-    part = root / "day=2024-01-01"
-    part.mkdir(parents=True)
-    data = part / "part-00000.parquet"
-    data.write_bytes(b"v1")
-    (root / "_SUCCESS").write_bytes(b"")  # metadata: excluded from the key
+    from medallion_data_lake_spark.catalog import load_star_table
 
-    k1 = _events_cache_key(str(root))
-    # same content size, later mtime — an in-place rewrite
-    time.sleep(0.01)
-    data.write_bytes(b"v2")
-    k2 = _events_cache_key(str(root))
-    assert k1 != k2
+    n = 1000
+    micros = [1_700_000_000_000_000 + i * 1_234_567 for i in range(n)]
+    for unit, ts in (("us", micros), ("ns", [m * 1000 + 789 for m in micros])):
+        (tmp_path / unit).mkdir()
+        table = pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp(unit)),
+            "user_id": pa.array([i % 37 for i in range(n)], pa.int64()),
+            "event_type": pa.array([("view", "click", "buy")[i % 3] for i in range(n)]),
+            "value": pa.array([i / 8 for i in range(n)], pa.float64()),
+            "props": pa.array([f'{{"k": {i}}}' for i in range(n)]),
+        })
+        pq.write_table(table, str(tmp_path / unit / "events.parquet"))
 
-    # metadata-file churn must NOT invalidate (only data files count)
-    (root / "_SUCCESS").write_bytes(b"x")
-    assert _events_cache_key(str(root)) == k2
+    raw = spark.read.parquet(str(tmp_path / "ns" / "events.parquet"))
+    assert isinstance(raw.schema["ts"].dataType, T.LongType)
 
-    # file-backed fixture keeps the (path, mtime, size) form
-    f = tmp_path / "flat.parquet"
-    f.write_bytes(b"abc")
-    st = os.stat(f)
-    assert _events_cache_key(str(f)) == (str(f), st.st_mtime_ns, st.st_size)
+    us = load_star_table(spark, str(tmp_path / "us"), "events")
+    ns = load_star_table(spark, str(tmp_path / "ns"), "events")
+    assert us.schema == ns.schema
+    assert us.schema["ts"].dataType == T.TimestampNTZType()
+    assert us.count() == ns.count() == n
+    assert us.exceptAll(ns).count() == 0
+    assert ns.exceptAll(us).count() == 0

@@ -18,37 +18,53 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 
-from bench import plan_fingerprint
-from medallion_data_lake_spark.queries import load_all_extra
-
-BASELINE_FILE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "PLAN_BASELINE.json",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BASELINE_FILE = os.path.join(ROOT, "PLAN_BASELINE.json")
 # fingerprints are sf-independent (data paths are normalized out;
 # proven by test_bench_fingerprint.py) — build on the smallest fixture
 SF = "/root/testdata/sf0.001"
+# load_star_table_spread repartitions to the session's parallelism and
+# that count is part of the plan, so the baseline is defined at one
+# fixed parallelism, whatever the core count of the machine running it
+PARALLELISM = "8"
+
+# a fresh session: the baseline is defined over UNCACHED plans, and a
+# frame another test cached would make Spark's CacheManager substitute
+# InMemoryRelation into every matching sub-plan
+_FINGERPRINTS = """
+import json, sys
+from bench import plan_fingerprint
+from medallion_data_lake_spark.queries import load_all_extra
+from medallion_data_lake_spark.session import get_spark
+
+n = sys.argv[2]
+spark = get_spark(master=f"local[{n}]",
+                  extra_conf={"spark.sql.shuffle.partitions": n})
+spark.sparkContext.setLogLevel("ERROR")
+fps = {name: plan_fingerprint(spec.build(spark, sys.argv[1]))
+       for name, spec in sorted(load_all_extra().items())}
+spark.stop()
+print(json.dumps(fps))
+"""
 
 
-def _current_fps(spark) -> dict[str, str]:
-    # the baseline is defined over UNCACHED plans: an earlier test (or
-    # interactive session) that cached a shared frame makes Spark's
-    # CacheManager substitute InMemoryRelation into every matching
-    # sub-plan, moving fingerprints that have nothing to do with the
-    # query's own code (observed via tests/test_serving.py's cached
-    # gold tables drifting all documents/embeddings-based fps)
-    spark.catalog.clearCache()
-    return {
-        name: plan_fingerprint(spec.build(spark, SF))
-        for name, spec in sorted(load_all_extra().items())
-    }
+def _current_fps(tmp_path) -> dict[str, str]:
+    env = dict(os.environ, PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="2g")
+    out = subprocess.run(
+        [sys.executable, "-c", _FINGERPRINTS, SF, PARALLELISM],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def test_plans_match_committed_baseline(spark):
-    fps = _current_fps(spark)
+def test_plans_match_committed_baseline(tmp_path):
+    fps = _current_fps(tmp_path)
     if os.environ.get("MDLS_UPDATE_PLAN_BASELINE") == "1":
         with open(BASELINE_FILE, "w") as fh:
             json.dump(fps, fh, indent=1, sort_keys=True)
