@@ -22,17 +22,20 @@ work stays bounded:
   shape: a bucket column, co-partitioned joins, partition pruning.
 - ``bucketed_near_dup_pairs``: the near-dup pair join over either
   bucket scheme — within-bucket pairs only, never all-pairs.
-- ``pq_train`` / ``pq_encode`` / ``pq_adc_topk``: product quantization —
-  vectors compressed to m-byte codes (≈30× smaller shuffle/storage than
-  raw floats), scored against exact queries via per-query lookup tables
-  (asymmetric distance). Composes with the coarse quantizers above into
-  the standard IVF-PQ layout: coarse bucket prunes candidates, ADC
-  scores codes, only the final top-k touches full vectors.
-- persisted indexes: ``build_ivf_index``/``search_ivf_index`` (sign
-  buckets) and ``build_kmeans_ivf_index``/``search_kmeans_ivf_index``
-  (learned codebook, centroids in metadata, nearest-m-centroid
-  multi-probe), both with partition-pruned probes and incremental
-  ``append_to_ivf_index`` that encodes new vectors with the index's OWN
+- ``pq_train`` / ``pq_encode``: product quantization — vectors
+  compressed to m-byte codes (≈30× smaller shuffle/storage than raw
+  floats), scored against exact queries via per-query lookup tables
+  (asymmetric distance, ADC). Composes with the coarse quantizers above
+  into the standard IVF-PQ layout: coarse bucket prunes candidates, ADC
+  scores codes, only a bounded shortlist touches full vectors.
+- persisted indexes: ``build_ivf_index`` (sign buckets) and
+  ``build_kmeans_ivf_index`` (learned codebook, centroids in metadata),
+  both optionally with a stored PQ tier, and ONE search over either
+  layout, ``search_index``: the layout decides only how a query picks
+  its probe cells (least-confident sign-bit flips, or the nearest
+  centroids); the partition-pruned read, tombstone mask, scoring and
+  the optional ADC shortlist + exact re-rank are shared. Incremental
+  ``append_to_ivf_index`` encodes new vectors with the index's OWN
   layout (sign function or stored centroids — never a refit).
 - deletes: ``delete_from_index`` / ``run_index_delete_stream`` write a
   tombstone ledger every search anti-joins (merge-on-read, O(ids));
@@ -51,7 +54,9 @@ partition.
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -328,60 +333,6 @@ def multiprobe_sign_codes(vec: Column, n_bits: int, n_probes: int) -> Column:
     return F.concat(F.array(base), flipped)
 
 
-def multiprobe_ann_search(
-    data: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_bits: int = MIN_BITS,
-    n_probes: int = 1,
-    k: int = 5,
-) -> DataFrame:
-    """Bucketed ANN top-k with multi-probe on the query side.
-
-    Candidates carry ONE bucket (a partition key at scale); each query
-    explodes into its n_probes probe codes and joins co-partitioned on
-    the bucket. The query side is the small broadcast side, so probing
-    multiplies broadcast rows — not candidate-side work.
-    """
-    from pyspark.sql import Window
-
-    d = (
-        data.withColumn("bucket", sign_code(F.col(vec_col), 0, n_bits))
-        .withColumn("_nrm", l2_norm(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-            "bucket", F.col("_nrm").alias("cnrm"),
-        )
-    )
-    q = (
-        queries.withColumn(
-            "probe", F.explode(multiprobe_sign_codes(F.col(vec_col), n_bits, n_probes))
-        )
-        .withColumn("_nrm", l2_norm(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-            "probe", F.col("_nrm").alias("qnrm"),
-        )
-    )
-    cs = dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))
-    scored = (
-        d.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("cand_id") != F.col("query_id")),
-        )
-        .select("query_id", "cand_id", cs.alias("cos_sim"))
-        # a candidate reached via several probes must count once
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def pq_train(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -467,104 +418,18 @@ def pq_encode(
     return df.withColumn(code_col, F.array(*[code_j(j) for j in range(m)]))
 
 
-def pq_adc_topk(
-    encoded: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-    k_top: int = 5,
-) -> DataFrame:
-    """Asymmetric-distance top-k: exact query vector vs PQ-coded
-    candidates. Each query precomputes an inner-product table
-    table[j][c] = <q_subj, centroid_jc> (m·k doubles — per-QUERY, tiny);
-    a candidate's score is m table lookups summed, never a d-dim dot
-    product. The query side (vectors + tables) broadcasts; the candidate
-    side streams codes only.
-
-    At scale this is the IVF-PQ refine stage: coarse bucket pruning
-    (adaptive_sign_bucket / kmeans_codebook_bucket) bounds candidates,
-    ADC scores them from codes, and only the final k_top per query ever
-    touch full vectors (for an optional exact re-rank).
-    """
-    from pyspark.sql import Window
-
-    m = len(centroids)
+def _adc_tables(vec: Column, centroids: list[list[list[float]]]) -> Column:
+    """Per-query asymmetric-distance lookup tables:
+    table[j][c] = <q_subj, centroid_jc> — m·k doubles per QUERY, so the
+    query side broadcasts them and a candidate's score is m lookups
+    (:func:`_adc_score`), never a d-dim dot product."""
     sub = len(centroids[0][0])
-    qvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    qvec = F.transform(vec, lambda x: x.cast("double"))
 
     # NB: the subspace index must be captured in a def scope, NOT a
     # lambda default arg — a two-parameter lambda makes PySpark treat it
     # as the (element, index) HOF form and silently pass the array index
     # into the second parameter.
-    def _table_j(j: int) -> Column:
-        return F.transform(
-            _centroid_literal(centroids[j]),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.slice(qvec, j * sub + 1, sub), c,
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
-    table = F.array(*[_table_j(j) for j in range(m)])
-    q = queries.select(F.col(id_col).alias("query_id"), table.alias("_tbl"))
-    score = F.aggregate(
-        F.zip_with(
-            F.col(code_col), F.col("_tbl"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        encoded.select(F.col(id_col).alias("cand_id"), code_col)
-        .join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", score.alias("adc_score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-    )
-
-
-def ivf_pq_search(
-    encoded: DataFrame,
-    data: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = MIN_BITS,
-    n_probes: int = 4,
-    k_top: int = 5,
-    shortlist: int = 50,
-) -> DataFrame:
-    """The full IVF-PQ layout: coarse sign-bucket pruning + multi-probe
-    on the query side + ADC scoring from codes + exact re-rank of the
-    shortlist.
-
-    ``encoded`` must carry a ``bucket`` column (``sign_code`` over the
-    same ``n_bits``) alongside the PQ code — at scale it is also the
-    table's partition key, so each probe prunes to one partition. Unlike
-    :func:`pq_adc_topk` (which scores every candidate), the candidate
-    side here is bucket-joined: per query only the probed cells are
-    scanned, which is what bounds work as the corpus grows. Recall knobs:
-    ``n_probes`` (coarse stage) and ``shortlist`` (refine stage).
-    """
-    from pyspark.sql import Window
-
-    m = len(centroids)
-    sub = len(centroids[0][0])
-    qvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
     def _table_j(j: int) -> Column:
         return F.transform(
             _centroid_literal(centroids[j]),
@@ -577,100 +442,16 @@ def ivf_pq_search(
             ),
         )
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            multiprobe_sign_codes(F.col(vec_col), n_bits, n_probes)
-        ).alias("probe"),
-        F.array(*[_table_j(j) for j in range(m)]).alias("_tbl"),
-    )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("pq_code"), F.col("_tbl"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
+    return F.array(*[_table_j(j) for j in range(len(centroids))])
+
+
+def _adc_score(codes: Column, tables: Column) -> Column:
+    """ADC inner-product estimate of a PQ-coded candidate: the sum of
+    its m code entries looked up in the query's :func:`_adc_tables`."""
+    return F.aggregate(
+        F.zip_with(codes, tables, lambda c, t: F.element_at(t, c + 1)),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-    shortlisted = (
-        encoded.select(F.col(id_col).alias("cand_id"), "bucket", "pq_code")
-        .join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("cand_id") != F.col("query_id")),
-        )
-        .select("query_id", "cand_id", score.alias("adc_score"))
-        .dropDuplicates(["query_id", "cand_id"])  # multi-probe re-reach
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("cand_id")
-    )
-    short = (
-        shortlisted.withColumn("rank", F.row_number().over(w_adc))
-        .filter(F.col("rank") <= shortlist)
-        .select("query_id", "cand_id")
-    )
-    cand = data.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-        l2_norm(F.col(vec_col)).alias("cn"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        short.join(cand, "cand_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "cand_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-    )
-
-
-def pq_search_rerank(
-    encoded: DataFrame,
-    data: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_top: int = 5,
-    shortlist: int = 50,
-) -> DataFrame:
-    """Full IVF-PQ search: ADC shortlist from codes, then exact cosine
-    re-rank of the shortlist against full vectors.
-
-    ADC cannot rank candidates that share a code (its resolution is the
-    codebook cell), so production PQ always re-ranks a shortlist —
-    ``shortlist`` rows per query is all that ever touches full vectors,
-    so the expensive exact pass is bounded by queries × shortlist, not
-    corpus size. ``data`` may be the original vector table; the join
-    fetching shortlist vectors is id-equi and Spark prunes it to the
-    shortlist rows.
-    """
-    from pyspark.sql import Window
-
-    short = pq_adc_topk(
-        encoded, queries, centroids, id_col, vec_col, k_top=shortlist
-    ).select("query_id", "cand_id")
-    cand = data.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-        l2_norm(F.col(vec_col)).alias("cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        short.join(cand, "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "cand_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
     )
 
 
@@ -881,9 +662,6 @@ _PROVENANCE_FILE = "provenance.json"
 
 def _write_codebook_provenance(path: str, model, seed: int,
                                embedder: str | None) -> None:
-    import json
-    import os
-
     dim = int(len(model.clusterCenters()[0]))
     meta = {
         "dim": dim,
@@ -907,9 +685,6 @@ def load_semantic_codebook(
     Mismatch raises ValueError — a codebook from a different embedding
     space partitions this one arbitrarily, so assignments would be
     noise while looking like successful dedup."""
-    import json
-    import os
-
     from pyspark.ml.clustering import KMeansModel
 
     model = KMeansModel.load(path)
@@ -1132,11 +907,17 @@ def _write_meta(index_path: str, meta: dict) -> None:
     published file is always one writer's complete document
     (last-writer-wins; fine for the telemetry fields, and layout fields
     are only written by builds). Shared recipe: ``_atomic``."""
-    import os as _os
-
     from ._atomic import atomic_write_json
 
-    atomic_write_json(_os.path.join(index_path, "_ivf_meta.json"), meta)
+    atomic_write_json(os.path.join(index_path, "_ivf_meta.json"), meta)
+
+
+def _read_meta(index_path: str) -> dict:
+    """The index's ``_ivf_meta.json`` sidecar: layout kind and params,
+    the PQ codebook, the build-time recall and health telemetry. The one
+    reader of the format (writes go through :func:`_write_meta`)."""
+    with open(os.path.join(index_path, "_ivf_meta.json")) as fh:
+        return json.load(fh)
 
 
 def build_ivf_index(
@@ -1160,8 +941,8 @@ def build_ivf_index(
     build (seeded — bounded sample via ``pq_sample_fraction``), every
     row's ``pq_code`` is stored IN the bucketed parquet, and the
     codebook rides the meta sidecar (m·k·dim/m doubles — kilobytes).
-    Searches (:func:`search_pq_ivf_index`) then ADC-score candidates
-    from stored codes with no per-query re-encode, and appends
+    ``search_index(use_pq=True)`` then ADC-scores candidates from
+    stored codes with no per-query re-encode, and appends
     (:func:`append_to_ivf_index`) re-encode new vectors with the STORED
     codebook — never refit, a new codebook would strand existing codes.
     Retrofitting PQ onto a code-less index is a rebuild, same as a
@@ -1171,9 +952,6 @@ def build_ivf_index(
     seeded N-row sample against brute force and persists it in the meta
     — the baseline :func:`check_index_health` compares against after
     append-only drift."""
-    import json as _json
-    import os as _os
-
     indexed = data.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),
@@ -1181,35 +959,10 @@ def build_ivf_index(
         sign_code(F.col(vec_col), 0, n_bits).alias("bucket"),
     )
     meta = {"n_bits": n_bits, "id_col": id_col, "vec_col": vec_col}
-    if pq_m:
-        first = data.select(vec_col).first()
-        if first is None or first[0] is None:
-            raise ValueError(
-                "build_ivf_index(pq_m=...): input has no rows (or a null "
-                f"{vec_col!r}) — cannot derive the vector dimension"
-            )
-        dim = len(first[0])
-        centroids = pq_train(
-            data, vec_col=vec_col, m=pq_m, k=pq_k, dim=dim, seed=seed,
-            sample_fraction=pq_sample_fraction,
-        )
-        indexed = pq_encode(indexed, centroids, vec_col="vec")
-        meta["pq"] = {"m": pq_m, "k": pq_k, "dim": dim, "seed": seed,
-                      "centroids": centroids}
-    # cluster by bucket BEFORE the partitioned write: without it every
-    # upstream task writes a file into every bucket dir it holds
-    # (tasks × buckets files — measured 98.6k files for 200k vectors /
-    # 4096 buckets, making every later scan and incremental export pay
-    # file-listing, not I/O; SCALE.md r14 compaction footnote). One
-    # shuffle at build time buys one-file-per-bucket forever after.
-    (
-        indexed.repartition("bucket")
-        .write.mode("overwrite").partitionBy("bucket").parquet(index_path)
+    return _write_index(
+        data, indexed, index_path, meta, vec_col, measure_recall,
+        pq_m, pq_k, pq_sample_fraction, seed,
     )
-    _write_meta(index_path, meta)
-    if measure_recall:
-        meta = _record_build_recall(data, index_path, meta, measure_recall)
-    return meta
 
 
 def build_kmeans_ivf_index(
@@ -1240,15 +993,12 @@ def build_kmeans_ivf_index(
     :func:`build_ivf_index`): codes stored in the bucketed parquet,
     codebook in the meta sidecar. With it,
     ``search_index(use_pq=True)`` runs the WIDE-PROBE RECALL-RECOVERY
-    path (:func:`search_kmeans_pq_ivf_index`): probe more cells than
+    path (:func:`search_index`): probe more cells than
     the full-vector search would afford, ADC-pre-rank the pooled
     candidates from stored codes (m byte-table lookups per candidate
     instead of a d-dim dot), and exactly re-rank only the top-W
     shortlist — recall bought with cheap probes, exactness restored on
     a bounded set."""
-    import json as _json
-    import os as _os
-
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -1281,21 +1031,43 @@ def build_kmeans_ivf_index(
         "vec_col": vec_col,
         "centroids": [list(map(float, c)) for c in model.clusterCenters()],
     }
+    return _write_index(
+        data, indexed, index_path, meta, vec_col, measure_recall,
+        pq_m, pq_k, pq_sample_fraction, seed,
+    )
+
+
+def _write_index(
+    data: DataFrame,
+    indexed: DataFrame,
+    index_path: str,
+    meta: dict,
+    vec_col: str,
+    measure_recall: int | None,
+    pq_m: int | None,
+    pq_k: int,
+    pq_sample_fraction: float | None,
+    seed: int,
+) -> dict:
+    """The builders' shared tail: the optional PQ tier (codebook trained
+    on ``data``, codes stored per row, codebook in the meta), the
+    bucket-partitioned write, the meta sidecar and the optional
+    build-time recall measurement."""
     if pq_m:
         first = data.select(vec_col).first()
         if first is None or first[0] is None:
             raise ValueError(
-                "build_kmeans_ivf_index(pq_m=...): input has no rows (or "
-                f"a null {vec_col!r}) — cannot derive the vector dimension"
+                "index build with pq_m=...: input has no rows (or a null "
+                f"{vec_col!r}) — cannot derive the vector dimension"
             )
         dim = len(first[0])
-        pq_centroids = pq_train(
+        centroids = pq_train(
             data, vec_col=vec_col, m=pq_m, k=pq_k, dim=dim, seed=seed,
             sample_fraction=pq_sample_fraction,
         )
-        indexed = pq_encode(indexed, pq_centroids, vec_col="vec")
+        indexed = pq_encode(indexed, centroids, vec_col="vec")
         meta["pq"] = {"m": pq_m, "k": pq_k, "dim": dim, "seed": seed,
-                      "centroids": pq_centroids}
+                      "centroids": centroids}
     # cluster by bucket BEFORE the partitioned write: without it every
     # upstream task writes a file into every bucket dir it holds
     # (tasks × buckets files — measured 98.6k files for 200k vectors /
@@ -1324,9 +1096,6 @@ def _record_build_recall(
     """Measure recall on a seeded build-sample and persist it in the
     meta sidecar — runs AFTER the partitioned write (the search needs
     the on-disk layout)."""
-    import json as _json
-    import os as _os
-
     n = data.count()
     frac = min(1.0, (3.0 * sample_n) / max(n, 1))
     sample = data.sample(frac, seed=seed).limit(sample_n).localCheckpoint(
@@ -1344,280 +1113,6 @@ def _record_build_recall(
     }
     _write_meta(index_path, meta)
     return meta
-
-
-def search_kmeans_ivf_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_probes: int = 4,
-    k: int = 5,
-    allowed: DataFrame | None = None,
-    report: dict | None = None,
-) -> DataFrame:
-    """Top-k over a persisted learned-codebook index with multi-probe:
-    each query probes its ``n_probes`` NEAREST CENTROIDS (the KMeans
-    analog of flipping least-confident sign bits), the probed cell ids
-    push down as a partition filter, and scoring joins the pruned
-    candidates to the broadcast query side. The centroid ranking runs
-    as one Spark job over (queries × centroids) — both bounded: the
-    query batch is small by contract and centroids are the codebook.
-
-    ``allowed`` restricts candidates BEFORE ranking (filtered vector
-    search) — see :func:`search_ivf_index` for the semantics and the
-    probe-depth caveat.
-
-    ``report`` (an empty dict, filled in place) receives
-    ``probe_buckets`` — the pruned partition set, already collected on
-    the driver to build the pushdown filter, exposed for observability
-    and I/O accounting (scripts/measure_pq_io.py sums the touched
-    partitions' actual parquet column-chunk bytes from it).
-    """
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import Window
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
-    if meta.get("kind") != "kmeans":
-        raise ValueError(
-            f"index at {index_path} is kind={meta.get('kind', 'sign')!r}; "
-            "use search_ivf_index for sign-bucket layouts"
-        )
-    cent = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(meta["centroids"])],
-        "cid long, centroid array<double>",
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qnrm"),
-    )
-    # nearest-centroid ranking: ||q-c||² = ||q||² + ||c||² − 2⟨q,c⟩
-    d2 = (
-        F.col("qnrm") * F.col("qnrm")
-        + dot(F.col("centroid"), F.col("centroid"))
-        - 2 * dot(F.col("qv"), F.col("centroid"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("_d2"), F.asc("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("_d2", d2)
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= n_probes)
-        .select("query_id", "qv", "qnrm", F.col("cid").alias("probe"))
-    )
-    probe_codes = sorted(
-        {r["probe"] for r in probes.select("probe").distinct().collect()}
-    )
-    if report is not None:
-        report["probe_buckets"] = probe_codes
-    cand = spark.read.parquet(index_path).filter(
-        F.col("bucket").isin(probe_codes)  # partition pruning
-    )
-    cand = _mask_tombstones(cand, read_tombstones(spark, index_path))
-    cand = _apply_allowed(cand, allowed)
-    cs = dot(F.col("qv"), F.col("vec")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        cand.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("cand_id"), cs.alias("cos_sim"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def search_kmeans_pq_ivf_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_probes: int = 4,
-    k: int = 5,
-    shortlist: int = 50,
-    report: dict | None = None,
-) -> DataFrame:
-    """Wide-probe recall recovery on a learned-codebook index with a
-    persisted PQ tier: probe the ``n_probes`` nearest cells, ADC-score
-    ALL pooled candidates from their STORED codes (m table lookups per
-    candidate — bytes, not vectors), keep the top-``shortlist`` per
-    query, and exactly cosine-re-rank only that shortlist against the
-    stored full vectors.
-
-    The cost shape (the r11 verdict's recovery step): the full-vector
-    probe pays a d-dim dot per candidate, so widening probes scales its
-    dominant cost linearly; here widening only adds code lookups, and
-    the exact stage stays bounded at queries x shortlist rows however
-    wide the pool is.
-
-    WHEN TO USE — measured honestly (scripts/measure_ann_recall.py
-    round 12; scripts/measure_pq_io.py round 13, d=256 x 200k with
-    exact column-chunk byte accounting): on clustered (expected-case)
-    data the full-vector probe at ONE probe already hits recall@5 =
-    1.0 at 3x less wall and 3x fewer bytes than any wide-probe config
-    — use it and stop. The PQ tier's measured cost SHAPE: the ADC
-    code read is ~free (the code column is ~137x smaller than the vec
-    column: 1.5 MB vs 205 MB at d=256/m=32) and its wall stays FLAT as
-    probes widen (~10-14 s where full grows 5.2 -> 15.1 s), but the
-    exact re-rank reads whole CELLS' vec columns (partition pruning,
-    not row pruning — a >10-element isin cannot push down to parquet
-    row groups), so end-to-end bytes undercut the full path only by
-    (1 - rerank_cells/probed_cells): 0% at p=1 (every probed cell
-    holds shortlist rows), ~24% at p=16 (42/59 cells). The tier
-    therefore pays ONLY when recall genuinely requires wide probes
-    (recall-hard geometry — the r12 adversarial random-vector bound)
-    and cells are large enough that the shortlist concentrates in few
-    of them; with cheap single-probe recall (clustered corpora) it is
-    strictly worse on wall, bytes, and recall (0.975 vs 1.0, ADC
-    in-cluster collapse — W=50 recalled 0.26 where W=200/800 recalled
-    0.988/1.0; keep ``shortlist`` >= ~40x k).
-
-    Requires ``build_kmeans_ivf_index(pq_m=...)``; refuses a code-less
-    layout. ``allowed`` is intentionally unsupported for the same
-    reason as the sign-PQ path: the fixed-size shortlist precedes any
-    filter. ``report`` (an empty dict, filled in place) receives
-    ``probe_buckets`` and ``rerank_buckets`` — the two stages' pruned
-    partition sets, exposed for I/O accounting."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import Window
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
-    if meta.get("kind") != "kmeans" or not meta.get("pq"):
-        raise ValueError(
-            f"index at {index_path} is not a kmeans layout with a "
-            "persisted PQ tier; rebuild with "
-            "build_kmeans_ivf_index(pq_m=...)"
-        )
-    pq_cent = meta["pq"]["centroids"]
-    m = len(pq_cent)
-    sub = len(pq_cent[0][0])
-
-    cent = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(meta["centroids"])],
-        "cid long, centroid array<double>",
-    )
-    qvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def _table_j(j: int) -> Column:
-        return F.transform(
-            _centroid_literal(pq_cent[j]),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.slice(qvec, j * sub + 1, sub), c, lambda a, b: a * b
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qnrm"),
-        F.array(*[_table_j(j) for j in range(m)]).alias("_tbl"),
-    )
-    d2 = (
-        F.col("qnrm") * F.col("qnrm")
-        + dot(F.col("centroid"), F.col("centroid"))
-        - 2 * dot(F.col("qv"), F.col("centroid"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.asc("_d2"), F.asc("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("_d2", d2)
-        .withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= n_probes)
-        .select("query_id", "qv", "qnrm", "_tbl", F.col("cid").alias("probe"))
-    )
-    probe_codes = sorted(
-        {r["probe"] for r in probes.select("probe").distinct().collect()}
-    )
-    if report is not None:
-        report["probe_buckets"] = probe_codes
-    cand = spark.read.parquet(index_path).filter(
-        F.col("bucket").isin(probe_codes)  # partition pruning
-    )
-    cand = _mask_tombstones(cand, read_tombstones(spark, index_path))
-
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("pq_code"), F.col("_tbl"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    shortlisted = (
-        cand.select(F.col("vec_id").alias("cand_id"), "bucket", "pq_code")
-        .join(
-            F.broadcast(probes.select("query_id", "_tbl", "probe")),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("cand_id") != F.col("query_id")),
-        )
-        .select("query_id", "cand_id", "bucket", adc.alias("adc_score"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("cand_id")
-    )
-    short = (
-        shortlisted.withColumn("rank", F.row_number().over(w_adc))
-        .filter(F.col("rank") <= shortlist)
-        .select("query_id", "cand_id", "bucket")
-        .localCheckpoint(eager=True)  # bounded: queries × shortlist rows
-    )
-    # The exact re-rank reads FULL vectors — the expensive column. Read
-    # them only from the cells that actually hold shortlisted
-    # candidates (partition pruning): ADC shortlists concentrate in the
-    # few nearest cells, so this scan narrows as probes widen (measured
-    # d=256: rerank touches 42 of 59 probed cells at p=16, all 30 of 30
-    # at p=1 — SCALE.md round 13). Row-level pruning is NOT available:
-    # the shortlist is thousands of ids, past parquet's isin-pushdown
-    # threshold, so whole-cell vec reads are the floor of this stage.
-    # The checkpoint above both bounds the collect and stops the ADC
-    # stage from re-running for the re-rank branch.
-    short_buckets = sorted(
-        {r["bucket"] for r in short.select("bucket").distinct().collect()}
-    )
-    if report is not None:
-        report["rerank_buckets"] = short_buckets
-    # narrow WITHIN the probe's relation (stacked partition filters
-    # prune the scan to short_buckets) rather than a fresh
-    # spark.read.parquet: one file listing and one tombstone frame for
-    # both stages, so a tombstone or append landing between the ADC
-    # action and the re-rank action cannot give the two stages
-    # different views of the index
-    rerank_src = cand.filter(
-        F.col("bucket").isin(short_buckets)  # partition pruning
-    )
-    vecs = rerank_src.select(
-        F.col("vec_id").alias("cand_id"), F.col("vec").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    qv = q.select("query_id", "qv", "qnrm")
-    cos = dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        short.select("query_id", "cand_id").join(vecs, "cand_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "cand_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 def append_to_ivf_index(
@@ -1642,11 +1137,7 @@ def append_to_ivf_index(
     :func:`build_ivf_index` on the union — by design: the sign-bucket
     family keeps builds one cheap map pass, so rebuilds are not the
     bottleneck re-clustering would be."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
+    meta = _read_meta(index_path)
     if meta.get("kind") == "kmeans":
         # assign with the INDEX'S centroids (broadcast argmin — never
         # refit: a new codebook would strand the existing cells)
@@ -1700,10 +1191,7 @@ def init_streaming_ivf_index(
     codebook would need data first; bootstrap one with
     :func:`build_kmeans_ivf_index` and use :func:`append_to_ivf_index`
     per batch instead when balance matters more than cold-start)."""
-    import json as _json
-    import os as _os
-
-    _os.makedirs(index_path, exist_ok=True)
+    os.makedirs(index_path, exist_ok=True)
     meta = {"kind": "sign", "n_bits": n_bits, "streaming": True,
             "id_col": "vec_id", "vec_col": "embedding"}
     _write_meta(index_path, meta)
@@ -1724,11 +1212,7 @@ def append_index_batch(
     as the corpus ledgers). Partition pruning on ``bucket`` is
     unaffected by the extra level — Spark prunes on any discovered
     partition column."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
+    meta = _read_meta(index_path)
     indexed = batch.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),
@@ -1754,14 +1238,9 @@ def persist_index_health(
     ``_ivf_meta.json`` sidecar under ``"health"`` (plus a top-level
     ``rebuild_recommended`` mirror, so operators and the maintenance
     loop read ONE flag). Telemetry only — never mutates the layout."""
-    import json as _json
-    import os as _os
-
     health = check_index_health(spark, index_path, sample_n=sample_n,
                                 **health_kw)
-    meta_file = _os.path.join(index_path, "_ivf_meta.json")
-    with open(meta_file) as fh:
-        meta = _json.load(fh)
+    meta = _read_meta(index_path)
     meta["health"] = health
     meta["rebuild_recommended"] = health["rebuild_recommended"]
     _write_meta(index_path, meta)
@@ -1783,7 +1262,7 @@ def run_index_append_stream(
     """Maintain a persisted ANN index FROM A STREAM, exactly-once: each
     micro-batch of vectors is sign-encoded and landed in its own
     partitions (:func:`append_index_batch`); searches
-    (:func:`search_ivf_index`) see new vectors as soon as their batch
+    (:func:`search_index`) see new vectors as soon as their batch
     lands. The freshness story for embedding stores: no rebuild, no
     duplicate vectors under crash-replay.
 
@@ -1888,19 +1367,15 @@ _TOMBSTONE_DIR = "_tombstones"
 
 
 def _tombstones_path(index_path: str) -> str:
-    import os as _os
-
-    return _os.path.join(index_path, _TOMBSTONE_DIR)
+    return os.path.join(index_path, _TOMBSTONE_DIR)
 
 
 def read_tombstones(spark, index_path: str):
     """The index's tombstoned ids as DataFrame[vec_id], or ``None`` when
     no ledger exists. Ids are de-duplicated (an id deleted twice — e.g.
     an ad-hoc delete racing a streamed one — masks once)."""
-    import os as _os
-
     tp = _tombstones_path(index_path)
-    if not _os.path.isdir(tp):
+    if not os.path.isdir(tp):
         return None
     df = spark.read.parquet(tp).select("vec_id").distinct()
     return df
@@ -2067,7 +1542,6 @@ def compact_index_tombstones(spark, index_path: str) -> dict:
     Returns {"purged_rows", "rewritten_partitions",
     "removed_partitions", "retained_tombstones"}.
     """
-    import os as _os
     import shutil as _shutil
 
     tomb = read_tombstones(spark, index_path)
@@ -2135,7 +1609,7 @@ def compact_index_tombstones(spark, index_path: str) -> dict:
             continue
         # fully-emptied partition: dynamic overwrite wrote nothing for
         # it, so drop the directory itself
-        d = _os.path.join(
+        d = os.path.join(
             index_path, *[f"{c}={row[c]}" for c in pcols]
         )
         _shutil.rmtree(d, ignore_errors=True)
@@ -2158,7 +1632,6 @@ def _retain_only(index_path: str, retained: DataFrame) -> None:
     FIRST, then every other partition is dropped. A crash at any point
     leaves a superset of the correct mask (over-masking ids whose rows
     were already purged is harmless; under-masking never happens)."""
-    import os as _os
     import shutil as _shutil
     import uuid as _uuid
 
@@ -2172,93 +1645,9 @@ def _retain_only(index_path: str, retained: DataFrame) -> None:
         .partitionBy("_tb_batch")
         .parquet(tp)
     )
-    for name in _os.listdir(tp):
+    for name in os.listdir(tp):
         if name.startswith("_tb_batch=") and name != f"_tb_batch={keep}":
-            _shutil.rmtree(_os.path.join(tp, name), ignore_errors=True)
-
-
-def search_ivf_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_probes: int = 4,
-    k: int = 5,
-    allowed: DataFrame | None = None,
-    report: dict | None = None,
-) -> DataFrame:
-    """Top-k over a persisted IVF index with multi-probe.
-
-    The query batch's probe codes are collected (bounded:
-    |queries|·n_probes ints) and pushed as a partition filter, so the
-    scan touches ONLY the probed bucket directories — the partition-
-    pruning payoff the persisted layout exists for (plan-asserted in
-    tests). Scoring then joins the pruned candidates to the broadcast
-    query side exactly like :func:`multiprobe_ann_search`.
-
-    ``allowed`` (optional, a frame whose FIRST column is candidate ids)
-    restricts candidates BEFORE ranking — filtered vector search
-    ("neighbors among docs where lang='en'"). Filtering the top-k
-    after an unfiltered search is NOT the same operation: it returns
-    fewer than k rows whenever disallowed ids out-rank allowed ones;
-    the pre-rank semi-join keeps the result k-deep within the probed
-    cells. The join is unhinted (AQE broadcasts a small allow-list at
-    runtime; a corpus-scale one shuffles against the already
-    bucket-pruned candidates). A selective filter thins each probed
-    cell — raise n_probes accordingly.
-    """
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import Window
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
-    if meta.get("kind", "sign") != "sign":
-        raise ValueError(
-            f"index at {index_path} is kind={meta.get('kind')!r}; "
-            "use search_kmeans_ivf_index for learned-codebook layouts "
-            "(or search_index to dispatch on the persisted kind)"
-        )
-    n_bits = meta["n_bits"]
-
-    q = (
-        queries.withColumn(
-            "probe", F.explode(multiprobe_sign_codes(F.col(vec_col), n_bits, n_probes))
-        )
-        .withColumn("_nrm", l2_norm(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-            "probe", F.col("_nrm").alias("qnrm"),
-        )
-    )
-    probe_codes = sorted({r["probe"] for r in q.select("probe").distinct().collect()})
-    if report is not None:
-        report["probe_buckets"] = probe_codes
-    cand = (
-        spark.read.parquet(index_path)
-        .filter(F.col("bucket").isin(probe_codes))  # partition pruning
-    )
-    # deleted docs must never surface: broadcast anti-join against the
-    # tombstone ledger, applied after pruning (no scan or shuffle cost)
-    cand = _mask_tombstones(cand, read_tombstones(spark, index_path))
-    cand = _apply_allowed(cand, allowed)
-    cs = dot(F.col("qv"), F.col("vec")) / (F.col("qnrm") * F.col("nrm"))
-    scored = (
-        cand.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("cand_id"), cs.alias("cos_sim"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+            _shutil.rmtree(os.path.join(tp, name), ignore_errors=True)
 
 
 def _apply_allowed(cand: DataFrame, allowed: DataFrame | None) -> DataFrame:
@@ -2271,66 +1660,6 @@ def _apply_allowed(cand: DataFrame, allowed: DataFrame | None) -> DataFrame:
         return cand
     ids = allowed.select(F.col(allowed.columns[0]).alias("vec_id")).distinct()
     return cand.join(ids, "vec_id", "left_semi")
-
-
-def search_pq_ivf_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_probes: int = 4,
-    k: int = 5,
-    shortlist: int = 50,
-    report: dict | None = None,
-) -> DataFrame:
-    """IVF-PQ search over the PERSISTED tier: probe codes prune the
-    bucket partitions (same pushed ``isin`` as :func:`search_ivf_index`),
-    the pruned candidates are ADC-scored from their STORED ``pq_code``
-    (no re-encode — the point of persisting the tier), and the
-    shortlist is exactly re-ranked against the stored vectors. Per
-    query the work is probed-buckets × (code lookups) + shortlist exact
-    dots — bounded as the corpus grows. Requires a build with
-    ``pq_m`` (:func:`build_ivf_index`); refuses otherwise."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
-    if meta.get("kind", "sign") != "sign" or not meta.get("pq"):
-        raise ValueError(
-            f"index at {index_path} has no persisted PQ tier; rebuild "
-            "with build_ivf_index(pq_m=...) (codes and codebook are "
-            "build-time layout, like the bucket width)"
-        )
-    n_bits = meta["n_bits"]
-    centroids = meta["pq"]["centroids"]
-
-    q = queries.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    )
-    probe_codes = sorted({
-        r["probe"]
-        for r in q.select(
-            F.explode(
-                multiprobe_sign_codes(F.col("vec"), n_bits, n_probes)
-            ).alias("probe")
-        ).distinct().collect()
-    })
-    if report is not None:
-        # no separate rerank set: ivf_pq_search re-ranks within the
-        # probed candidates, so one partition set covers both stages
-        report["probe_buckets"] = probe_codes
-    cand = (
-        spark.read.parquet(index_path)
-        .filter(F.col("bucket").isin(probe_codes))  # partition pruning
-    )
-    cand = _mask_tombstones(cand, read_tombstones(spark, index_path))
-    return ivf_pq_search(
-        cand, cand, q, centroids,
-        id_col="vec_id", vec_col="vec",
-        n_bits=n_bits, n_probes=n_probes, k_top=k, shortlist=shortlist,
-    )
 
 
 def search_index(
@@ -2346,54 +1675,171 @@ def search_index(
     allowed: DataFrame | None = None,
     report: dict | None = None,
 ) -> DataFrame:
-    """Kind-agnostic probe of a persisted IVF index: reads the layout
-    kind from ``_ivf_meta.json`` and dispatches to the sign-bucket or
-    learned-codebook search (identical signatures and output schema:
-    query_id, cand_id, cos_sim, rank). Consumers built ON TOP of an
-    index — hard-negative mining, health checks — go through this so
-    they work on any layout the builders produce.
+    """Top-k over a persisted IVF index (either layout, either tier);
+    returns (query_id, cand_id, cos_sim, rank). Consumers built ON TOP of
+    an index — hard-negative mining, health checks, the serving tier —
+    go through this, so they work on any layout the builders produce.
 
-    ``use_pq=True`` routes through the persisted PQ tier
-    (:func:`search_pq_ivf_index`: ADC from stored codes + exact
-    shortlist re-rank) — opt-in, not automatic, because the shortlist
-    stage changes the result's approximation profile and recall
-    baselines recorded against the full-vector probe must stay
-    comparable across calls.
+    The layout kind (read from ``_ivf_meta.json``) decides only how each
+    query picks its ``n_probes`` cells: a sign layout probes its base
+    code plus the codes with the LEAST-CONFIDENT bits flipped
+    (:func:`multiprobe_sign_codes`); a kmeans layout probes its nearest
+    centroids, ranked in one job over (queries × centroids). Everything
+    after is shared. The probe codes are collected (bounded:
+    |queries|·n_probes ints) and pushed as a partition filter, so the
+    scan touches ONLY the probed bucket directories (plan-asserted in
+    tests); tombstoned ids are anti-joined against the broadcast ledger;
+    candidates are scored by exact cosine against the broadcast query
+    side, a candidate reached through several probes counts once, and
+    ties rank by cand_id.
 
-    ``allowed`` (full-vector paths only) restricts candidates before
-    ranking — filtered vector search; see :func:`search_ivf_index`.
-    Unsupported with ``use_pq`` because the bounded ADC shortlist is
-    computed before any filter could apply — a selective filter would
-    silently drain it."""
-    import json as _json
-    import os as _os
+    ``allowed`` (optional, a frame whose FIRST column is candidate ids)
+    restricts candidates BEFORE ranking — filtered vector search
+    ("neighbors among docs where lang='en'"). Filtering the top-k after
+    an unfiltered search is NOT the same operation: it returns fewer
+    than k rows whenever disallowed ids out-rank allowed ones. A
+    selective filter thins each probed cell — raise n_probes
+    accordingly.
 
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
-    if use_pq:
-        if allowed is not None:
-            raise ValueError(
-                "allowed= is not supported with use_pq=True: the ADC "
-                "shortlist is fixed-size and computed before the filter "
-                "could apply; use the full-vector path for filtered "
-                "search"
+    ``use_pq=True`` runs the persisted PQ tier (``build_*_ivf_index(
+    pq_m=...)``; refused otherwise): the pooled candidates are
+    ADC-scored from their STORED codes (m table lookups, no d-dim dot),
+    the top-``shortlist`` per query is checkpointed, and only the cells
+    holding shortlisted rows are re-read for the exact cosine re-rank.
+    Opt-in, not automatic: the shortlist changes the approximation
+    profile, and recall baselines recorded against the full-vector probe
+    must stay comparable. ``allowed`` is refused with it — the
+    fixed-size shortlist is computed before any filter could apply, so a
+    selective filter would silently drain it. When it pays (measured,
+    SCALE.md r12/r13): its wall stays flat as probes widen where the
+    full-vector probe grows linearly, but the re-rank reads whole cells'
+    vectors, and on clustered data one full-vector probe already reaches
+    recall@5 = 1.0 at a third of the wall and bytes. Use it only when
+    recall needs wide probes, and keep ``shortlist`` >= ~40x k (ADC
+    cannot rank within a codebook cell: W=50 recalled 0.26 where W=800
+    recalled 1.0).
+
+    ``report`` (an empty dict, filled in place) receives
+    ``probe_buckets`` — the pruned partition set — and, with ``use_pq``,
+    ``rerank_buckets``, the cells the exact re-rank read; both for I/O
+    accounting (scripts/measure_pq_io.py)."""
+    from pyspark.sql import Window
+
+    meta = _read_meta(index_path)
+    pq = meta.get("pq") if use_pq else None
+    if use_pq and allowed is not None:
+        raise ValueError(
+            "allowed= is not supported with use_pq=True: the ADC "
+            "shortlist is fixed-size and computed before the filter "
+            "could apply; use the full-vector path for filtered search"
+        )
+    if use_pq and not pq:
+        raise ValueError(
+            f"index at {index_path} has no persisted PQ tier; rebuild with "
+            "build_ivf_index(pq_m=...) or build_kmeans_ivf_index(pq_m=...) "
+            "(codes and codebook are build-time layout, like the buckets)"
+        )
+    vec = F.col(vec_col)
+    q_cols = [
+        F.col(id_col).alias("query_id"), vec.alias("qv"),
+        l2_norm(vec).alias("qnrm"),
+    ]
+    if pq:
+        q_cols.append(_adc_tables(vec, pq["centroids"]).alias("_tbl"))
+    q = queries.select(*q_cols)
+    if meta.get("kind") == "kmeans":
+        cent = spark.createDataFrame(
+            list(enumerate(meta["centroids"])),
+            "cid long, centroid array<double>",
+        )
+        # nearest-centroid ranking: ||q-c||² = ||q||² + ||c||² − 2⟨q,c⟩
+        d2 = (
+            F.col("qnrm") * F.col("qnrm")
+            + dot(F.col("centroid"), F.col("centroid"))
+            - 2 * dot(F.col("qv"), F.col("centroid"))
+        )
+        wp = Window.partitionBy("query_id").orderBy(F.asc("_d2"), F.asc("cid"))
+        probes = (
+            q.crossJoin(F.broadcast(cent))
+            .withColumn("_d2", d2)
+            .withColumn("_r", F.row_number().over(wp))
+            .filter(F.col("_r") <= n_probes)
+            .select(*q.columns, F.col("cid").alias("probe"))
+        )
+    else:
+        probes = q.withColumn("probe", F.explode(
+            multiprobe_sign_codes(F.col("qv"), meta["n_bits"], n_probes)
+        ))
+    probe_codes = sorted(
+        {r["probe"] for r in probes.select("probe").distinct().collect()}
+    )
+    if report is not None:
+        report["probe_buckets"] = probe_codes
+    cand = spark.read.parquet(index_path).filter(
+        F.col("bucket").isin(probe_codes)  # partition pruning
+    )
+    # deleted docs must never surface: broadcast anti-join against the
+    # tombstone ledger, applied after pruning (no scan or shuffle cost)
+    cand = _mask_tombstones(cand, read_tombstones(spark, index_path))
+    probe_join = (F.col("bucket") == F.col("probe")) & (
+        F.col("vec_id") != F.col("query_id")
+    )
+    cs = dot(F.col("qv"), F.col("vec")) / (F.col("qnrm") * F.col("nrm"))
+    if not pq:
+        scored = (
+            _apply_allowed(cand, allowed)
+            .join(F.broadcast(probes), probe_join)
+            .select("query_id", F.col("vec_id").alias("cand_id"),
+                    cs.alias("cos_sim"))
+            .dropDuplicates(["query_id", "cand_id"])
+        )
+    else:
+        w_adc = Window.partitionBy("query_id").orderBy(
+            F.desc("adc_score"), F.asc("cand_id")
+        )
+        short = (
+            cand.select("vec_id", "bucket", "pq_code")
+            .join(F.broadcast(probes.select("query_id", "_tbl", "probe")),
+                  probe_join)
+            .select(
+                "query_id", F.col("vec_id").alias("cand_id"), "bucket",
+                _adc_score(F.col("pq_code"), F.col("_tbl")).alias("adc_score"),
             )
-        pq_fn = (
-            search_kmeans_pq_ivf_index
-            if meta.get("kind") == "kmeans"
-            else search_pq_ivf_index
+            .dropDuplicates(["query_id", "cand_id"])
+            .withColumn("_r", F.row_number().over(w_adc))
+            .filter(F.col("_r") <= shortlist)
+            .select("query_id", "cand_id", "bucket")
+            .localCheckpoint(eager=True)  # bounded: queries × shortlist rows
         )
-        return pq_fn(
-            spark, index_path, queries,
-            vec_col=vec_col, id_col=id_col, n_probes=n_probes, k=k,
-            shortlist=shortlist, report=report,
+        # The exact re-rank reads FULL vectors — the expensive column —
+        # only from the cells that hold shortlisted candidates: ADC
+        # shortlists concentrate in the nearest cells, so this scan
+        # narrows as probes widen (d=256: 42 of 59 probed cells at p=16,
+        # SCALE.md r13). Row-level pruning is not available: the
+        # shortlist is past parquet's isin-pushdown threshold. The
+        # checkpoint above bounds this collect and keeps the ADC stage
+        # from re-running for the re-rank branch.
+        short_buckets = sorted(
+            {r["bucket"] for r in short.select("bucket").distinct().collect()}
         )
-    kind = meta.get("kind", "sign")
-    fn = search_kmeans_ivf_index if kind == "kmeans" else search_ivf_index
-    return fn(
-        spark, index_path, queries,
-        vec_col=vec_col, id_col=id_col, n_probes=n_probes, k=k,
-        allowed=allowed, report=report,
+        if report is not None:
+            report["rerank_buckets"] = short_buckets
+        # narrow WITHIN the probe's relation rather than a fresh read:
+        # one file listing and one tombstone frame for both stages, so a
+        # tombstone or append landing between them cannot give the two
+        # stages different views of the index
+        vecs = cand.filter(F.col("bucket").isin(short_buckets)).select(
+            F.col("vec_id").alias("cand_id"), "vec", "nrm"
+        )
+        scored = (
+            short.select("query_id", "cand_id").join(vecs, "cand_id")
+            .join(F.broadcast(q.select("query_id", "qv", "qnrm")), "query_id")
+            .select("query_id", "cand_id", cs.alias("cos_sim"))
+        )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -2412,11 +1858,7 @@ def measure_index_recall(
     Returns matched/exact_total in [0, 1] (1.0 when the index is
     empty-adjacent: no exact neighbors exist)."""
     from pyspark.sql import Window
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
+    meta = _read_meta(index_path)
     id_col, vec_col = meta.get("id_col", "vec_id"), meta.get("vec_col", "embedding")
 
     approx = search_index(
@@ -2484,11 +1926,7 @@ def check_index_health(
     below the build-time number. Recommending is all it does — the
     rebuild itself is a fresh ``build_*_ivf_index`` (at 100 TB: built
     to the side and swapped, the index is just a table)."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
+    meta = _read_meta(index_path)
     k = k or int(meta.get("recall_k", 5))
     n_probes = n_probes or int(meta.get("recall_probes", 4))
     id_col = meta.get("id_col", "vec_id")

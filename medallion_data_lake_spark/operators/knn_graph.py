@@ -21,7 +21,7 @@ replaces (proven in tests/test_serving_store.py):
   ``n_probes`` nearest sign-bucket cells of a persisted IVF index
   (operators/ann.py layout), candidates join CELL-KEYED (a shuffle on
   the bucket id — never a corpus broadcast, never a driver collect,
-  unlike the bounded-query ``search_ivf_index``), exact cosine on the
+  unlike the bounded-query ``search_index``), exact cosine on the
   candidates, top-k per vector. The per-vector result equals
   ``ann.search_index(queries=that vector, n_probes=n_probes)`` — same
   candidate cells, same unrounded score, same tiebreak — so the store
@@ -110,7 +110,7 @@ def knn_graph_ivf(
     here IS the corpus — so both sides stay distributed: vectors
     explode to their n_probes cell codes map-side and the candidate
     join shuffles on the cell id. Scoring/tiebreak mirror
-    ``search_ivf_index`` exactly (unrounded cosine desc, cand-id asc,
+    ``search_index`` exactly (unrounded cosine desc, cand-id asc,
     cross-cell duplicates dropped), so per-vector output equals the
     online probe's — the store≡session equality the parity test
     asserts. Tombstoned ids appear on NEITHER side, matching the
@@ -128,17 +128,14 @@ def knn_graph_ivf(
     exporter's one-scan optimization: an appended bucket layout accretes
     small files, and each extra scan of it costs more than all the
     Derby work combined (profiled at the 200k fixture)."""
-    import json
-    import os
-
     from .ann import (
         _mask_tombstones,
+        _read_meta,
         multiprobe_sign_codes,
         read_tombstones,
     )
 
-    with open(os.path.join(index_path, "_ivf_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = _read_meta(index_path)
     if meta.get("kind", "sign") != "sign":
         raise ValueError(
             f"index at {index_path} is kind={meta.get('kind')!r}; the "

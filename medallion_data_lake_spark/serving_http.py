@@ -34,7 +34,8 @@ endpoint is the form a real deployment fronts with any UI):
 Every response is bounded (S14): ``max_rows`` is clamped to
 ``ROW_CAP`` — the server never streams an unbounded collect to a
 browser, which is the failure mode the reference's trust-the-user
-LIMIT policy invites. Errors come back as JSON with an HTTP status,
+LIMIT policy invites. Errors come back as JSON with an HTTP status —
+400 for the client's fault (bad input, bad SQL), 500 for the server's —
 and a failed statement never kills the server (same contract as
 ``serve_repl``).
 
@@ -49,14 +50,18 @@ handler threads, mirroring the reference's ``@st.cache_resource``.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import AnalysisException
+
 from .serving import ServingLayer
 
 ROW_CAP = 10_000  # absolute ceiling on rows per response (S14)
+_log = logging.getLogger(__name__)
 
 
 def _json_safe(v):
@@ -106,6 +111,18 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
+    def _send_error(self, exc: Exception) -> None:
+        """A failed request, classified honestly: invalid input
+        (``ValueError``, which covers malformed JSON) and statements
+        Spark cannot analyze or parse are the client's fault (400);
+        anything else is a server fault (500). The server keeps
+        serving either way."""
+        if isinstance(exc, (ValueError, AnalysisException)):
+            self._send(400, {"error": str(exc)})
+            return
+        _log.error("%s %s failed", self.command, self.path, exc_info=exc)
+        self._send(500, {"error": str(exc)})
+
     def log_message(self, fmt, *args):  # quiet: tests/CLI own the output
         pass
 
@@ -148,13 +165,15 @@ class _Handler(BaseHTTPRequestHandler):
             else:
                 self._send(404, {"error": f"no route {url.path}"})
         except Exception as exc:  # surface, keep serving
-            self._send(400, {"error": str(exc)})
+            self._send_error(exc)
 
     def do_POST(self) -> None:
         url = urlparse(self.path)
         try:
             length = int(self.headers.get("Content-Length", "0"))
             req = json.loads(self.rfile.read(length) or b"{}")
+            if not isinstance(req, dict):
+                raise ValueError("request body must be a JSON object")
             if url.path == "/query":
                 sql = req.get("sql")
                 if not sql:
@@ -200,7 +219,7 @@ class _Handler(BaseHTTPRequestHandler):
             else:
                 self._send(404, {"error": f"no route {url.path}"})
         except Exception as exc:
-            self._send(400, {"error": str(exc)})
+            self._send_error(exc)
 
 
 def run_curate_dry(serving: ServingLayer, req: dict) -> dict:

@@ -1403,7 +1403,6 @@ def export_vector_store_incremental(
     k_max = int(meta["k_max"])
     n_probes = int(meta.get("n_probes", 4))
 
-    import json as _json
     import os as _os
 
     # index-identity pin (r15, r14 ADVICE): the manifest records which
@@ -1423,13 +1422,12 @@ def export_vector_store_incremental(
 
     from .operators.ann import (
         _mask_tombstones,
+        _read_meta,
         multiprobe_sign_codes,
         read_tombstones,
     )
 
-    with open(_os.path.join(vec_index, "_ivf_meta.json")) as fh:
-        idx_meta = _json.load(fh)
-    n_bits = idx_meta["n_bits"]
+    n_bits = _read_meta(vec_index)["n_bits"]
     raw = spark.read.parquet(vec_index)
     # ONE materialized scan of the index serves every later step: an
     # appended bucket layout accretes small files, and each extra scan

@@ -147,7 +147,7 @@ def main() -> None:
         build_ivf_index,
         compact_index_tombstones,
         delete_from_index,
-        search_ivf_index,
+        search_index,
     )
 
     emb = spark.read.parquet(os.path.join(clone, "embeddings.parquet"))
@@ -157,7 +157,7 @@ def main() -> None:
     build_ivf_index(emb, ipath)
     ann_build_sec = round(time.time() - t0, 1)
     queries = emb.filter(F.col("vec_id") % 10_000 == 3)  # bounded batch
-    ann_search = lambda: search_ivf_index(  # noqa: E731
+    ann_search = lambda: search_index(  # noqa: E731
         spark, ipath, queries, k=10
     ).collect()
     s_pre, _ = timed(ann_search)

@@ -158,11 +158,14 @@ def test_split_bounds_oversized_learned_cluster(spark):
     assert pairs < 1200 * 1199 / 2 / 10
 
 
-def test_multiprobe_improves_recall_toward_bruteforce(spark):
+def test_multiprobe_improves_recall_toward_bruteforce(spark, tmp_path):
     """Multi-probe recovers neighbors that sign-cell boundaries cut off:
     recall@5 vs brute-force ground truth must strictly improve with
     probes and be high at 8 probes."""
-    from medallion_data_lake_spark.operators.ann import multiprobe_ann_search
+    from medallion_data_lake_spark.operators.ann import (
+        build_ivf_index,
+        search_index,
+    )
 
     rng = np.random.default_rng(13)
     # clustered corpus: 150 clusters x 10 members, intra-cluster cosine
@@ -176,6 +179,8 @@ def test_multiprobe_improves_recall_toward_bruteforce(spark):
     )
     n = len(arr)
     data = _vectors_df(spark, arr)
+    path = str(tmp_path / "ivf")
+    build_ivf_index(data, path, n_bits=8)
     qidx = list(range(0, n, n // nq))[:nq]
     queries = _vectors_df(spark, arr[qidx])  # ids 0..nq-1 map to qidx rows
 
@@ -188,8 +193,8 @@ def test_multiprobe_improves_recall_toward_bruteforce(spark):
         truth[qi] = set(np.argsort(-sims)[:k])
 
     def recall(n_probes):
-        got = multiprobe_ann_search(
-            data, queries, n_bits=8, n_probes=n_probes, k=k
+        got = search_index(
+            spark, path, queries, n_probes=n_probes, k=k
         ).collect()
         per_q = {}
         for r in got:

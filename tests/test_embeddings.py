@@ -67,7 +67,7 @@ def test_embeddings_feed_index_build_and_probe(spark, tmp_path):
     for a document's own vector must be its near-duplicate twin."""
     from medallion_data_lake_spark.operators.ann import (
         build_ivf_index,
-        search_ivf_index,
+        search_index,
     )
 
     rows = [(i, f"the quick brown fox number {i} jumps over the lazy dog")
@@ -80,7 +80,7 @@ def test_embeddings_feed_index_build_and_probe(spark, tmp_path):
     path = str(tmp_path / "emb_idx")
     build_ivf_index(emb, path)
     q = emb.filter(F.col("vec_id") == 100)
-    hits = search_ivf_index(spark, path, q, n_probes=8, k=1).collect()
+    hits = search_index(spark, path, q, n_probes=8, k=1).collect()
     assert hits and hits[0]["cand_id"] == 101
 
 

@@ -116,7 +116,7 @@ def test_rrf_fuses_persisted_ivf_branch(spark, tmp_path):
 
     from medallion_data_lake_spark.operators.ann import (
         build_ivf_index,
-        search_ivf_index,
+        search_index,
     )
     from medallion_data_lake_spark.operators.hybrid import ranked
     from medallion_data_lake_spark.operators.inverted_index import (
@@ -136,7 +136,7 @@ def test_rrf_fuses_persisted_ivf_branch(spark, tmp_path):
     build_ivf_index(emb, ipath)
     queries = emb.filter(F.col("vec_id") == 0)
     vec = (
-        search_ivf_index(spark, ipath, queries, k=10)
+        search_index(spark, ipath, queries, k=10)
         .select(F.col("cand_id").alias("doc_id"), "rank")
     )
 

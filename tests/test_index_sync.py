@@ -16,7 +16,7 @@ from medallion_data_lake_spark.operators.ann import (
     MIN_BITS,
     build_ivf_index,
     read_tombstones,
-    search_ivf_index,
+    search_index,
 )
 from medallion_data_lake_spark.operators.index_sync import (
     read_sync_watermark,
@@ -45,7 +45,7 @@ def _setup(spark, tmp_path):
 def _hits(spark, idx, queries):
     return {
         r["cand_id"]
-        for r in search_ivf_index(spark, idx, queries, n_probes=4, k=5).collect()
+        for r in search_index(spark, idx, queries, n_probes=4, k=5).collect()
     }
 
 

@@ -38,8 +38,6 @@ from medallion_data_lake_spark.operators.ann import (
     run_index_append_stream,
     run_index_delete_stream,
     search_index,
-    search_ivf_index,
-    search_pq_ivf_index,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -63,7 +61,7 @@ def test_delete_masks_all_search_paths_immediately(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 3)
 
     # pick victims that actually surface for these queries
-    before = search_ivf_index(spark, idx, queries, n_probes=4, k=5).collect()
+    before = search_index(spark, idx, queries, n_probes=4, k=5).collect()
     victims = sorted({r["cand_id"] for r in before})[:3]
     assert victims
 
@@ -72,8 +70,8 @@ def test_delete_masks_all_search_paths_immediately(spark, tmp_path):
     full = _hits(spark, idx, queries, n_probes=4, k=5)
     pq = {
         r["cand_id"]
-        for r in search_pq_ivf_index(
-            spark, idx, queries, n_probes=4, k=5, shortlist=30
+        for r in search_index(
+            spark, idx, queries, n_probes=4, k=5, use_pq=True, shortlist=30
         ).collect()
     }
     assert not (full & set(victims))
@@ -124,7 +122,7 @@ def test_compaction_purges_rows_and_preserves_results(spark, tmp_path):
     delete_from_index(spark, idx, doomed)
 
     n_before = spark.read.parquet(idx).count()
-    masked = search_ivf_index(spark, idx, queries, n_probes=4, k=5)
+    masked = search_index(spark, idx, queries, n_probes=4, k=5)
     pre = {(r["query_id"], r["rank"]): r["cand_id"] for r in masked.collect()}
 
     out = compact_index_tombstones(spark, idx)
@@ -136,7 +134,7 @@ def test_compaction_purges_rows_and_preserves_results(spark, tmp_path):
     assert not os.path.isdir(os.path.join(idx, f"bucket={one_bucket}"))
     post = {
         (r["query_id"], r["rank"]): r["cand_id"]
-        for r in search_ivf_index(spark, idx, queries, n_probes=4, k=5).collect()
+        for r in search_index(spark, idx, queries, n_probes=4, k=5).collect()
     }
     assert post == pre
 
@@ -316,7 +314,7 @@ def test_delete_coerces_plain_ids_to_index_dtype(spark, tmp_path):
     build_ivf_index(emb, idx, n_bits=MIN_BITS)
     queries = emb.filter(F.col("vec_id") < 3)
 
-    before = search_ivf_index(spark, idx, queries, n_probes=4, k=5).collect()
+    before = search_index(spark, idx, queries, n_probes=4, k=5).collect()
     victims = sorted({r["cand_id"] for r in before})[:2]
     assert victims
 

@@ -1,10 +1,12 @@
-"""Persisted IVF index: same answers as the in-flight bucketed search,
-and the probe REALLY prunes partitions (plan + file-level evidence)."""
+"""Persisted IVF index: same answers as an independent numpy multi-probe
+reference, and the probe REALLY prunes partitions (plan + file-level
+evidence)."""
 
 from __future__ import annotations
 
 import glob
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,8 +14,7 @@ from medallion_data_lake_spark.catalog import load_star_table
 from medallion_data_lake_spark.operators.ann import (
     MIN_BITS,
     build_ivf_index,
-    multiprobe_ann_search,
-    search_ivf_index,
+    search_index,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -38,20 +39,50 @@ def test_layout_is_bucket_partitioned(index):
     assert meta["n_bits"] == MIN_BITS
 
 
+def _numpy_multiprobe_topk(ids, vecs, qids, qvecs, n_bits, n_probes, k):
+    """Reference multi-probe search, written independently of Spark: a
+    query probes its base sign code plus the codes with its
+    ``n_probes - 1`` least-|v| coded bits flipped (ties by dim), and
+    ranks the stored rows in those buckets by (-cosine, id)."""
+    weights = 1 << np.arange(n_bits)
+    buckets = ((vecs[:, :n_bits] >= 0) * weights).sum(axis=1)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    out = {}
+    for qid, qv in zip(qids, qvecs):
+        base = int(((qv[:n_bits] >= 0) * weights).sum())
+        order = sorted(range(n_bits), key=lambda i: (abs(qv[i]), i))
+        probes = {base} | {base ^ (1 << i) for i in order[:n_probes - 1]}
+        sims = unit @ (qv / np.linalg.norm(qv))
+        cands = [
+            (-sims[j], int(ids[j])) for j in range(len(ids))
+            if buckets[j] in probes and ids[j] != qid
+        ]
+        for rank, (_, cid) in enumerate(sorted(cands)[:k], start=1):
+            out[(int(qid), rank)] = cid
+    return out
+
+
 def test_persisted_search_matches_inflight(spark, emb, index):
     path, _ = index
     queries = emb.limit(5)
-    got = search_ivf_index(spark, path, queries, n_probes=4, k=5)
-    want = multiprobe_ann_search(emb, queries, n_bits=MIN_BITS, n_probes=4, k=5)
+    got = search_index(spark, path, queries, n_probes=4, k=5)
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    vecs = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    qrows = queries.select("vec_id", "embedding").collect()
+    want = _numpy_multiprobe_topk(
+        ids, vecs, [r["vec_id"] for r in qrows],
+        np.array([r["embedding"] for r in qrows], dtype=np.float64),
+        n_bits=MIN_BITS, n_probes=4, k=5,
+    )
     g = {(r["query_id"], r["rank"]): r["cand_id"] for r in got.collect()}
-    w = {(r["query_id"], r["rank"]): r["cand_id"] for r in want.collect()}
-    assert g == w
+    assert g == want and g
 
 
 def test_probe_prunes_partitions(spark, emb, index):
     path, _ = index
     queries = emb.limit(2)
-    out = search_ivf_index(spark, path, queries, n_probes=2, k=3)
+    out = search_index(spark, path, queries, n_probes=2, k=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the scan must carry the bucket partition filter, and prune to a
     # strict subset of the index's bucket directories
@@ -86,7 +117,7 @@ def test_incremental_append_equals_full_rebuild(spark, emb, tmp_path):
     def answers(path):
         return {
             (r["query_id"], r["rank"]): r["cand_id"]
-            for r in search_ivf_index(
+            for r in search_index(
                 spark, path, queries, n_probes=4, k=3
             ).collect()
         }
@@ -108,7 +139,6 @@ def test_kmeans_index_recall_vs_bruteforce(spark, emb, tmp_path):
     from medallion_data_lake_spark.functions import dot, l2_norm
     from medallion_data_lake_spark.operators.ann import (
         build_kmeans_ivf_index,
-        search_kmeans_ivf_index,
     )
 
     path = str(tmp_path / "kidx")
@@ -116,7 +146,7 @@ def test_kmeans_index_recall_vs_bruteforce(spark, emb, tmp_path):
     assert meta["kind"] == "kmeans" and len(meta["centroids"]) == 16
 
     queries = emb.filter(F.col("vec_id") < 10)
-    got = search_kmeans_ivf_index(spark, path, queries, n_probes=6, k=3)
+    got = search_index(spark, path, queries, n_probes=6, k=3)
     rows = got.collect()
     assert {r["query_id"] for r in rows} == set(range(10))
     assert all(1 <= r["rank"] <= 3 for r in rows)
@@ -151,7 +181,6 @@ def test_kmeans_index_append_assigns_with_stored_centroids(spark, emb, tmp_path)
     from medallion_data_lake_spark.operators.ann import (
         append_to_ivf_index,
         build_kmeans_ivf_index,
-        search_kmeans_ivf_index,
     )
 
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
@@ -161,7 +190,7 @@ def test_kmeans_index_append_assigns_with_stored_centroids(spark, emb, tmp_path)
     append_to_ivf_index(half_b, path)
     # appended vectors are searchable and live inside bucket partitions
     queries = emb.filter(F.col("vec_id") < 4)
-    got = search_kmeans_ivf_index(spark, path, queries, n_probes=8, k=5)
+    got = search_index(spark, path, queries, n_probes=8, k=5)
     cand_ids = {r["cand_id"] for r in got.collect()}
     assert any(c % 2 == 1 for c in cand_ids)  # odd-half vectors found
     assert glob.glob(f"{path}/bucket=*/*.parquet")
@@ -173,7 +202,6 @@ def test_mine_hard_negatives_excludes_positives_and_ranks(spark, emb, tmp_path):
     from medallion_data_lake_spark.operators.ann import (
         build_ivf_index,
         mine_hard_negatives,
-        search_ivf_index,
     )
 
     path = str(tmp_path / "hn_idx")
@@ -181,7 +209,7 @@ def test_mine_hard_negatives_excludes_positives_and_ranks(spark, emb, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5)
     # label each query's current top-1 as its positive — the hardest
     # possible leak candidate
-    top1 = search_ivf_index(spark, path, queries, n_probes=4, k=1)
+    top1 = search_index(spark, path, queries, n_probes=4, k=1)
     positives = top1.select(
         F.col("query_id"), F.col("cand_id").alias("pos_id"))
     pos_pairs = {(r["query_id"], r["pos_id"]) for r in positives.collect()}
@@ -211,20 +239,17 @@ def test_mine_hard_negatives_excludes_positives_and_ranks(spark, emb, tmp_path):
 
 def test_mine_hard_negatives_dispatches_on_kmeans_index(spark, emb, tmp_path):
     """Round-5 advisor fix: mining over a LEARNED-CODEBOOK index must
-    dispatch by the persisted kind (pre-fix it called the sign search
-    unconditionally and died on meta['n_bits'] KeyError); and the sign
-    search now refuses a kmeans layout loudly instead of KeyError."""
+    follow the persisted kind (pre-fix it called the sign search
+    unconditionally and died on meta['n_bits'] KeyError)."""
     from medallion_data_lake_spark.operators.ann import (
         build_kmeans_ivf_index,
         mine_hard_negatives,
-        search_ivf_index,
-        search_kmeans_ivf_index,
     )
 
     path = str(tmp_path / "hn_km_idx")
     build_kmeans_ivf_index(emb, path, k=8)
     queries = emb.filter(F.col("vec_id") < 3)
-    top1 = search_kmeans_ivf_index(spark, path, queries, n_probes=4, k=1)
+    top1 = search_index(spark, path, queries, n_probes=4, k=1)
     positives = top1.select(
         F.col("query_id"), F.col("cand_id").alias("pos_id"))
     pos_pairs = {(r["query_id"], r["pos_id"]) for r in positives.collect()}
@@ -235,9 +260,6 @@ def test_mine_hard_negatives_dispatches_on_kmeans_index(spark, emb, tmp_path):
     assert rows and {r["query_id"] for r in rows} <= {0, 1, 2}
     for r in rows:
         assert (r["query_id"], r["neg_id"]) not in pos_pairs
-
-    with pytest.raises(ValueError, match="kind"):
-        search_ivf_index(spark, path, queries)
 
 
 def test_index_health_flags_recall_drift(spark, tmp_path):

@@ -244,7 +244,7 @@ def test_cli_ddl_and_index_delete_verbs(capsys, spark, tmp_path):
     from medallion_data_lake_spark.operators.ann import (
         MIN_BITS,
         build_ivf_index,
-        search_ivf_index,
+        search_index,
     )
     from medallion_data_lake_spark.operators.versioned import commit, read_table
 
@@ -271,7 +271,7 @@ def test_cli_ddl_and_index_delete_verbs(capsys, spark, tmp_path):
     capsys.readouterr()
     q = emb.filter(F.col("vec_id") < 5)
     hits = {r["cand_id"]
-            for r in search_ivf_index(spark, idx, q, k=5).collect()}
+            for r in search_index(spark, idx, q, k=5).collect()}
     assert not (hits & {0, 1, 2})
     rc = main(["index-compact", idx])
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])

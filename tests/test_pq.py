@@ -8,16 +8,13 @@ codebook.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from medallion_data_lake_spark.functions import dot, l2_norm
 from medallion_data_lake_spark.operators.ann import (
-    ivf_pq_search,
-    pq_adc_topk,
     pq_encode,
-    pq_search_rerank,
     pq_train,
-    sign_code,
 )
 
 DIM = 64
@@ -86,30 +83,45 @@ def _bruteforce_top5(df, queries):
     }
 
 
-def test_pq_adc_shortlist_finds_query_cluster(spark):
+def _kmeans_pq_index(df, path):
+    """A learned-codebook index with the PQ tier whose k=6 cells can all
+    be probed (n_probes=6): the ADC stage then scores EVERY candidate,
+    which is the unpruned ADC top-k the codebook alone determines."""
+    from medallion_data_lake_spark.operators.ann import build_kmeans_ivf_index
+
+    build_kmeans_ivf_index(df, path, k=6, pq_m=M, pq_k=K)
+    return path
+
+
+def test_pq_adc_shortlist_finds_query_cluster(spark, tmp_path):
     # ADC's resolution is the codebook cell: same-cluster vectors share
     # codes, so ADC cannot rank WITHIN a cluster — what it guarantees is
-    # that the shortlist comes from the right region. Assert that.
+    # that the shortlist comes from the right region. Assert that. A
+    # shortlist of k makes the exact re-rank only reorder the ADC top-k.
+    from medallion_data_lake_spark.operators.ann import search_index
+
     per = 40
     df = _clustered(spark, per=per).cache()
-    cb = pq_train(df, m=M, k=K, dim=DIM)
-    enc = pq_encode(df, cb)
-    rows = pq_adc_topk(enc, df.limit(10), cb, k_top=5).collect()
+    path = _kmeans_pq_index(df, str(tmp_path / "kmpq"))
+    rows = search_index(
+        spark, path, df.limit(10), n_probes=6, k=5, use_pq=True, shortlist=5
+    ).collect()
     same_cluster = sum(1 for r in rows if r.cand_id // per == r.query_id // per)
     assert same_cluster / len(rows) >= 0.9, (same_cluster, len(rows))
 
 
-def test_pq_rerank_recall_vs_bruteforce(spark):
+def test_pq_rerank_recall_vs_bruteforce(spark, tmp_path):
     # the production layout: ADC shortlist (codes only) -> exact cosine
     # re-rank of shortlist rows. Recall vs brute force should be high.
+    from medallion_data_lake_spark.operators.ann import search_index
+
     df = _clustered(spark).cache()
-    cb = pq_train(df, m=M, k=K, dim=DIM)
-    enc = pq_encode(df, cb).select("vec_id", "pq_code")
+    path = _kmeans_pq_index(df, str(tmp_path / "kmpq"))
     queries = df.limit(10)
     got = {
         (r.query_id, r.cand_id)
-        for r in pq_search_rerank(
-            enc, df, queries, cb, k_top=5, shortlist=60
+        for r in search_index(
+            spark, path, queries, n_probes=6, k=5, use_pq=True, shortlist=60
         ).collect()
     }
     truth = _bruteforce_top5(df, queries)
@@ -117,43 +129,88 @@ def test_pq_rerank_recall_vs_bruteforce(spark):
     assert recall >= 0.9, recall
 
 
-def test_ivf_pq_bucket_pruned_search(spark):
+def test_ivf_pq_bucket_pruned_search(spark, tmp_path):
     # the composed layout: coarse sign buckets prune candidates, ADC
     # shortlists within probed cells, exact re-rank finishes. With
-    # enough probes recall stays high while the candidate join is
-    # bucket-equi (hash join on bucket), not all-pairs.
+    # enough probes recall stays high while the candidate joins are
+    # hash joins, not all-pairs.
+    from medallion_data_lake_spark.operators.ann import (
+        build_ivf_index,
+        search_index,
+    )
+
     df = _clustered(spark).cache()
-    cb = pq_train(df, m=M, k=K, dim=DIM)
-    enc = pq_encode(df, cb).withColumn(
-        "bucket", sign_code(F.col("embedding"), 0, 8)
-    ).select("vec_id", "bucket", "pq_code")
+    path = str(tmp_path / "pqidx")
+    build_ivf_index(df, path, n_bits=8, pq_m=M, pq_k=K)
     queries = df.limit(10)
     got = {
         (r.query_id, r.cand_id)
-        for r in ivf_pq_search(
-            enc, df, queries, cb, n_bits=8, n_probes=8, k_top=5, shortlist=60
+        for r in search_index(
+            spark, path, queries, n_probes=8, k=5, use_pq=True, shortlist=60
         ).collect()
     }
     truth = _bruteforce_top5(df, queries)
     recall = len(got & truth) / len(truth)
     # multi-probe coarse stage costs some recall vs scan-everything;
-    # same regime as multiprobe_ann_search (0.74 @ 8 probes)
+    # same regime as the full-vector sign probe (0.74 @ 8 probes)
     assert recall >= 0.6, recall
-    # candidate join is a hash join keyed on bucket, not a nested loop
-    plan = ivf_pq_search(
-        enc, df, queries, cb, n_bits=8, n_probes=8
+    # the re-rank joins by key (the bucket-keyed ADC join ran inside
+    # the checkpointed shortlist), never a nested loop
+    plan = search_index(
+        spark, path, queries, n_probes=8, use_pq=True
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
-def test_adc_scores_candidates_from_codes_only(spark):
+def test_adc_scores_candidates_from_codes_only(spark, tmp_path):
+    # with a shortlist of k, the returned ids are the ADC top-k, and a
+    # numpy ADC over the STORED codes and the meta codebook alone (no
+    # vectors on the candidate side) reproduces them
+    import json
+
+    from medallion_data_lake_spark.operators.ann import search_index
+
     df = _clustered(spark)
-    cb = pq_train(df, m=M, k=K, dim=DIM)
-    enc = pq_encode(df, cb).select("vec_id", "pq_code")  # vectors dropped
-    out = pq_adc_topk(enc, df.limit(3), cb, k_top=4)
-    assert out.count() == 12  # 3 queries × top-4 — no vector column needed
+    path = _kmeans_pq_index(df, str(tmp_path / "kmpq"))
+    queries = df.filter(F.col("vec_id") < 3)
+    out = search_index(
+        spark, path, queries, n_probes=6, k=4, use_pq=True, shortlist=4
+    )
+    rows = out.collect()
+    assert len(rows) == 12  # 3 queries × top-4
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+
+    cent = json.load(open(f"{path}/_ivf_meta.json"))["pq"]["centroids"]
+    sub = len(cent[0][0])
+    codes = {
+        r.vec_id: r.pq_code
+        for r in spark.read.parquet(path).select("vec_id", "pq_code").collect()
+    }
+    for q in queries.collect():
+        # left-to-right sums, the same order as the Spark expression
+        tbl = []
+        for j, cj in enumerate(cent):
+            qs = q.embedding[j * sub:(j + 1) * sub]
+            row = []
+            for c in cj:
+                acc = 0.0
+                for a, b in zip(qs, c):
+                    acc += a * b
+                row.append(acc)
+            tbl.append(row)
+
+        def adc(code):
+            acc = 0.0
+            for j, c in enumerate(code):
+                acc += tbl[j][c]
+            return acc
+
+        want = sorted(
+            (-adc(code), cid) for cid, code in codes.items() if cid != q.vec_id
+        )[:4]
+        got = {r.cand_id for r in rows if r.query_id == q.vec_id}
+        assert got == {cid for _, cid in want}
 
 
 # ---------------------------------------------------------------------------
@@ -164,36 +221,30 @@ def test_adc_scores_candidates_from_codes_only(spark):
 
 
 def test_persisted_pq_search_matches_inflight(spark, tmp_path):
-    """build_ivf_index(pq_m=...) + search_pq_ivf_index must return the
-    SAME results as the in-flight pq_train → pq_encode → ivf_pq_search
-    path (the codebook is seeded, so the two layouts are identical)."""
+    """build_ivf_index(pq_m=...) must persist the SAME codebook and
+    codes as the in-flight pq_train → pq_encode path (the codebook is
+    seeded), row for row, and the persisted tier must answer."""
     from medallion_data_lake_spark.operators.ann import (
-        MIN_BITS,
         build_ivf_index,
-        search_pq_ivf_index,
+        search_index,
     )
 
     df = _clustered(spark)
-    queries = df.filter(F.col("vec_id").isin(0, 45, 123))
     path = str(tmp_path / "pqidx")
     meta = build_ivf_index(df, path, pq_m=M, pq_k=K)
     assert meta["pq"]["m"] == M and len(meta["pq"]["centroids"]) == M
 
-    persisted = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in search_pq_ivf_index(spark, path, queries, k=5).collect()
-    }
-
     cb = pq_train(df, m=M, k=K, dim=DIM)          # same seed default (42)
-    encoded = pq_encode(
-        df.withColumn("bucket", sign_code(F.col("embedding"), 0, MIN_BITS)),
-        cb,
-    )
-    inflight = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in ivf_pq_search(encoded, df, queries, cb, k_top=5).collect()
+    assert meta["pq"]["centroids"] == cb
+    inflight = {r.vec_id: r.pq_code for r in pq_encode(df, cb).collect()}
+    stored = {
+        r.vec_id: r.pq_code
+        for r in spark.read.parquet(path).select("vec_id", "pq_code").collect()
     }
-    assert persisted == inflight and len(persisted) > 0
+    assert stored == inflight and len(stored) == df.count()
+
+    queries = df.filter(F.col("vec_id").isin(0, 45, 123))
+    assert search_index(spark, path, queries, k=5, use_pq=True).count() > 0
 
 
 def test_append_reencodes_with_stored_codebook(spark, tmp_path):
@@ -205,7 +256,7 @@ def test_append_reencodes_with_stored_codebook(spark, tmp_path):
     from medallion_data_lake_spark.operators.ann import (
         append_to_ivf_index,
         build_ivf_index,
-        search_pq_ivf_index,
+        search_index,
     )
 
     df = _clustered(spark)
@@ -227,7 +278,7 @@ def test_append_reencodes_with_stored_codebook(spark, tmp_path):
 
     # an appended vector's cluster-mates (also appended) are findable
     q = df.filter(F.col("vec_id") == 210)
-    got = search_pq_ivf_index(spark, path, q, k=5).collect()
+    got = search_index(spark, path, q, k=5, use_pq=True).collect()
     assert len(got) == 5
     same_cluster = {r["cand_id"] for r in got if 200 <= r["cand_id"] < 240}
     assert len(same_cluster) >= 3  # cluster 5 spans ids 200..239
@@ -241,14 +292,14 @@ def test_persisted_pq_search_prunes_partitions(spark, tmp_path):
 
     from medallion_data_lake_spark.operators.ann import (
         build_ivf_index,
-        search_pq_ivf_index,
+        search_index,
     )
 
     df = _clustered(spark)
     path = str(tmp_path / "pqidx")
     build_ivf_index(df, path, pq_m=M, pq_k=K)
-    out = search_pq_ivf_index(
-        spark, path, df.filter(F.col("vec_id") == 7), k=3
+    out = search_index(
+        spark, path, df.filter(F.col("vec_id") == 7), k=3, use_pq=True
     )
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -260,29 +311,28 @@ def test_persisted_pq_search_prunes_partitions(spark, tmp_path):
 
 def test_search_index_dispatches_to_pq(spark, tmp_path):
     """search_index(use_pq=True) routes through the persisted PQ tier
-    (≡ search_pq_ivf_index); without the flag it stays on the
-    full-vector probe; a code-less index refuses the flag loudly."""
+    (its re-rank stage reports the cells it read); without the flag it
+    stays on the full-vector probe; a code-less index refuses the flag
+    loudly."""
     import pytest as _pytest
 
     from medallion_data_lake_spark.operators.ann import (
         build_ivf_index,
         search_index,
-        search_pq_ivf_index,
     )
 
     df = _clustered(spark)
     q = df.filter(F.col("vec_id") == 3)
     path = str(tmp_path / "pqidx")
     build_ivf_index(df, path, pq_m=M, pq_k=K)
-    via_dispatch = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in search_index(spark, path, q, k=5, use_pq=True).collect()
-    }
-    direct = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in search_pq_ivf_index(spark, path, q, k=5).collect()
-    }
-    assert via_dispatch == direct and via_dispatch
+    pq_report, full_report = {}, {}
+    via_pq = search_index(
+        spark, path, q, k=5, use_pq=True, report=pq_report).collect()
+    assert len(via_pq) == 5
+    assert set(pq_report["rerank_buckets"]) <= set(pq_report["probe_buckets"])
+    assert search_index(
+        spark, path, q, k=5, report=full_report).count() == 5
+    assert "rerank_buckets" not in full_report
 
     plain = str(tmp_path / "plainidx")
     build_ivf_index(df, plain)
@@ -297,34 +347,43 @@ def test_search_index_dispatches_to_pq(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.parametrize("layout", ["kmeans", "sign"])
 def test_kmeans_pq_recovery_matches_exact_under_exhaustive_probes(
-    spark, tmp_path
+    spark, tmp_path, layout
 ):
-    """With every cell probed and a corpus-sized shortlist, the PQ
-    recovery path must return EXACTLY the full-vector search's top-k:
-    the ADC pre-rank can then only reorder candidates that the exact
-    re-rank re-sorts, so any divergence is a bug in one path."""
+    """With a corpus-sized shortlist, the PQ recovery path must return
+    EXACTLY the full-vector search's top-k at the same probes — same
+    ids, ranks and cos_sim: the ADC pre-rank can then only reorder
+    candidates that the exact re-rank re-sorts, so any divergence is a
+    bug in one path. Kmeans probes every cell; sign probes 4."""
     from medallion_data_lake_spark.operators.ann import (
+        build_ivf_index,
         build_kmeans_ivf_index,
         search_index,
     )
 
     df = _clustered(spark)
-    path = str(tmp_path / "kmpq")
-    meta = build_kmeans_ivf_index(df, path, k=6, pq_m=M, pq_k=K)
-    assert meta["pq"]["m"] == M and meta["kind"] == "kmeans"
+    path = str(tmp_path / "pqidx")
+    if layout == "kmeans":
+        meta = build_kmeans_ivf_index(df, path, k=6, pq_m=M, pq_k=K)
+        assert meta["kind"] == "kmeans"
+        n_probes = 6
+    else:
+        meta = build_ivf_index(df, path, pq_m=M, pq_k=K)
+        n_probes = 4
+    assert meta["pq"]["m"] == M
 
     queries = df.filter(F.col("vec_id").isin(0, 77, 200))
     exact = {
-        (r["query_id"], r["cand_id"], r["rank"])
+        (r["query_id"], r["cand_id"], r["rank"], r["cos_sim"])
         for r in search_index(
-            spark, path, queries, n_probes=6, k=5
+            spark, path, queries, n_probes=n_probes, k=5
         ).collect()
     }
     recovered = {
-        (r["query_id"], r["cand_id"], r["rank"])
+        (r["query_id"], r["cand_id"], r["rank"], r["cos_sim"])
         for r in search_index(
-            spark, path, queries, n_probes=6, k=5,
+            spark, path, queries, n_probes=n_probes, k=5,
             use_pq=True, shortlist=240,
         ).collect()
     }

@@ -212,6 +212,33 @@ def test_http_query_bounded_and_errors(http_server):
     assert _get(f"{http_server}/tables")["tables"]  # still alive
 
 
+def test_http_server_fault_is_500_and_server_survives(spark):
+    """A fault inside the serving layer is the server's, not the
+    client's: 500 with the error text, and the server keeps answering.
+    A body that is not a JSON object stays a client error (400)."""
+    from medallion_data_lake_spark.serving import ServingLayer
+    from medallion_data_lake_spark.serving_http import serve_http_background
+
+    s = ServingLayer(spark, gold_root=None)
+
+    def broken_query(sql):
+        raise RuntimeError("serving layer fault")
+
+    s.query = broken_query
+    server, thread = serve_http_background(s, port=0)
+    host, port = server.server_address
+    base = f"http://{host}:{port}"
+    try:
+        status, out = _post(f"{base}/query", {"sql": "SELECT 1"})
+        assert status == 500 and "serving layer fault" in out["error"]
+        status, out = _post(f"{base}/query", ["SELECT 1"])
+        assert status == 400 and "JSON object" in out["error"]
+        assert "tables" in _get(f"{base}/tables")  # still alive
+    finally:
+        server.shutdown()
+        thread.join(timeout=5)
+
+
 def test_http_samples_pack(http_server):
     out = _get(f"{http_server}/samples")
     assert set(out) == set(SAMPLE_QUERIES)

@@ -15,7 +15,7 @@ from medallion_data_lake_spark.operators.ann import (
     build_ivf_index,
     init_streaming_ivf_index,
     run_index_append_stream,
-    search_ivf_index,
+    search_index,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -57,7 +57,7 @@ def test_streamed_index_matches_batch_built_and_survives_replay(spark, tmp_path)
     def answers(path):
         return {
             (r["query_id"], r["rank"]): r["cand_id"]
-            for r in search_ivf_index(
+            for r in search_index(
                 spark, path, queries, n_probes=4, k=3
             ).collect()
         }
