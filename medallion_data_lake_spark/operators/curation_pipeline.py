@@ -38,6 +38,7 @@ from ..functions import md5_int
 from ..queries.dedup import lsh_pairs, shingle_hashes, signatures
 from ..queries.text import tokens
 from .dedup_graph import connected_components
+from .lsh import GEOMETRY, N_MINHASH, band_keys, est_jaccard, mh_cols
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
@@ -140,43 +141,22 @@ def minhash_est_jaccard() -> "F.Column":
     ``_bid_mh*`` columns (the :func:`banded_signatures` layouts). ONE
     definition for the live fuzzy stage and the persisted verdict route
     — same rationale as :func:`contamination_ratios`."""
-    from ..queries.dedup import N_MINHASH
-
-    return sum(
-        F.when(F.col(f"_cid_mh{j}") == F.col(f"_bid_mh{j}"), 1).otherwise(0)
-        for j in range(N_MINHASH)
-    ) / float(N_MINHASH)
+    return est_jaccard(mh_cols("_cid_"), mh_cols("_bid_"))
 
 
 def banded_signatures(side: DataFrame, sid: str, tcol: str,
                       side_id: str,
                       production_hash: bool = False) -> DataFrame:
-    """(sid, sid_mh0..N-1, band, bkey) — one row per LSH band per doc.
-    THE band-key construction for both fuzzy-decon sides and the
-    persisted benchmark artifact: a single definition, because persisted
-    and live band keys must collide or fuzzy decon silently passes
-    everything (the sidecar pins the geometry constants; this pins the
-    expression)."""
-    from ..queries.dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND
-
+    """(sid, sid_mh0..N-1, band, bkey) — one row per LSH band per doc,
+    for both fuzzy-decon sides and the persisted benchmark artifact."""
     sigs = signatures(side, id_col=side_id, text_col=tcol,
                       production=production_hash)
+    mh = [f"{sid}_mh{j}" for j in range(N_MINHASH)]
     return sigs.select(
         F.col("doc_id").alias(sid),
-        *[F.col(f"mh{j}").alias(f"{sid}_mh{j}")
-          for j in range(N_MINHASH)],
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(":", *[
-                    F.col(f"mh{b * ROWS_PER_BAND + r}").cast("string")
-                    for r in range(ROWS_PER_BAND)
-                ]).alias("bkey"),
-            )
-            for b in range(N_BANDS)
-        ])).alias("_b"),
-    ).select(sid, *[f"{sid}_mh{j}" for j in range(N_MINHASH)],
-             "_b.band", "_b.bkey")
+        *[c.alias(n) for c, n in zip(mh_cols(), mh)],
+        F.explode(band_keys(mh_cols())).alias("_b"),
+    ).select(sid, *mh, "_b.band", "_b.bkey")
 
 
 def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame | None,
@@ -244,14 +224,11 @@ def materialize_benchmark_decon(spark, bench: DataFrame, root: str,
       (``_bid, _bid_mh0..N-1, band, bkey``) the fuzzy stage joins.
 
     A ``_bench_decon.json`` sidecar records ``production_hash`` and the
-    LSH geometry (N_MINHASH/N_BANDS/ROWS_PER_BAND) — consumed tables
-    are refused when they mismatch the pipeline config, because a
-    different hash family or banding would silently never collide.
-    Returns {"n_ngrams", "n_band_rows"}."""
+    LSH :data:`~.lsh.GEOMETRY`; consumed tables are refused when they
+    mismatch the pipeline config. Returns {"n_ngrams", "n_band_rows"}."""
     import json as _json
     import os as _os
 
-    from ..queries.dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND
     from .versioned import commit
 
     ngrams = (
@@ -263,8 +240,6 @@ def materialize_benchmark_decon(spark, bench: DataFrame, root: str,
         F.monotonically_increasing_id().alias("_bench_row_id"),
         F.col(bench_text_col).alias("_btext"),
     )
-    # THE shared band-key construction (banded_signatures): persisted
-    # and live band keys are the same expression by definition
     bands = banded_signatures(bench_prepared, "_bid", "_btext",
                               "_bench_row_id", production_hash)
     _os.makedirs(root, exist_ok=True)
@@ -272,8 +247,7 @@ def materialize_benchmark_decon(spark, bench: DataFrame, root: str,
     # embeddings/verdict sidecars)
     with open(_os.path.join(root, BENCH_DECON_SIDECAR), "w") as fh:
         _json.dump({"production_hash": bool(production_hash),
-                    "n_minhash": N_MINHASH, "n_bands": N_BANDS,
-                    "rows_per_band": ROWS_PER_BAND}, fh)
+                    **GEOMETRY}, fh)
     commit(ngrams, _os.path.join(root, "ngrams"), mode="overwrite")
     commit(bands, _os.path.join(root, "bands"), mode="overwrite",
            stats_cols=("bkey",))
@@ -366,7 +340,6 @@ def materialize_decon_verdict(spark, docs: DataFrame,
     import json as _json
     import os as _os
 
-    from ..queries.dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND
     from .embeddings import text_fingerprint
     from .versioned import commit, latest_version, merge_into, read_table
 
@@ -377,13 +350,11 @@ def materialize_decon_verdict(spark, docs: DataFrame,
             f"{BENCH_DECON_SIDECAR} sidecar — materialize it with "
             "materialize_benchmark_decon first"
         )
-    _geom = {"n_minhash": N_MINHASH, "n_bands": N_BANDS,
-             "rows_per_band": ROWS_PER_BAND}
-    _got = {k: bench_meta.get(k) for k in _geom}
-    if _got != _geom:
+    _got = {k: bench_meta.get(k) for k in GEOMETRY}
+    if _got != GEOMETRY:
         raise ValueError(
             f"bench decon root {bench_decon_root} has LSH geometry "
-            f"{_got} but the code uses {_geom} — re-materialize it"
+            f"{_got} but the code uses {GEOMETRY} — re-materialize it"
         )
     ngrams_path = _os.path.join(bench_decon_root, "ngrams")
     bands_path = _os.path.join(bench_decon_root, "bands")
@@ -1129,7 +1100,6 @@ def curate_corpus(docs: DataFrame, bench: DataFrame | None = None,
                 "(bench= / benchmark_decon_table) are both configured — "
                 "one would be silently ignored; pass one decon source"
             )
-        from ..queries.dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND
         from .versioned import latest_version as _lv
         from .versioned import read_table as _rt_vt
 
@@ -1150,14 +1120,12 @@ def curate_corpus(docs: DataFrame, bench: DataFrame | None = None,
                 f"{cfg.production_hash} — its fuzzy measures come from "
                 "a different hash family; re-materialize or align"
             )
-        _want = {"n_minhash": N_MINHASH, "n_bands": N_BANDS,
-                 "rows_per_band": ROWS_PER_BAND}
-        _got = {k: bm.get(k) for k in _want}
-        if _got != _want:
+        _got = {k: bm.get(k) for k in GEOMETRY}
+        if _got != GEOMETRY:
             raise ValueError(
                 f"decon verdict table {cfg.decon_verdict_table} was "
                 f"computed under LSH geometry {_got} but the code uses "
-                f"{_want}; re-materialize the verdicts"
+                f"{GEOMETRY}; re-materialize the verdicts"
             )
         import os as _os_vt
 
@@ -1219,21 +1187,14 @@ def curate_corpus(docs: DataFrame, bench: DataFrame | None = None,
                 "families never collide, so fuzzy decon would silently "
                 "pass everything; re-materialize or align the config"
             )
-        # LSH-geometry pins (r15, r14 ADVICE): the sidecar records the
-        # minhash/banding constants the table was built with; if the
-        # code's constants ever drift, a persisted bands table with a
-        # different geometry silently produces FEWER collisions (fuzzy
-        # decon under-flags) — refuse like the hash-family check above.
-        from ..queries.dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND
-
-        _want = {"n_minhash": N_MINHASH, "n_bands": N_BANDS,
-                 "rows_per_band": ROWS_PER_BAND}
-        _got = {k: meta.get(k) for k in _want}
-        if _got != _want:
+        # LSH-geometry pin (r15): refuse a bands table built under
+        # other minhash/banding constants, like the hash-family check
+        _got = {k: meta.get(k) for k in GEOMETRY}
+        if _got != GEOMETRY:
             raise ValueError(
                 f"benchmark decon table {cfg.benchmark_decon_table} was "
                 f"materialized with LSH geometry {_got} but the code "
-                f"uses {_want} — band keys from different geometries "
+                f"uses {GEOMETRY} — band keys from different geometries "
                 "do not collide correctly; re-materialize the table"
             )
         import os as _os

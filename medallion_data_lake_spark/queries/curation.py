@@ -515,7 +515,8 @@ _FUZZY_TAU = 0.5  # flag when estimated Jaccard >= tau
 
 
 def _fuzzy_oracle() -> str:
-    from .dedup import N_BANDS, N_MINHASH, _SQL_SIGS_CTE, _sql_band_key
+    from ..operators.lsh import N_BANDS, N_MINHASH
+    from .dedup import _SQL_SIGS_CTE, _sql_band_key
 
     sigs_cte = _SQL_SIGS_CTE.replace(
         "SELECT doc_id,", "SELECT doc_id, source,", 1
@@ -572,36 +573,15 @@ def _fuzzy_oracle() -> str:
     # (re-gated this round)
 )
 def decontaminate_fuzzy_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND, signatures
+    from ..operators.curation_pipeline import banded_signatures
+    from ..operators.lsh import est_jaccard, mh_cols
 
     d = load_star_table_spread(spark, sf_dir, "documents", "doc_id")
-
-    def banded(side: DataFrame, id_alias: str) -> DataFrame:
-        sigs = signatures(side)
-        return sigs.select(
-            F.col("doc_id").alias(id_alias),
-            *[F.col(f"mh{j}").alias(f"{id_alias}_mh{j}")
-              for j in range(N_MINHASH)],
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(":", *[
-                        F.col(f"mh{b * ROWS_PER_BAND + r}").cast("string")
-                        for r in range(ROWS_PER_BAND)
-                    ]).alias("bkey"),
-                )
-                for b in range(N_BANDS)
-            ])).alias("_b"),
-        ).select(id_alias, *[f"{id_alias}_mh{j}" for j in range(N_MINHASH)],
-                 "_b.band", "_b.bkey")
-
-    corpus = banded(d.filter(F.col("source") != BENCH_SOURCE), "doc_id")
-    bench = banded(d.filter(F.col("source") == BENCH_SOURCE), "bench_doc_id")
-    est = sum(
-        F.when(F.col(f"doc_id_mh{j}") == F.col(f"bench_doc_id_mh{j}"), 1)
-        .otherwise(0)
-        for j in range(N_MINHASH)
-    ) / float(N_MINHASH)
+    corpus = banded_signatures(d.filter(F.col("source") != BENCH_SOURCE),
+                               "doc_id", "text", "doc_id")
+    bench = banded_signatures(d.filter(F.col("source") == BENCH_SOURCE),
+                              "bench_doc_id", "text", "doc_id")
+    est = est_jaccard(mh_cols("doc_id_"), mh_cols("bench_doc_id_"))
     pairs = (
         corpus.join(bench, ["band", "bkey"])
         .select("doc_id", "bench_doc_id",

@@ -24,20 +24,23 @@ bounded consecutive-pair queries.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_star_table, load_star_table_spread
 from ..functions import cosine, md5_int
+from ..operators.lsh import (
+    N_BANDS,
+    N_MINHASH,
+    ROWS_PER_BAND,
+    band_self_join,
+    est_jaccard,
+    mh_cols,
+)
 from . import query
 from ._parity import sql_stable_round, stable_round
 
 SHINGLE_W = 3        # words per shingle
-N_MINHASH = 8        # minhash functions
-N_BANDS = 4          # LSH bands (2 rows per band)
-ROWS_PER_BAND = N_MINHASH // N_BANDS
 SIMHASH_BITS = 16
 
 # Universal-hash family over a Mersenne prime: each shingle/token is
@@ -307,67 +310,21 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_pairs(signature_df(spark, sf_dir))
 
 
-def _band_self_join(sigs: DataFrame, keep_signatures: bool) -> DataFrame:
-    """Self-join of a (doc_id, mh0..mhN) signature frame on colliding
-    LSH bands, ``a.doc_id < b.doc_id``: one row per colliding band, so a
-    pair that collides in several bands repeats. Each side carries the
-    signature columns only if ``keep_signatures``."""
-    mh = [f"mh{j}" for j in range(N_MINHASH)] if keep_signatures else []
-    bands = sigs.select(
-        "doc_id",
-        *[F.col(c) for c in mh],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"mh{b * ROWS_PER_BAND + r}").cast("string")
-                                for r in range(ROWS_PER_BAND)
-                            ],
-                        ).alias("bkey"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", *mh, "bk.band", "bk.bkey")
-    # shuffle-hash self-join (r15): identical banded subtrees on both
-    # sides — forcing the shuffle join makes the two Exchanges
-    # canonically equal, so ReuseExchange computes the signature fold
-    # once instead of twice (the broadcast plan duplicates it; at corpus
-    # scale the join must shuffle anyway). Same rationale as
-    # operators/multimodal.phash_band_pairs.
-    a, b = bands.alias("a").hint("shuffle_hash"), bands.alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-
-
 def lsh_pairs(sigs: DataFrame) -> DataFrame:
     """Banded LSH candidate pairs ``(doc_a, doc_b, est_jaccard)``,
     distinct, from a (doc_id, mh0..mhN) signature frame (see the
     registry query's doc for the plan rationale)."""
-    matches = reduce(
-        lambda acc, j: acc
-        + F.when(F.col(f"a.mh{j}") == F.col(f"b.mh{j}"), 1).otherwise(0),
-        range(1, N_MINHASH),
-        F.when(F.col("a.mh0") == F.col("b.mh0"), 1).otherwise(0),
-    )
+    mh = [f"mh{j}" for j in range(N_MINHASH)]
     # a pair colliding in several bands yields identical rows (same
     # signatures -> same est_jaccard), so distinct() on the final triple
     # equals the original distinct-pairs-then-score result
     return (
-        _band_self_join(sigs, keep_signatures=True)
+        band_self_join(sigs, mh_cols(), *mh)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            stable_round(matches / F.lit(float(N_MINHASH)), 4).alias("est_jaccard"),
+            stable_round(est_jaccard(mh_cols("a."), mh_cols("b.")), 4)
+            .alias("est_jaccard"),
         )
         .distinct()
     )
@@ -383,7 +340,7 @@ def lsh_pair_keys(sigs: DataFrame) -> DataFrame:
     shuffle is left to the consumer, which symmetrizes-then-distincts
     anyway (a distinct here PLUS that one would pay two full shuffles
     of the pair stream)."""
-    return _band_self_join(sigs, keep_signatures=False).select(
+    return band_self_join(sigs, mh_cols()).select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
 

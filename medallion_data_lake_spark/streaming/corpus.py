@@ -35,9 +35,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.lsh import (
+    N_MINHASH,
+    band_keys,
+    band_self_join,
+    est_jaccard,
+    mh_cols,
+)
 
 DOC_SCHEMA = T.StructType(
     [
@@ -329,46 +337,28 @@ def run_incremental_corpus_ingest(
 # ledger is batch-id partitioned, replays exclude their own partial rows.
 
 
+def _signatures(docs: DataFrame, production: bool = True) -> DataFrame:
+    """(doc_id, sig array<long>) — the ledger's signature layout."""
+    from ..queries.dedup import signatures
+
+    return signatures(docs, production=production).select(
+        "doc_id", F.array(*mh_cols()).alias("sig"))
+
+
+def _items(sig: Column) -> list[Column]:
+    """The N_MINHASH components of a ``sig`` array."""
+    return [sig[j] for j in range(N_MINHASH)]
+
+
 def _signature_bands(docs: DataFrame, production: bool = True) -> DataFrame:
     """(doc_id, sig array<long>, band, bkey) — one row per band per doc."""
-    from ..queries.dedup import N_BANDS, N_MINHASH, ROWS_PER_BAND, signatures
-
-    sigs = signatures(docs, production=production).select(
-        "doc_id",
-        F.array(*[F.col(f"mh{j}") for j in range(N_MINHASH)]).alias("sig"),
-    )
-    return sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.element_at("sig", b * ROWS_PER_BAND + r + 1).cast("string")
-                                for r in range(ROWS_PER_BAND)
-                            ],
-                        ).alias("bkey"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
+    return _signatures(docs, production).select(
+        "doc_id", "sig", F.explode(band_keys(_items(F.col("sig")))).alias("bk"),
     ).select("doc_id", "sig", "bk.band", "bk.bkey")
 
 
-def _est_jaccard(sig_a, sig_b) -> F.Column:
-    from ..queries.dedup import N_MINHASH
-
-    agree = F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return agree / F.lit(float(N_MINHASH))
+def _est_jaccard(sig_a: Column, sig_b: Column) -> Column:
+    return est_jaccard(_items(sig_a), _items(sig_b))
 
 
 def _band_key64(band, bkey) -> F.Column:
@@ -444,14 +434,8 @@ def near_dedup_against_ledger(
 
     # in-batch: candidate pairs via band collision, verified by est
     # Jaccard, greedy min-id winner (drop the larger id of each pair)
-    a, b = bands.alias("a"), bands.alias("b")
     losers = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        band_self_join(_signatures(batch_docs), _items(F.col("sig")), "sig")
         .filter(_est_jaccard(F.col("a.sig"), F.col("b.sig")) >= min_est_jaccard)
         .select(F.col("b.doc_id").alias(id_col))
         .distinct()
