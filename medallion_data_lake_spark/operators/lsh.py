@@ -58,8 +58,10 @@ def band_self_join(sigs: DataFrame, mh: Sequence[Column],
     """Doc pairs of a ``doc_id``-keyed signature frame whose band keys
     collide, ``a.doc_id < b.doc_id``: one row per colliding band, so a
     pair colliding in several bands repeats. ``mh`` are the signature
-    components; each side carries the ``carry`` columns."""
-    bands = sigs.select(
+    components; each side carries the ``carry`` columns. A doc whose
+    signature is NULL (NULL text; all components come from one fold)
+    pairs with nothing: its ``""`` keys would pair every such doc."""
+    bands = sigs.filter(mh[0].isNotNull()).select(
         "doc_id", *carry, F.explode(band_keys(mh)).alias("bk"),
     ).select("doc_id", *carry, "bk.band", "bk.bkey")
     # shuffle-hash self-join (r15): identical banded subtrees on both

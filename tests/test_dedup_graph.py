@@ -107,6 +107,8 @@ def test_lsh_pair_keys_match_lsh_pairs(spark):
             (4, "entirely different words " + "xyz "),
             (5, None),                                  # NULL text
             (6, ""),                                    # empty text
+            (7, None),
+            (8, None),
         ],
         "doc_id long, text string",
     )
@@ -122,3 +124,6 @@ def test_lsh_pair_keys_match_lsh_pairs(spark):
     assert full  # the fixture must actually produce collisions
     # the keys keep a<b (no self-pairs, no reversed duplicates)
     assert all(a < b for a, b in keys)
+    # NULL-text docs pair with nothing (the oracle's NULL band key
+    # joins no row), though concat_ws keys each of them as ""
+    assert not {5, 7, 8} & {d for pair in full for d in pair}
