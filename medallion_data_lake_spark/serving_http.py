@@ -79,6 +79,30 @@ def _json_safe(v):
     return str(v)
 
 
+_FIELD_TYPES = {"sql": str, "max_rows": int, "k": int, "vec_id": int,
+                "terms": list, "phrase": list}
+_TYPE_NAMES = {str: "a string", int: "an integer", list: "a list of strings"}
+
+
+def field(req: dict, name: str, default=None):
+    """``req[name]``, or ``default`` when it is absent or null, checked
+    against its type in ``_FIELD_TYPES`` (an int is never a bool; a list
+    holds only strings). A wrong type is the client's fault:
+    ``ValueError``, answered 400."""
+    v = req.get(name)
+    if v is None:
+        return default
+    kind = _FIELD_TYPES[name]
+    if kind is list:
+        ok = isinstance(v, list) and all(isinstance(x, str) for x in v)
+    else:
+        ok = isinstance(v, kind) and not isinstance(v, bool)
+    if not ok:
+        raise ValueError(f"field {name!r} must be {_TYPE_NAMES[kind]}, "
+                         f"not {type(v).__name__}")
+    return v
+
+
 def run_bounded(serving: ServingLayer, sql: str, max_rows: int) -> dict:
     """Execute one statement with a hard row bound; the JSON-ready
     result every endpoint (and any future UI) shares."""
@@ -175,11 +199,11 @@ class _Handler(BaseHTTPRequestHandler):
             if not isinstance(req, dict):
                 raise ValueError("request body must be a JSON object")
             if url.path == "/query":
-                sql = req.get("sql")
+                sql = field(req, "sql")
                 if not sql:
                     self._send(400, {"error": "body must carry {'sql': ...}"})
                     return
-                max_rows = req.get("max_rows", self.default_rows)
+                max_rows = field(req, "max_rows", self.default_rows)
                 self._send(200, run_bounded(self.serving, sql, max_rows))
             elif url.path == "/curate":
                 self._send(200, run_curate_dry(self.serving, req))
@@ -207,7 +231,7 @@ class _Handler(BaseHTTPRequestHandler):
                     self.search_session, url.path, req, self.default_rows,
                 ))
             elif url.path == "/explain":
-                sql = req.get("sql")
+                sql = field(req, "sql")
                 if not sql:
                     self._send(400, {"error": "body must carry {'sql': ...}"})
                     return
@@ -286,40 +310,40 @@ def run_search(session, route: str, req: dict, default_rows: int) -> dict:
     - ``POST /hybrid``  {"terms": [...], "vec_id": id, "k": N}
     - ``POST /similar`` {"vec_id": id, "k": N}  (pure vector branch)
     """
-    k = max(1, min(int(req.get("k", 10)), ROW_CAP))
+    k = max(1, min(field(req, "k", 10), ROW_CAP))
     # /phrase is unranked (every match qualifies), so an absent k falls
     # back to default_rows; an explicit k is honored like every route.
     phrase_bound = k if "k" in req else max(1, min(default_rows, ROW_CAP))
     t0 = time.time()
     if route == "/search":
-        terms = req.get("terms")
+        terms = field(req, "terms")
         if not terms:
             raise ValueError("body must carry {'terms': [...]}")
-        out = run_bounded_df(session.bm25(list(terms), k=k), k)
+        out = run_bounded_df(session.bm25(terms, k=k), k)
     elif route == "/phrase":
-        phrase = req.get("phrase")
+        phrase = field(req, "phrase")
         if not phrase or len(phrase) < 2:
             raise ValueError(
                 "body must carry {'phrase': [t1, t2, ...]} (>= 2 tokens)"
             )
-        df, report = session.phrase(list(phrase))
+        df, report = session.phrase(phrase)
         out = run_bounded_df(df, phrase_bound)
         out["pruning"] = {
             kk: vv for kk, vv in report.items()
             if isinstance(vv, (int, float, str))
         }
     elif route == "/similar":
-        vec_id = req.get("vec_id")
+        vec_id = field(req, "vec_id")
         if vec_id is None:
             raise ValueError("body must carry {'vec_id': id}")
-        out = run_bounded_df(session.similar(int(vec_id), k=k), k)
+        out = run_bounded_df(session.similar(vec_id, k=k), k)
     else:  # /hybrid
-        terms, vec_id = req.get("terms"), req.get("vec_id")
+        terms, vec_id = field(req, "terms"), field(req, "vec_id")
         if not terms or vec_id is None:
             raise ValueError(
                 "body must carry {'terms': [...], 'vec_id': id}"
             )
-        out = run_bounded_df(session.hybrid(list(terms), int(vec_id), k=k), k)
+        out = run_bounded_df(session.hybrid(terms, vec_id, k=k), k)
     out["elapsed_sec"] = round(time.time() - t0, 4)
     return out
 

@@ -77,6 +77,7 @@ from .operators.inverted_index import (
     committed_index_snapshot,
 )
 from .operators.versioned import read_table
+from .serving_http import field
 from .sources.sinks import write_jdbc
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -969,16 +970,16 @@ def run_store_search(store, lock, req: dict, route: str = "/search",
     ``"engine": "store"`` so callers can tell which tier answered.
     Every route is one (or for /hybrid, two) prepared statements on the
     exported store — zero Spark jobs."""
-    k = max(1, min(int(req.get("k", 10)), ROW_CAP))
+    k = max(1, min(field(req, "k", 10), ROW_CAP))
     t0 = time.time()
     with lock:
         if route == "/search":
-            terms = req.get("terms")
+            terms = field(req, "terms")
             if not terms:
                 raise ValueError("body must carry {'terms': [...]}")
-            out = store.bm25(list(terms), k=k)
+            out = store.bm25(terms, k=k)
         elif route == "/phrase":
-            phrase = req.get("phrase")
+            phrase = field(req, "phrase")
             if not phrase or len(phrase) < 2:
                 raise ValueError(
                     "body must carry {'phrase': [t1, t2, ...]} "
@@ -987,15 +988,15 @@ def run_store_search(store, lock, req: dict, route: str = "/search",
             # /phrase is unranked; absent k falls back to default_rows
             # (the warm-session route's contract)
             bound = k if "k" in req else max(1, min(default_rows, ROW_CAP))
-            out = store.phrase(list(phrase), k=bound)
+            out = store.phrase(phrase, k=bound)
             k = bound
         elif route == "/similar":
-            vec_id = req.get("vec_id")
+            vec_id = field(req, "vec_id")
             if vec_id is None:
                 raise ValueError("body must carry {'vec_id': id}")
-            out = store.similar(int(vec_id), k=k)
+            out = store.similar(vec_id, k=k)
         elif route == "/hybrid":
-            terms, vec_id = req.get("terms"), req.get("vec_id")
+            terms, vec_id = field(req, "terms"), field(req, "vec_id")
             if not terms or vec_id is None:
                 raise ValueError(
                     "body must carry {'terms': [...], 'vec_id': id}"
@@ -1004,7 +1005,7 @@ def run_store_search(store, lock, req: dict, route: str = "/search",
             # store exported shallower than the requested depth refuses
             # in similar() rather than silently fusing a thinner branch
             out = store.hybrid(
-                list(terms), int(vec_id), k=k,
+                terms, vec_id, k=k,
                 n_per_branch=int(req.get("n_per_branch", 20)))
         else:
             raise ValueError(f"store cannot serve {route}")

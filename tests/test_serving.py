@@ -211,6 +211,31 @@ def test_http_query_bounded_and_errors(http_server):
     assert status == 400 and "error" in out
     assert _get(f"{http_server}/tables")["tables"]  # still alive
 
+    # a wrongly typed field is the client's fault, named in plain words
+    for body in ({"sql": 5}, {"sql": "SELECT 1", "max_rows": [1]}):
+        status, out = _post(f"{http_server}/query", body)
+        assert status == 400 and "must be" in out["error"], out
+        assert "py4j" not in out["error"]
+
+
+def test_search_fields_are_type_checked():
+    """Both search dispatchers reject a wrongly typed field before any
+    lookup: a string ``terms`` is not searched letter by letter."""
+    import threading
+
+    from medallion_data_lake_spark.serving_http import run_search
+    from medallion_data_lake_spark.serving_store import run_store_search
+
+    bad = [("/search", {"terms": "fox"}), ("/phrase", {"phrase": "a b"}),
+           ("/similar", {"vec_id": "7"}), ("/similar", {"vec_id": True}),
+           ("/hybrid", {"terms": ["fox", 1], "vec_id": 7}),
+           ("/search", {"terms": ["fox"], "k": 2.5})]
+    for route, req in bad:
+        with pytest.raises(ValueError, match="must be"):
+            run_store_search(None, threading.Lock(), req, route=route)
+        with pytest.raises(ValueError, match="must be"):
+            run_search(None, route, req, default_rows=10)
+
 
 def test_http_server_fault_is_500_and_server_survives(spark):
     """A fault inside the serving layer is the server's, not the

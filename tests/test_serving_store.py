@@ -418,6 +418,11 @@ def test_http_missing_artifact_falls_back(spark, tmp_path, derby_url):
             raise AssertionError("expected 400 for unarmed /similar")
         except HTTPError as e:
             assert e.code == 400
+        try:  # a string is not a term list (never searched letter-wise)
+            post("/search", {"terms": "stream"})
+            raise AssertionError("expected 400 for string terms")
+        except HTTPError as e:
+            assert e.code == 400
     finally:
         server.shutdown()
         store.close()
