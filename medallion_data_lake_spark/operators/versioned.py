@@ -37,7 +37,16 @@ package magic. This module implements them the way Delta/Iceberg do:
   column-mapping "name" mode): the log speaks logical names, data files
   keep their sticky physical names, reads project one to the other per
   version — so a rename or drop is one log entry at any table size, and
-  per-file stats/blooms (keyed physically) keep pruning across renames.
+  per-file stats/blooms (keyed physically) keep pruning across renames;
+- every reader and writer shares three decisions, each written once:
+  ``_plan_files`` picks the live files a predicate can touch (per-file
+  [min, max] ranges and Bloom filters from the log), ``_write_files``
+  lands one new ``data/commit-<id>`` directory and describes its files
+  (a rewrite records again every skipping column the replaced files
+  carried), and ``_publish_rewrite`` commits a rewrite (refusing when a
+  racing writer removed a replaced file or moved its deletion vector).
+  Pruned reads, DELETE, UPDATE, MERGE, OPTIMIZE, commits and staged
+  commits all call them, so the copies cannot drift.
 
 At 100 TB the log stays KB-per-commit (file paths + stats), and
 data-file granularity means an append touches only its own files —
@@ -60,6 +69,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -114,12 +124,6 @@ def _replay(live: list[str], entries: list[dict]) -> list[str]:
     return live
 
 
-def _live_files(entries: list[dict], version: int | None = None) -> list[str]:
-    if version is not None:
-        entries = [e for e in entries if e["version"] <= version]
-    return _replay([], entries)
-
-
 # ---------------------------------------------------------------------------
 # Log checkpoints — snapshot state every N commits so resolution is
 # O(1) checkpoint + O(N) tail, not O(#commits)
@@ -152,24 +156,34 @@ def _read_checkpoint(path: str, version: int) -> dict:
             time.sleep(0.05 * (attempt + 1))
 
 
+def _ckpts_at(path: str, version: int | None) -> list[int]:
+    """Checkpoint versions at/before ``version`` (None = latest)."""
+    return [
+        v for v in _checkpoint_versions(path)
+        if version is None or v <= version
+    ]
+
+
+def _base_and_tail(path: str, version: int | None) -> tuple[dict, list[dict]]:
+    """(newest checkpoint at/before ``version``, or {} without one; the
+    log entries after it up to ``version``) — what every derived-state
+    resolver folds: O(1) checkpoint + O(interval) tail."""
+    ckpts = _ckpts_at(path, version)
+    if not ckpts:
+        return {}, _entries(path, hi=version)
+    return (_read_checkpoint(path, ckpts[-1]),
+            _entries(path, lo=ckpts[-1] + 1, hi=version))
+
+
 def _state_at(path: str, version: int | None = None) -> tuple[list[str], dict]:
     """(live_files, txn_watermarks) at ``version`` (None = latest),
     resolved from the newest checkpoint at/before it plus the log tail —
     the read path the checkpoints exist for."""
     if version is not None and version < 0:
         return [], {}
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    if ckpts:
-        ck = _read_checkpoint(path, ckpts[-1])
-        live, txns = list(ck["live"]), dict(ck.get("txns", {}))
-        tail = _entries(path, lo=ckpts[-1] + 1, hi=version)
-    else:
-        live, txns = [], {}
-        tail = _entries(path, hi=version)
-    live = _replay(live, tail)
+    ck, tail = _base_and_tail(path, version)
+    live = _replay(list(ck.get("live", [])), tail)
+    txns = dict(ck.get("txns", {}))
     for e in tail:
         t = e.get("txn")
         if t:
@@ -183,16 +197,9 @@ def _mixed_schema_at(path: str, version: int | None = None) -> bool:
     pay mergeSchema. Resolved checkpoint + tail like everything else."""
     if version is not None and version < 0:
         return False
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    mixed = False
-    lo = 0
-    if ckpts:
-        mixed = bool(_read_checkpoint(path, ckpts[-1]).get("mixed_schema"))
-        lo = ckpts[-1] + 1
-    for e in _entries(path, lo=lo, hi=version):
+    ck, tail = _base_and_tail(path, version)
+    mixed = bool(ck.get("mixed_schema"))
+    for e in tail:
         if e.get("unified_schema"):
             # a FULL-rewrite OPTIMIZE compacted every live file to the
             # union schema: single-schema again, mergeSchema off
@@ -220,19 +227,8 @@ def _dv_at(path: str, version: int | None = None) -> dict[str, list[int]]:
     Resolved checkpoint + tail like every other derived state."""
     if version is not None and version < 0:
         return {}
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    if ckpts:
-        dv: dict[str, set[int]] = {
-            f: set(ps)
-            for f, ps in _read_checkpoint(path, ckpts[-1]).get("dv", {}).items()
-        }
-        tail = _entries(path, lo=ckpts[-1] + 1, hi=version)
-    else:
-        dv = {}
-        tail = _entries(path, hi=version)
+    ck, tail = _base_and_tail(path, version)
+    dv = {f: set(ps) for f, ps in ck.get("dv", {}).items()}
     for e in tail:
         if e.get("mode") == "restore" and e.get("restore_of") is not None:
             dv = {
@@ -283,22 +279,27 @@ def _table_schema_json_logged(path: str, version: int | None = None) -> dict | N
     checkpoint, else None. Checkpoint + tail like every other resolver
     — this runs on every dtype lookup, so it must not re-parse the
     whole log when a checkpoint already folds the answer."""
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
+    return _newest_logged(path, version, "table_schema")
+
+
+def _newest_logged(path: str, version: int | None, field: str):
+    """The newest value of a log ``field`` at ``version``: the newest
+    tail entry carrying it, else the newest checkpoint carrying it,
+    else (legacy checkpoints written before the field existed) the
+    entries below the checkpoint, else None."""
+    ckpts = _ckpts_at(path, version)
     tail_lo = (ckpts[-1] + 1) if ckpts else 0
     for e in reversed(_entries(path, lo=tail_lo, hi=version)):
-        if e.get("table_schema") is not None:
-            return e["table_schema"]
+        if e.get(field) is not None:
+            return e[field]
     for cv in reversed(ckpts):
-        ts = _read_checkpoint(path, cv).get("table_schema")
-        if ts is not None:
-            return ts
+        value = _read_checkpoint(path, cv).get(field)
+        if value is not None:
+            return value
     if ckpts:  # legacy checkpoints without the field: full-walk fallback
         for e in reversed(_entries(path, hi=ckpts[-1])):
-            if e.get("table_schema") is not None:
-                return e["table_schema"]
+            if e.get(field) is not None:
+                return e[field]
     return None
 
 
@@ -429,53 +430,53 @@ def _publish(
     raise CommitConflict(f"lost {max_retries} version races on {path}")
 
 
-def _collect_file_stats(
-    spark: SparkSession,
-    path: str,
-    data_path: str,
-    stats_cols: tuple[str, ...],
-) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for ``stats_cols`` over a just-written commit
-    directory — one small aggregation over only the NEW files (grouped by
-    input_file_name), the metadata every lakehouse format keeps per data
-    file. Values are JSON-rendered (numbers stay numbers; everything else
-    becomes its ISO string, which compares consistently)."""
+def _per_file(spark: SparkSession, data_path: str, aggs) -> dict:
+    """{log-relative file: aggregate row} over a just-written commit
+    directory — one small aggregation over only the NEW files, grouped
+    by input_file_name (the shared scan of the stats and bloom
+    collectors)."""
     from pyspark.sql import functions as F
 
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
     rows = (
         spark.read.parquet(data_path)
         .groupBy(F.input_file_name().alias("_f"))
         .agg(*aggs)
         .collect()
     )
+    commit_dir = os.path.basename(data_path)
+    return {
+        os.path.join(
+            "data", commit_dir, os.path.basename(r["_f"].split("?")[0])
+        ): r
+        for r in rows
+    }
+
+
+def _collect_file_stats(
+    spark: SparkSession,
+    data_path: str,
+    stats_cols: tuple[str, ...],
+) -> dict[str, dict[str, list]]:
+    """Per-file [min, max] for ``stats_cols`` over a just-written commit
+    directory — the metadata every lakehouse format keeps per data
+    file. Values are JSON-rendered (numbers stay numbers; everything
+    else becomes its ISO string, which compares consistently)."""
+    from pyspark.sql import functions as F
+
+    aggs = []
+    for c in stats_cols:
+        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
 
     def render(v):
         return v if isinstance(v, (int, float, bool)) or v is None else str(v)
 
-    rel_by_base = {
-        os.path.basename(f): f
-        for f in (
-            os.path.join(
-                "data", os.path.basename(data_path), name
-            )
-            for name in os.listdir(data_path)
-            if name.endswith(".parquet")
-        )
-    }
-    out: dict[str, dict[str, list]] = {}
-    for r in rows:
-        base = os.path.basename(r["_f"].split("?")[0])
-        rel = rel_by_base.get(base)
-        if rel is None:
-            continue
-        out[rel] = {
+    return {
+        rel: {
             c: [render(r[f"{c}__min"]), render(r[f"{c}__max"])]
             for c in stats_cols
         }
-    return out
+        for rel, r in _per_file(spark, data_path, aggs).items()
+    }
 
 
 def _stat_probe(v, dtype=None):
@@ -512,9 +513,11 @@ def _stat_probe(v, dtype=None):
 
 BLOOM_BITS = 4096   # 512 B/file/col in the log — KB-scale at any layout
 BLOOM_HASHES = 4    # k=4 at m/n >= 8 keeps FP rate ~2.4%
-_ISIN_BLOOM_MAX = 128  # isin lists above this skip bloom probing (see
-# read_table_pruned: probe cost grows with the list, skipping yield
-# vanishes — range admission + the residual IN keep results exact)
+_ISIN_BLOOM_MAX = 128  # a point column with more values than this skips
+# the bloom probe in _plan_files — pruned reads and keyed DML alike: a
+# 4096-bit bloom almost surely admits SOME of thousands of keys, so the
+# probe's skipping yield vanishes as its cost grows; range admission +
+# the residual row predicate keep results exact
 
 
 def _bloom_hash(col, seed: int):
@@ -566,11 +569,11 @@ def _collect_bloom_filters(
     """Per-file Bloom bitsets for ``bloom_cols`` over a just-written
     commit dir — the point-lookup complement of the [min,max] ranges
     (an equality probe on a high-NDV key where every file's range
-    overlaps everything). One aggregation over only the new files:
-    collect_set of ≤ bits ints per file per hash — KB-scale. Encoded
-    ``"{bits}:{k}:" + base64(bitset)`` under the reserved stats key
-    ``"<col>__bloom"`` so it rides the existing file_stats plumbing
-    (log entry → checkpoint folding → _file_stats_at) untouched."""
+    overlaps everything). collect_set of ≤ bits ints per file per hash
+    — KB-scale. Encoded ``"{bits}:{k}:" + base64(bitset)`` under the
+    reserved stats key ``"<col>__bloom"`` so it rides the existing
+    file_stats plumbing (log entry → checkpoint folding →
+    _file_stats_at) untouched."""
     import base64
 
     from pyspark.sql import functions as F
@@ -582,17 +585,8 @@ def _collect_bloom_filters(
         for c in bloom_cols
         for i in range(k)
     ]
-    rows = (
-        spark.read.parquet(data_path)
-        .groupBy(F.input_file_name().alias("_f"))
-        .agg(*aggs)
-        .collect()
-    )
     out: dict[str, dict[str, str]] = {}
-    commit_dir = os.path.basename(data_path)
-    for r in rows:
-        base = os.path.basename(r["_f"].split("?")[0])
-        rel = os.path.join("data", commit_dir, base)
+    for rel, r in _per_file(spark, data_path, aggs).items():
         enc: dict[str, str] = {}
         for c in bloom_cols:
             bitset = bytearray((bits + 7) // 8)
@@ -606,18 +600,19 @@ def _collect_bloom_filters(
     return out
 
 
-def _bloomed_cols(stats: dict[str, dict], files) -> tuple[str, ...]:
-    """Columns with a recorded bloom among ``files`` — DML rewrites
-    re-record blooms for exactly these so point-skipping survives
-    updates/deletes/merges (a rewritten file without its bloom is
-    still CORRECT, just conservatively read)."""
-    suffix = "__bloom"
-    return tuple(sorted({
-        k[:-len(suffix)]
-        for f in files
-        for k in stats.get(f, {})
-        if k.endswith(suffix)
-    }))
+def _carried_cols(carry) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """``(range_cols, bloom_cols)`` recorded on any of the per-file
+    stats dicts in ``carry`` — what :func:`_write_files` records again
+    on a rewrite's output, so range and point skipping survive MERGE,
+    DELETE, UPDATE and OPTIMIZE (a rewritten file without them is still
+    CORRECT, just conservatively read)."""
+    keys = {k for s in carry for k in s}
+    return (
+        tuple(sorted(k for k in keys if not k.endswith("__bloom"))),
+        tuple(sorted(
+            k.removesuffix("__bloom") for k in keys if k.endswith("__bloom")
+        )),
+    )
 
 
 def _bloom_may_contain(encoded: str, raw_hashes: list[int]) -> bool:
@@ -640,17 +635,8 @@ def _file_stats_at(path: str, version: int | None = None) -> dict[str, dict]:
     the newest checkpoint + tail like :func:`_state_at`."""
     if version is not None and version < 0:
         return {}
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    if ckpts:
-        ck = _read_checkpoint(path, ckpts[-1])
-        stats = dict(ck.get("file_stats", {}))
-        tail = _entries(path, lo=ckpts[-1] + 1, hi=version)
-    else:
-        stats = {}
-        tail = _entries(path, hi=version)
+    ck, tail = _base_and_tail(path, version)
+    stats = dict(ck.get("file_stats", {}))
     for e in tail:
         stats.update(e.get("file_stats", {}))
     live, _ = _state_at(path, version)
@@ -810,6 +796,353 @@ def _derive_cm(prior_cm: dict, mode: str, field_names) -> tuple[dict, bool]:
     return cm, cm_changed
 
 
+# ---------------------------------------------------------------------------
+# The decisions every write shares, each written once: which live files a
+# predicate can touch (_plan_files), how new files are written and
+# described (_write_files), and how a rewrite replaces files
+# (_publish_rewrite) — plus the row predicate a plan stands for
+# (_row_cond) and the snapshot-file reader every scan goes through
+# (_scan).
+# ---------------------------------------------------------------------------
+
+
+def _scan(spark, path: str, files: list[str], version: int | None,
+          dvs: dict[str, list[int]] | None = None) -> DataFrame:
+    """Read ``files`` of the snapshot at ``version``: with mergeSchema
+    when that snapshot may span >1 schema (without it the scan takes
+    ONE file's schema and silently drops the other files' columns; the
+    footer-union cost is paid only by tables that evolved, the flag
+    rides the log + checkpoints), then the deletion vectors ``dvs``
+    anti-joined out. Rewrite scans pass no vectors: they refuse
+    vector-carrying files, and their hidden ``_metadata`` columns must
+    stay reachable."""
+    reader = spark.read
+    if _mixed_schema_at(path, version):
+        reader = reader.option("mergeSchema", "true")
+    df = reader.parquet(*[os.path.join(path, f) for f in files])
+    return _apply_dvs(spark, df, path, files, dvs) if dvs else df
+
+
+def _row_cond(ranges: dict[str, tuple], points: dict[str, list],
+              where: str | None = None):
+    """The row predicate a file plan stands for: every ``ranges``
+    {col: (lo, hi)} bound (None = open), every ``points`` {col: [v,
+    ...]} membership and the raw SQL ``where``, AND-ed. A NULL in a
+    named column makes it NULL, which ``filter`` drops; a negation must
+    go through ``coalesce(cond, false)``."""
+    from pyspark.sql import functions as F
+
+    cond = F.lit(True)
+    for c, (lo, hi) in ranges.items():
+        if lo is not None:
+            cond = cond & (F.col(c) >= lo)
+        if hi is not None:
+            cond = cond & (F.col(c) <= hi)
+    for c, vs in points.items():
+        cond = cond & F.col(c).isin(*vs)
+    if where is not None:
+        cond = cond & F.expr(where)
+    return cond
+
+
+class _Plan(NamedTuple):
+    live: list[str]   # files live at the planned version
+    files: list[str]  # the live files a matching row can be in
+    stats: dict       # per-file stats of the live files
+
+
+def _plan_files(spark, path: str, version: int | None, cm: dict,
+                ranges: dict[str, tuple], points: dict[str, list]) -> _Plan:
+    """THE file-skipping decision behind every pruned read and every
+    DML: which files live at ``version`` can hold a row with each
+    ``ranges`` {physical col: (lo, hi)} bound AND each ``points``
+    {physical col: [v, ...]} membership. A file is skipped only on
+    recorded evidence — a [min, max] range that misses a bound, or a
+    point column none of whose values both overlaps the range and (when
+    a bloom is recorded) may be in the bloom. Files without stats for
+    a column are kept; the caller's residual row predicate keeps
+    results exact (Delta's data-skipping and bloom-index contract).
+
+    Bounds compare in the stats' rendered form (:func:`_stat_probe`,
+    typed by the table schema). The bloom probe hashes every point
+    value in ONE tiny job — one row per value, ``BLOOM_HASHES``
+    columns, over the posexploded literals, each cast to its column's
+    type so it renders as the build side rendered it (:func:`_probe_lit`).
+    A column with more than ``_ISIN_BLOOM_MAX`` values is not probed."""
+    from pyspark.sql import functions as F
+
+    live, _ = _state_at(path, version)
+    stats = _file_stats_at(path, version)
+    dtypes = {
+        _cm_phys(cm, c): t
+        for c, t in _column_dtypes(spark, path, version).items()
+    }
+    bounds = {
+        c: (_stat_probe(lo, dtypes.get(c)), _stat_probe(hi, dtypes.get(c)))
+        for c, (lo, hi) in ranges.items()
+    }
+    spoints = {
+        c: [_stat_probe(v, dtypes.get(c)) for v in vs]
+        for c, vs in points.items()
+    }
+    probed = [
+        (c, j, v)
+        for c, vs in points.items() if len(vs) <= _ISIN_BLOOM_MAX
+        for j, v in enumerate(vs)
+    ]
+    hashes: dict[tuple[str, int], list[int]] = {}
+    if probed:
+        lits = [_probe_lit(v, dtypes.get(c)).cast("string")
+                for c, _, v in probed]
+        for r in spark.range(1).select(F.posexplode(F.array(*lits))).select(
+            "pos",
+            *[_bloom_hash(F.col("col"), i).alias(f"h{i}")
+              for i in range(BLOOM_HASHES)],
+        ).collect():
+            c, j, _ = probed[r["pos"]]
+            hashes[(c, j)] = [r[f"h{i}"] for i in range(BLOOM_HASHES)]
+
+    def overlaps(rng, lo, hi) -> bool:
+        if rng is None or rng[0] is None:
+            return True  # no recorded range: must assume it matches
+        fmin, fmax = rng
+        return not ((hi is not None and fmin > hi)
+                    or (lo is not None and fmax < lo))
+
+    def admits(fstats: dict, c: str) -> bool:
+        rng, encoded = fstats.get(c), fstats.get(f"{c}__bloom")
+        return any(
+            overlaps(rng, sv, sv)
+            and (encoded is None or (c, j) not in hashes
+                 or _bloom_may_contain(encoded, hashes[(c, j)]))
+            for j, sv in enumerate(spoints[c])
+        )
+
+    files = [
+        f for f in live
+        if all(overlaps(stats.get(f, {}).get(c), lo, hi)
+               for c, (lo, hi) in bounds.items())
+        and all(admits(stats.get(f, {}), c) for c in spoints)
+    ]
+    return _Plan(live, files, stats)
+
+
+class _Written(NamedTuple):
+    path: str
+    data_path: str
+    added: list[str]
+    file_stats: dict
+    stats_rel: str | None
+
+    def drop(self) -> None:
+        """Remove the files of a write no log entry will name."""
+        shutil.rmtree(self.data_path, ignore_errors=True)
+        if self.stats_rel:
+            shutil.rmtree(os.path.join(self.path, self.stats_rel),
+                          ignore_errors=True)
+
+
+def _write_files(
+    df: DataFrame,
+    path: str,
+    stats_cols: tuple[str, ...] = (),
+    bloom_cols: tuple[str, ...] = (),
+    analyze_stats: bool | tuple[str, ...] = False,
+    carry=(),
+    prefix: str = "",
+    max_records: int | None = None,
+) -> _Written:
+    """THE data-file writer behind every commit, staged commit and
+    rewrite: ``df`` (physical names) lands as ONE new
+    ``data/commit-<id>`` directory, invisible until a log entry names
+    its files, and the new files are described for skipping — [min,
+    max] for ``stats_cols`` and blooms for ``bloom_cols`` (one small
+    job each over only the new files) and, with ``analyze_stats``
+    (True = all columns, or a tuple), mergeable stats partials under
+    ``_stats/``. Column names are physical.
+
+    ``carry`` is the per-file stats of the files a rewrite replaces:
+    every range and bloom column they recorded is recorded again on
+    the output, so no rewrite costs a table its skipping. A failure
+    after the data write drops the directory."""
+    spark = df.sparkSession
+    have = set(df.columns)
+    carried_ranges, carried_blooms = _carried_cols(carry)
+    stats_cols = tuple(dict.fromkeys(
+        [*stats_cols, *(c for c in carried_ranges if c in have)]))
+    bloom_cols = tuple(dict.fromkeys(
+        [*bloom_cols, *(c for c in carried_blooms if c in have)]))
+    commit_dir = f"commit-{prefix}{uuid.uuid4().hex[:12]}"
+    data_path = os.path.join(path, "data", commit_dir)
+    writer = df.write.mode("error")
+    if max_records:
+        writer = writer.option("maxRecordsPerFile", max_records)
+    writer.parquet(data_path)
+    added = sorted(
+        os.path.join("data", commit_dir, f)
+        for f in os.listdir(data_path)
+        if f.endswith(".parquet")
+    )
+    file_stats: dict[str, dict] = {}
+    stats_rel = None
+    try:
+        if stats_cols and added:
+            file_stats = _collect_file_stats(spark, data_path, stats_cols)
+        if bloom_cols and added:
+            # blooms ride the same per-file stats dict (reserved __bloom
+            # keys) so checkpoints and resolution need no new plumbing
+            for rel, enc in _collect_bloom_filters(
+                spark, data_path, bloom_cols
+            ).items():
+                file_stats.setdefault(rel, {}).update(enc)
+        if analyze_stats and added:
+            stats_rel = _write_stats_partials(
+                spark, path, data_path,
+                None if analyze_stats is True else tuple(analyze_stats),
+            )
+    except Exception:
+        _Written(path, data_path, added, {},
+                 os.path.join("_stats", commit_dir)).drop()
+        raise
+    return _Written(path, data_path, added, file_stats, stats_rel)
+
+
+_REWRITE_OPS = {"optimize": "OPTIMIZE", "delete": "DELETE",
+                "update": "UPDATE", "merge": "MERGE",
+                "delete_dv": "DV DELETE"}
+
+
+def _publish_rewrite(
+    path: str,
+    mode: str,
+    operation: str,
+    written: _Written | None,
+    replaced,
+    txn: dict | None = None,
+    planned_dvs: dict[str, list[int]] | None = None,
+    fields: dict | None = None,
+) -> dict | None:
+    """THE commit of a rewrite: publish ``written``'s files in place of
+    the ``replaced`` ones through the shared claim loop. On every
+    attempt, against the fresh tip:
+
+    - skip (None) when the ``txn`` watermark already covers this write;
+    - CommitConflict when a racing writer REMOVED a replaced file —
+      publishing would resurrect rows it deleted (Delta's
+      ConcurrentDeleteRead rule); a racing append only costs a retry,
+      its files stay live beside ours;
+    - CommitConflict when a replaced file's deletion vector moved from
+      ``planned_dvs`` (:func:`_refuse_dv_drift`);
+    - a FULL-rewrite OPTIMIZE (every live file replaced) stamps
+      ``unified_schema``: the snapshot is single-schema again.
+
+    ``written=None`` is the merge-on-read delete: no file moves, the
+    ``replaced`` files only have to stay live and the vectors ride
+    ``fields``. A skipped or refused rewrite drops its unpublished
+    files."""
+    op = _REWRITE_OPS[mode]
+    noun = {"optimize": "compacted ", "delete_dv": ""}.get(mode, "rewritten ")
+    replaced = set(replaced)
+
+    def build(version: int) -> dict | None:
+        if watermark_covered(path, txn):
+            return None
+        current_live, _ = _state_at(path, version - 1)
+        missing = replaced - set(current_live)
+        if missing:
+            raise CommitConflict(
+                f"{op} on {path} raced a writer that removed "
+                f"{len(missing)} {noun}file(s); re-run on the new snapshot"
+            )
+        if written is not None:
+            _refuse_dv_drift(path, replaced, planned_dvs or {}, version - 1, op)
+        entry = {
+            "version": version,
+            "timestamp": time.time(),
+            "mode": mode,
+            "added": written.added if written else [],
+            "removed": sorted(replaced) if written else [],
+            "operation": operation,
+            **(fields or {}),
+        }
+        if mode == "optimize" and set(current_live) == replaced:
+            entry["unified_schema"] = True
+        if txn:
+            entry["txn"] = txn
+        if written and written.file_stats:
+            entry["file_stats"] = written.file_stats
+        if written and written.stats_rel:
+            entry["stats_partials"] = written.stats_rel
+        return entry
+
+    try:
+        entry = _publish(path, build)
+    except CommitConflict:
+        if written:
+            written.drop()
+        raise
+    if entry is None and written:
+        written.drop()
+    return entry
+
+
+def _refuse_dv_drift(
+    path: str,
+    files,
+    planned: dict[str, list[int]],
+    version: int,
+    op: str,
+) -> None:
+    """Publish-time re-check of the planning-time deletion-vector
+    snapshot for the files a rewrite replaces. A concurrent
+    ``delete_rows_dv`` landing a vector on one of them between plan and
+    publish would otherwise be SILENTLY undone: the rewrite's output was
+    computed without (or with a stale view of) that vector, and the
+    vector dies with the file the commit removes — deleted rows
+    resurrect. Delta's ConcurrentDeleteRead rule: refuse, make the
+    caller re-plan on the new snapshot. ``version`` is the predecessor
+    snapshot the claim loop is publishing on top of."""
+    current = _dv_at(path, version)
+    for f in files:
+        if sorted(current.get(f, [])) != sorted(planned.get(f, [])):
+            raise CommitConflict(
+                f"{op} on {path}: deletion vector changed on rewritten "
+                f"file {f} between plan and publish; re-run on the new "
+                "snapshot"
+            )
+
+
+def _refuse_dv_files(path: str, files, op: str,
+                     version: int | None = None) -> None:
+    """Rewrite-path guard: a file with a live deletion vector must be
+    materialized (optimize_table) before a rewrite touches it —
+    otherwise the rewrite copies rows the vector had deleted back to
+    life. Bounded scope over silent resurrection."""
+    dvs = _dv_at(path, version)
+    hit = sorted(set(files) & set(dvs))
+    if hit:
+        raise ValueError(
+            f"{op} on {path}: {len(hit)} matched file(s) carry deletion "
+            "vectors; run optimize_table(files=...) to materialize them "
+            f"first (e.g. {hit[:2]}...)"
+        )
+
+
+def _txn_mark(app_id: str | None, version: int | None) -> dict | None:
+    """The idempotent-writer watermark a write carries, or None."""
+    if app_id is None or version is None:
+        return None
+    return {"app_id": app_id, "version": version}
+
+
+def _cm_phys_cols(cm: dict, cols):
+    """Logical column names → physical; a bool (``analyze_stats``' all
+    or nothing) passes through."""
+    if isinstance(cols, bool):
+        return cols
+    return tuple(_cm_phys(cm, c) for c in cols)
+
+
 def commit(
     df: DataFrame,
     path: str,
@@ -872,25 +1205,15 @@ def commit(
             path, _table_schema_at(df.sparkSession, path), df.schema,
             allow_schema_evolution,
         )
-    has_txn = txn_app_id is not None and txn_version is not None
-
-    def _already_applied() -> bool:
-        seen = latest_txn_version(path, txn_app_id) if has_txn else None
-        return seen is not None and txn_version <= seen
-
-    if _already_applied():  # fast-path: skip before paying the data write
+    tw = _txn_mark(txn_app_id, txn_version)
+    if watermark_covered(path, tw):  # skip before paying the data write
         return None
 
     _enforce_constraints(df, path)
 
     # column mapping: users and this API speak LOGICAL names; data files
-    # carry PHYSICAL names. Appends translate on write; an overwrite
-    # resets the mapping (its snapshot is single-generation by
-    # construction, so logical == physical again). A NEW column whose
-    # name collides with a renamed column's physical or a dropped
-    # column's retired physical gets a fresh col-<uuid> physical name —
-    # rebinding old bytes to a new logical identity is the corruption
-    # column mapping exists to prevent.
+    # carry PHYSICAL names (see _derive_cm for the overwrite reset and
+    # the fresh-physical-name collision rule)
     prior_cm = (
         _column_mapping_at(path) if latest_version(path) is not None
         else {"map": {}, "retired": []}
@@ -898,61 +1221,34 @@ def commit(
     cm, cm_changed = _derive_cm(
         prior_cm, mode, [f.name for f in df.schema.fields]
     )
-    write_df = _to_physical_names(df, cm)
-    stats_phys = tuple(_cm_phys(cm, c) for c in stats_cols)
-    bloom_phys = tuple(_cm_phys(cm, c) for c in bloom_cols)
-
-    commit_dir = f"commit-{uuid.uuid4().hex[:12]}"
-    data_path = os.path.join(path, "data", commit_dir)
-    write_df.write.mode("error").parquet(data_path)
-    added = sorted(
-        os.path.join("data", commit_dir, f)
-        for f in os.listdir(data_path)
-        if f.endswith(".parquet")
-    )
-    file_stats = (
-        _collect_file_stats(df.sparkSession, path, data_path, stats_phys)
-        if stats_phys and added
-        else {}
-    )
-    if bloom_phys and added:
-        # blooms ride the same per-file stats dict (reserved __bloom
-        # keys) so checkpoints and resolution need no new plumbing
-        for rel, enc in _collect_bloom_filters(
-            df.sparkSession, data_path, bloom_phys
-        ).items():
-            file_stats.setdefault(rel, {}).update(enc)
-    stats_rel = (
-        _write_stats_partials(
-            df.sparkSession, path, data_path,
-            None if analyze_stats is True
-            else tuple(_cm_phys(cm, c) for c in analyze_stats),
-        )
-        if analyze_stats and added
-        else None
+    written = _write_files(
+        _to_physical_names(df, cm), path,
+        stats_cols=_cm_phys_cols(cm, stats_cols),
+        bloom_cols=_cm_phys_cols(cm, bloom_cols),
+        analyze_stats=_cm_phys_cols(cm, analyze_stats),
     )
 
     def build(version: int) -> dict | None:
-        if _already_applied():
+        if watermark_covered(path, tw):
             return None
         live, _ = _state_at(path, version - 1)
         entry = {
             "version": version,
             "timestamp": time.time(),
             "mode": mode,
-            "added": added,
+            "added": written.added,
             "removed": live if mode == "overwrite" else [],
             "operation": "WRITE",
             # running union schema (overwrite resets it to the batch's):
             # the reference point append enforcement diffs against
             "table_schema": table_schema.jsonValue(),
         }
-        if has_txn:
-            entry["txn"] = {"app_id": txn_app_id, "version": txn_version}
-        if file_stats:
-            entry["file_stats"] = file_stats
-        if stats_rel:
-            entry["stats_partials"] = stats_rel
+        if tw:
+            entry["txn"] = tw
+        if written.file_stats:
+            entry["file_stats"] = written.file_stats
+        if written.stats_rel:
+            entry["stats_partials"] = written.stats_rel
         if schema_changed:
             entry["schema_changed"] = True
         if cm_changed:
@@ -963,9 +1259,7 @@ def commit(
     if entry is None:
         # a concurrent duplicate published first: our data files were
         # never referenced by any log entry — remove the orphans
-        shutil.rmtree(data_path, ignore_errors=True)
-        if stats_rel:
-            shutil.rmtree(os.path.join(path, stats_rel), ignore_errors=True)
+        written.drop()
     return entry
 
 
@@ -1018,17 +1312,7 @@ def read_table(
     if not files:
         # a valid-but-empty snapshot (e.g. overwrite with 0 rows)
         return spark.createDataFrame([], _table_schema_at(spark, path, version))
-    reader = spark.read
-    if _mixed_schema_at(path, version):
-        # an evolved append landed in this snapshot: without mergeSchema
-        # the scan takes ONE file's schema and silently drops the other
-        # files' columns. The footer-union cost is paid only for tables
-        # that actually evolved — the flag rides the log + checkpoints.
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*[os.path.join(path, f) for f in files])
-    dvs = _dv_at(path, version)
-    if dvs:
-        df = _apply_dvs(spark, df, path, files, dvs)
+    df = _scan(spark, path, files, version, _dv_at(path, version))
     # physical -> logical names (identity mapping returns df untouched)
     return _apply_column_mapping(spark, df, path, version)
 
@@ -1072,8 +1356,8 @@ def read_table_pruned(
 
     ``isin={col: [v1, v2, ...], ...}`` is the SET form of ``eq``: a
     file is read iff SOME value admits (per-value range overlap AND
-    bloom maybe-contains — the same disjunctive key_admits the DML
-    paths use). One call replaces K separate point-reads: the bloom
+    bloom maybe-contains — :func:`_plan_files`, the one planner the DML
+    paths use too). One call replaces K separate point-reads: the bloom
     probe hashes for every value compute in ONE tiny job, the survivor
     files are opened ONCE (a file admitting several values is read
     once, where K point-reads re-read it K times), and the residual is
@@ -1083,8 +1367,6 @@ def read_table_pruned(
     Returns ``(df, report)`` where report carries files_read /
     files_skipped so callers and tests can audit the pruning.
     """
-    from pyspark.sql import functions as F
-
     lv = latest_version(path)
     if lv is None:
         raise FileNotFoundError(f"no versioned table at {path}")
@@ -1107,124 +1389,31 @@ def read_table_pruned(
         raise ValueError(
             "read_table_pruned needs col/lo/hi, predicates, eq, or isin"
         )
-    live, _ = _state_at(path, version)
-    stats = _file_stats_at(path, version)
-    dtypes = _column_dtypes(spark, path, version)
-    # predicates arrive on LOGICAL names; per-file stats/blooms are
-    # keyed by PHYSICAL names (sticky across renames, so pruning keeps
-    # working after a metadata-only rename with zero stats migration)
-    cm = _column_mapping_at(path, version)
-    pc = lambda c: _cm_phys(cm, c)  # noqa: E731
-    # range compares run against the stats' RENDERED form
-    sp = {
-        c: (_stat_probe(plo, dtypes.get(c)), _stat_probe(phi, dtypes.get(c)))
-        for c, (plo, phi) in preds.items()
-    }
-    # point probes: eq is the 1-value case of isin — unify so the bloom
-    # hash values for EVERY (column, value) pair compute in one tiny
-    # job. Columns with MORE than _ISIN_BLOOM_MAX values skip bloom
-    # probing (range admission + residual only): the probe is a
-    # width-(values*k) projection whose codegen cost grows with the
-    # list (measured: a 2,410-id point-read spent ~60s in the probe),
-    # while a 4096-bit bloom almost surely admits SOME key out of
-    # thousands — the skipping yield vanishes exactly as the probe
-    # cost explodes.
+    # eq is the 1-value case of isin. Predicates arrive on LOGICAL
+    # names; per-file stats/blooms are keyed by PHYSICAL names (sticky
+    # across renames, so pruning keeps working after a metadata-only
+    # rename with zero stats migration)
     points = {c: [v] for c, v in eq.items()} | isin
-    spoint = {
-        c: [_stat_probe(v, dtypes.get(c)) for v in vs]
-        for c, vs in points.items()
-    }
-
-    bloomable = {
-        c: vs for c, vs in points.items() if len(vs) <= _ISIN_BLOOM_MAX
-    }
-    point_hashes: dict[str, list[list[int]]] = {}
-    if bloomable:
-        probe = spark.range(1).select(
-            *[
-                _bloom_hash(_probe_lit(v, dtypes.get(c)), i)
-                .alias(f"{c}__{j}__{i}")
-                for c, vs in bloomable.items()
-                for j, v in enumerate(vs)
-                for i in range(BLOOM_HASHES)
-            ]
-        ).first()
-        point_hashes = {
-            c: [
-                [probe[f"{c}__{j}__{i}"] for i in range(BLOOM_HASHES)]
-                for j in range(len(vs))
-            ]
-            for c, vs in bloomable.items()
-        }
-
-    def overlaps(rng, plo, phi) -> bool:
-        if rng is None or rng[0] is None:
-            return True
-        fmin, fmax = rng
-        if phi is not None and fmin > phi:
-            return False
-        if plo is not None and fmax < plo:
-            return False
-        return True
-
-    def point_admits(fstats: dict, c: str) -> bool:
-        """Some probe value of ``c`` can live in the file — per-value
-        range overlap AND (when probed) bloom maybe-contains,
-        disjunctive over the values (conjunctive across columns,
-        below)."""
-        rng = fstats.get(pc(c))
-        encoded = fstats.get(f"{pc(c)}__bloom")
-        hashes = point_hashes.get(c)
-        for j, sv in enumerate(spoint[c]):
-            if not overlaps(rng, sv, sv):
-                continue
-            if (
-                hashes is not None
-                and encoded is not None
-                and not _bloom_may_contain(encoded, hashes[j])
-            ):
-                continue
-            return True
-        return False
-
-    chosen = [
-        f for f in live
-        if all(
-            overlaps(stats.get(f, {}).get(pc(c)), plo, phi)
-            for c, (plo, phi) in sp.items()
-        )
-        and all(point_admits(stats.get(f, {}), c) for c in points)
-    ]
+    cm = _column_mapping_at(path, version)
+    plan = _plan_files(spark, path, version, cm,
+                       _cm_translate_keys(cm, preds),
+                       _cm_translate_keys(cm, points))
+    chosen = plan.files
     report = {
-        "files_total": len(live),
+        "files_total": len(plan.live),
         "files_read": len(chosen),
-        "files_skipped": len(live) - len(chosen),
+        "files_skipped": len(plan.live) - len(chosen),
     }
     if not chosen:
         return (
             spark.createDataFrame([], _table_schema_at(spark, path, version)),
             report,
         )
-    reader = spark.read
-    if _mixed_schema_at(path, version):
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*[os.path.join(path, f) for f in chosen])
-    dvs = _dv_at(path, version)
-    if dvs:
-        df = _apply_dvs(spark, df, path, chosen, dvs)
-    # project to logical names BEFORE the residual filters, which are
+    df = _scan(spark, path, chosen, version, _dv_at(path, version))
+    # project to logical names BEFORE the residual filter, which is
     # expressed (like the predicates) in logical terms
     df = _apply_column_mapping(spark, df, path, version)
-    for c, (plo, phi) in preds.items():
-        if plo is not None:
-            df = df.filter(F.col(c) >= plo)
-        if phi is not None:
-            df = df.filter(F.col(c) <= phi)
-    for c, v in eq.items():
-        df = df.filter(F.col(c) == v)
-    for c, vs in isin.items():
-        df = df.filter(F.col(c).isin(vs))
-    return df, report
+    return df.filter(_row_cond(preds, points)), report
 
 
 def _schema_of_latest(spark, path, entries):
@@ -1287,25 +1476,10 @@ def _union_schema(base, new):
 def _column_mapping_at(path: str, version: int | None = None) -> dict:
     """{"map": {logical: physical (non-identity only)}, "retired":
     [physical, ...]} at ``version`` — newest entry carrying the field,
-    else newest prior checkpoint, else identity. Same checkpoint + tail
-    walk as ``_table_schema_json_logged``."""
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    tail_lo = (ckpts[-1] + 1) if ckpts else 0
-    for e in reversed(_entries(path, lo=tail_lo, hi=version)):
-        if e.get("column_mapping") is not None:
-            return e["column_mapping"]
-    for cv in reversed(ckpts):
-        cm = _read_checkpoint(path, cv).get("column_mapping")
-        if cm is not None:
-            return cm
-    if ckpts:  # legacy checkpoints: walk the remaining entries below
-        for e in reversed(_entries(path, hi=ckpts[-1])):
-            if e.get("column_mapping") is not None:
-                return e["column_mapping"]
-    return {"map": {}, "retired": []}
+    else newest prior checkpoint, else identity (:func:`_newest_logged`,
+    like ``_table_schema_json_logged``)."""
+    cm = _newest_logged(path, version, "column_mapping")
+    return {"map": {}, "retired": []} if cm is None else cm
 
 
 def _cm_is_identity(cm: dict) -> bool:
@@ -1953,8 +2127,10 @@ def optimize_table(
     plain repartition), so every output file covers a compact box in
     ALL of them and min-max skipping works for each. Per-file [min,max]
     ranges are recorded in the log entry for ``stats_cols`` (defaulting
-    to the zorder columns) — the same metadata :func:`merge_into`
-    prunes with, so an optimized table stays merge-prunable.
+    to the zorder columns) plus every range and bloom column the
+    compacted files carried — the same metadata :func:`merge_into` and
+    :func:`read_table_pruned` prune with, so an optimized table stays
+    prunable.
 
     Concurrency: publication goes through the shared claim loop. A
     concurrent APPEND costs only a retry (its files stay live beside the
@@ -1985,14 +2161,16 @@ def optimize_table(
     """
     from pyspark.sql import functions as F
 
+    # pin the snapshot once: files, vectors, mixedness and stats of ONE
+    # version (a commit landing mid-plan is the publish check's job)
+    version = latest_version(path)
     # zorder/stats columns arrive logical; the rewrite is physical
-    _cm = _column_mapping_at(path)
-    zorder_by = tuple(_cm_phys(_cm, c) for c in zorder_by)
-    stats_cols = tuple(_cm_phys(_cm, c) for c in stats_cols)
-    if not isinstance(analyze_stats, bool) and analyze_stats:
-        analyze_stats = tuple(_cm_phys(_cm, c) for c in analyze_stats)
+    _cm = _column_mapping_at(path, version)
+    zorder_by = _cm_phys_cols(_cm, zorder_by)
+    stats_cols = _cm_phys_cols(_cm, stats_cols)
+    analyze_stats = _cm_phys_cols(_cm, analyze_stats)
 
-    snapshot, _ = _state_at(path)
+    snapshot, _ = _state_at(path, version)
     if files is not None:
         unknown = set(files) - set(snapshot)
         if unknown:
@@ -2005,21 +2183,17 @@ def optimize_table(
         live = snapshot
     if not live:
         raise ValueError(f"nothing to optimize at {path}")
-    full = [os.path.join(path, f) for f in live]
-    total_bytes = sum(os.path.getsize(f) for f in full if os.path.exists(f))
-    reader = spark.read
-    if _mixed_schema_at(path):
-        # evolved table: compact to the UNION schema (missing columns
-        # null-filled) — OPTIMIZE doubles as schema compaction, after
-        # which the rewritten files are single-schema again
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*full)
-    dvs = _dv_at(path)
-    if dvs:
-        # compaction MATERIALIZES deletion vectors: the rewrite excludes
-        # the deleted positions and the vectors die with the replaced
-        # files (delete_rows_dv's documented materialization step)
-        df = _apply_dvs(spark, df, path, live, dvs)
+    total_bytes = sum(
+        os.path.getsize(f) for f in (os.path.join(path, r) for r in live)
+        if os.path.exists(f)
+    )
+    # evolved table: the scan reads the UNION schema (missing columns
+    # null-filled) — OPTIMIZE doubles as schema compaction. Compaction
+    # MATERIALIZES deletion vectors: the rewrite excludes the deleted
+    # positions and the vectors die with the replaced files
+    # (delete_rows_dv's documented materialization step)
+    dvs = _dv_at(path, version)
+    df = _scan(spark, path, live, version, dvs)
     if transform is not None:
         in_rows = df.count()
         in_schema = [(f.name, f.dataType) for f in df.schema.fields]
@@ -2061,78 +2235,23 @@ def optimize_table(
     else:
         out = df.repartition(n_out)
 
-    commit_dir = f"commit-{uuid.uuid4().hex[:12]}"
-    data_path = os.path.join(path, "data", commit_dir)
-    (
-        out.write.mode("error")
-        .option("maxRecordsPerFile", records_per_file)
-        .parquet(data_path)
+    stats = _file_stats_at(path, version)
+    written = _write_files(
+        out, path,
+        stats_cols=stats_cols or zorder_by,
+        analyze_stats=analyze_stats,
+        carry=[stats.get(f, {}) for f in live],
+        max_records=records_per_file,
     )
-    added = sorted(
-        os.path.join("data", commit_dir, f)
-        for f in os.listdir(data_path)
-        if f.endswith(".parquet")
-    )
-    stats_record = tuple(stats_cols) or tuple(zorder_by)
-    file_stats = (
-        _collect_file_stats(spark, path, data_path, stats_record)
-        if stats_record and added
-        else {}
-    )
-    stats_rel = (
-        _write_stats_partials(
-            spark, path, data_path,
-            None if analyze_stats is True else tuple(analyze_stats),
-        )
-        if analyze_stats and added
-        else None
-    )
-
-    compacted = set(live)
     op_suffix = f" ZORDER({','.join(zorder_by)})" if zorder_by else ""
-
-    def build(version: int) -> dict:
-        current_live, _ = _state_at(path, version - 1)
-        missing = compacted - set(current_live)
-        if missing:
-            raise CommitConflict(
-                f"OPTIMIZE on {path} raced a writer that removed "
-                f"{len(missing)} compacted file(s); re-run on the new snapshot"
-            )
-        # the rewrite materialized the PLAN-time vectors; a vector that
-        # landed since would die unmaterialized with the replaced file
-        _refuse_dv_drift(path, compacted, dvs, version - 1, "OPTIMIZE")
-        entry = {
-            "version": version,
-            "timestamp": time.time(),
-            "mode": "optimize",
-            "added": added,
-            "removed": sorted(compacted),
-            "operation": f"OPTIMIZE({len(live)}->{len(added)}){op_suffix}",
-        }
-        if set(current_live) == compacted:
-            # FULL rewrite: the post-optimize live set is exactly our
-            # union-schema output, so the snapshot is single-schema
-            # again — record it so reads stop paying mergeSchema (the
-            # "OPTIMIZE doubles as schema compaction" payoff; a subset
-            # compaction or a raced-in append keeps the flag off,
-            # conservatively mixed)
-            entry["unified_schema"] = True
-        if file_stats:
-            entry["file_stats"] = file_stats
-        if stats_rel:
-            entry["stats_partials"] = stats_rel
-        return entry
-
-    try:
-        entry = _publish(path, build)
-    except CommitConflict:
-        shutil.rmtree(data_path, ignore_errors=True)  # stale rewrite: no orphans
-        if stats_rel:
-            shutil.rmtree(os.path.join(path, stats_rel), ignore_errors=True)
-        raise
+    entry = _publish_rewrite(
+        path, "optimize",
+        f"OPTIMIZE({len(live)}->{len(written.added)}){op_suffix}",
+        written, live, planned_dvs=dvs,
+    )
     assert entry is not None
-    return {**entry, "files_before": len(live), "files_after": len(added)}
+    return {**entry, "files_before": len(live),
+            "files_after": len(written.added)}
 
 
 def table_changes(
@@ -2200,13 +2319,6 @@ def table_changes(
     if not entries:
         raise ValueError(f"no commits in [{from_version}, {hi}] at {path}")
 
-    _mixed_memo: dict[int, bool] = {}
-
-    def _mixed(at_version: int) -> bool:
-        if at_version not in _mixed_memo:
-            _mixed_memo[at_version] = _mixed_schema_at(path, at_version)
-        return _mixed_memo[at_version]
-
     # change rows are consumed to rebuild the CURRENT table, so every
     # branch surfaces under the names at the feed's END version: each
     # row's columns resolve physically under ITS version's mapping, then
@@ -2239,13 +2351,8 @@ def table_changes(
                     if os.path.exists(os.path.join(path, f))]
         if not existing:
             return None
-        reader = spark.read
-        if _mixed(at_version):
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[os.path.join(path, f) for f in existing])
-        dvs = _dv_at(path, at_version)
-        if dvs:
-            df = _apply_dvs(spark, df, path, existing, dvs)
+        df = _scan(spark, path, existing, at_version,
+                   _dv_at(path, at_version))
         # physical -> the row's version's logical -> end-version names
         return to_hi_names(
             _apply_column_mapping(spark, df, path, at_version), at_version
@@ -2258,10 +2365,7 @@ def table_changes(
         existing = [f for f in dv if os.path.exists(os.path.join(path, f))]
         if not existing:
             return None
-        reader = spark.read
-        if _mixed(at_version):
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[os.path.join(path, f) for f in existing])
+        df = _scan(spark, path, existing, at_version)
         pairs = [
             (os.path.basename(f), int(p))
             for f in existing
@@ -2288,11 +2392,6 @@ def table_changes(
     parts: list[DataFrame] = []
     for e in entries:
         v, mode = e["version"], e.get("mode")
-        # added files exist in the v snapshot; removed files come from
-        # the PREVIOUS snapshot — each side reads under its own
-        # version's mixedness
-        added = rows_of(e.get("added", []), v)
-        removed = rows_of(e.get("removed", []), v - 1)
         if mode == "optimize":
             continue
         if mode == "delete_dv":
@@ -2300,6 +2399,11 @@ def table_changes(
             if gone is not None:
                 parts.append(tag(gone, "delete", v))
             continue
+        # added files exist in the v snapshot; removed files come from
+        # the PREVIOUS snapshot — each side reads under its own
+        # version's mixedness
+        added = rows_of(e.get("added", []), v)
+        removed = rows_of(e.get("removed", []), v - 1)
         if mode == "merge":
             key = e.get("merge_key")
             # merge entries record the PHYSICAL key; the change frames
@@ -2444,10 +2548,11 @@ def delete_rows(
     keys: dict[str, list] | None = None,
 ) -> dict | None:
     """Delta-style DELETE, FILE-GRANULAR: rows matching the predicate
-    are removed by rewriting ONLY the live files whose recorded
-    [min, max] ranges can contain them; every other file stays live
-    untouched (same skipping machinery as :func:`merge_into` /
-    :func:`read_table_pruned`). History is preserved — the deletion is
+    are removed by rewriting ONLY the live files that hold one; every
+    other file stays live untouched. The candidates come from the
+    recorded [min, max] ranges (the planner :func:`read_table_pruned`
+    and :func:`merge_into` use too), then one job counts matching rows
+    per candidate file. History is preserved — the deletion is
     one commit, old snapshots still show the rows until ``vacuum``.
 
     The predicate is ``predicates`` ({col: (lo, hi)} ranges — these both
@@ -2456,8 +2561,10 @@ def delete_rows(
     so give range predicates whenever you have them: `WHERE day =
     '2024-01-01' AND user_id = 7` should arrive as
     ``predicates={'day': ('2024-01-01','2024-01-01')}, where="user_id
-    = 7"``). A candidate file whose rewrite drops no rows is left live
-    as-is (no-op rewrites are skipped, not published). GDPR-style
+    = 7"``). A candidate file holding no matching row is left live
+    as-is (no-op rewrites are skipped, not published). The rewritten
+    files record again every range and bloom column the replaced files
+    carried, plus the predicate and key columns. GDPR-style
     per-key erasure is this + a key-range predicate; erasing the
     HISTORY too is ``vacuum`` after retention.
 
@@ -2476,187 +2583,91 @@ def delete_rows(
     """
     from pyspark.sql import functions as F
 
-    preds = dict(predicates or {})
-    keys = {c: list(vs) for c, vs in (keys or {}).items() if vs}
-    if not preds and where is None and not keys:
-        raise ValueError("delete_rows needs predicates, keys, and/or where")
-    # predicates/keys arrive on LOGICAL names; the rewrite reads and
-    # writes PHYSICAL files — translate the structured args, refuse raw
-    # SQL that references renamed/dropped names (see _cm_refuse_expr)
-    _cm = _column_mapping_at(path)
-    _cm_refuse_expr(_cm, where, "delete_rows where=")
-    _cm_refuse_names(_cm, {**(preds or {}), **(keys or {})},
-                     "delete_rows preds/keys")
-    preds = _cm_translate_keys(_cm, preds)
-    keys = _cm_translate_keys(_cm, keys)
-    has_txn = txn_app_id is not None and txn_version is not None
-    if has_txn:
-        seen = latest_txn_version(path, txn_app_id)
-        if seen is not None and txn_version <= seen:
-            return None
-
-    live, _ = _state_at(path)
-    if not live:
-        raise FileNotFoundError(f"no versioned table at {path}")
-    stats = _file_stats_at(path)
-    dtypes = {
-        _cm_phys(_cm, k): v
-        for k, v in _column_dtypes(spark, path).items()
-    }
-    # range compares run against the stats' RENDERED form (numbers
-    # native, temporal/other as their string rendering — _stat_probe)
-    sp = {
-        c: (_stat_probe(lo, dtypes.get(c)), _stat_probe(hi, dtypes.get(c)))
-        for c, (lo, hi) in preds.items()
-    }
-    skeys = {
-        c: [_stat_probe(v, dtypes.get(c)) for v in vs]
-        for c, vs in keys.items()
-    }
-
-    def overlaps(rng, lo, hi) -> bool:
-        if rng is None or rng[0] is None:
-            return True
-        if hi is not None and rng[0] > hi:
-            return False
-        if lo is not None and rng[1] < lo:
-            return False
-        return True
-
-    key_hashes: dict[str, list[list[int]]] = {}
-    if keys:
-        probe = spark.range(1).select(
-            *[
-                _bloom_hash(_probe_lit(v, dtypes.get(c)), i)
-                .alias(f"{c}__{j}__{i}")
-                for c, vs in keys.items()
-                for j, v in enumerate(vs)
-                for i in range(BLOOM_HASHES)
-            ]
-        ).first()
-        key_hashes = {
-            c: [
-                [probe[f"{c}__{j}__{i}"] for i in range(BLOOM_HASHES)]
-                for j in range(len(vs))
-            ]
-            for c, vs in keys.items()
-        }
-
-    def key_admits(fstats: dict, c: str) -> bool:
-        """Some key of ``c`` can live in the file (range AND bloom)."""
-        rng = fstats.get(c)
-        encoded = fstats.get(f"{c}__bloom")
-        for v, hs in zip(skeys[c], key_hashes[c]):
-            if not overlaps(rng, v, v):
-                continue
-            if encoded is not None and not _bloom_may_contain(encoded, hs):
-                continue
-            return True
-        return False
-
-    matched = [
-        f for f in live
-        if all(
-            overlaps(stats.get(f, {}).get(c), lo, hi)
-            for c, (lo, hi) in sp.items()
-        )
-        and all(key_admits(stats.get(f, {}), c) for c in keys)
-    ]
-    if not matched:
+    version = latest_version(path)
+    cm, preds, keys = _dml_terms(path, version, "delete_rows", predicates,
+                                 keys, where)
+    tw = _txn_mark(txn_app_id, txn_version)
+    if watermark_covered(path, tw):
         return None
-    _refuse_dv_files(path, matched, "DELETE")
-
-    cond = F.lit(True)
-    for c, (lo, hi) in preds.items():
-        if lo is not None:
-            cond = cond & (F.col(c) >= lo)
-        if hi is not None:
-            cond = cond & (F.col(c) <= hi)
-    for c, vs in keys.items():
-        cond = cond & F.col(c).isin(*vs)
-    if where is not None:
-        cond = cond & F.expr(where)
-
-    reader = spark.read
-    if _mixed_schema_at(path):
-        reader = reader.option("mergeSchema", "true")
-    base = reader.parquet(*[os.path.join(path, f) for f in matched])
-    # dual-name evaluation: physical columns + logical aliases, so the
-    # raw `where` (written in logical terms) resolves; the rewrite
-    # re-selects physical columns only
-    aug = _with_logical_aliases(base, _cm)
-    n_deleted = aug.filter(cond).count()
-    if n_deleted == 0:
+    plan = _plan_files(spark, path, version, cm, preds, keys)
+    if not plan.live:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    if not plan.files:
+        return None
+    _refuse_dv_files(path, plan.files, "DELETE", version)
+    cond = _row_cond(preds, keys, where)
+    frame, hits = _file_hits(spark, path, plan.files, version, cm, cond)
+    if not hits:
         return None  # stats said "maybe"; rows said no — publish nothing
-    kept = aug.filter(~F.coalesce(cond, F.lit(False))).select(*base.columns)
-
-    commit_dir = f"commit-{uuid.uuid4().hex[:12]}"
-    data_path = os.path.join(path, "data", commit_dir)
-    kept.write.mode("error").parquet(data_path)
-    added = sorted(
-        os.path.join("data", commit_dir, f)
-        for f in os.listdir(data_path)
-        if f.endswith(".parquet")
+    n_deleted = sum(hits.values())
+    kept = (
+        _with_logical_aliases(frame, cm)
+        .filter(~F.coalesce(cond, F.lit(False)))
+        .select(*frame.columns)
     )
-    stats_record = tuple(preds) + tuple(k for k in keys if k not in preds)
-    file_stats = (
-        _collect_file_stats(spark, path, data_path, stats_record)
-        if stats_record and added
-        else {}
+    written = _write_files(kept, path, stats_cols=(*preds, *keys),
+                           carry=[plan.stats.get(f, {}) for f in hits])
+    entry = _publish_rewrite(
+        path, "delete",
+        f"DELETE({n_deleted} rows, {len(hits)} of {len(plan.live)} files "
+        "rewritten)",
+        written, hits, txn=tw,
     )
-    bloom_keep = _bloomed_cols(stats, matched)
-    if bloom_keep and added:
-        for rel, enc in _collect_bloom_filters(
-            spark, data_path, bloom_keep
-        ).items():
-            file_stats.setdefault(rel, {}).update(enc)
-    rewritten = set(matched)
-
-    def build(version: int) -> dict | None:
-        if has_txn:
-            _, txns = _state_at(path, version - 1)
-            w = txns.get(txn_app_id)
-            if w is not None and txn_version <= int(w):
-                return None
-        current_live, _ = _state_at(path, version - 1)
-        missing = rewritten - set(current_live)
-        if missing:
-            raise CommitConflict(
-                f"DELETE on {path} raced a writer that removed "
-                f"{len(missing)} rewritten file(s); re-run on the new snapshot"
-            )
-        # planning's _refuse_dv_files guaranteed the rewritten files
-        # were vector-free; a vector landing since must abort us
-        _refuse_dv_drift(path, rewritten, {}, version - 1, "DELETE")
-        entry = {
-            "version": version,
-            "timestamp": time.time(),
-            "mode": "delete",
-            "added": added,
-            "removed": sorted(rewritten),
-            "operation": f"DELETE({n_deleted} rows, "
-                         f"{len(matched)} of {len(live)} files rewritten)",
-        }
-        if has_txn:
-            entry["txn"] = {"app_id": txn_app_id, "version": txn_version}
-        if file_stats:
-            entry["file_stats"] = file_stats
-        return entry
-
-    try:
-        entry = _publish(path, build)
-    except CommitConflict:
-        shutil.rmtree(data_path, ignore_errors=True)
-        raise
     if entry is None:
-        shutil.rmtree(data_path, ignore_errors=True)
         return None
     return {
         **entry,
-        "files_matched": len(matched),
-        "files_untouched": len(live) - len(matched),
+        "files_matched": len(hits),
+        "files_untouched": len(plan.live) - len(hits),
         "rows_deleted": n_deleted,
     }
+
+
+def _dml_terms(path: str, version: int | None, op: str, predicates,
+               keys, where: str | None, set_exprs: dict | None = None):
+    """A DML call's row terms, validated and on PHYSICAL names:
+    ``(cm, ranges, points)`` (empty key lists dropped). Structured names
+    translate through the column mapping at ``version``; a stale name —
+    a renamed column's old name or a dropped column's retired physical
+    — in them, in ``where`` or in a SET body is refused
+    (:func:`_cm_refuse_names`, :func:`_cm_refuse_expr`)."""
+    preds = dict(predicates or {})
+    keys = {c: list(vs) for c, vs in (keys or {}).items() if vs}
+    if not preds and where is None and not keys:
+        raise ValueError(f"{op} needs predicates, keys, and/or where")
+    cm = _column_mapping_at(path, version)
+    _cm_refuse_expr(cm, where, f"{op} where=")
+    for k, v in (set_exprs or {}).items():
+        _cm_refuse_expr(cm, v, f"{op} set_exprs[{k}]=")
+    _cm_refuse_names(
+        cm, {**preds, **keys, **(set_exprs or {})},
+        f"{op} preds/keys" + ("/SET targets" if set_exprs else ""),
+    )
+    return cm, _cm_translate_keys(cm, preds), _cm_translate_keys(cm, keys)
+
+
+def _file_hits(spark, path: str, files: list[str], version: int | None,
+               cm: dict, cond) -> tuple[DataFrame, dict[str, int]]:
+    """Count the rows matching ``cond`` in each planned file (one job,
+    keyed by ``_metadata.file_name``) so a rewrite replaces ONLY files
+    that hold a match. Returns ``(frame, {file: hits})``: the physical
+    scan narrowed to the hit files (its columns are the union over ALL
+    planned files, as a SET target may exist only in some), and the
+    counts. ``cond`` evaluates over the physical columns plus logical
+    aliases (:func:`_with_logical_aliases`), so a raw ``where`` in
+    logical names resolves."""
+    from pyspark.sql import functions as F
+
+    base = _scan(spark, path, files, version)
+    fn = F.col("_metadata.file_name")
+    counts = (
+        _with_logical_aliases(base.select(fn.alias("_fn"), "*"), cm)
+        .filter(cond).groupBy("_fn").count().collect()
+    )
+    by_name = {os.path.basename(f): f for f in files}
+    hits = {by_name[r["_fn"]]: r["count"] for r in counts
+            if r["_fn"] in by_name}
+    return base.filter(fn.isin([os.path.basename(f) for f in hits])), hits
 
 
 def delete_rows_dv(
@@ -2696,107 +2707,18 @@ def delete_rows_dv(
     """
     from pyspark.sql import functions as F
 
-    preds = dict(predicates or {})
-    keys = {c: list(vs) for c, vs in (keys or {}).items() if vs}
-    if not preds and where is None and not keys:
-        raise ValueError("delete_rows_dv needs predicates, keys, and/or where")
-    # logical -> physical, same contract as delete_rows
-    _cm = _column_mapping_at(path)
-    _cm_refuse_expr(_cm, where, "delete_rows_dv where=")
-    _cm_refuse_names(_cm, {**(preds or {}), **(keys or {})},
-                     "delete_rows_dv preds/keys")
-    preds = _cm_translate_keys(_cm, preds)
-    keys = _cm_translate_keys(_cm, keys)
-    has_txn = txn_app_id is not None and txn_version is not None
-    if has_txn:
-        seen = latest_txn_version(path, txn_app_id)
-        if seen is not None and txn_version <= seen:
-            return None
-
-    live, _ = _state_at(path)
-    if not live:
-        raise FileNotFoundError(f"no versioned table at {path}")
-    stats = _file_stats_at(path)
-    dtypes = {
-        _cm_phys(_cm, k): v
-        for k, v in _column_dtypes(spark, path).items()
-    }
-    # range compares run against the stats' RENDERED form (numbers
-    # native, temporal/other as their string rendering — _stat_probe)
-    sp = {
-        c: (_stat_probe(lo, dtypes.get(c)), _stat_probe(hi, dtypes.get(c)))
-        for c, (lo, hi) in preds.items()
-    }
-    skeys = {
-        c: [_stat_probe(v, dtypes.get(c)) for v in vs]
-        for c, vs in keys.items()
-    }
-
-    def overlaps(rng, lo, hi) -> bool:
-        if rng is None or rng[0] is None:
-            return True
-        if hi is not None and rng[0] > hi:
-            return False
-        if lo is not None and rng[1] < lo:
-            return False
-        return True
-
-    key_hashes: dict[str, list[list[int]]] = {}
-    if keys:
-        probe = spark.range(1).select(
-            *[
-                _bloom_hash(_probe_lit(v, dtypes.get(c)), i)
-                .alias(f"{c}__{j}__{i}")
-                for c, vs in keys.items()
-                for j, v in enumerate(vs)
-                for i in range(BLOOM_HASHES)
-            ]
-        ).first()
-        key_hashes = {
-            c: [
-                [probe[f"{c}__{j}__{i}"] for i in range(BLOOM_HASHES)]
-                for j in range(len(vs))
-            ]
-            for c, vs in keys.items()
-        }
-
-    def key_admits(fstats: dict, c: str) -> bool:
-        rng = fstats.get(c)
-        encoded = fstats.get(f"{c}__bloom")
-        for v, hs in zip(skeys[c], key_hashes[c]):
-            if not overlaps(rng, v, v):
-                continue
-            if encoded is not None and not _bloom_may_contain(encoded, hs):
-                continue
-            return True
-        return False
-
-    matched = [
-        f for f in live
-        if all(
-            overlaps(stats.get(f, {}).get(c), lo, hi)
-            for c, (lo, hi) in sp.items()
-        )
-        and all(key_admits(stats.get(f, {}), c) for c in keys)
-    ]
-    if not matched:
+    version = latest_version(path)
+    cm, preds, keys = _dml_terms(path, version, "delete_rows_dv", predicates,
+                                 keys, where)
+    tw = _txn_mark(txn_app_id, txn_version)
+    if watermark_covered(path, tw):
         return None
-
-    cond = F.lit(True)
-    for c, (lo, hi) in preds.items():
-        if lo is not None:
-            cond = cond & (F.col(c) >= lo)
-        if hi is not None:
-            cond = cond & (F.col(c) <= hi)
-    for c, vs in keys.items():
-        cond = cond & F.col(c).isin(*vs)
-    if where is not None:
-        cond = cond & F.expr(where)
-
-    reader = spark.read
-    if _mixed_schema_at(path):
-        reader = reader.option("mergeSchema", "true")
-    base = reader.parquet(*[os.path.join(path, f) for f in matched])
+    plan = _plan_files(spark, path, version, cm, preds, keys)
+    if not plan.live:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    if not plan.files:
+        return None
+    base = _scan(spark, path, plan.files, version)
     # pull the metadata columns into the frame FIRST (projections drop
     # access to the hidden _metadata struct), then add the logical
     # aliases so a raw `where` in logical terms resolves
@@ -2806,10 +2728,10 @@ def delete_rows_dv(
             F.col("_metadata.row_index").alias("_ri"),
             "*",
         ),
-        _cm,
+        cm,
     )
     hits = (
-        aug.filter(F.coalesce(cond, F.lit(False)))
+        aug.filter(_row_cond(preds, keys, where))
         .select("_fn", "_ri")
         .limit(max_dv_rows + 1)
         .collect()
@@ -2820,12 +2742,12 @@ def delete_rows_dv(
             f"rows on {path}; use delete_rows (file rewrite) for large "
             "deletes — a vector this big taxes every subsequent read"
         )
-    by_base = {os.path.basename(f): f for f in matched}
+    by_base = {os.path.basename(f): f for f in plan.files}
     # set-ify ONCE outside the loop: rebuilding per hit is
     # O(hits × vector) — ~10^10 ops at the max_dv_rows bound
-    matched_set = set(matched)
+    planned = set(plan.files)
     existing_sets = {
-        f: set(ps) for f, ps in _dv_at(path).items() if f in matched_set
+        f: set(ps) for f, ps in _dv_at(path, version).items() if f in planned
     }
     new_dv: dict[str, list[int]] = {}
     n_new = 0
@@ -2840,84 +2762,19 @@ def delete_rows_dv(
     if n_new == 0:
         return None
     new_dv = {f: sorted(ps) for f, ps in new_dv.items()}
-
-    def build(version: int) -> dict | None:
-        if has_txn:
-            _, txns = _state_at(path, version - 1)
-            w = txns.get(txn_app_id)
-            if w is not None and txn_version <= int(w):
-                return None
-        current_live, _ = _state_at(path, version - 1)
-        missing = set(new_dv) - set(current_live)
-        if missing:
-            raise CommitConflict(
-                f"DV DELETE on {path} raced a writer that removed "
-                f"{len(missing)} file(s); re-run on the new snapshot"
-            )
-        entry = {
-            "version": version,
-            "timestamp": time.time(),
-            "mode": "delete_dv",
-            "added": [],
-            "removed": [],
-            "dv": new_dv,
-            "operation": f"DELETE_DV({n_new} rows in {len(new_dv)} files, "
-                         "no rewrite)",
-        }
-        if has_txn:
-            entry["txn"] = {"app_id": txn_app_id, "version": txn_version}
-        return entry
-
-    entry = _publish(path, build)
+    entry = _publish_rewrite(
+        path, "delete_dv",
+        f"DELETE_DV({n_new} rows in {len(new_dv)} files, no rewrite)",
+        None, new_dv, txn=tw, fields={"dv": new_dv},
+    )
     if entry is None:
         return None
     return {
         **entry,
         "files_matched": len(new_dv),
-        "files_untouched": len(live) - len(new_dv),
+        "files_untouched": len(plan.live) - len(new_dv),
         "rows_deleted": n_new,
     }
-
-
-def _refuse_dv_drift(
-    path: str,
-    files,
-    planned: dict[str, list[int]],
-    version: int,
-    op: str,
-) -> None:
-    """Publish-time re-check of the planning-time deletion-vector
-    snapshot for the files a rewrite replaces. A concurrent
-    ``delete_rows_dv`` landing a vector on one of them between plan and
-    publish would otherwise be SILENTLY undone: the rewrite's output was
-    computed without (or with a stale view of) that vector, and the
-    vector dies with the file the commit removes — deleted rows
-    resurrect. Delta's ConcurrentDeleteRead rule: refuse, make the
-    caller re-plan on the new snapshot. ``version`` is the predecessor
-    snapshot the claim loop is publishing on top of."""
-    current = _dv_at(path, version)
-    for f in files:
-        if sorted(current.get(f, [])) != sorted(planned.get(f, [])):
-            raise CommitConflict(
-                f"{op} on {path}: deletion vector changed on rewritten "
-                f"file {f} between plan and publish; re-run on the new "
-                "snapshot"
-            )
-
-
-def _refuse_dv_files(path: str, files, op: str) -> None:
-    """Rewrite-path guard: a file with a live deletion vector must be
-    materialized (optimize_table) before a rewrite touches it —
-    otherwise the rewrite copies rows the vector had deleted back to
-    life. Bounded scope over silent resurrection."""
-    dvs = _dv_at(path)
-    hit = sorted(set(files) & set(dvs))
-    if hit:
-        raise ValueError(
-            f"{op} on {path}: {len(hit)} matched file(s) carry deletion "
-            "vectors; run optimize_table(files=...) to materialize them "
-            f"first (e.g. {hit[:2]}...)"
-        )
 
 
 def update_rows(
@@ -2933,8 +2790,8 @@ def update_rows(
     """Delta-style UPDATE, FILE-GRANULAR: rows matching the predicate
     get ``set_exprs`` applied ({column: SQL expression over the row,
     e.g. {"status": "'done'", "amount": "amount * 1.1"}}); only live
-    files whose recorded [min, max] ranges can contain matches are
-    rewritten (same pruning as :func:`delete_rows` — give range
+    files that hold a matching row are rewritten (same planning and
+    per-file match count as :func:`delete_rows` — give range
     predicates whenever you have them; ``keys={col: [v, ...]}`` is the
     point-update form, pruned through the per-file Bloom filters
     exactly like keyed deletes). Unmatched rows in rewritten
@@ -2951,205 +2808,58 @@ def update_rows(
 
     if not set_exprs:
         raise ValueError("update_rows needs set_exprs")
-    preds = dict(predicates or {})
-    keys = {c: list(vs) for c, vs in (keys or {}).items() if vs}
-    if not preds and where is None and not keys:
-        raise ValueError("update_rows needs predicates, keys, and/or where")
-    # logical -> physical, same contract as delete_rows; SET keys
-    # translate (the rewrite is physical), SET bodies and where are raw
-    # SQL over the physical frame and are refused when they reference
+    # SET keys translate (the rewrite is physical); SET bodies and where
+    # are raw SQL over the dual-name frame, refused when they reference
     # renamed/dropped names
-    _cm = _column_mapping_at(path)
-    _cm_refuse_expr(_cm, where, "update_rows where=")
-    for _k, _v in set_exprs.items():
-        _cm_refuse_expr(_cm, _v, f"update_rows set_exprs[{_k}]=")
-    _cm_refuse_names(
-        _cm, {**(preds or {}), **(keys or {}), **set_exprs},
-        "update_rows preds/keys/SET targets",
-    )
-    preds = _cm_translate_keys(_cm, preds)
-    keys = _cm_translate_keys(_cm, keys)
-    set_exprs = _cm_translate_keys(_cm, set_exprs)
-    has_txn = txn_app_id is not None and txn_version is not None
-    if has_txn:
-        seen = latest_txn_version(path, txn_app_id)
-        if seen is not None and txn_version <= seen:
-            return None
-
-    live, _ = _state_at(path)
-    if not live:
-        raise FileNotFoundError(f"no versioned table at {path}")
-    stats = _file_stats_at(path)
-    dtypes = {
-        _cm_phys(_cm, k): v
-        for k, v in _column_dtypes(spark, path).items()
-    }
-    # range compares run against the stats' RENDERED form (numbers
-    # native, temporal/other as their string rendering — _stat_probe)
-    sp = {
-        c: (_stat_probe(lo, dtypes.get(c)), _stat_probe(hi, dtypes.get(c)))
-        for c, (lo, hi) in preds.items()
-    }
-    skeys = {
-        c: [_stat_probe(v, dtypes.get(c)) for v in vs]
-        for c, vs in keys.items()
-    }
-
-    def overlaps(rng, lo, hi) -> bool:
-        if rng is None or rng[0] is None:
-            return True
-        if hi is not None and rng[0] > hi:
-            return False
-        if lo is not None and rng[1] < lo:
-            return False
-        return True
-
-    key_hashes: dict[str, list[list[int]]] = {}
-    if keys:
-        probe = spark.range(1).select(
-            *[
-                _bloom_hash(_probe_lit(v, dtypes.get(c)), i)
-                .alias(f"{c}__{j}__{i}")
-                for c, vs in keys.items()
-                for j, v in enumerate(vs)
-                for i in range(BLOOM_HASHES)
-            ]
-        ).first()
-        key_hashes = {
-            c: [
-                [probe[f"{c}__{j}__{i}"] for i in range(BLOOM_HASHES)]
-                for j in range(len(vs))
-            ]
-            for c, vs in keys.items()
-        }
-
-    def key_admits(fstats: dict, c: str) -> bool:
-        """Some key of ``c`` can live in the file (range AND bloom)."""
-        rng = fstats.get(c)
-        encoded = fstats.get(f"{c}__bloom")
-        for v, hs in zip(skeys[c], key_hashes[c]):
-            if not overlaps(rng, v, v):
-                continue
-            if encoded is not None and not _bloom_may_contain(encoded, hs):
-                continue
-            return True
-        return False
-
-    matched = [
-        f for f in live
-        if all(
-            overlaps(stats.get(f, {}).get(c), lo, hi)
-            for c, (lo, hi) in sp.items()
-        )
-        and all(key_admits(stats.get(f, {}), c) for c in keys)
-    ]
-    if not matched:
+    version = latest_version(path)
+    cm, preds, keys = _dml_terms(path, version, "update_rows", predicates,
+                                 keys, where, set_exprs)
+    set_exprs = _cm_translate_keys(cm, set_exprs)
+    tw = _txn_mark(txn_app_id, txn_version)
+    if watermark_covered(path, tw):
         return None
-    _refuse_dv_files(path, matched, "UPDATE")
-
-    cond = F.lit(True)
-    for c, (lo, hi) in preds.items():
-        if lo is not None:
-            cond = cond & (F.col(c) >= lo)
-        if hi is not None:
-            cond = cond & (F.col(c) <= hi)
-    for c, vs in keys.items():
-        cond = cond & F.col(c).isin(*vs)
-    if where is not None:
-        cond = cond & F.expr(where)
-    cond = F.coalesce(cond, F.lit(False))
-
-    reader = spark.read
-    if _mixed_schema_at(path):
-        reader = reader.option("mergeSchema", "true")
-    base = reader.parquet(*[os.path.join(path, f) for f in matched])
-    # dual-name evaluation (physical + logical aliases): SET bodies and
-    # `where` written in logical terms resolve; the select below
-    # re-projects exactly the physical columns, so the aliases never
-    # reach the rewritten files
-    aug = _with_logical_aliases(base, _cm)
-    unknown = set(set_exprs) - set(base.columns)
+    plan = _plan_files(spark, path, version, cm, preds, keys)
+    if not plan.live:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    if not plan.files:
+        return None
+    _refuse_dv_files(path, plan.files, "UPDATE", version)
+    cond = _row_cond(preds, keys, where)
+    frame, hits = _file_hits(spark, path, plan.files, version, cm, cond)
+    unknown = set(set_exprs) - set(frame.columns)
     if unknown:
         raise ValueError(f"update_rows SET names unknown column(s) {sorted(unknown)}")
-    n_updated = aug.filter(cond).count()
-    if n_updated == 0:
+    if not hits:
         return None
-    updated = aug.select(*[
-        (F.when(cond, F.expr(set_exprs[c])).otherwise(F.col(c))).alias(c)
+    n_updated = sum(hits.values())
+    # the select re-projects exactly the physical columns, so the
+    # logical aliases never reach the rewritten files
+    updated = _with_logical_aliases(frame, cm).select(*[
+        F.when(cond, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
         if c in set_exprs else F.col(c)
-        for c in base.columns
+        for c in frame.columns
     ])
     # constraints are declared on LOGICAL names; enforce on the logical
     # overlay of the (physical) rewrite
     _enforce_constraints(
-        updated if _cm_is_identity(_cm)
-        else _apply_column_mapping(spark, updated, path),
+        updated if _cm_is_identity(cm)
+        else _apply_column_mapping(spark, updated, path, version),
         path,
     )
-
-    commit_dir = f"commit-{uuid.uuid4().hex[:12]}"
-    data_path = os.path.join(path, "data", commit_dir)
-    updated.write.mode("error").parquet(data_path)
-    added = sorted(
-        os.path.join("data", commit_dir, f)
-        for f in os.listdir(data_path)
-        if f.endswith(".parquet")
+    written = _write_files(updated, path, stats_cols=(*preds, *keys),
+                           carry=[plan.stats.get(f, {}) for f in hits])
+    entry = _publish_rewrite(
+        path, "update",
+        f"UPDATE({n_updated} rows, {len(hits)} of {len(plan.live)} files "
+        "rewritten)",
+        written, hits, txn=tw,
     )
-    stats_record = tuple(preds) + tuple(k for k in keys if k not in preds)
-    file_stats = (
-        _collect_file_stats(spark, path, data_path, stats_record)
-        if stats_record and added
-        else {}
-    )
-    bloom_keep = _bloomed_cols(stats, matched)
-    if bloom_keep and added:
-        for rel, enc in _collect_bloom_filters(
-            spark, data_path, bloom_keep
-        ).items():
-            file_stats.setdefault(rel, {}).update(enc)
-    rewritten = set(matched)
-
-    def build(version: int) -> dict | None:
-        if has_txn:
-            _, txns = _state_at(path, version - 1)
-            w = txns.get(txn_app_id)
-            if w is not None and txn_version <= int(w):
-                return None
-        current_live, _ = _state_at(path, version - 1)
-        missing = rewritten - set(current_live)
-        if missing:
-            raise CommitConflict(
-                f"UPDATE on {path} raced a writer that removed "
-                f"{len(missing)} rewritten file(s); re-run on the new snapshot"
-            )
-        _refuse_dv_drift(path, rewritten, {}, version - 1, "UPDATE")
-        entry = {
-            "version": version,
-            "timestamp": time.time(),
-            "mode": "update",
-            "added": added,
-            "removed": sorted(rewritten),
-            "operation": f"UPDATE({n_updated} rows, "
-                         f"{len(matched)} of {len(live)} files rewritten)",
-        }
-        if has_txn:
-            entry["txn"] = {"app_id": txn_app_id, "version": txn_version}
-        if file_stats:
-            entry["file_stats"] = file_stats
-        return entry
-
-    try:
-        entry = _publish(path, build)
-    except CommitConflict:
-        shutil.rmtree(data_path, ignore_errors=True)
-        raise
     if entry is None:
-        shutil.rmtree(data_path, ignore_errors=True)
         return None
     return {
         **entry,
-        "files_matched": len(matched),
-        "files_untouched": len(live) - len(matched),
+        "files_matched": len(hits),
+        "files_untouched": len(plan.live) - len(hits),
         "rows_updated": n_updated,
     }
 
@@ -3219,8 +2929,10 @@ def merge_into(
     instead. Files committed without ``stats_cols=(key,)`` have no
     recorded range and are conservatively treated as overlapping.
 
-    The rewrite commit records fresh [min, max] stats for its output
-    files, so merge output stays prunable by later merges. Publication
+    The rewrite commit records fresh [min, max] stats for the key on
+    its output files, plus every range and bloom column the replaced
+    files carried, so merge output stays prunable by later merges and
+    point reads. Publication
     goes through the shared claim loop; like OPTIMIZE, a concurrent
     writer REMOVING a file this merge rewrote aborts with
     CommitConflict (publishing would resurrect deleted rows), while a
@@ -3231,41 +2943,32 @@ def merge_into(
     already covers this version) — what a streaming CDC apply needs to
     survive micro-batch replay.
     """
-    has_txn = txn_app_id is not None and txn_version is not None
-
-    def _already_applied() -> bool:
-        seen = latest_txn_version(path, txn_app_id) if has_txn else None
-        return seen is not None and txn_version <= seen
-
-    if _already_applied():  # skip before paying the source scan + rewrite
+    tw = _txn_mark(txn_app_id, txn_version)
+    if watermark_covered(path, tw):  # skip before the source scan + rewrite
         return None
 
-    from pyspark.sql import functions as _F
+    from pyspark.sql import functions as F
 
     # the upsert rows land in the table, so they face the same contract
     # as a commit (delete markers don't land — exempt)
     _enforce_constraints(
-        source.filter(~_F.coalesce(_F.col(delete_col), _F.lit(False)))
+        source.filter(~F.coalesce(F.col(delete_col), F.lit(False)))
         if delete_col else source,
         path,
     )
+    version = latest_version(path)
+    if version is None:
+        raise FileNotFoundError(f"no versioned table at {path}")
 
     # source arrives on LOGICAL names; the rewrite reads and writes
     # PHYSICAL files — convert once here, then the whole merge (key
     # range probe, file pruning, union, output stats) runs physically
-    _cm = _column_mapping_at(path)
+    _cm = _column_mapping_at(path, version)
     if not _cm_is_identity(_cm):
         source = _to_physical_names(source, _cm)
         key = _cm_phys(_cm, key)
         if delete_col:
             delete_col = _cm_phys(_cm, delete_col)
-
-    live, _ = _state_at(path)
-    if not live:
-        raise FileNotFoundError(f"no versioned table at {path}")
-    stats = _file_stats_at(path)
-
-    from pyspark.sql import functions as F
 
     # one bounded job over the source: key range + uniqueness check
     agg_row = source.agg(
@@ -3282,29 +2985,15 @@ def merge_into(
             f"({agg_row['n']} rows, {agg_row['nd']} distinct {key!r}) — "
             "collapse with latest_change_per_key first"
         )
-    # compare in the stats' rendered form — a temporal merge key would
-    # otherwise TypeError against the string-rendered min/max
-    # (dtypes are keyed logical; key is physical by now)
-    _kd = {
-        _cm_phys(_cm, k): v for k, v in _column_dtypes(spark, path).items()
-    }.get(key)
-    lo, hi = _stat_probe(agg_row["lo"], _kd), _stat_probe(agg_row["hi"], _kd)
-
-    def overlaps(rng) -> bool:
-        if rng is None or rng[0] is None:
-            return True  # unknown range: must assume it matches
-        fmin, fmax = rng
-        return not (fmax < lo or fmin > hi)
-
-    matched = [f for f in live if overlaps(stats.get(f, {}).get(key))]
-    untouched_set = set(live) - set(matched)
-    _refuse_dv_files(path, matched, "MERGE")
+    plan = _plan_files(spark, path, version, _cm,
+                       {key: (agg_row["lo"], agg_row["hi"])}, {})
+    if not plan.live:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    matched = plan.files
+    _refuse_dv_files(path, matched, "MERGE", version)
 
     if matched:
-        base_reader = spark.read
-        if _mixed_schema_at(path):
-            base_reader = base_reader.option("mergeSchema", "true")
-        base = base_reader.parquet(*[os.path.join(path, f) for f in matched])
+        base = _scan(spark, path, matched, version)
         # column set from the (possibly merged) base schema, NOT the
         # first file — on an evolved table a narrow first file would
         # silently drop the evolved columns from the rewrite
@@ -3345,82 +3034,22 @@ def merge_into(
             ~F.coalesce(F.col(delete_col), F.lit(False)) if delete_col else F.lit(True)
         ).select(*out_cols)
 
-    commit_dir = f"commit-{uuid.uuid4().hex[:12]}"
-    data_path = os.path.join(path, "data", commit_dir)
-    merged.write.mode("error").parquet(data_path)
-    added = sorted(
-        os.path.join("data", commit_dir, f)
-        for f in os.listdir(data_path)
-        if f.endswith(".parquet")
+    # analyze_stats arrives in LOGICAL names; the files carry physical
+    written = _write_files(
+        merged, path, stats_cols=(key,),
+        analyze_stats=_cm_phys_cols(_cm, analyze_stats),
+        carry=[plan.stats.get(f, {}) for f in matched],
     )
-    try:
-        file_stats = (
-            _collect_file_stats(spark, path, data_path, (key,))
-            if added else {}
-        )
-        stats_rel = (
-            _write_stats_partials(
-                spark, path, data_path,
-                # analyze_stats arrives in LOGICAL names; the files just
-                # written carry physical columns (same translation as
-                # commit()/optimize_table — merge_into was missed, r8
-                # self-review finding)
-                None if analyze_stats is True
-                else tuple(_cm_phys(_cm, c) for c in analyze_stats),
-            )
-            if analyze_stats and added
-            else None
-        )
-    except Exception:
-        # stats collection failed after the data write: drop the
-        # unpublished commit dir instead of stranding orphan files
-        shutil.rmtree(data_path, ignore_errors=True)
-        raise
-    rewritten = set(matched)
-
-    def build(version: int) -> dict | None:
-        if _already_applied():
-            return None
-        current_live, _ = _state_at(path, version - 1)
-        missing = rewritten - set(current_live)
-        if missing:
-            raise CommitConflict(
-                f"MERGE on {path} raced a writer that removed "
-                f"{len(missing)} rewritten file(s); re-run on the new snapshot"
-            )
-        _refuse_dv_drift(path, rewritten, {}, version - 1, "MERGE")
-        entry = {
-            "version": version,
-            "timestamp": time.time(),
-            "mode": "merge",
-            "added": added,
-            "removed": sorted(rewritten),
-            "merge_key": key,  # lets table_changes classify row changes
-            "operation": f"MERGE({len(matched)} of {len(live)} files rewritten)",
-        }
-        if has_txn:
-            entry["txn"] = {"app_id": txn_app_id, "version": txn_version}
-        if file_stats:
-            entry["file_stats"] = file_stats
-        if stats_rel:
-            entry["stats_partials"] = stats_rel
-        return entry
-
-    def _drop_orphans() -> None:
-        shutil.rmtree(data_path, ignore_errors=True)
-        if stats_rel:
-            shutil.rmtree(os.path.join(path, stats_rel), ignore_errors=True)
-
-    try:
-        entry = _publish(path, build)
-    except CommitConflict:
-        _drop_orphans()
-        raise
+    entry = _publish_rewrite(
+        path, "merge",
+        f"MERGE({len(matched)} of {len(plan.live)} files rewritten)",
+        written, matched, txn=tw,
+        fields={"merge_key": key},  # lets table_changes classify changes
+    )
     if entry is None:  # concurrent duplicate txn published first
-        _drop_orphans()
         return None
     return {
         **entry,
         "files_matched": len(matched),
-        "files_untouched": len(untouched_set),
+        "files_untouched": len(plan.live) - len(matched),
     }

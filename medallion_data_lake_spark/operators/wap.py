@@ -58,7 +58,6 @@ import json
 import os
 import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,8 +66,7 @@ from .versioned import (
     CommitConflict,
     _check_append_drift,
     _cm_phys,
-    _collect_bloom_filters,
-    _collect_file_stats,
+    _cm_phys_cols,
     _column_mapping_at,
     _derive_cm,
     _enforce_constraints,
@@ -77,6 +75,7 @@ from .versioned import (
     _state_at,
     _table_schema_at,
     _to_physical_names,
+    _write_files,
     latest_version,
     read_table,
     table_constraints,
@@ -186,33 +185,19 @@ def stage_commit(
     cm, cm_changed = _derive_cm(
         prior_cm, mode, [f.name for f in df.schema.fields]
     )
-    write_df = _to_physical_names(df, cm)
-
-    staging_id = f"wap-{uuid.uuid4().hex[:12]}"
-    commit_dir = f"commit-{staging_id}"
-    data_path = os.path.join(path, "data", commit_dir)
-    write_df.write.mode("error").parquet(data_path)
-    added = sorted(
-        os.path.join("data", commit_dir, f)
-        for f in os.listdir(data_path)
-        if f.endswith(".parquet")
+    written = _write_files(
+        _to_physical_names(df, cm), path,
+        stats_cols=_cm_phys_cols(cm, stats_cols),
+        bloom_cols=_cm_phys_cols(cm, bloom_cols),
+        prefix="wap-",
     )
-    stats_phys = tuple(_cm_phys(cm, c) for c in stats_cols)
-    bloom_phys = tuple(_cm_phys(cm, c) for c in bloom_cols)
-    file_stats = (
-        _collect_file_stats(spark, path, data_path, stats_phys)
-        if stats_phys and added else {}
-    )
-    if bloom_phys and added:
-        for rel, enc in _collect_bloom_filters(
-            spark, data_path, bloom_phys
-        ).items():
-            file_stats.setdefault(rel, {}).update(enc)
+    commit_dir = os.path.basename(written.data_path)
+    staging_id = commit_dir[len("commit-"):]
 
     manifest = {
         "staging_id": staging_id,
         "mode": mode,
-        "added": added,
+        "added": written.added,
         "data_dir": os.path.join("data", commit_dir),
         "batch_schema": df.schema.jsonValue(),
         "table_schema": table_schema.jsonValue(),
@@ -221,7 +206,7 @@ def stage_commit(
         "prior_cm": prior_cm,
         "cm": cm,
         "cm_changed": cm_changed,
-        "file_stats": file_stats,
+        "file_stats": written.file_stats,
         "constraints_fp": _constraints_fp(path),
         "base_version": latest_version(path),
         "created": time.time(),

@@ -293,3 +293,69 @@ def test_isin_above_bloom_cap_skips_probe_but_stays_exact(spark, table):
     # bloom probing skipped, but RANGE admission still prunes: the
     # contiguous key run only overlaps the low-range files
     assert 0 < report["files_read"] < report["files_total"], report
+
+    # keyed DML plans through the same planner, so the same cap holds:
+    # above it no bloom probe runs, and exactly the present keys go
+    from medallion_data_lake_spark.operators.versioned import (
+        delete_rows,
+        delete_rows_dv,
+        read_table,
+    )
+
+    gone = set()
+    for fn, lo in ((delete_rows, 1000), (delete_rows_dv, 2000)):
+        present = list(range(lo, lo + n))
+        out = fn(spark, table, keys={"id": present + [lo + 5000, -lo]})
+        assert out is not None and out["rows_deleted"] == n, out
+        gone |= set(present)
+        ids = {r["id"] for r in read_table(spark, table).collect()}
+        assert ids == set(range(4000)) - gone
+
+
+def test_rewrites_keep_skipping_metadata(spark, tmp_path):
+    """MERGE, DELETE(where=...) and OPTIMIZE record again every range
+    and bloom column the files they replace carried — a rewrite must
+    not cost the table its file skipping."""
+    from medallion_data_lake_spark.operators.versioned import (
+        _file_stats_at,
+        _state_at,
+        delete_rows,
+        merge_into,
+        optimize_table,
+    )
+
+    path = str(tmp_path / "vt")
+    for b in range(4):
+        rows = [(i, i % 7, f"v{i}") for i in range(b, 400, 4)]
+        commit(spark.createDataFrame(rows, "vec_id long, g long, p string"),
+               path, stats_cols=("vec_id", "g"), bloom_cols=("vec_id",))
+
+    def rewritten_files_described(before):
+        live = _state_at(path)[0]
+        stats = _file_stats_at(path)
+        new = set(live) - set(before)
+        assert new
+        for f in new:
+            assert {"vec_id", "g", "vec_id__bloom"} <= set(stats[f]), stats[f]
+        return live
+
+    live = _state_at(path)[0]
+    # key range [5, 1000] overlaps every file: the merge rewrites them all
+    merge_into(spark, path, spark.createDataFrame(
+        [(5, 5, "m5"), (1000, 6, "new")], "vec_id long, g long, p string"),
+        key="vec_id")
+    live = rewritten_files_described(live)
+    # 777 is in no file: the rewritten files' ranges and blooms skip
+    df, report = read_table_pruned(spark, path, eq={"vec_id": 777})
+    assert df.count() == 0 and report["files_skipped"] > 0, report
+
+    out = delete_rows(spark, path, where="p = 'v13'")
+    assert out is not None and out["rows_deleted"] == 1
+    live = rewritten_files_described(live)
+
+    optimize_table(spark, path)
+    rewritten_files_described(live)
+    df, report = read_table_pruned(spark, path, eq={"vec_id": 777})
+    assert df.count() == 0 and report["files_skipped"] > 0, report
+    df, report = read_table_pruned(spark, path, predicates={"g": (7, 9)})
+    assert df.count() == 0 and report["files_read"] == 0, report

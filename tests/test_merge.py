@@ -324,6 +324,40 @@ def test_delete_rows_is_file_granular_and_time_travels(spark, tmp_path):
     ) is None
 
 
+def test_delete_and_update_rewrite_only_files_holding_a_match(spark, tmp_path):
+    """Two files whose id ranges both admit the predicate, a matching
+    row in only one: DELETE and UPDATE replace exactly that file, and
+    the other stays live by identity."""
+    from medallion_data_lake_spark.operators.versioned import (
+        delete_rows,
+        update_rows,
+    )
+
+    path = str(tmp_path / "vt")
+    for tag in ("a", "b"):
+        commit(spark.range(0, 10).selectExpr("id", f"'{tag}' AS tag")
+               .coalesce(1), path, stats_cols=("id",))
+    file_a, file_b = _state_at(path)[0]
+
+    out = delete_rows(spark, path, predicates={"id": (0, 9)},
+                      where="tag = 'a' AND id < 3")
+    assert out["removed"] == [file_a] and out["rows_deleted"] == 3
+    assert (out["files_matched"], out["files_untouched"]) == (1, 1)
+    live = _state_at(path)[0]
+    assert file_b in live and file_a not in live
+    (new_a,) = set(live) - {file_b}
+
+    out = update_rows(spark, path, set_exprs={"tag": "'z'"},
+                      predicates={"id": (0, 9)}, where="tag = 'b' AND id = 7")
+    assert out["removed"] == [file_b] and out["rows_updated"] == 1
+    assert new_a in _state_at(path)[0]
+    got = sorted(tuple(r) for r in read_table(spark, path).collect())
+    assert got == sorted(
+        [(i, "a") for i in range(3, 10)]
+        + [(i, "z" if i == 7 else "b") for i in range(10)]
+    )
+
+
 def test_update_and_delete_retry_past_append_race_and_abort_on_removal(
     spark, tmp_path
 ):

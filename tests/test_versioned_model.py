@@ -119,9 +119,13 @@ def test_versioned_table_matches_reference_model(spark, tmp_path_factory, ops):
             lo = seed_k
             hi = seed_k + 4
             doomed = [i for i in model if lo <= i <= hi]
-            out = materializing(
-                lambda: delete_rows(spark, path, predicates={"id": (lo, hi)})
+            # odd tag seeds delete by key list (absent keys included):
+            # the planner's point path instead of its range path
+            terms = (
+                {"keys": {"id": list(range(lo, hi + 1))}} if seed_t % 2
+                else {"predicates": {"id": (lo, hi)}}
             )
+            out = materializing(lambda: delete_rows(spark, path, **terms))
             if doomed:
                 assert out is not None and out["rows_deleted"] == len(doomed)
                 for i in doomed:
