@@ -314,6 +314,7 @@ def main(argv: list[str] | None = None) -> int:
                     thread.join()
                 except KeyboardInterrupt:
                     server.shutdown()
+                    server.server_close()
             else:
                 serve_repl(serving, sys.stdin, sys.stdout, max_rows=args.limit)
         finally:

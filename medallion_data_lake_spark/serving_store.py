@@ -21,7 +21,10 @@ Spark-first:
   Spark at export time (idf per term, corpus avgdl), so the request
   SQL evaluates only IEEE double arithmetic identical to the lake
   plan's (:func:`operators.inverted_index.bm25_term_score` — same ops,
-  same order).
+  same order). Each result crosses the py4j bridge as ONE call: a small
+  JVM helper (:data:`_FETCH_SRC`, compiled once per JVM) executes the
+  bound statement and returns the whole bounded result pickled, the
+  way psycopg2 fetches a statement's result at once.
 
 At 100 TB the shape is unchanged: the export is a bounded distributed
 write (postings/doclens are index tables that track the corpus's
@@ -55,9 +58,12 @@ SCALE.md rounds 13–14).
 
 from __future__ import annotations
 
+import functools
 import json
+import pickle
 import re
 import time
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,12 +114,13 @@ class ServingStore:
     """A driver-side ``java.sql`` connection to the exported store.
 
     Every request is one prepared statement on the JVM — no Spark job,
-    no scheduler, no shuffle. py4j round-trips dominate the residual
-    cost (~1 call per cell of the bounded result), which is why every
-    query here is row-capped.
+    no scheduler, no shuffle. py4j round-trips are the residual cost:
+    one per bound parameter plus ONE for the whole bounded result
+    (:meth:`query`), whatever its row count.
 
-    The connection is NOT thread-safe (JDBC connections never are);
-    the HTTP layer serializes access with a lock."""
+    The connection is NOT thread-safe (JDBC connections never are):
+    one thread at a time uses a store. The HTTP layer runs every store
+    request on its one store thread."""
 
     def __init__(self, spark: SparkSession, url: str,
                  driver: str | None = DERBY_DRIVER):
@@ -124,6 +131,7 @@ class ServingStore:
             # Embedded drivers may not be DriverManager-registered yet.
             jvm.java.lang.Class.forName(driver)
         self._conn = jvm.java.sql.DriverManager.getConnection(url)
+        self._fetch = _fetcher(spark.sparkContext._gateway)
         # prepared-statement cache (r16): statement COMPILE is the
         # store's per-request fixed cost (~10-25 ms measured on the 50k
         # clone — larger than executing a bounded probe); the request
@@ -171,13 +179,13 @@ class ServingStore:
               max_rows: int = ROW_CAP) -> dict:
         """Run one (optionally prepared) statement, return the bounded
         result as {"columns", "rows", "row_count"} — the same shape the
-        HTTP layer's run_bounded_df emits."""
+        HTTP layer's run_bounded_df emits. The result comes back from
+        the JVM helper in one py4j call (:data:`_FETCH_SRC`)."""
         n = max(1, min(int(max_rows), ROW_CAP))
         ps = self._ps_cache.pop(sql, None)
         if ps is None:
             ps = self._conn.prepareStatement(sql)
         try:
-            ps.setMaxRows(n)
             for i, p in enumerate(params or [], start=1):
                 if isinstance(p, bool):
                     ps.setBoolean(i, p)
@@ -187,15 +195,9 @@ class ServingStore:
                     ps.setDouble(i, p)
                 else:
                     ps.setString(i, str(p))
-            rs = ps.executeQuery()
-            md = rs.getMetaData()
-            ncols = md.getColumnCount()
-            cols = [md.getColumnLabel(c + 1).lower() for c in range(ncols)]
-            rows = []
-            while rs.next() and len(rows) < n:
-                rows.append([rs.getObject(c + 1) for c in range(ncols)])
-            rs.close()
-            out = {"columns": cols,
+            # the pickle is our own helper's output: scalars and lists
+            labels, rows = pickle.loads(self._fetch.fetch(ps, n))
+            out = {"columns": [c.lower() for c in labels],
                    "rows": [[_plain(v) for v in r] for r in rows],
                    "row_count": len(rows)}
         except Exception:
@@ -312,10 +314,9 @@ class ServingStore:
         EXACT by construction: returns None whenever exactness cannot
         be proven and :meth:`bm25` falls back to the full scan.
 
-        Bounded phases, every statement prepared-and-cached, and —
-        crucial on a py4j bridge where each fetched cell is a round
-        trip — NO candidate row ever crosses into Python; candidates
-        live only inside the store's engine:
+        Bounded phases, every statement prepared-and-cached, and NO
+        candidate row ever crosses into Python; candidates live only
+        inside the store's engine:
 
         0. DISPATCH: one termstats lookup; if the query terms' total df
            is small the exhaustive scan is already index-bounded and
@@ -654,18 +655,67 @@ class ServingStore:
 
 
 def _plain(v):
-    """py4j JavaObject scalars → JSON-safe Python values."""
-    if v is None or isinstance(v, (int, float, str, bool)):
+    """A fetched cell → JSON-safe Python value: a SQL DECIMAL becomes
+    an int when its text is integral, else a float."""
+    if not isinstance(v, Decimal):
         return v
-    # java.math.BigDecimal, java.sql.Timestamp/Date, etc.
-    s = str(v)
     try:
-        return int(s)
+        return int(str(v))
     except ValueError:
-        try:
-            return float(s)
-        except ValueError:
-            return s
+        return float(v)
+
+
+# The JVM side of ServingStore.query: execute a bound statement, read
+# at most `max` rows, close the ResultSet and return [labels, rows] as
+# one pickle (Pyrolite, the pickler PySpark itself uses). Cells that
+# py4j would hand over as Python ints, floats, bools and strs pass
+# through (a REAL is widened through its text, as py4j does, so 0.1f
+# reads 0.1); DECIMAL stays a BigDecimal (Python: decimal.Decimal); any
+# other value (DATE, TIMESTAMP, ...) is sent as its toString().
+_FETCH_SRC = """
+public class ServingStoreFetch {
+  public byte[] fetch(java.sql.PreparedStatement ps, int max)
+      throws Exception {
+    ps.setMaxRows(max);
+    java.sql.ResultSet rs = ps.executeQuery();
+    try {
+      java.sql.ResultSetMetaData md = rs.getMetaData();
+      int n = md.getColumnCount();
+      java.util.ArrayList labels = new java.util.ArrayList();
+      for (int c = 1; c <= n; c++) labels.add(md.getColumnLabel(c));
+      java.util.ArrayList rows = new java.util.ArrayList();
+      while (rows.size() < max && rs.next()) {
+        Object[] row = new Object[n];
+        for (int c = 1; c <= n; c++) row[c - 1] = plain(rs.getObject(c));
+        rows.add(row);
+      }
+      return new net.razorvine.pickle.Pickler().dumps(
+          new Object[] {labels, rows});
+    } finally {
+      rs.close();
+    }
+  }
+
+  private static Object plain(Object v) {
+    if (v == null || v instanceof Long || v instanceof Integer
+        || v instanceof Short || v instanceof Byte || v instanceof Double
+        || v instanceof Boolean || v instanceof String
+        || v instanceof java.math.BigDecimal) return v;
+    if (v instanceof Float) return Double.valueOf(v.toString());
+    return v.toString();
+  }
+}
+"""
+
+
+@functools.cache
+def _fetcher(gateway):
+    """The :data:`_FETCH_SRC` helper in ``gateway``'s JVM, compiled by
+    Janino (the compiler behind Spark's codegen) once per JVM; the
+    helper holds no state, so every store on that JVM shares it."""
+    jc = gateway.jvm.org.codehaus.janino.SimpleCompiler()
+    jc.cook(_FETCH_SRC)
+    return jc.getClassLoader().loadClass("ServingStoreFetch").newInstance()
 
 
 def _bigram_positions(docs: DataFrame, doc_id_col: str,
@@ -963,52 +1013,51 @@ def export_gold_store(
                     f'CREATE INDEX idx_{t}_{c} ON {t}("{c}")')
 
 
-def run_store_search(store, lock, req: dict, route: str = "/search",
+def run_store_search(store, req: dict, route: str = "/search",
                      default_rows: int = 100) -> dict:
     """HTTP dispatch for the store-backed search routes — same request
     and response shapes as the warm-session ``run_search``, plus
     ``"engine": "store"`` so callers can tell which tier answered.
     Every route is one (or for /hybrid, two) prepared statements on the
-    exported store — zero Spark jobs."""
+    exported store — zero Spark jobs. The caller owns the store's one
+    thread (the HTTP server's store worker)."""
     k = max(1, min(field(req, "k", 10), ROW_CAP))
     t0 = time.time()
-    with lock:
-        if route == "/search":
-            terms = field(req, "terms")
-            if not terms:
-                raise ValueError("body must carry {'terms': [...]}")
-            out = store.bm25(terms, k=k)
-        elif route == "/phrase":
-            phrase = field(req, "phrase")
-            if not phrase or len(phrase) < 2:
-                raise ValueError(
-                    "body must carry {'phrase': [t1, t2, ...]} "
-                    "(>= 2 tokens)"
-                )
-            # /phrase is unranked; absent k falls back to default_rows
-            # (the warm-session route's contract)
-            bound = k if "k" in req else max(1, min(default_rows, ROW_CAP))
-            out = store.phrase(phrase, k=bound)
-            k = bound
-        elif route == "/similar":
-            vec_id = field(req, "vec_id")
-            if vec_id is None:
-                raise ValueError("body must carry {'vec_id': id}")
-            out = store.similar(vec_id, k=k)
-        elif route == "/hybrid":
-            terms, vec_id = field(req, "terms"), field(req, "vec_id")
-            if not terms or vec_id is None:
-                raise ValueError(
-                    "body must carry {'terms': [...], 'vec_id': id}"
-                )
-            # n_per_branch defaults to the lake hybrid_search's 20; a
-            # store exported shallower than the requested depth refuses
-            # in similar() rather than silently fusing a thinner branch
-            out = store.hybrid(
-                terms, vec_id, k=k,
-                n_per_branch=int(req.get("n_per_branch", 20)))
-        else:
-            raise ValueError(f"store cannot serve {route}")
+    if route == "/search":
+        terms = field(req, "terms")
+        if not terms:
+            raise ValueError("body must carry {'terms': [...]}")
+        out = store.bm25(terms, k=k)
+    elif route == "/phrase":
+        phrase = field(req, "phrase")
+        if not phrase or len(phrase) < 2:
+            raise ValueError(
+                "body must carry {'phrase': [t1, t2, ...]} "
+                "(>= 2 tokens)"
+            )
+        # /phrase is unranked; absent k falls back to default_rows
+        # (the warm-session route's contract)
+        bound = k if "k" in req else max(1, min(default_rows, ROW_CAP))
+        out = store.phrase(phrase, k=bound)
+        k = bound
+    elif route == "/similar":
+        vec_id = field(req, "vec_id")
+        if vec_id is None:
+            raise ValueError("body must carry {'vec_id': id}")
+        out = store.similar(vec_id, k=k)
+    elif route == "/hybrid":
+        terms, vec_id = field(req, "terms"), field(req, "vec_id")
+        if not terms or vec_id is None:
+            raise ValueError(
+                "body must carry {'terms': [...], 'vec_id': id}"
+            )
+        # n_per_branch defaults to the lake hybrid_search's 20; a store
+        # exported shallower than the requested depth refuses in
+        # similar() rather than silently fusing a thinner branch
+        n = field(req, "n_per_branch", 20)
+        out = store.hybrid(terms, vec_id, k=k, n_per_branch=n)
+    else:
+        raise ValueError(f"store cannot serve {route}")
     out["engine"] = "store"
     out["truncated_at"] = k
     out["elapsed_sec"] = round(time.time() - t0, 4)

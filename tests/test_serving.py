@@ -221,8 +221,6 @@ def test_http_query_bounded_and_errors(http_server):
 def test_search_fields_are_type_checked():
     """Both search dispatchers reject a wrongly typed field before any
     lookup: a string ``terms`` is not searched letter by letter."""
-    import threading
-
     from medallion_data_lake_spark.serving_http import run_search
     from medallion_data_lake_spark.serving_store import run_store_search
 
@@ -232,9 +230,29 @@ def test_search_fields_are_type_checked():
            ("/search", {"terms": ["fox"], "k": 2.5})]
     for route, req in bad:
         with pytest.raises(ValueError, match="must be"):
-            run_store_search(None, threading.Lock(), req, route=route)
+            run_store_search(None, req, route=route)
         with pytest.raises(ValueError, match="must be"):
             run_search(None, route, req, default_rows=10)
+    # the store's /hybrid also reads the branch depth
+    for n in ([1], "20", 2.5, True):
+        with pytest.raises(ValueError, match="n_per_branch.*must be"):
+            run_store_search(None, {"terms": ["fox"], "vec_id": 7,
+                                    "n_per_branch": n}, route="/hybrid")
+
+
+def test_curate_fields_are_type_checked():
+    """/curate rejects a wrongly typed config field before it looks at
+    the table: a string ``blocklist`` is not split letter by letter."""
+    from medallion_data_lake_spark.serving_http import run_curate_dry
+
+    bad = [{"mix_alpha": "0.7"}, {"mix_alpha": [1]}, {"mix_alpha": True},
+           {"mix_token_budget": [1]}, {"mix_token_budget": 2.5},
+           {"max_pii_hits": "3"}, {"max_pii_hits": [1]},
+           {"blocklist": "spam"}, {"blocklist": ["spam", 1]}]
+    for req in bad:
+        name = next(iter(req))
+        with pytest.raises(ValueError, match=f"{name}.*must be"):
+            run_curate_dry(None, req)
 
 
 def test_http_server_fault_is_500_and_server_survives(spark):

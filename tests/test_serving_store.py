@@ -171,6 +171,7 @@ def test_http_search_served_from_store(spark, tmp_path, derby_url):
         _assert_store_equals_lake(out, lake)
     finally:
         server.shutdown()
+        server.server_close()
         thread.join(timeout=5)
         store.close()
 
@@ -377,6 +378,7 @@ def test_http_all_routes_served_from_store(spark, tmp_path, derby_url):
             assert out["row_count"] > 0, path
     finally:
         server.shutdown()
+        server.server_close()
         store.close()
 
 
@@ -425,6 +427,7 @@ def test_http_missing_artifact_falls_back(spark, tmp_path, derby_url):
             assert e.code == 400
     finally:
         server.shutdown()
+        server.server_close()
         store.close()
 
 
@@ -932,3 +935,137 @@ def test_store_bm25_pruned_equals_full(spark, tmp_path, derby_url):
             assert got["rows"] == full["rows"], ("cap4", terms, k)
         # with cap 4 every cut overflows -> all answered by the full scan
         assert store.last_bm25_mode == "full"
+
+
+def _store_with_postings(spark, name: str, n_docs: int = 8) -> ServingStore:
+    """An in-memory Derby store holding a hand-written ``mdls_postings``
+    (one term on ``n_docs`` docs) — enough for the full-scan /search
+    path, with no Spark export."""
+    store = ServingStore(spark, f"jdbc:derby:memory:{name};create=true")
+    store.execute('CREATE TABLE mdls_postings ("term" VARCHAR(64), '
+                  '"doc_id" BIGINT, "impact" DOUBLE)')
+    for d in range(1, n_docs + 1):
+        store.execute(f"INSERT INTO mdls_postings VALUES ('fox', {d}, {d / 8})")
+    return store
+
+
+def _counting_commands(spark, monkeypatch) -> list:
+    """Count the py4j commands this thread sends from now on."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    me, sent, orig = threading.current_thread(), [], client.send_command
+
+    def counting(*a, **kw):
+        if threading.current_thread() is me:
+            sent.append(a[0])
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return sent
+
+
+def test_store_query_types(spark):
+    """The Python value and type of every SQL column type a store
+    result can carry, and of NULL in each: integers stay ints, DOUBLE
+    and REAL floats, DECIMAL a float, BOOLEAN a bool, dates and
+    timestamps their SQL text; labels come back lower-cased."""
+    with ServingStore(spark, "jdbc:derby:memory:types;create=true") as s:
+        s.execute(
+            'CREATE TABLE tm ("id" INT, "b" BIGINT, "i" INTEGER, '
+            '"s" SMALLINT, "d" DOUBLE, "r" REAL, "dec" DECIMAL(10,2), '
+            '"v" VARCHAR(20), "bo" BOOLEAN, "dt" DATE, "ts" TIMESTAMP)')
+        s.execute(
+            "INSERT INTO tm VALUES (1, 9000000000, -7, 12, 0.1, 0.1, "
+            "12.50, 'héllo', TRUE, '2024-01-02', '2024-01-02 03:04:05.123')")
+        s.execute("INSERT INTO tm VALUES (2, -1, 0, -3, -2.5e300, 1.5, "
+                  "-7.00, '', FALSE, '1999-12-31', '1999-12-31 23:59:59')")
+        s.execute("INSERT INTO tm VALUES (3, NULL, NULL, NULL, NULL, NULL, "
+                  "NULL, NULL, NULL, NULL, NULL)")
+        out = s.query('SELECT "b" AS "Big", "i", "s", "d", "r", "dec", '
+                      '"v", "bo", "dt", "ts" FROM tm ORDER BY "id"')
+    assert out["columns"] == ["big", "i", "s", "d", "r", "dec", "v", "bo",
+                              "dt", "ts"]
+    assert out["row_count"] == 3
+    want = [
+        [9000000000, -7, 12, 0.1, 0.1, 12.5, "héllo", True, "2024-01-02",
+         "2024-01-02 03:04:05.123"],
+        [-1, 0, -3, -2.5e300, 1.5, -7.0, "", False, "1999-12-31",
+         "1999-12-31 23:59:59.0"],
+        [None] * 10,
+    ]
+    assert out["rows"] == want
+    types = [int, int, int, float, float, float, str, bool, str, str]
+    for row in out["rows"][:2]:
+        assert [type(v) for v in row] == types, row
+
+
+def test_store_query_is_one_round_trip_whatever_the_rows(spark, monkeypatch):
+    """A store result crosses the py4j bridge whole: a bm25 request
+    sends as many commands for 6 result rows as for 2."""
+    with _store_with_postings(spark, "calls") as store:
+        for k in (2, 6):  # prepare and cache both statements
+            assert store.bm25(["fox"], k=k)["row_count"] == k
+        counts = {}
+        for k in (2, 6):
+            sent = _counting_commands(spark, monkeypatch)
+            store.bm25(["fox"], k=k)
+            counts[k] = len(sent)
+            monkeypatch.undo()
+    assert counts[2] == counts[6], counts
+
+
+def test_http_store_routes_share_one_py4j_connection(spark, monkeypatch,
+                                                     caplog):
+    """Store requests run on the server's one store thread: 20 HTTP
+    requests from 4 concurrent clients, each on a fresh handler thread,
+    all answer right and open at most one new py4j connection. The
+    access log goes to the module logger at DEBUG."""
+    import json as _json
+    import logging
+    import urllib.request
+    from concurrent.futures import ThreadPoolExecutor
+
+    from py4j.clientserver import JavaClient
+
+    from medallion_data_lake_spark.serving import ServingLayer
+    from medallion_data_lake_spark.serving_http import serve_http_background
+
+    caplog.set_level(logging.DEBUG,
+                     logger="medallion_data_lake_spark.serving_http")
+    store = _store_with_postings(spark, "oneconn")
+    server, thread = serve_http_background(
+        ServingLayer(spark, gold_root=None), port=0, serving_store=store)
+    host, port = server.server_address
+    opened = []
+    orig = JavaClient._create_new_connection
+
+    def counting(self):
+        opened.append(1)
+        return orig(self)
+
+    def search(k):
+        req = urllib.request.Request(
+            f"http://{host}:{port}/search",
+            data=_json.dumps({"terms": ["fox"], "k": k}).encode(),
+            headers={"Content-Type": "application/json"}, method="POST")
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            return _json.loads(resp.read())
+
+    monkeypatch.setattr(JavaClient, "_create_new_connection", counting)
+    ks = [1 + i % 4 for i in range(20)]
+    try:
+        with ThreadPoolExecutor(4) as clients:
+            outs = list(clients.map(search, ks))
+    finally:
+        server.shutdown()
+        server.server_close()
+        thread.join(timeout=5)
+        store.close()
+    assert not thread.is_alive()
+    for k, out in zip(ks, outs):
+        assert out["engine"] == "store"
+        # impact d/8 on doc d: the top k are docs 8, 7, ...
+        assert [r[0] for r in out["rows"]] == list(range(8, 8 - k, -1))
+    assert len(opened) <= 1, len(opened)
+    assert any("POST /search" in r.getMessage() for r in caplog.records)
