@@ -75,10 +75,14 @@ from pyspark.sql import SparkSession
 from .logstore import get_log_store
 from .versioned import (
     CommitConflict,
+    Snapshot,
+    _publish,
     _read_entry as _entry_at,
+    _snapshot,
     latest_version,
     read_table,
     rollback,
+    watermark_covered,
 )
 from .wap import (
     _constraints_fp,
@@ -240,8 +244,6 @@ def _preflight(legs: list[dict]) -> dict[str, dict]:
     after leg one. The commit-time race remains — that is what ``stuck``
     handles. Returns the parsed staging manifests keyed by table so the
     marking pass doesn't re-read each one."""
-    from .versioned import _column_mapping_at
-
     manifests: dict[str, dict] = {}
     for leg in legs:
         t, sid = leg["table"], leg["staging_id"]
@@ -252,7 +254,8 @@ def _preflight(legs: list[dict]) -> dict[str, dict]:
                 f"txn pre-check: table contract on {t} changed after "
                 f"staging {sid} — re-stage/re-audit before commit_txn"
             )
-        if m["mode"] == "append" and _column_mapping_at(t) != m["prior_cm"]:
+        if (m["mode"] == "append"
+                and _snapshot(t).column_mapping != m["prior_cm"]):
             raise CommitConflict(
                 f"txn pre-check: column mapping on {t} moved after "
                 f"staging {sid} (concurrent RENAME/DROP) — re-stage"
@@ -316,8 +319,6 @@ def _roll_forward(spark: SparkSession, txn_root: str, manifest: dict) -> dict:
     (staging vanished) does NOT block the legs after it — they publish,
     the error is recorded, and the txn stays prepared for the next
     sweep (or ``resolve_broken_txn``)."""
-    from .versioned import watermark_covered
-
     failures: list[Exception] = []
     for leg in manifest["legs"]:
         if leg.get("version") is not None:
@@ -354,7 +355,7 @@ def _roll_forward(spark: SparkSession, txn_root: str, manifest: dict) -> dict:
             # watermark shows the BATCH is covered anyway (a replay txn
             # published the same rows), this is a duplicate-skip, not a
             # loss. Either way the remaining legs must not be blocked.
-            if watermark_covered(leg["table"], tw):
+            if watermark_covered(_snapshot(leg["table"]), tw):
                 adopted = _skip_covered_leg(txn_root, manifest, leg, tw, base)
                 # symmetric with the entry-is-None skip: reclaim any
                 # zombie manifest now (a no-op when it is already gone)
@@ -522,18 +523,15 @@ def _compensate_creating_leg(spark: SparkSession, path: str, txn_id: str) -> dic
     mode="overwrite")`` records one empty parquet part-file in
     ``added`` — indistinguishable on resume from an unrelated
     overwrite, which wedged the resume path; found by live repro.)"""
-    from .versioned import _publish, _state_at, _table_schema_json_at
+    schema_json = _snapshot(path, 0).schema(spark).jsonValue()
 
-    schema_json = _table_schema_json_at(spark, path, 0)
-
-    def build(version: int) -> dict:
-        live, _ = _state_at(path, version - 1)
+    def build(version: int, prev: Snapshot) -> dict:
         return {
             "version": version,
             "timestamp": time.time(),
             "mode": "overwrite",
             "added": [],
-            "removed": live,
+            "removed": prev.live,
             "operation": f"TXN_COMPENSATE({txn_id})",
             "txn_compensate_of": 0,
             "table_schema": schema_json,
@@ -625,7 +623,7 @@ def compensate_stuck_txn(
         if _entry_at(leg["table"], leg["version"]).get("txn") is not None:
             # the leg's entry carries an (app, batch) txn WATERMARK (a
             # streamed staging): restoring the rows away would NOT
-            # retract the watermark — _state_at accumulates watermarks
+            # retract the watermark — the replay accumulates watermarks
             # and restore entries never un-learn them — so a replayed
             # batch would be skipped on this table while other tables
             # re-apply it: a silent, permanent half-landed batch. The
@@ -713,8 +711,6 @@ def resolve_broken_txn(spark: SparkSession, txn_root: str, txn_id: str) -> dict:
             f"txn {txn_id} has every leg published — it is completable, "
             "run recover_txns instead of declaring it broken"
         )
-    from .versioned import watermark_covered
-
     for leg in unpublished:
         t, sid = leg["table"], leg["staging_id"]
         sm = None
@@ -729,7 +725,7 @@ def resolve_broken_txn(spark: SparkSession, txn_root: str, txn_id: str) -> dict:
         tw = leg.get("txn_watermark") or (
             sm.get("txn_watermark") if sm is not None else None
         )
-        if watermark_covered(t, tw):
+        if watermark_covered(_snapshot(t), tw):
             raise ValueError(
                 f"txn {txn_id} is still resolvable: leg {t}'s batch "
                 "is watermark-covered (a replay published the rows) "

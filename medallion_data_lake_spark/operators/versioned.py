@@ -18,8 +18,9 @@ package magic. This module implements them the way Delta/Iceberg do:
   (commit, rollback, OPTIMIZE) go through the same claim-retry loop;
 - a snapshot at version V = the newest CHECKPOINT at/before V plus a
   replay of the log tail after it. Every ``CHECKPOINT_INTERVAL``-th
-  commit also writes ``{version:020d}.checkpoint.json`` holding the full
-  live-file set (and writer-txn watermarks), so snapshot resolution
+  commit also writes ``{version:020d}.checkpoint.json`` holding the
+  snapshot's state (live files, writer-txn watermarks, file stats,
+  deletion vectors, schema, column mapping), so snapshot resolution
   reads O(1) checkpoint + O(interval) tail entries instead of the whole
   log — Delta's ``_last_checkpoint`` design. Checkpoints are derived,
   redundant state: losing one only means a longer replay;
@@ -38,15 +39,21 @@ package magic. This module implements them the way Delta/Iceberg do:
   keep their sticky physical names, reads project one to the other per
   version — so a rename or drop is one log entry at any table size, and
   per-file stats/blooms (keyed physically) keep pruning across renames;
-- every reader and writer shares three decisions, each written once:
-  ``_plan_files`` picks the live files a predicate can touch (per-file
-  [min, max] ranges and Bloom filters from the log), ``_write_files``
-  lands one new ``data/commit-<id>`` directory and describes its files
-  (a rewrite records again every skipping column the replaced files
-  carried), and ``_publish_rewrite`` commits a rewrite (refusing when a
-  racing writer removed a replaced file or moved its deletion vector).
-  Pruned reads, DELETE, UPDATE, MERGE, OPTIMIZE, commits and staged
-  commits all call them, so the copies cannot drift.
+- every reader and writer shares four decisions, each written once:
+  ``_snapshot`` resolves one version ONCE per operation — one listing
+  of ``_log``, one checkpoint read, one tail replay (``_fold``, the
+  only replay rules) — into a ``Snapshot`` that every later step reads
+  files, watermarks, stats, deletion vectors, mixedness, schema and
+  column mapping from, so no operation can mix two versions;
+  ``_plan_files`` picks the snapshot's files a predicate can touch
+  (per-file [min, max] ranges and Bloom filters from the log),
+  ``_write_files`` lands one new ``data/commit-<id>`` directory and
+  describes its files (a rewrite records again every skipping column
+  the replaced files carried), and ``_publish_rewrite`` commits a
+  rewrite (refusing when a racing writer removed a replaced file or
+  moved its deletion vector). Reads, DELETE, UPDATE, MERGE, OPTIMIZE,
+  commits and staged commits all call them, so the copies cannot
+  drift.
 
 At 100 TB the log stays KB-per-commit (file paths + stats), and
 data-file granularity means an append touches only its own files —
@@ -89,12 +96,12 @@ def _log_dir(path: str) -> str:
     return os.path.join(path, "_log")
 
 
+def _versions(names: list[str], pattern: re.Pattern) -> list[int]:
+    return sorted(int(m.group(1)) for f in names if (m := pattern.match(f)))
+
+
 def _commit_versions(path: str) -> list[int]:
-    return sorted(
-        int(m.group(1))
-        for f in get_log_store().list(_log_dir(path))
-        if (m := _ENTRY_RE.match(f))
-    )
+    return _versions(get_log_store().list(_log_dir(path)), _ENTRY_RE)
 
 
 def _read_entry(path: str, version: int) -> dict:
@@ -117,25 +124,8 @@ def latest_version(path: str) -> int | None:
     return versions[-1] if versions else None
 
 
-def _replay(live: list[str], entries: list[dict]) -> list[str]:
-    for e in entries:
-        removed = set(e.get("removed", []))
-        live = [f for f in live if f not in removed] + e.get("added", [])
-    return live
-
-
-# ---------------------------------------------------------------------------
-# Log checkpoints — snapshot state every N commits so resolution is
-# O(1) checkpoint + O(N) tail, not O(#commits)
-# ---------------------------------------------------------------------------
-
-
 def _checkpoint_versions(path: str) -> list[int]:
-    return sorted(
-        int(m.group(1))
-        for f in get_log_store().list(_log_dir(path))
-        if (m := _CKPT_RE.match(f))
-    )
+    return _versions(get_log_store().list(_log_dir(path)), _CKPT_RE)
 
 
 def _read_checkpoint(path: str, version: int) -> dict:
@@ -156,97 +146,162 @@ def _read_checkpoint(path: str, version: int) -> dict:
             time.sleep(0.05 * (attempt + 1))
 
 
-def _ckpts_at(path: str, version: int | None) -> list[int]:
-    """Checkpoint versions at/before ``version`` (None = latest)."""
-    return [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
+# ---------------------------------------------------------------------------
+# The snapshot — one version of a table, resolved ONCE per operation from
+# one listing of _log: the newest checkpoint at/before the version plus a
+# replay of the log tail after it (Delta's Snapshot). Every reader and
+# writer asks it for files, watermarks, stats, vectors and schema.
+# ---------------------------------------------------------------------------
 
 
-def _base_and_tail(path: str, version: int | None) -> tuple[dict, list[dict]]:
-    """(newest checkpoint at/before ``version``, or {} without one; the
-    log entries after it up to ``version``) — what every derived-state
-    resolver folds: O(1) checkpoint + O(interval) tail."""
-    ckpts = _ckpts_at(path, version)
-    if not ckpts:
-        return {}, _entries(path, hi=version)
-    return (_read_checkpoint(path, ckpts[-1]),
-            _entries(path, lo=ckpts[-1] + 1, hi=version))
+class Snapshot(NamedTuple):
+    """One version of a versioned table, resolved once by
+    :func:`_snapshot` and handed down: every decision an operation
+    makes about that version reads these fields, so its files, vectors,
+    stats, mixedness and column names cannot come from two versions.
+    Read-only by contract."""
+
+    path: str
+    version: int | None   # None: no commit at/before the request
+    oldest: int | None    # oldest version the log still resolves
+    live: list[str]       # live data files, log-relative
+    txns: dict            # writer app id -> highest txn version
+    file_stats: dict      # live file -> {col: [min, max], col__bloom: ...}
+    dv: dict              # live file -> sorted deleted row positions
+    mixed_schema: bool    # live files may span >1 schema (mergeSchema)
+    table_schema: dict | None  # union schema JSON (None: never logged)
+    column_mapping: dict  # {"map": {logical: physical}, "retired": [...]}
+
+    def schema(self, spark):
+        """The table's UNION schema (Delta's table-level schema, not any
+        one file's): the logged ``table_schema`` — commit() records the
+        running union on every append/overwrite, rollback() the
+        restored target's, checkpoints carry it past expire_log. A log
+        that never recorded one (a pre-field code generation) falls
+        back to the newest data file's footer."""
+        from pyspark.sql.types import StructType
+
+        if self.table_schema is not None:
+            return StructType.fromJson(self.table_schema)
+        return _schema_of_latest(
+            spark, self.path, _entries(self.path, hi=self.version)
+        )
 
 
-def _state_at(path: str, version: int | None = None) -> tuple[list[str], dict]:
-    """(live_files, txn_watermarks) at ``version`` (None = latest),
-    resolved from the newest checkpoint at/before it plus the log tail —
-    the read path the checkpoints exist for."""
-    if version is not None and version < 0:
-        return [], {}
-    ck, tail = _base_and_tail(path, version)
-    live = _replay(list(ck.get("live", [])), tail)
-    txns = dict(ck.get("txns", {}))
-    for e in tail:
+#: the snapshot fields a checkpoint records. A checkpoint missing any of
+#: them was written by an older code generation: resolution never folds
+#: from it (it replays the entries below instead), and expire_log
+#: rewrites it before deleting those entries
+_CKPT_FIELDS = frozenset(Snapshot._fields) - {"path", "version", "oldest"}
+
+
+def _fold(base: Snapshot, entries: list[dict]) -> Snapshot:
+    """``base`` advanced through ``entries`` (the consecutive commits
+    after it, oldest first) — THE replay rules, written once:
+
+    - live files: an entry drops its ``removed`` and appends its ``added``;
+    - txn watermarks: the highest version per app;
+    - file stats: the newest recorded per file, kept for live files;
+    - deletion vectors: a ``delete_dv`` entry unions its positions into
+      the file's vector, a file leaving the live set drops its vector,
+      and a restore adopts the TARGET version's vectors (the restored
+      live set is the target's);
+    - mixed schema: a full-rewrite OPTIMIZE (``unified_schema``), an
+      overwrite or a restore makes the snapshot single-schema;
+      ``schema_changed`` (an evolved append, or a restore whose target
+      spans >1 schema) marks it mixed;
+    - table schema and column mapping: the newest entry carrying them."""
+    live = list(base.live)
+    txns = dict(base.txns)
+    stats = dict(base.file_stats)
+    dv = {f: set(ps) for f, ps in base.dv.items()}
+    mixed, schema, cm = (base.mixed_schema, base.table_schema,
+                         base.column_mapping)
+    version = base.version
+    for e in entries:
+        removed = set(e.get("removed", []))
+        live = [f for f in live if f not in removed] + e.get("added", [])
         t = e.get("txn")
         if t:
             txns[t["app_id"]] = max(txns.get(t["app_id"], -1), t["version"])
-    return live, txns
-
-
-def _mixed_schema_at(path: str, version: int | None = None) -> bool:
-    """True when the snapshot's live files may span >1 schema (an
-    evolved append landed at/before ``version``) — the reads must then
-    pay mergeSchema. Resolved checkpoint + tail like everything else."""
-    if version is not None and version < 0:
-        return False
-    ck, tail = _base_and_tail(path, version)
-    mixed = bool(ck.get("mixed_schema"))
-    for e in tail:
-        if e.get("unified_schema"):
-            # a FULL-rewrite OPTIMIZE compacted every live file to the
-            # union schema: single-schema again, mergeSchema off
-            mixed = False
-        if e.get("mode") in ("overwrite", "restore"):
-            # snapshot replaced wholesale: mixedness is exactly what the
-            # entry itself records (rollback stamps schema_changed when
-            # the RESTORED live set spans >1 schema — without that, a
-            # restore of an evolved snapshot after an overwrite read
-            # without mergeSchema and nondeterministically dropped the
-            # evolved columns)
+        stats.update(e.get("file_stats", {}))
+        if e.get("mode") == "restore" and e.get("restore_of") is not None:
+            target = _snapshot(base.path, int(e["restore_of"]))
+            dv = {f: set(ps) for f, ps in target.dv.items()}
+        else:
+            for f in removed:
+                dv.pop(f, None)
+            for f, ps in e.get("dv", {}).items():
+                dv.setdefault(f, set()).update(ps)
+        if (e.get("unified_schema")
+                or e.get("mode") in ("overwrite", "restore")):
+            # the snapshot was compacted to the union schema or replaced
+            # wholesale: single-schema unless the entry itself says
+            # otherwise (rollback stamps schema_changed when the RESTORED
+            # live set spans >1 schema — without that, a restore of an
+            # evolved snapshot after an overwrite read without
+            # mergeSchema and dropped the evolved columns)
             mixed = False
         if e.get("schema_changed"):
             mixed = True
-    return mixed
+        if e.get("table_schema") is not None:
+            schema = e["table_schema"]
+        if e.get("column_mapping") is not None:
+            cm = e["column_mapping"]
+        version = e["version"]
+    keep = set(live)
+    return base._replace(
+        version=version, live=live, txns=txns,
+        file_stats={f: s for f, s in stats.items() if f in keep},
+        dv={f: sorted(ps) for f, ps in dv.items() if f in keep and ps},
+        mixed_schema=mixed, table_schema=schema, column_mapping=cm,
+    )
 
 
-def _dv_at(path: str, version: int | None = None) -> dict[str, list[int]]:
-    """Deletion-vector state at ``version``: live file → sorted deleted
-    row positions (merge-on-read deletes, Delta's DV model). Replay
-    rules: a ``delete_dv`` entry unions its positions into the file's
-    vector; a file leaving the live set (rewrite/overwrite/OPTIMIZE/
-    vacuum-irrelevant) drops its vector with it; a restore adopts the
-    TARGET version's vectors (the restored live set is the target's).
-    Resolved checkpoint + tail like every other derived state."""
-    if version is not None and version < 0:
-        return {}
-    ck, tail = _base_and_tail(path, version)
-    dv = {f: set(ps) for f, ps in ck.get("dv", {}).items()}
-    for e in tail:
-        if e.get("mode") == "restore" and e.get("restore_of") is not None:
-            dv = {
-                f: set(ps)
-                for f, ps in _dv_at(path, int(e["restore_of"])).items()
-            }
-            continue
-        for f in e.get("removed", []):
-            dv.pop(f, None)
-        for f, ps in e.get("dv", {}).items():
-            dv.setdefault(f, set()).update(ps)
-    live, _ = _state_at(path, version)
-    live_set = set(live)
-    return {f: sorted(ps) for f, ps in dv.items() if f in live_set and ps}
+def _advance(snap: Snapshot, e: dict) -> Snapshot:
+    """The snapshot at entry ``e``'s version from ``snap``, the one just
+    before it: folded when ``snap`` holds that version, resolved afresh
+    when it cannot (the history before ``e`` is expired)."""
+    v = e["version"]
+    if v == 0 or snap.version == v - 1:
+        return _fold(snap, [e])
+    return _snapshot(snap.path, v)
 
 
-def _apply_dvs(spark, df, path: str, files: list[str],
-               dvs: dict[str, list[int]]):
+def _resolve(path: str, names: list[str], version: int | None) -> Snapshot:
+    """:func:`_snapshot` over an existing listing ``names`` of ``_log``
+    (the claim loop resolves the tip it just listed)."""
+    commits = _versions(names, _ENTRY_RE)
+    ckpts = _versions(names, _CKPT_RE)
+    snap = Snapshot(path, None, min(commits + ckpts, default=None), [], {},
+                    {}, {}, False, None, {"map": {}, "retired": []})
+    if not commits or (version is not None and version < 0):
+        return snap
+    at = commits[-1] if version is None else min(version, commits[-1])
+    base = -1
+    for cv in reversed([c for c in ckpts if c <= at]):
+        ck = _read_checkpoint(path, cv)
+        if _CKPT_FIELDS.issubset(ck):
+            snap = snap._replace(version=cv,
+                                 **{k: ck[k] for k in _CKPT_FIELDS})
+            base = cv
+            break
+    return _fold(snap, [_read_entry(path, v) for v in commits
+                        if base < v <= at])
+
+
+def _snapshot(path: str, version: int | None = None) -> Snapshot:
+    """The table at ``version`` (None = latest; past the tip = the tip;
+    negative = empty) from ONE listing of ``_log``: the newest
+    checkpoint at/before it that carries every :data:`_CKPT_FIELDS`
+    field, plus the entries after it, each read once — O(1) checkpoint
+    + O(interval) entries, never the whole log. A result whose
+    ``version`` is None holds no commit: the table does not exist, or
+    the requested version is older than ``oldest`` (expired)."""
+    return _resolve(path, get_log_store().list(_log_dir(path)), version)
+
+
+def _apply_dvs(spark, df, files: list[str], dvs: dict[str, list[int]]):
     """Anti-join the deleted (file, row position) pairs out of a scan of
     ``files``. The DV side is driver-held and bounded by construction
     (``delete_rows_dv`` refuses above ``max_dv_rows``), so this is one
@@ -271,83 +326,31 @@ def _apply_dvs(spark, df, path: str, files: list[str],
     return out
 
 
-def _table_schema_json_logged(path: str, version: int | None = None) -> dict | None:
-    """table_schema JSON at ``version`` from the LOG + CHECKPOINTS alone
-    (no SparkSession, no parquet footers): newest TAIL entry carrying
-    the field, else the newest prior checkpoint carrying it, else (for
-    pre-field legacy checkpoints only) the remaining entries below the
-    checkpoint, else None. Checkpoint + tail like every other resolver
-    — this runs on every dtype lookup, so it must not re-parse the
-    whole log when a checkpoint already folds the answer."""
-    return _newest_logged(path, version, "table_schema")
-
-
-def _newest_logged(path: str, version: int | None, field: str):
-    """The newest value of a log ``field`` at ``version``: the newest
-    tail entry carrying it, else the newest checkpoint carrying it,
-    else (legacy checkpoints written before the field existed) the
-    entries below the checkpoint, else None."""
-    ckpts = _ckpts_at(path, version)
-    tail_lo = (ckpts[-1] + 1) if ckpts else 0
-    for e in reversed(_entries(path, lo=tail_lo, hi=version)):
-        if e.get(field) is not None:
-            return e[field]
-    for cv in reversed(ckpts):
-        value = _read_checkpoint(path, cv).get(field)
-        if value is not None:
-            return value
-    if ckpts:  # legacy checkpoints without the field: full-walk fallback
-        for e in reversed(_entries(path, hi=ckpts[-1])):
-            if e.get(field) is not None:
-                return e[field]
-    return None
-
-
-#: every field a current-generation checkpoint carries; a checkpoint
-#: missing any of these was written by an older code generation and must
-#: be upgraded before the log below it is expired (the resolvers'
-#: legacy fallbacks walk the pre-checkpoint entries, which expire_log
-#: deletes)
-_CKPT_FIELDS = frozenset(
-    {"live", "txns", "file_stats", "mixed_schema", "dv", "table_schema",
-     "column_mapping"}
-)
-
-
 def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
-    """Materialize derived state at ``version``. Best-effort: a racing
+    """Materialize the snapshot at ``version`` — its :data:`_CKPT_FIELDS`
+    — as ``{version:020d}.checkpoint.json``. Best-effort: a racing
     checkpointer (or a crash here) costs nothing but replay length.
 
     ``upgrade=True`` (expire_log's path) additionally REPLACES a
     pre-existing checkpoint that lacks any current field: exclusive-
     create alone would keep a legacy (pre-table_schema) checkpoint
-    as-is, and once expire_log deletes the entries below it the
-    legacy full-walk fallbacks in ``_table_schema_json_logged`` /
-    ``_dv_at`` find nothing — the silent-downgrade regression the
-    field was added to fix would resurface on migrated tables. The
-    replace is atomic on backends that support it (``LogStore.replace``:
-    POSIX rename, in-memory swap); on the delete+create fallback a
-    reader in the gap retries (``_read_checkpoint``), and it only ever
-    runs while the full log below still exists, so even a crash in the
-    gap resolves from entries."""
-    live, txns = _state_at(path, version)
-    stats = _file_stats_at(path, version)
-    # resolve ALL derived state before the exclusive-create: the open()
-    # below lands an (initially empty) checkpoint file that resolution
-    # helpers would otherwise pick up and fail to parse
-    mixed = _mixed_schema_at(path, version)
-    dv = _dv_at(path, version)
-    # persist the table (union) schema so expire_log truncating the log
-    # to a schema-less tail (DML/OPTIMIZE entries are schema-neutral)
-    # can't silently downgrade _table_schema_at to a one-file footer
-    table_schema = _table_schema_json_logged(path, version)
-    column_mapping = _column_mapping_at(path, version)
+    as-is, resolution would never fold from it, and once expire_log
+    deletes the entries below it nothing could resolve those fields —
+    the silent-downgrade regression the table_schema field was added
+    to fix would resurface on migrated tables. The replace is atomic on
+    backends that support it (``LogStore.replace``: POSIX rename,
+    in-memory swap); on the delete+create fallback a reader in the gap
+    retries (``_read_checkpoint``), and it only ever runs while the
+    full log below still exists, so even a crash in the gap resolves
+    from entries."""
+    # resolve BEFORE the exclusive-create: it lands an initially empty
+    # checkpoint file that a resolution would pick up and fail to parse
+    snap = _snapshot(path, version)
     target = os.path.join(_log_dir(path), f"{version:020d}.checkpoint.json")
     store = get_log_store()
     payload = json.dumps(
-        {"version": version, "live": live, "txns": txns,
-         "file_stats": stats, "mixed_schema": mixed, "dv": dv,
-         "table_schema": table_schema, "column_mapping": column_mapping,
+        {"version": version,
+         **{k: getattr(snap, k) for k in sorted(_CKPT_FIELDS)},
          "timestamp": time.time()},
     )
     try:
@@ -370,8 +373,7 @@ def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
 def latest_txn_version(path: str, app_id: str) -> int | None:
     """Highest txn_version this app has committed, or None — the
     idempotence watermark (Delta's txnAppId/txnVersion)."""
-    _, txns = _state_at(path)
-    v = txns.get(app_id)
+    v = _snapshot(path).txns.get(app_id)
     return int(v) if v is not None else None
 
 
@@ -380,8 +382,8 @@ def latest_txn_version(path: str, app_id: str) -> int | None:
 # ---------------------------------------------------------------------------
 
 
-def watermark_covered(path: str, tw: dict | None) -> bool:
-    """True when the table's recorded watermark for ``tw["app_id"]``
+def watermark_covered(snap: Snapshot, tw: dict | None) -> bool:
+    """True when ``snap``'s recorded watermark for ``tw["app_id"]``
     already covers ``tw["version"]`` — THE coverage predicate, shared
     by the publish gates (``commit``/``wap.publish_staged``), the stage
     fast-path, and the txn coordinator's classifiers so they can never
@@ -389,32 +391,38 @@ def watermark_covered(path: str, tw: dict | None) -> bool:
     batch as lost or as applied)."""
     if tw is None:
         return False
-    seen = latest_txn_version(path, tw["app_id"])
+    seen = snap.txns.get(tw["app_id"])
     return seen is not None and tw["version"] <= seen
 
 
 def _publish(
     path: str,
-    build_entry: Callable[[int], dict | None],
+    build_entry: Callable[[int, Snapshot], dict | None],
+    planned: Snapshot | None = None,
     max_retries: int = 5,
-    checkpoint_interval: int = CHECKPOINT_INTERVAL,
 ) -> dict | None:
     """Claim the next version with exclusive-create, retrying on races.
 
-    ``build_entry(version)`` is re-invoked against the fresh log tip on
-    every attempt, so added/removed/txn decisions are recomputed after a
-    lost race (the bug the round-3 advice flagged in rollback/OPTIMIZE:
-    a bare ``open(..., 'x')`` with stale state raises — or worse,
-    publishes — instead of recomputing). It may return None to abort
+    Every attempt lists ``_log`` once and calls ``build_entry(version,
+    prev)`` with the snapshot it publishes on top of: ``planned`` (the
+    snapshot the caller planned against) while the tip has not moved,
+    else ``prev`` resolved from that same listing. So added/removed/txn
+    decisions are recomputed against the fresh tip after a lost race
+    (the bug the round-3 advice flagged in rollback/OPTIMIZE: a bare
+    ``open(..., 'x')`` with stale state raises — or worse, publishes —
+    instead of recomputing). ``build_entry`` may return None to abort
     cleanly (idempotent skip). After a successful claim, every
-    ``checkpoint_interval``-th commit also writes a log checkpoint.
+    ``CHECKPOINT_INTERVAL``-th commit also writes a log checkpoint.
     """
     store = get_log_store()
     store.ensure_dir(_log_dir(path))
     for _ in range(max_retries):
-        lv = latest_version(path)
-        version = 0 if lv is None else lv + 1
-        entry = build_entry(version)
+        names = store.list(_log_dir(path))
+        tip = max(_versions(names, _ENTRY_RE), default=None)
+        prev = (planned if planned is not None and planned.version == tip
+                else _resolve(path, names, tip))
+        version = 0 if tip is None else tip + 1
+        entry = build_entry(version, prev)
         if entry is None:
             return None
         target = os.path.join(_log_dir(path), f"{version:020d}.json")
@@ -424,7 +432,7 @@ def _publish(
             store.put_exclusive(target, json.dumps(entry))
         except FileExistsError:
             continue  # lost the race; recompute against the new log tip
-        if checkpoint_interval and (version + 1) % checkpoint_interval == 0:
+        if (version + 1) % CHECKPOINT_INTERVAL == 0:
             _write_checkpoint(path, version)
         return entry
     raise CommitConflict(f"lost {max_retries} version races on {path}")
@@ -547,14 +555,11 @@ def _probe_lit(v, dtype=None):
     return lit.cast(dtype) if dtype is not None else lit
 
 
-def _column_dtypes(spark, path: str, version: int | None = None) -> dict:
-    """{column: DataType} of the table schema at ``version`` — what the
-    bloom probe sites need to render literals build-identically."""
+def _column_dtypes(spark, snap: Snapshot) -> dict:
+    """{column: DataType} of ``snap``'s table schema — what the bloom
+    probe sites need to render literals build-identically."""
     try:
-        return {
-            f.name: f.dataType
-            for f in _table_schema_at(spark, path, version).fields
-        }
+        return {f.name: f.dataType for f in snap.schema(spark).fields}
     except Exception:
         return {}  # schema unresolvable: fall back to native-lit probes
 
@@ -572,8 +577,7 @@ def _collect_bloom_filters(
     overlaps everything). collect_set of ≤ bits ints per file per hash
     — KB-scale. Encoded ``"{bits}:{k}:" + base64(bitset)`` under the
     reserved stats key ``"<col>__bloom"`` so it rides the existing
-    file_stats plumbing (log entry → checkpoint folding →
-    _file_stats_at) untouched."""
+    file_stats plumbing (log entry → checkpoint → snapshot) untouched."""
     import base64
 
     from pyspark.sql import functions as F
@@ -628,20 +632,6 @@ def _bloom_may_contain(encoded: str, raw_hashes: list[int]) -> bool:
         if not (bitset[pos // 8] >> (pos % 8)) & 1:
             return False
     return True
-
-
-def _file_stats_at(path: str, version: int | None = None) -> dict[str, dict]:
-    """Per-file stats for the LIVE files at ``version`` — resolved from
-    the newest checkpoint + tail like :func:`_state_at`."""
-    if version is not None and version < 0:
-        return {}
-    ck, tail = _base_and_tail(path, version)
-    stats = dict(ck.get("file_stats", {}))
-    for e in tail:
-        stats.update(e.get("file_stats", {}))
-    live, _ = _state_at(path, version)
-    live_set = set(live)
-    return {f: s for f, s in stats.items() if f in live_set}
 
 
 def _write_stats_partials(
@@ -700,7 +690,8 @@ def analyze_table(
     data files themselves are never opened."""
     from .stats import finalize_stats, merge_stats_partials
 
-    live, _ = _state_at(path, version)
+    snap = _snapshot(path, version)
+    live = snap.live
     stats_root = os.path.join(path, "_stats")
     report = {"files_total": len(live), "files_covered": 0,
               "files_missing": len(live)}
@@ -727,7 +718,7 @@ def analyze_table(
     # partials are keyed by PHYSICAL column names (they were collected
     # over the written files); surface the version's LOGICAL names so a
     # post-rename ANALYZE reads like the table the user queries
-    cm = _column_mapping_at(path, version)
+    cm = snap.column_mapping
     if not _cm_is_identity(cm) and "column" in out.columns:
         rev = spark.createDataFrame(
             [(p, l) for l, p in cm.get("map", {}).items()],
@@ -797,30 +788,30 @@ def _derive_cm(prior_cm: dict, mode: str, field_names) -> tuple[dict, bool]:
 
 
 # ---------------------------------------------------------------------------
-# The decisions every write shares, each written once: which live files a
-# predicate can touch (_plan_files), how new files are written and
-# described (_write_files), and how a rewrite replaces files
+# The decisions every write shares, each written once: which of a
+# snapshot's files a predicate can touch (_plan_files), how new files are
+# written and described (_write_files), and how a rewrite replaces files
 # (_publish_rewrite) — plus the row predicate a plan stands for
 # (_row_cond) and the snapshot-file reader every scan goes through
 # (_scan).
 # ---------------------------------------------------------------------------
 
 
-def _scan(spark, path: str, files: list[str], version: int | None,
+def _scan(spark, snap: Snapshot, files: list[str],
           dvs: dict[str, list[int]] | None = None) -> DataFrame:
-    """Read ``files`` of the snapshot at ``version``: with mergeSchema
-    when that snapshot may span >1 schema (without it the scan takes
-    ONE file's schema and silently drops the other files' columns; the
-    footer-union cost is paid only by tables that evolved, the flag
-    rides the log + checkpoints), then the deletion vectors ``dvs``
+    """Read ``files`` of ``snap``: with mergeSchema when that snapshot
+    may span >1 schema (without it the scan takes ONE file's schema and
+    silently drops the other files' columns; the footer-union cost is
+    paid only by tables that evolved, the flag rides the log +
+    checkpoints), then the deletion vectors ``dvs``
     anti-joined out. Rewrite scans pass no vectors: they refuse
     vector-carrying files, and their hidden ``_metadata`` columns must
     stay reachable."""
     reader = spark.read
-    if _mixed_schema_at(path, version):
+    if snap.mixed_schema:
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*[os.path.join(path, f) for f in files])
-    return _apply_dvs(spark, df, path, files, dvs) if dvs else df
+    df = reader.parquet(*[os.path.join(snap.path, f) for f in files])
+    return _apply_dvs(spark, df, files, dvs) if dvs else df
 
 
 def _row_cond(ranges: dict[str, tuple], points: dict[str, list],
@@ -845,23 +836,34 @@ def _row_cond(ranges: dict[str, tuple], points: dict[str, list],
     return cond
 
 
-class _Plan(NamedTuple):
-    live: list[str]   # files live at the planned version
-    files: list[str]  # the live files a matching row can be in
-    stats: dict       # per-file stats of the live files
+def _overlaps(rng, lo, hi) -> bool:
+    """False only when a recorded file range ``rng`` = [min, max]
+    provably misses [``lo``, ``hi``] (None = open bound) — THE
+    range-skipping rule of :func:`_plan_files` and the
+    ``medallion_lake`` batch reader. No recorded range, or bounds that
+    do not compare with it (a cross-type probe), keep the file."""
+    if not rng or rng[0] is None:
+        return True
+    fmin, fmax = rng
+    try:
+        return not ((hi is not None and fmin > hi)
+                    or (lo is not None and fmax < lo))
+    except TypeError:
+        return True
 
 
-def _plan_files(spark, path: str, version: int | None, cm: dict,
-                ranges: dict[str, tuple], points: dict[str, list]) -> _Plan:
+def _plan_files(spark, snap: Snapshot, ranges: dict[str, tuple],
+                points: dict[str, list]) -> list[str]:
     """THE file-skipping decision behind every pruned read and every
-    DML: which files live at ``version`` can hold a row with each
+    DML: which of ``snap``'s live files can hold a row with each
     ``ranges`` {physical col: (lo, hi)} bound AND each ``points``
     {physical col: [v, ...]} membership. A file is skipped only on
-    recorded evidence — a [min, max] range that misses a bound, or a
-    point column none of whose values both overlaps the range and (when
-    a bloom is recorded) may be in the bloom. Files without stats for
-    a column are kept; the caller's residual row predicate keeps
-    results exact (Delta's data-skipping and bloom-index contract).
+    recorded evidence — a [min, max] range that misses a bound
+    (:func:`_overlaps`), or a point column none of whose values both
+    overlaps the range and (when a bloom is recorded) may be in the
+    bloom. Files without stats for a column are kept; the caller's
+    residual row predicate keeps results exact (Delta's data-skipping
+    and bloom-index contract).
 
     Bounds compare in the stats' rendered form (:func:`_stat_probe`,
     typed by the table schema). The bloom probe hashes every point
@@ -871,11 +873,9 @@ def _plan_files(spark, path: str, version: int | None, cm: dict,
     A column with more than ``_ISIN_BLOOM_MAX`` values is not probed."""
     from pyspark.sql import functions as F
 
-    live, _ = _state_at(path, version)
-    stats = _file_stats_at(path, version)
+    cm, stats = snap.column_mapping, snap.file_stats
     dtypes = {
-        _cm_phys(cm, c): t
-        for c, t in _column_dtypes(spark, path, version).items()
+        _cm_phys(cm, c): t for c, t in _column_dtypes(spark, snap).items()
     }
     bounds = {
         c: (_stat_probe(lo, dtypes.get(c)), _stat_probe(hi, dtypes.get(c)))
@@ -902,29 +902,21 @@ def _plan_files(spark, path: str, version: int | None, cm: dict,
             c, j, _ = probed[r["pos"]]
             hashes[(c, j)] = [r[f"h{i}"] for i in range(BLOOM_HASHES)]
 
-    def overlaps(rng, lo, hi) -> bool:
-        if rng is None or rng[0] is None:
-            return True  # no recorded range: must assume it matches
-        fmin, fmax = rng
-        return not ((hi is not None and fmin > hi)
-                    or (lo is not None and fmax < lo))
-
     def admits(fstats: dict, c: str) -> bool:
         rng, encoded = fstats.get(c), fstats.get(f"{c}__bloom")
         return any(
-            overlaps(rng, sv, sv)
+            _overlaps(rng, sv, sv)
             and (encoded is None or (c, j) not in hashes
                  or _bloom_may_contain(encoded, hashes[(c, j)]))
             for j, sv in enumerate(spoints[c])
         )
 
-    files = [
-        f for f in live
-        if all(overlaps(stats.get(f, {}).get(c), lo, hi)
+    return [
+        f for f in snap.live
+        if all(_overlaps(stats.get(f, {}).get(c), lo, hi)
                for c, (lo, hi) in bounds.items())
         and all(admits(stats.get(f, {}), c) for c in spoints)
     ]
-    return _Plan(live, files, stats)
 
 
 class _Written(NamedTuple):
@@ -1013,18 +1005,17 @@ _REWRITE_OPS = {"optimize": "OPTIMIZE", "delete": "DELETE",
 
 
 def _publish_rewrite(
-    path: str,
+    planned: Snapshot,
     mode: str,
     operation: str,
     written: _Written | None,
     replaced,
     txn: dict | None = None,
-    planned_dvs: dict[str, list[int]] | None = None,
     fields: dict | None = None,
 ) -> dict | None:
-    """THE commit of a rewrite: publish ``written``'s files in place of
-    the ``replaced`` ones through the shared claim loop. On every
-    attempt, against the fresh tip:
+    """THE commit of a rewrite planned on ``planned``: publish
+    ``written``'s files in place of the ``replaced`` ones through the
+    shared claim loop. On every attempt, against the fresh tip:
 
     - skip (None) when the ``txn`` watermark already covers this write;
     - CommitConflict when a racing writer REMOVED a replaced file —
@@ -1032,7 +1023,7 @@ def _publish_rewrite(
       ConcurrentDeleteRead rule); a racing append only costs a retry,
       its files stay live beside ours;
     - CommitConflict when a replaced file's deletion vector moved from
-      ``planned_dvs`` (:func:`_refuse_dv_drift`);
+      the planned one (:func:`_refuse_dv_drift`);
     - a FULL-rewrite OPTIMIZE (every live file replaced) stamps
       ``unified_schema``: the snapshot is single-schema again.
 
@@ -1040,22 +1031,22 @@ def _publish_rewrite(
     ``replaced`` files only have to stay live and the vectors ride
     ``fields``. A skipped or refused rewrite drops its unpublished
     files."""
+    path = planned.path
     op = _REWRITE_OPS[mode]
     noun = {"optimize": "compacted ", "delete_dv": ""}.get(mode, "rewritten ")
     replaced = set(replaced)
 
-    def build(version: int) -> dict | None:
-        if watermark_covered(path, txn):
+    def build(version: int, prev: Snapshot) -> dict | None:
+        if watermark_covered(prev, txn):
             return None
-        current_live, _ = _state_at(path, version - 1)
-        missing = replaced - set(current_live)
+        missing = replaced - set(prev.live)
         if missing:
             raise CommitConflict(
                 f"{op} on {path} raced a writer that removed "
                 f"{len(missing)} {noun}file(s); re-run on the new snapshot"
             )
         if written is not None:
-            _refuse_dv_drift(path, replaced, planned_dvs or {}, version - 1, op)
+            _refuse_dv_drift(prev, replaced, planned.dv, op)
         entry = {
             "version": version,
             "timestamp": time.time(),
@@ -1065,7 +1056,7 @@ def _publish_rewrite(
             "operation": operation,
             **(fields or {}),
         }
-        if mode == "optimize" and set(current_live) == replaced:
+        if mode == "optimize" and set(prev.live) == replaced:
             entry["unified_schema"] = True
         if txn:
             entry["txn"] = txn
@@ -1076,7 +1067,7 @@ def _publish_rewrite(
         return entry
 
     try:
-        entry = _publish(path, build)
+        entry = _publish(path, build, planned=planned)
     except CommitConflict:
         if written:
             written.drop()
@@ -1087,10 +1078,9 @@ def _publish_rewrite(
 
 
 def _refuse_dv_drift(
-    path: str,
+    prev: Snapshot,
     files,
     planned: dict[str, list[int]],
-    version: int,
     op: str,
 ) -> None:
     """Publish-time re-check of the planning-time deletion-vector
@@ -1100,29 +1090,26 @@ def _refuse_dv_drift(
     computed without (or with a stale view of) that vector, and the
     vector dies with the file the commit removes — deleted rows
     resurrect. Delta's ConcurrentDeleteRead rule: refuse, make the
-    caller re-plan on the new snapshot. ``version`` is the predecessor
-    snapshot the claim loop is publishing on top of."""
-    current = _dv_at(path, version)
+    caller re-plan on the new snapshot. ``prev`` is the snapshot the
+    claim loop is publishing on top of."""
     for f in files:
-        if sorted(current.get(f, [])) != sorted(planned.get(f, [])):
+        if sorted(prev.dv.get(f, [])) != sorted(planned.get(f, [])):
             raise CommitConflict(
-                f"{op} on {path}: deletion vector changed on rewritten "
+                f"{op} on {prev.path}: deletion vector changed on rewritten "
                 f"file {f} between plan and publish; re-run on the new "
                 "snapshot"
             )
 
 
-def _refuse_dv_files(path: str, files, op: str,
-                     version: int | None = None) -> None:
+def _refuse_dv_files(snap: Snapshot, files, op: str) -> None:
     """Rewrite-path guard: a file with a live deletion vector must be
     materialized (optimize_table) before a rewrite touches it —
     otherwise the rewrite copies rows the vector had deleted back to
     life. Bounded scope over silent resurrection."""
-    dvs = _dv_at(path, version)
-    hit = sorted(set(files) & set(dvs))
+    hit = sorted(set(files) & set(snap.dv))
     if hit:
         raise ValueError(
-            f"{op} on {path}: {len(hit)} matched file(s) carry deletion "
+            f"{op} on {snap.path}: {len(hit)} matched file(s) carry deletion "
             "vectors; run optimize_table(files=...) to materialize them "
             f"first (e.g. {hit[:2]}...)"
         )
@@ -1192,9 +1179,10 @@ def commit(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
 
+    snap = _snapshot(path)
     schema_changed = False
     table_schema = df.schema
-    if mode == "append" and latest_version(path) is not None:
+    if mode == "append" and snap.version is not None:
         # diff against the table's UNION schema from the log, not the
         # last commit's first data file: after an evolved append that
         # OMITS column c, a later append re-introducing c with a
@@ -1202,11 +1190,11 @@ def commit(
         # file footer c would look like a brand-new column and slip
         # through, breaking every subsequent mergeSchema read)
         table_schema, schema_changed = _check_append_drift(
-            path, _table_schema_at(df.sparkSession, path), df.schema,
+            path, snap.schema(df.sparkSession), df.schema,
             allow_schema_evolution,
         )
     tw = _txn_mark(txn_app_id, txn_version)
-    if watermark_covered(path, tw):  # skip before paying the data write
+    if watermark_covered(snap, tw):  # skip before paying the data write
         return None
 
     _enforce_constraints(df, path)
@@ -1214,12 +1202,8 @@ def commit(
     # column mapping: users and this API speak LOGICAL names; data files
     # carry PHYSICAL names (see _derive_cm for the overwrite reset and
     # the fresh-physical-name collision rule)
-    prior_cm = (
-        _column_mapping_at(path) if latest_version(path) is not None
-        else {"map": {}, "retired": []}
-    )
     cm, cm_changed = _derive_cm(
-        prior_cm, mode, [f.name for f in df.schema.fields]
+        snap.column_mapping, mode, [f.name for f in df.schema.fields]
     )
     written = _write_files(
         _to_physical_names(df, cm), path,
@@ -1228,16 +1212,15 @@ def commit(
         analyze_stats=_cm_phys_cols(cm, analyze_stats),
     )
 
-    def build(version: int) -> dict | None:
-        if watermark_covered(path, tw):
+    def build(version: int, prev: Snapshot) -> dict | None:
+        if watermark_covered(prev, tw):
             return None
-        live, _ = _state_at(path, version - 1)
         entry = {
             "version": version,
             "timestamp": time.time(),
             "mode": mode,
             "added": written.added,
-            "removed": live if mode == "overwrite" else [],
+            "removed": prev.live if mode == "overwrite" else [],
             "operation": "WRITE",
             # running union schema (overwrite resets it to the batch's):
             # the reference point append enforcement diffs against
@@ -1255,7 +1238,7 @@ def commit(
             entry["column_mapping"] = cm
         return entry
 
-    entry = _publish(path, build, max_retries)
+    entry = _publish(path, build, planned=snap, max_retries=max_retries)
     if entry is None:
         # a concurrent duplicate published first: our data files were
         # never referenced by any log entry — remove the orphans
@@ -1284,37 +1267,24 @@ def read_table(
 ) -> DataFrame:
     """Snapshot read: latest, a pinned ``version``, or the newest commit
     at/before ``as_of_timestamp`` (time travel). Latest/pinned reads
-    resolve from the newest log checkpoint + tail; only timestamp travel
-    scans entry timestamps."""
-    lv = latest_version(path)
-    if lv is None:
-        raise FileNotFoundError(f"no versioned table at {path}")
+    resolve one snapshot (newest log checkpoint + tail); only timestamp
+    travel scans entry timestamps."""
     if as_of_timestamp is not None:
         version = version_at_timestamp(path, as_of_timestamp)
-    if version is not None:
-        known = _commit_versions(path) + _checkpoint_versions(path)
-        oldest = min(known)
-        if version < oldest:
-            raise ValueError(
-                f"version {version} expired (history starts at {oldest}; "
-                "see expire_log retention)"
-            )
-    else:
-        # Pin 'latest' ONCE and hand the same version to every resolver
-        # below. Resolving files / DVs / mixed-schema / column-mapping as
-        # four independent 'latest' lookups lets a rewrite commit landing
-        # between them pair version-N files with version-N+1 DVs — e.g.
-        # OPTIMIZE purging DV'd rows pops a removed file's DV while the
-        # stale file list still includes it, transiently resurrecting
-        # deleted rows (the unpinned-latest race clone_table pins against).
-        version = lv
-    files, _ = _state_at(path, version)
-    if not files:
+    snap = _snapshot(path, version)
+    if snap.oldest is None:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    if version is not None and version < snap.oldest:
+        raise ValueError(
+            f"version {version} expired (history starts at {snap.oldest}; "
+            "see expire_log retention)"
+        )
+    if not snap.live:
         # a valid-but-empty snapshot (e.g. overwrite with 0 rows)
-        return spark.createDataFrame([], _table_schema_at(spark, path, version))
-    df = _scan(spark, path, files, version, _dv_at(path, version))
+        return spark.createDataFrame([], snap.schema(spark))
+    df = _scan(spark, snap, snap.live, snap.dv)
     # physical -> logical names (identity mapping returns df untouched)
-    return _apply_column_mapping(spark, df, path, version)
+    return _apply_column_mapping(spark, df, snap)
 
 
 def read_table_pruned(
@@ -1367,13 +1337,9 @@ def read_table_pruned(
     Returns ``(df, report)`` where report carries files_read /
     files_skipped so callers and tests can audit the pruning.
     """
-    lv = latest_version(path)
-    if lv is None:
+    snap = _snapshot(path, version)
+    if snap.oldest is None:
         raise FileNotFoundError(f"no versioned table at {path}")
-    if version is None:
-        # same pin-latest-once rule as read_table: stats / dtypes /
-        # column-mapping / DV resolution must all see ONE snapshot
-        version = lv
     preds = dict(predicates or {})
     if col is not None:
         preds[col] = (lo, hi)
@@ -1394,25 +1360,20 @@ def read_table_pruned(
     # across renames, so pruning keeps working after a metadata-only
     # rename with zero stats migration)
     points = {c: [v] for c, v in eq.items()} | isin
-    cm = _column_mapping_at(path, version)
-    plan = _plan_files(spark, path, version, cm,
-                       _cm_translate_keys(cm, preds),
-                       _cm_translate_keys(cm, points))
-    chosen = plan.files
+    cm = snap.column_mapping
+    chosen = _plan_files(spark, snap, _cm_translate_keys(cm, preds),
+                         _cm_translate_keys(cm, points))
     report = {
-        "files_total": len(plan.live),
+        "files_total": len(snap.live),
         "files_read": len(chosen),
-        "files_skipped": len(plan.live) - len(chosen),
+        "files_skipped": len(snap.live) - len(chosen),
     }
     if not chosen:
-        return (
-            spark.createDataFrame([], _table_schema_at(spark, path, version)),
-            report,
-        )
-    df = _scan(spark, path, chosen, version, _dv_at(path, version))
+        return spark.createDataFrame([], snap.schema(spark)), report
+    df = _scan(spark, snap, chosen, snap.dv)
     # project to logical names BEFORE the residual filter, which is
     # expressed (like the predicates) in logical terms
-    df = _apply_column_mapping(spark, df, path, version)
+    df = _apply_column_mapping(spark, df, snap)
     return df.filter(_row_cond(preds, points)), report
 
 
@@ -1424,26 +1385,8 @@ def _schema_of_latest(spark, path, entries):
 
 
 def _table_schema_at(spark, path, version=None):
-    """The table's UNION schema at ``version`` (Delta's table-level
-    schema, not any one file's): resolved from the most recent log
-    entry carrying ``table_schema`` — commit() records the running
-    union on every append/overwrite, rollback() the restored target's.
-    Entries without the field (DML rewrites, OPTIMIZE — schema-neutral
-    by construction; pre-field legacy logs) are skipped in the reverse
-    walk; then checkpoints (which persist the running schema, so an
-    expire_log-truncated tail of schema-neutral entries still
-    resolves); a log with no recorded schema anywhere falls back to
-    the newest data file's footer (the pre-union behavior)."""
-    from pyspark.sql.types import StructType
-
-    ts = _table_schema_json_logged(path, version)
-    if ts is not None:
-        return StructType.fromJson(ts)
-    return _schema_of_latest(spark, path, _entries(path, hi=version))
-
-
-def _table_schema_json_at(spark, path, version=None):
-    return _table_schema_at(spark, path, version).jsonValue()
+    """The table's UNION schema at ``version`` (:meth:`Snapshot.schema`)."""
+    return _snapshot(path, version).schema(spark)
 
 
 def _union_schema(base, new):
@@ -1471,15 +1414,6 @@ def _union_schema(base, new):
 # name collides with a live or retired physical name gets a fresh
 # ``col-<uuid>`` physical name (Delta's collision rule).
 # ---------------------------------------------------------------------------
-
-
-def _column_mapping_at(path: str, version: int | None = None) -> dict:
-    """{"map": {logical: physical (non-identity only)}, "retired":
-    [physical, ...]} at ``version`` — newest entry carrying the field,
-    else newest prior checkpoint, else identity (:func:`_newest_logged`,
-    like ``_table_schema_json_logged``)."""
-    cm = _newest_logged(path, version, "column_mapping")
-    return {"map": {}, "retired": []} if cm is None else cm
 
 
 def _cm_is_identity(cm: dict) -> bool:
@@ -1593,22 +1527,20 @@ def _to_physical_names(df: DataFrame, cm: dict) -> DataFrame:
     )
 
 
-def _apply_column_mapping(spark, df: DataFrame, path: str,
-                          version: int | None = None) -> DataFrame:
-    """PHYSICAL scan -> LOGICAL frame: project exactly the version's
+def _apply_column_mapping(spark, df: DataFrame, snap: Snapshot) -> DataFrame:
+    """PHYSICAL scan -> LOGICAL frame: project exactly ``snap``'s
     logical schema, reading each field from its mapped physical column
     (dropped columns' physicals simply aren't selected; a physical
     absent from every scanned file — possible only mid-evolution —
     reads as typed NULL). Identity mapping returns the frame untouched,
     so unrenamed tables pay nothing."""
-    cm = _column_mapping_at(path, version)
+    cm = snap.column_mapping
     if _cm_is_identity(cm):
         return df
     from pyspark.sql import functions as F
 
-    schema = _table_schema_at(spark, path, version)
     cols = []
-    for f in schema.fields:
+    for f in snap.schema(spark).fields:
         phys = _cm_phys(cm, f.name)
         if phys in df.columns:
             cols.append(F.col(phys).alias(f.name))
@@ -1641,15 +1573,15 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> dict:
 
     renamed_specs: list[dict] | None = None
 
-    def build(version: int) -> dict:
+    def build(version: int, prev: Snapshot) -> dict:
         nonlocal renamed_specs
-        schema = _table_schema_at(spark, path)
+        schema = prev.schema(spark)
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"rename_column: no column {old!r} in {names}")
         if new in names:
             raise ValueError(f"rename_column: column {new!r} already exists")
-        cm = _column_mapping_at(path)
+        cm = prev.column_mapping
         taken = set(cm.get("map", {}).values()) | set(cm.get("retired", []))
         # physical names of identity-mapped columns are their logical
         # names — `new` colliding with one was caught by the logical
@@ -1720,8 +1652,8 @@ def drop_column(spark: SparkSession, path: str, name: str) -> dict:
     lost-race discipline as :func:`rename_column`)."""
     from pyspark.sql.types import StructType
 
-    def build(version: int) -> dict:
-        schema = _table_schema_at(spark, path)
+    def build(version: int, prev: Snapshot) -> dict:
+        schema = prev.schema(spark)
         names = [f.name for f in schema.fields]
         if name not in names:
             raise ValueError(f"drop_column: no column {name!r} in {names}")
@@ -1736,7 +1668,7 @@ def drop_column(spark: SparkSession, path: str, name: str) -> dict:
                     f"drop_column: constraint {spec} references {name!r}; "
                     "drop the constraint first"
                 )
-        cm = _column_mapping_at(path)
+        cm = prev.column_mapping
         new_map = dict(cm.get("map", {}))
         phys = new_map.pop(name, name)
         retired = sorted(set(cm.get("retired", [])) | {phys})
@@ -1756,56 +1688,57 @@ def drop_column(spark: SparkSession, path: str, name: str) -> dict:
     return _publish(path, build)
 
 
+def _refuse_version(path: str, snap: Snapshot, what: str, version: int):
+    """Raise for a requested ``version`` the log cannot resolve: past
+    the tip, or older than the retained history."""
+    tip = latest_version(path)
+    raise ValueError(
+        f"{what} version {version} out of range "
+        f"(history spans {snap.oldest}..{tip}"
+        + ("" if snap.oldest == 0 else "; older expired, see expire_log")
+        + ")"
+    )
+
+
 def rollback(spark: SparkSession, path: str, to_version: int) -> dict:
     """Publish a NEW commit whose live set equals ``to_version``'s —
     metadata-only, instant at any size, history preserved (this is
     Delta's RESTORE, not a destructive reset). Goes through the shared
     claim loop, so a concurrent writer just costs a retry with both
     live sets recomputed against the new tip."""
-    lv = latest_version(path)
-    if lv is None:
+    target = _snapshot(path, to_version)
+    if target.oldest is None:
         raise FileNotFoundError(f"no versioned table at {path}")
-    known = _commit_versions(path) + _checkpoint_versions(path)
-    oldest = min(known)
-    if to_version > lv or to_version < oldest:
+    if target.version != to_version:
         # a beyond-tip target would "succeed" as a no-op commit stamped
         # RESTORE(<nonexistent>), and an expired target would die later
         # with a misleading schema error — refuse up front, with the
         # same message shape as read_table's expired-version refusal
-        raise ValueError(
-            f"restore target version {to_version} out of range "
-            f"(history spans {oldest}..{lv}"
-            + ("" if oldest == 0 else "; older expired, see expire_log")
-            + ")"
-        )
-    target_live, _ = _state_at(path, to_version)
-    target_mixed = _mixed_schema_at(path, to_version)
-    target_schema = _table_schema_json_at(spark, path, to_version)
-    target_cm = _column_mapping_at(path, to_version)
+        _refuse_version(path, target, "restore target", to_version)
+    target_schema = target.schema(spark).jsonValue()
 
-    def build(version: int) -> dict:
-        current_live, _ = _state_at(path, version - 1)
+    def build(version: int, prev: Snapshot) -> dict:
         entry = {
             "version": version,
             "timestamp": time.time(),
             "mode": "restore",
-            "added": [f for f in target_live if f not in set(current_live)],
-            "removed": [f for f in current_live if f not in set(target_live)],
+            "added": [f for f in target.live if f not in set(prev.live)],
+            "removed": [f for f in prev.live if f not in set(target.live)],
             "operation": f"RESTORE({to_version})",
             "restore_of": to_version,
             "table_schema": target_schema,
             # the restored snapshot's names must resolve like they did
             # at to_version — the mapping is versioned state too
-            "column_mapping": target_cm,
+            "column_mapping": target.column_mapping,
         }
-        if target_mixed:
+        if target.mixed_schema:
             # the restored live set spans >1 schema: stamp the entry so
-            # _mixed_schema_at's replay re-enables mergeSchema reads
-            # (restore, like overwrite, otherwise resets mixedness)
+            # the replay (_fold) re-enables mergeSchema reads (restore,
+            # like overwrite, otherwise resets mixedness)
             entry["schema_changed"] = True
         return entry
 
-    entry = _publish(path, build)
+    entry = _publish(path, build, planned=target)
     assert entry is not None  # build never skips
     return entry
 
@@ -1839,39 +1772,24 @@ def clone_table(
     clone still references — keep source retention ≥ clone lifetime,
     or OPTIMIZE the clone (a full rewrite localizes every referenced
     byte, detaching it from the source)."""
-    lv = latest_version(src)
-    if lv is None:
+    snap = _snapshot(src, version)
+    if snap.oldest is None:
         raise FileNotFoundError(f"no versioned table at {src}")
     if latest_version(dst) is not None:
         raise ValueError(f"clone destination {dst} already exists")
-    # pin the source version ONCE, then resolve EVERY piece of snapshot
-    # state at that pinned version: with version=None, seven independent
-    # "latest" lookups would each race a concurrent source writer and
-    # the clone could mix v=N files with v=N+1 vectors/stats/schema
-    src_v = lv if version is None else version
-    known = _commit_versions(src) + _checkpoint_versions(src)
-    if src_v > lv or src_v not in range(min(known), lv + 1):
-        raise ValueError(
-            f"clone source version {src_v} out of range "
-            f"(history spans {min(known)}..{lv}"
-            + ("" if min(known) == 0 else "; older expired, see expire_log")
-            + ")"
-        )
-    files, _ = _state_at(src, src_v)
-    stats = _file_stats_at(src, src_v)
-    dv = _dv_at(src, src_v)
-    schema = _table_schema_json_at(spark, src, src_v)
-    cm = _column_mapping_at(src, src_v)
-    mixed = _mixed_schema_at(src, src_v)
+    if version is not None and snap.version != version:
+        _refuse_version(src, snap, "clone source", version)
+    src_v = snap.version
+    schema = snap.schema(spark).jsonValue()
 
     def xlate(rel: str) -> str:
         return os.path.relpath(
             os.path.normpath(os.path.join(src, rel)), dst
         )
 
-    added = [xlate(f) for f in files]
+    added = [xlate(f) for f in snap.live]
 
-    def build(v: int) -> dict:
+    def build(v: int, prev: Snapshot) -> dict:
         if v != 0:
             # a racer created the destination between the existence
             # check and the claim: publishing v1 here would silently
@@ -1890,13 +1808,15 @@ def clone_table(
             "operation": f"CLONE({src} @ v{src_v})",
             "clone_of": {"path": os.path.abspath(src), "version": src_v},
             "table_schema": schema,
-            "column_mapping": cm,
+            "column_mapping": snap.column_mapping,
         }
-        if stats:
-            entry["file_stats"] = {xlate(f): s for f, s in stats.items()}
-        if dv:
-            entry["dv"] = {xlate(f): ps for f, ps in dv.items()}
-        if mixed:
+        if snap.file_stats:
+            entry["file_stats"] = {
+                xlate(f): s for f, s in snap.file_stats.items()
+            }
+        if snap.dv:
+            entry["dv"] = {xlate(f): ps for f, ps in snap.dv.items()}
+        if snap.mixed_schema:
             entry["schema_changed"] = True
         return entry
 
@@ -1932,7 +1852,7 @@ def vacuum(path: str, keep_last: int = 1, dry_run: bool = False) -> list[str]:
 
     Maintenance path: scans the remaining log plus every checkpoint —
     retained live sets resolve through the checkpoint-aware
-    :func:`_state_at` (entry replay alone under-counts once
+    :func:`_snapshot` (entry replay alone under-counts once
     :func:`expire_log` has truncated old entries), and the candidate
     universe is entry ``added`` lists ∪ checkpoint live sets."""
     versions = _commit_versions(path)
@@ -1941,8 +1861,7 @@ def vacuum(path: str, keep_last: int = 1, dry_run: bool = False) -> list[str]:
     retained = versions[-max(keep_last, 1):]
     keep: set[str] = set()
     for v in retained:
-        live, _ = _state_at(path, v)
-        keep.update(live)
+        keep.update(_snapshot(path, v).live)
     all_files: set[str] = set()
     for e in _entries(path):
         all_files.update(e.get("added", []))
@@ -2161,18 +2080,17 @@ def optimize_table(
     """
     from pyspark.sql import functions as F
 
-    # pin the snapshot once: files, vectors, mixedness and stats of ONE
-    # version (a commit landing mid-plan is the publish check's job)
-    version = latest_version(path)
+    # files, vectors, mixedness and stats of ONE version (a commit
+    # landing mid-plan is the publish check's job)
+    snap = _snapshot(path)
     # zorder/stats columns arrive logical; the rewrite is physical
-    _cm = _column_mapping_at(path, version)
-    zorder_by = _cm_phys_cols(_cm, zorder_by)
-    stats_cols = _cm_phys_cols(_cm, stats_cols)
-    analyze_stats = _cm_phys_cols(_cm, analyze_stats)
+    cm = snap.column_mapping
+    zorder_by = _cm_phys_cols(cm, zorder_by)
+    stats_cols = _cm_phys_cols(cm, stats_cols)
+    analyze_stats = _cm_phys_cols(cm, analyze_stats)
 
-    snapshot, _ = _state_at(path, version)
     if files is not None:
-        unknown = set(files) - set(snapshot)
+        unknown = set(files) - set(snap.live)
         if unknown:
             raise ValueError(
                 f"optimize subset names {len(unknown)} file(s) not live at "
@@ -2180,7 +2098,7 @@ def optimize_table(
             )
         live = list(files)
     else:
-        live = snapshot
+        live = snap.live
     if not live:
         raise ValueError(f"nothing to optimize at {path}")
     total_bytes = sum(
@@ -2192,8 +2110,7 @@ def optimize_table(
     # MATERIALIZES deletion vectors: the rewrite excludes the deleted
     # positions and the vectors die with the replaced files
     # (delete_rows_dv's documented materialization step)
-    dvs = _dv_at(path, version)
-    df = _scan(spark, path, live, version, dvs)
+    df = _scan(spark, snap, live, snap.dv)
     if transform is not None:
         in_rows = df.count()
         in_schema = [(f.name, f.dataType) for f in df.schema.fields]
@@ -2235,19 +2152,18 @@ def optimize_table(
     else:
         out = df.repartition(n_out)
 
-    stats = _file_stats_at(path, version)
     written = _write_files(
         out, path,
         stats_cols=stats_cols or zorder_by,
         analyze_stats=analyze_stats,
-        carry=[stats.get(f, {}) for f in live],
+        carry=[snap.file_stats.get(f, {}) for f in live],
         max_records=records_per_file,
     )
     op_suffix = f" ZORDER({','.join(zorder_by)})" if zorder_by else ""
     entry = _publish_rewrite(
-        path, "optimize",
+        snap, "optimize",
         f"OPTIMIZE({len(live)}->{len(written.added)}){op_suffix}",
-        written, live, planned_dvs=dvs,
+        written, live,
     )
     assert entry is not None
     return {**entry, "files_before": len(live),
@@ -2313,11 +2229,17 @@ def table_changes(
             f"Bootstrap from read_table(version={oldest}) and consume "
             f"changes from {oldest + 1}."
         )
-    entries = [
-        e for e in _entries(path, lo=from_version, hi=hi)
-    ]
+    entries = _entries(path, lo=from_version, hi=hi)
     if not entries:
         raise ValueError(f"no commits in [{from_version}, {hi}] at {path}")
+    # the snapshots before and after each entry: one resolution, then
+    # the replay rules advance it entry by entry
+    steps = []
+    prev = _snapshot(path, from_version - 1)
+    for e in entries:
+        cur = _advance(prev, e)
+        steps.append((e, prev, cur))
+        prev = cur
 
     # change rows are consumed to rebuild the CURRENT table, so every
     # branch surfaces under the names at the feed's END version: each
@@ -2325,11 +2247,11 @@ def table_changes(
     # re-label to the end-version logical names (same physical identity
     # = same feed column, across any number of renames). A column
     # dropped by `hi` keeps its physical name and union-nulls.
-    cm_hi = _column_mapping_at(path, hi)
+    cm_hi = prev.column_mapping
     _rev_hi = {p: l for l, p in cm_hi.get("map", {}).items()}
 
-    def to_hi_names(df, at_version):
-        cmv = _column_mapping_at(path, at_version)
+    def to_hi_names(df, snap):
+        cmv = snap.column_mapping
         if _cm_is_identity(cmv) and _cm_is_identity(cm_hi):
             return df
         m_v = cmv.get("map", {})
@@ -2338,11 +2260,11 @@ def table_changes(
             for c in df.columns
         ])
 
-    def rows_of(rel_files, at_version):
+    def rows_of(rel_files, snap):
         """Read one entry's historical file set. Mixedness is evaluated
-        AT THAT VERSION, not at the latest: after evolution followed by
-        an overwrite (which resets the latest-mixed flag), the
-        overwrite's REMOVED set still spans two schemas — reading it
+        AT ITS VERSION (``snap``), not at the latest: after evolution
+        followed by an overwrite (which resets the latest-mixed flag),
+        the overwrite's REMOVED set still spans two schemas — reading it
         without mergeSchema silently drops evolved columns from the
         change feed. Deletion vectors at that version are applied too:
         rows a vector had already deleted must not re-appear as the
@@ -2351,21 +2273,18 @@ def table_changes(
                     if os.path.exists(os.path.join(path, f))]
         if not existing:
             return None
-        df = _scan(spark, path, existing, at_version,
-                   _dv_at(path, at_version))
+        df = _scan(spark, snap, existing, snap.dv)
         # physical -> the row's version's logical -> end-version names
-        return to_hi_names(
-            _apply_column_mapping(spark, df, path, at_version), at_version
-        )
+        return to_hi_names(_apply_column_mapping(spark, df, snap), snap)
 
-    def rows_at_positions(dv: dict, at_version):
+    def rows_at_positions(dv: dict, snap):
         """The rows a delete_dv entry removed: its files read at the
         recorded positions (broadcast semi-join on file_name+row_index,
         bounded by the max_dv_rows contract)."""
         existing = [f for f in dv if os.path.exists(os.path.join(path, f))]
         if not existing:
             return None
-        df = _scan(spark, path, existing, at_version)
+        df = _scan(spark, snap, existing)
         pairs = [
             (os.path.basename(f), int(p))
             for f in existing
@@ -2378,9 +2297,7 @@ def table_changes(
             .join(F.broadcast(pos), ["_dv_fn", "_dv_ri"], "left_semi")
             .drop("_dv_fn", "_dv_ri")
         )
-        return to_hi_names(
-            _apply_column_mapping(spark, picked, path, at_version), at_version
-        )
+        return to_hi_names(_apply_column_mapping(spark, picked, snap), snap)
 
     def tag(df, change_type, version):
         return df.select(
@@ -2390,20 +2307,20 @@ def table_changes(
         )
 
     parts: list[DataFrame] = []
-    for e in entries:
+    for e, before, after in steps:
         v, mode = e["version"], e.get("mode")
         if mode == "optimize":
             continue
         if mode == "delete_dv":
-            gone = rows_at_positions(e.get("dv", {}), v - 1)
+            gone = rows_at_positions(e.get("dv", {}), before)
             if gone is not None:
                 parts.append(tag(gone, "delete", v))
             continue
         # added files exist in the v snapshot; removed files come from
         # the PREVIOUS snapshot — each side reads under its own
         # version's mixedness
-        added = rows_of(e.get("added", []), v)
-        removed = rows_of(e.get("removed", []), v - 1)
+        added = rows_of(e.get("added", []), after)
+        removed = rows_of(e.get("removed", []), before)
         if mode == "merge":
             key = e.get("merge_key")
             # merge entries record the PHYSICAL key; the change frames
@@ -2451,8 +2368,7 @@ def table_changes(
                 parts.append(tag(added, "insert", v))
 
     if not parts:
-        schema = _table_schema_at(spark, path, hi)
-        empty = spark.createDataFrame([], schema)
+        empty = spark.createDataFrame([], prev.schema(spark))
         return tag(empty, "insert", from_version).limit(0)
     out = parts[0]
     for p in parts[1:]:
@@ -2583,33 +2499,32 @@ def delete_rows(
     """
     from pyspark.sql import functions as F
 
-    version = latest_version(path)
-    cm, preds, keys = _dml_terms(path, version, "delete_rows", predicates,
-                                 keys, where)
+    snap = _snapshot(path)
+    preds, keys = _dml_terms(snap, "delete_rows", predicates, keys, where)
     tw = _txn_mark(txn_app_id, txn_version)
-    if watermark_covered(path, tw):
+    if watermark_covered(snap, tw):
         return None
-    plan = _plan_files(spark, path, version, cm, preds, keys)
-    if not plan.live:
+    files = _plan_files(spark, snap, preds, keys)
+    if not snap.live:
         raise FileNotFoundError(f"no versioned table at {path}")
-    if not plan.files:
+    if not files:
         return None
-    _refuse_dv_files(path, plan.files, "DELETE", version)
+    _refuse_dv_files(snap, files, "DELETE")
     cond = _row_cond(preds, keys, where)
-    frame, hits = _file_hits(spark, path, plan.files, version, cm, cond)
+    frame, hits = _file_hits(spark, snap, files, cond)
     if not hits:
         return None  # stats said "maybe"; rows said no — publish nothing
     n_deleted = sum(hits.values())
     kept = (
-        _with_logical_aliases(frame, cm)
+        _with_logical_aliases(frame, snap.column_mapping)
         .filter(~F.coalesce(cond, F.lit(False)))
         .select(*frame.columns)
     )
     written = _write_files(kept, path, stats_cols=(*preds, *keys),
-                           carry=[plan.stats.get(f, {}) for f in hits])
+                           carry=[snap.file_stats.get(f, {}) for f in hits])
     entry = _publish_rewrite(
-        path, "delete",
-        f"DELETE({n_deleted} rows, {len(hits)} of {len(plan.live)} files "
+        snap, "delete",
+        f"DELETE({n_deleted} rows, {len(hits)} of {len(snap.live)} files "
         "rewritten)",
         written, hits, txn=tw,
     )
@@ -2618,16 +2533,16 @@ def delete_rows(
     return {
         **entry,
         "files_matched": len(hits),
-        "files_untouched": len(plan.live) - len(hits),
+        "files_untouched": len(snap.live) - len(hits),
         "rows_deleted": n_deleted,
     }
 
 
-def _dml_terms(path: str, version: int | None, op: str, predicates,
-               keys, where: str | None, set_exprs: dict | None = None):
+def _dml_terms(snap: Snapshot, op: str, predicates, keys,
+               where: str | None, set_exprs: dict | None = None):
     """A DML call's row terms, validated and on PHYSICAL names:
-    ``(cm, ranges, points)`` (empty key lists dropped). Structured names
-    translate through the column mapping at ``version``; a stale name —
+    ``(ranges, points)`` (empty key lists dropped). Structured names
+    translate through ``snap``'s column mapping; a stale name —
     a renamed column's old name or a dropped column's retired physical
     — in them, in ``where`` or in a SET body is refused
     (:func:`_cm_refuse_names`, :func:`_cm_refuse_expr`)."""
@@ -2635,7 +2550,7 @@ def _dml_terms(path: str, version: int | None, op: str, predicates,
     keys = {c: list(vs) for c, vs in (keys or {}).items() if vs}
     if not preds and where is None and not keys:
         raise ValueError(f"{op} needs predicates, keys, and/or where")
-    cm = _column_mapping_at(path, version)
+    cm = snap.column_mapping
     _cm_refuse_expr(cm, where, f"{op} where=")
     for k, v in (set_exprs or {}).items():
         _cm_refuse_expr(cm, v, f"{op} set_exprs[{k}]=")
@@ -2643,11 +2558,11 @@ def _dml_terms(path: str, version: int | None, op: str, predicates,
         cm, {**preds, **keys, **(set_exprs or {})},
         f"{op} preds/keys" + ("/SET targets" if set_exprs else ""),
     )
-    return cm, _cm_translate_keys(cm, preds), _cm_translate_keys(cm, keys)
+    return _cm_translate_keys(cm, preds), _cm_translate_keys(cm, keys)
 
 
-def _file_hits(spark, path: str, files: list[str], version: int | None,
-               cm: dict, cond) -> tuple[DataFrame, dict[str, int]]:
+def _file_hits(spark, snap: Snapshot, files: list[str],
+               cond) -> tuple[DataFrame, dict[str, int]]:
     """Count the rows matching ``cond`` in each planned file (one job,
     keyed by ``_metadata.file_name``) so a rewrite replaces ONLY files
     that hold a match. Returns ``(frame, {file: hits})``: the physical
@@ -2658,10 +2573,11 @@ def _file_hits(spark, path: str, files: list[str], version: int | None,
     logical names resolves."""
     from pyspark.sql import functions as F
 
-    base = _scan(spark, path, files, version)
+    base = _scan(spark, snap, files)
     fn = F.col("_metadata.file_name")
     counts = (
-        _with_logical_aliases(base.select(fn.alias("_fn"), "*"), cm)
+        _with_logical_aliases(base.select(fn.alias("_fn"), "*"),
+                              snap.column_mapping)
         .filter(cond).groupBy("_fn").count().collect()
     )
     by_name = {os.path.basename(f): f for f in files}
@@ -2707,18 +2623,17 @@ def delete_rows_dv(
     """
     from pyspark.sql import functions as F
 
-    version = latest_version(path)
-    cm, preds, keys = _dml_terms(path, version, "delete_rows_dv", predicates,
-                                 keys, where)
+    snap = _snapshot(path)
+    preds, keys = _dml_terms(snap, "delete_rows_dv", predicates, keys, where)
     tw = _txn_mark(txn_app_id, txn_version)
-    if watermark_covered(path, tw):
+    if watermark_covered(snap, tw):
         return None
-    plan = _plan_files(spark, path, version, cm, preds, keys)
-    if not plan.live:
+    files = _plan_files(spark, snap, preds, keys)
+    if not snap.live:
         raise FileNotFoundError(f"no versioned table at {path}")
-    if not plan.files:
+    if not files:
         return None
-    base = _scan(spark, path, plan.files, version)
+    base = _scan(spark, snap, files)
     # pull the metadata columns into the frame FIRST (projections drop
     # access to the hidden _metadata struct), then add the logical
     # aliases so a raw `where` in logical terms resolves
@@ -2728,7 +2643,7 @@ def delete_rows_dv(
             F.col("_metadata.row_index").alias("_ri"),
             "*",
         ),
-        cm,
+        snap.column_mapping,
     )
     hits = (
         aug.filter(_row_cond(preds, keys, where))
@@ -2742,12 +2657,12 @@ def delete_rows_dv(
             f"rows on {path}; use delete_rows (file rewrite) for large "
             "deletes — a vector this big taxes every subsequent read"
         )
-    by_base = {os.path.basename(f): f for f in plan.files}
+    by_base = {os.path.basename(f): f for f in files}
     # set-ify ONCE outside the loop: rebuilding per hit is
     # O(hits × vector) — ~10^10 ops at the max_dv_rows bound
-    planned = set(plan.files)
+    planned = set(files)
     existing_sets = {
-        f: set(ps) for f, ps in _dv_at(path, version).items() if f in planned
+        f: set(ps) for f, ps in snap.dv.items() if f in planned
     }
     new_dv: dict[str, list[int]] = {}
     n_new = 0
@@ -2763,7 +2678,7 @@ def delete_rows_dv(
         return None
     new_dv = {f: sorted(ps) for f, ps in new_dv.items()}
     entry = _publish_rewrite(
-        path, "delete_dv",
+        snap, "delete_dv",
         f"DELETE_DV({n_new} rows in {len(new_dv)} files, no rewrite)",
         None, new_dv, txn=tw, fields={"dv": new_dv},
     )
@@ -2772,7 +2687,7 @@ def delete_rows_dv(
     return {
         **entry,
         "files_matched": len(new_dv),
-        "files_untouched": len(plan.live) - len(new_dv),
+        "files_untouched": len(snap.live) - len(new_dv),
         "rows_deleted": n_new,
     }
 
@@ -2811,21 +2726,22 @@ def update_rows(
     # SET keys translate (the rewrite is physical); SET bodies and where
     # are raw SQL over the dual-name frame, refused when they reference
     # renamed/dropped names
-    version = latest_version(path)
-    cm, preds, keys = _dml_terms(path, version, "update_rows", predicates,
-                                 keys, where, set_exprs)
+    snap = _snapshot(path)
+    cm = snap.column_mapping
+    preds, keys = _dml_terms(snap, "update_rows", predicates, keys, where,
+                             set_exprs)
     set_exprs = _cm_translate_keys(cm, set_exprs)
     tw = _txn_mark(txn_app_id, txn_version)
-    if watermark_covered(path, tw):
+    if watermark_covered(snap, tw):
         return None
-    plan = _plan_files(spark, path, version, cm, preds, keys)
-    if not plan.live:
+    files = _plan_files(spark, snap, preds, keys)
+    if not snap.live:
         raise FileNotFoundError(f"no versioned table at {path}")
-    if not plan.files:
+    if not files:
         return None
-    _refuse_dv_files(path, plan.files, "UPDATE", version)
+    _refuse_dv_files(snap, files, "UPDATE")
     cond = _row_cond(preds, keys, where)
-    frame, hits = _file_hits(spark, path, plan.files, version, cm, cond)
+    frame, hits = _file_hits(spark, snap, files, cond)
     unknown = set(set_exprs) - set(frame.columns)
     if unknown:
         raise ValueError(f"update_rows SET names unknown column(s) {sorted(unknown)}")
@@ -2843,14 +2759,14 @@ def update_rows(
     # overlay of the (physical) rewrite
     _enforce_constraints(
         updated if _cm_is_identity(cm)
-        else _apply_column_mapping(spark, updated, path, version),
+        else _apply_column_mapping(spark, updated, snap),
         path,
     )
     written = _write_files(updated, path, stats_cols=(*preds, *keys),
-                           carry=[plan.stats.get(f, {}) for f in hits])
+                           carry=[snap.file_stats.get(f, {}) for f in hits])
     entry = _publish_rewrite(
-        path, "update",
-        f"UPDATE({n_updated} rows, {len(hits)} of {len(plan.live)} files "
+        snap, "update",
+        f"UPDATE({n_updated} rows, {len(hits)} of {len(snap.live)} files "
         "rewritten)",
         written, hits, txn=tw,
     )
@@ -2859,7 +2775,7 @@ def update_rows(
     return {
         **entry,
         "files_matched": len(hits),
-        "files_untouched": len(plan.live) - len(hits),
+        "files_untouched": len(snap.live) - len(hits),
         "rows_updated": n_updated,
     }
 
@@ -2887,9 +2803,8 @@ def compact_small_files(
     fragment count keeps reads O(data), not O(batches), while the
     subset rewrite keeps the compaction itself O(fragments).
     """
-    live, _ = _state_at(path)
     small = [
-        f for f in live
+        f for f in _snapshot(path).live
         if os.path.exists(os.path.join(path, f))
         and os.path.getsize(os.path.join(path, f)) < small_bytes
     ]
@@ -2943,8 +2858,9 @@ def merge_into(
     already covers this version) — what a streaming CDC apply needs to
     survive micro-batch replay.
     """
+    snap = _snapshot(path)
     tw = _txn_mark(txn_app_id, txn_version)
-    if watermark_covered(path, tw):  # skip before the source scan + rewrite
+    if watermark_covered(snap, tw):  # skip before the source scan + rewrite
         return None
 
     from pyspark.sql import functions as F
@@ -2956,19 +2872,18 @@ def merge_into(
         if delete_col else source,
         path,
     )
-    version = latest_version(path)
-    if version is None:
+    if snap.version is None:
         raise FileNotFoundError(f"no versioned table at {path}")
 
     # source arrives on LOGICAL names; the rewrite reads and writes
     # PHYSICAL files — convert once here, then the whole merge (key
     # range probe, file pruning, union, output stats) runs physically
-    _cm = _column_mapping_at(path, version)
-    if not _cm_is_identity(_cm):
-        source = _to_physical_names(source, _cm)
-        key = _cm_phys(_cm, key)
+    cm = snap.column_mapping
+    if not _cm_is_identity(cm):
+        source = _to_physical_names(source, cm)
+        key = _cm_phys(cm, key)
         if delete_col:
-            delete_col = _cm_phys(_cm, delete_col)
+            delete_col = _cm_phys(cm, delete_col)
 
     # one bounded job over the source: key range + uniqueness check
     agg_row = source.agg(
@@ -2985,15 +2900,14 @@ def merge_into(
             f"({agg_row['n']} rows, {agg_row['nd']} distinct {key!r}) — "
             "collapse with latest_change_per_key first"
         )
-    plan = _plan_files(spark, path, version, _cm,
-                       {key: (agg_row["lo"], agg_row["hi"])}, {})
-    if not plan.live:
+    matched = _plan_files(spark, snap,
+                          {key: (agg_row["lo"], agg_row["hi"])}, {})
+    if not snap.live:
         raise FileNotFoundError(f"no versioned table at {path}")
-    matched = plan.files
-    _refuse_dv_files(path, matched, "MERGE", version)
+    _refuse_dv_files(snap, matched, "MERGE")
 
     if matched:
-        base = _scan(spark, path, matched, version)
+        base = _scan(spark, snap, matched)
         # column set from the (possibly merged) base schema, NOT the
         # first file — on an evolved table a narrow first file would
         # silently drop the evolved columns from the rewrite
@@ -3037,12 +2951,12 @@ def merge_into(
     # analyze_stats arrives in LOGICAL names; the files carry physical
     written = _write_files(
         merged, path, stats_cols=(key,),
-        analyze_stats=_cm_phys_cols(_cm, analyze_stats),
-        carry=[plan.stats.get(f, {}) for f in matched],
+        analyze_stats=_cm_phys_cols(cm, analyze_stats),
+        carry=[snap.file_stats.get(f, {}) for f in matched],
     )
     entry = _publish_rewrite(
-        path, "merge",
-        f"MERGE({len(matched)} of {len(plan.live)} files rewritten)",
+        snap, "merge",
+        f"MERGE({len(matched)} of {len(snap.live)} files rewritten)",
         written, matched, txn=tw,
         fields={"merge_key": key},  # lets table_changes classify changes
     )
@@ -3051,5 +2965,5 @@ def merge_into(
     return {
         **entry,
         "files_matched": len(matched),
-        "files_untouched": len(plan.live) - len(matched),
+        "files_untouched": len(snap.live) - len(matched),
     }

@@ -64,21 +64,21 @@ from pyspark.sql import functions as F
 
 from .versioned import (
     CommitConflict,
+    Snapshot,
     _check_append_drift,
     _cm_phys,
     _cm_phys_cols,
-    _column_mapping_at,
     _derive_cm,
     _enforce_constraints,
     _entries,
     _publish,
-    _state_at,
-    _table_schema_at,
+    _snapshot,
     _to_physical_names,
     _write_files,
     latest_version,
     read_table,
     table_constraints,
+    watermark_covered,
 )
 
 _STAGING_DIR = "_staging"
@@ -155,22 +155,20 @@ def stage_commit(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     spark = df.sparkSession
 
+    snap = _snapshot(path)
     has_txn = txn_app_id is not None and txn_version is not None
-    if has_txn:
-        from .versioned import watermark_covered
-
-        if watermark_covered(
-            path, {"app_id": txn_app_id, "version": txn_version}
-        ):
-            return None  # replayed batch: already published, skip the write
+    if has_txn and watermark_covered(
+        snap, {"app_id": txn_app_id, "version": txn_version}
+    ):
+        return None  # replayed batch: already published, skip the write
 
     schema_changed = False
     table_schema = df.schema
-    if mode == "append" and latest_version(path) is not None:
+    if mode == "append" and snap.version is not None:
         # THE schema-enforcement rule, shared with commit() — staged
         # and live writes must refuse identically
         table_schema, schema_changed = _check_append_drift(
-            path, _table_schema_at(spark, path), df.schema,
+            path, snap.schema(spark), df.schema,
             allow_schema_evolution, what="staged append",
         )
 
@@ -178,10 +176,7 @@ def stage_commit(
 
     # column mapping, same derivation as commit(): appends translate to
     # physical names; an overwrite resets the mapping
-    prior_cm = (
-        _column_mapping_at(path) if latest_version(path) is not None
-        else {"map": {}, "retired": []}
-    )
+    prior_cm = snap.column_mapping
     cm, cm_changed = _derive_cm(
         prior_cm, mode, [f.name for f in df.schema.fields]
     )
@@ -208,7 +203,7 @@ def stage_commit(
         "cm_changed": cm_changed,
         "file_stats": written.file_stats,
         "constraints_fp": _constraints_fp(path),
-        "base_version": latest_version(path),
+        "base_version": snap.version,
         "created": time.time(),
     }
     if has_txn:
@@ -312,13 +307,11 @@ def publish_staged(
 
     batch_schema = StructType.fromJson(m["batch_schema"])
 
-    def build(version: int) -> dict | None:
+    def build(version: int, prev: Snapshot) -> dict | None:
         # the same inside-the-claim-loop re-check as commit(): a
         # concurrent duplicate (replayed micro-batch staged twice)
         # loses HERE, not by double-publishing
-        from .versioned import watermark_covered
-
-        if watermark_covered(path, m.get("txn_watermark")):
+        if watermark_covered(prev, m.get("txn_watermark")):
             return None
         if _constraints_fp(path) != m["constraints_fp"]:
             raise CommitConflict(
@@ -336,9 +329,9 @@ def publish_staged(
             # non-identity mapping that this entry must explicitly reset,
             # or reads of the new snapshot would alias through it
             cm, cm_changed = _derive_cm(
-                _column_mapping_at(path), "overwrite", []
+                prev.column_mapping, "overwrite", []
             )
-        elif _column_mapping_at(path) != m["prior_cm"]:
+        elif prev.column_mapping != m["prior_cm"]:
             raise CommitConflict(
                 f"column mapping on {path} moved after staging "
                 f"{staging_id} (concurrent RENAME/DROP): staged files "
@@ -347,18 +340,17 @@ def publish_staged(
         if m["mode"] == "append" and version > 0:
             # THE shared enforcement rule, against the fresh tip
             table_schema, schema_changed = _check_append_drift(
-                path, _table_schema_at(spark, path, version - 1),
+                path, prev.schema(spark),
                 batch_schema, m["allow_schema_evolution"],
                 what=f"staged append (staging {staging_id}, tip moved)",
             )
             table_schema_json = table_schema.jsonValue()
-        live, _ = _state_at(path, version - 1)
         entry = {
             "version": version,
             "timestamp": time.time(),
             "mode": m["mode"],
             "added": m["added"],
-            "removed": live if m["mode"] == "overwrite" else [],
+            "removed": prev.live if m["mode"] == "overwrite" else [],
             "operation": f"WRITE(staged {staging_id})",
             "staging_id": staging_id,
             "table_schema": table_schema_json,

@@ -2,9 +2,11 @@
 
 The engine's equivalent of the reference's sequential orchestrator
 (reference ``sakila-data-lake/orchestrator.py:61-190`` — four staged
-scripts with status tracking) minus its anti-patterns: no eager
-``count()`` before writes (counts come from the returned metrics in one
-action), no schema inference, no shell-out dependency checks.
+scripts with status tracking) minus its anti-patterns: no schema
+inference, no shell-out dependency checks. Counts are NOT free yet: per
+silver table the bronze read is cached, the corrupt rows are counted in
+a second pass over that cache, and the written silver is re-read for
+its row count; every gold table is re-read to count it too.
 
 Also carries the reference's runtime QA ideas forward as first-class
 checks (SURVEY.md §5.1): per-stage record counts and the bronze-vs-silver

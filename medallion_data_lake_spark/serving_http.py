@@ -87,18 +87,21 @@ def _json_safe(v):
     return str(v)
 
 
-_FIELD_TYPES = {"sql": str, "max_rows": int, "k": int, "vec_id": int,
+_FIELD_TYPES = {"sql": str, "table": str, "release_name": str,
+                "max_rows": int, "k": int, "vec_id": int,
                 "n_per_branch": int, "mix_token_budget": int,
                 "max_pii_hits": int, "mix_alpha": float,
+                "redact_pii": bool,
                 "terms": list, "phrase": list, "blocklist": list}
 _TYPE_NAMES = {str: "a string", int: "an integer", float: "a number",
-               list: "a list of strings"}
+               bool: "a boolean", list: "a list of strings"}
 
 
 def field(req: dict, name: str, default=None):
     """``req[name]``, or ``default`` when it is absent or null, checked
     against its type in ``_FIELD_TYPES`` (a number is an int or a
-    float, and never a bool; a list holds only strings). A wrong type is
+    float, and never a bool; a bool is only JSON true/false — the
+    string "false" is not; a list holds only strings). A wrong type is
     the client's fault: ``ValueError``, answered 400."""
     v = req.get(name)
     if v is None:
@@ -106,6 +109,8 @@ def field(req: dict, name: str, default=None):
     kind = _FIELD_TYPES[name]
     if kind is list:
         ok = isinstance(v, list) and all(isinstance(x, str) for x in v)
+    elif kind is bool:
+        ok = isinstance(v, bool)
     else:
         ok = (isinstance(v, (int, float) if kind is float else kind)
               and not isinstance(v, bool))
@@ -273,7 +278,9 @@ def run_curate_dry(serving: ServingLayer, req: dict) -> dict:
     mix_token_budget = field(req, "mix_token_budget") or None
     blocklist = tuple(field(req, "blocklist", []))
     max_pii_hits = field(req, "max_pii_hits")
-    table = req.get("table", "documents")
+    redact_pii = field(req, "redact_pii", False)
+    release_name = field(req, "release_name", "dry-run")
+    table = field(req, "table", "documents")
     if table not in serving.show_tables():
         raise ValueError(
             f"unknown table {table!r}; registered: {serving.show_tables()}"
@@ -286,7 +293,7 @@ def run_curate_dry(serving: ServingLayer, req: dict) -> dict:
         mix_alpha=mix_alpha,
         mix_token_budget=mix_token_budget,
         blocklist=blocklist,
-        redact_pii=bool(req.get("redact_pii", False)),
+        redact_pii=redact_pii,
         max_pii_hits=max_pii_hits,
     )
     t0 = time.perf_counter()
@@ -296,7 +303,7 @@ def run_curate_dry(serving: ServingLayer, req: dict) -> dict:
     )
     manifest = build_release_manifest(
         stages, cfg,
-        str(req.get("release_name", "dry-run")),
+        release_name,
         observations=observations,
     )
     return {

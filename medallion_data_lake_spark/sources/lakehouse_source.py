@@ -112,15 +112,14 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructField, StructType
 
 from ..operators.versioned import (
+    Snapshot,
+    _advance,
     _cm_phys,
-    _column_mapping_at,
     _commit_versions,
-    _dv_at,
     _entries,
-    _file_stats_at,
+    _overlaps,
+    _snapshot,
     _stat_probe,
-    _state_at,
-    _table_schema_json_logged,
     latest_version,
 )
 
@@ -207,13 +206,12 @@ def _read_lake_partition(p: LakeFilePartition) -> Iterator:
     yield from out.to_batches()
 
 
-def _declared_fields(path: str, version: int | None,
-                     columns: str | None = None):
-    """(schema_json, [(logical, physical), ...]) at ``version`` —
-    resolved from the LOG ONLY (checkpoint + tail walk; this source
-    never needs a SparkSession for metadata). Raises on tables whose
-    log predates schema recording: such tables re-record on their next
-    commit, and the JVM path (read_table) covers them meanwhile.
+def _declared_fields(snap: Snapshot, columns: str | None = None):
+    """(schema_json, [(logical, physical), ...]) of ``snap`` — from the
+    LOG ONLY (this source never needs a SparkSession for metadata).
+    Raises on tables whose log predates schema recording: such tables
+    re-record on their next commit, and the JVM path (read_table)
+    covers them meanwhile.
 
     ``columns`` (comma-separated logical names) is the source's MANUAL
     projection pushdown: the Python Data Source API does no automatic
@@ -221,7 +219,7 @@ def _declared_fields(path: str, version: int | None,
     column off disk — ruinous when a consumer wants ids out of a table
     whose widest column is an embedding array. The projection narrows
     both the declared schema and the per-file parquet read."""
-    schema_json = _table_schema_json_logged(path, version)
+    path, schema_json = snap.path, snap.table_schema
     if schema_json is None:
         raise ValueError(
             f"versioned table at {path} has no recorded table_schema in "
@@ -242,7 +240,7 @@ def _declared_fields(path: str, version: int | None,
             schema_json,
             fields=[f for f in schema_json["fields"] if f["name"] in want],
         )
-    cm = _column_mapping_at(path, version)
+    cm = snap.column_mapping
     fields = [
         (f["name"], _cm_phys(cm, f["name"]))
         for f in schema_json["fields"]
@@ -308,22 +306,16 @@ class MedallionLakeBatchReader(DataSourceReader):
     residual evaluation — identical results with or without pruning."""
 
     def __init__(self, path: str, options: dict, pinned: int | None = None):
+        # ``pinned`` is the DataSource's load-time latest, so the
+        # declared schema and the scanned snapshot stay on ONE version
+        # (Delta's snapshot-at-analysis rule) even though schema() and
+        # reader() are separate engine calls
         self._path = path
-        self._version = _resolve_version_opt(path, options)
-        if self._version is None:
-            # Pin 'latest' ONCE. partitions() resolves files, DVs, and
-            # stats as three separate lookups; left unpinned, a rewrite
-            # commit landing between them (e.g. OPTIMIZE purging DV'd
-            # rows) can pop a removed file's DV while the stale file
-            # list still includes it — transiently resurrecting deleted
-            # rows. ``pinned`` is the DataSource's load-time latest, so
-            # the declared schema and the scanned snapshot stay on ONE
-            # version (Delta's snapshot-at-analysis rule) even though
-            # schema() and reader() are separate engine calls; direct
-            # construction without it pins here instead.
-            self._version = pinned if pinned is not None else latest_version(path)
+        version = _resolve_version_opt(path, options)
+        snap = _snapshot(path, pinned if version is None else version)
+        self._version = snap.version
         self._schema_json, self._fields = _declared_fields(
-            path, self._version, _opt(options, "columns")
+            snap, _opt(options, "columns")
         )
         self._ranges: dict[str, list] = {}  # physical -> [lo, hi] probes
 
@@ -369,35 +361,17 @@ class MedallionLakeBatchReader(DataSourceReader):
             yield f
 
     def partitions(self) -> Sequence[InputPartition]:
-        files, _ = _state_at(self._path, self._version)
-        dvs = _dv_at(self._path, self._version)
-        stats = _file_stats_at(self._path, self._version)
-
-        def admits(rel: str) -> bool:
-            fstats = stats.get(rel, {})
-            for p, (lo, hi) in self._ranges.items():
-                rng = fstats.get(p)
-                if not rng or rng[0] is None:
-                    continue  # no stats: conservatively read
-                fmin, fmax = rng
-                try:
-                    if hi is not None and fmin > hi:
-                        return False
-                    if lo is not None and fmax < lo:
-                        return False
-                except TypeError:
-                    continue  # cross-type probe: conservatively read
-            return True
-
+        snap = _snapshot(self._path, self._version)
         return [
             LakeFilePartition(
                 file=os.path.join(self._path, rel),
                 fields=self._fields,
                 schema_json=self._schema_json,
-                drop_positions=dvs.get(rel),
+                drop_positions=snap.dv.get(rel),
             )
-            for rel in files
-            if admits(rel)
+            for rel in snap.live
+            if all(_overlaps(snap.file_stats.get(rel, {}).get(p), lo, hi)
+                   for p, (lo, hi) in self._ranges.items())
         ]
 
     def read(self, partition: LakeFilePartition) -> Iterator:
@@ -423,7 +397,7 @@ class MedallionLakeStreamReader(DataSourceStreamReader):
                 "give startingVersion OR startingTimestamp, not both"
             )
         self._schema_json, self._fields = _declared_fields(
-            path, None, _opt(options, "columns")
+            _snapshot(path), _opt(options, "columns")
         )
         self._last_end: int | None = None  # throttle anchor, in-process
 
@@ -534,7 +508,11 @@ class MedallionLakeStreamReader(DataSourceStreamReader):
             ))
         return parts
 
-    def _entry_partitions(self, e: dict) -> list:
+    def _entry_partitions(self, e: dict, before: Snapshot | None,
+                          after: Snapshot | None) -> list:
+        """``e``'s rows; ``before``/``after`` are the snapshots around it
+        (given whenever this stream reads vectors: CDF or
+        ignoreChanges)."""
         v, mode = e["version"], e.get("mode")
         if mode in _NO_DATA_MODES:
             return []
@@ -572,10 +550,10 @@ class MedallionLakeStreamReader(DataSourceStreamReader):
                 # version's DVs — a restore adopts its target's
                 # vectors). Multiset-equivalent to the minimal diff.
                 return (
-                    self._file_parts(e.get("removed", []), v,
-                                     _dv_at(self._path, v - 1), "delete")
-                    + self._file_parts(e.get("added", []), v,
-                                       _dv_at(self._path, v), "insert")
+                    self._file_parts(e.get("removed", []), v, before.dv,
+                                     "delete")
+                    + self._file_parts(e.get("added", []), v, after.dv,
+                                       "insert")
                 )
             if mode == "delete" and self._ignore_deletes:
                 # rows removed; survivors were already streamed when
@@ -584,9 +562,7 @@ class MedallionLakeStreamReader(DataSourceStreamReader):
             if self._ignore_changes:
                 # Delta's documented contract: rewrite commits re-emit
                 # their added files (duplicates possible downstream)
-                return self._file_parts(
-                    e.get("added", []), v, _dv_at(self._path, v), None
-                )
+                return self._file_parts(e.get("added", []), v, after.dv, None)
             raise ValueError(
                 f"commit {v} of {self._path} is a {mode} (file rewrite); "
                 "an append-only stream cannot represent it. Set "
@@ -622,15 +598,22 @@ class MedallionLakeStreamReader(DataSourceStreamReader):
                     "checkpoint (default snapshot mode, or "
                     f"startingVersion={oldest})."
                 )
+        # the snapshot at start, advanced entry by entry — resolved only
+        # when the initial snapshot or the deletion vectors are needed
+        v0 = start["version"]
+        snap = (
+            _snapshot(self._path, v0)
+            if not start.get("snap", True) or self._cdf or self._ignore_changes
+            else None
+        )
         if not start.get("snap", True):
-            v0 = start["version"]
-            files, _ = _state_at(self._path, v0)
-            dvs = _dv_at(self._path, v0)
             parts += self._file_parts(
-                files, v0, dvs, "insert" if self._cdf else None
+                snap.live, v0, snap.dv, "insert" if self._cdf else None
             )
         for e in _entries(self._path, lo=lo, hi=hi):
-            parts += self._entry_partitions(e)
+            after = _advance(snap, e) if snap is not None else None
+            parts += self._entry_partitions(e, snap, after)
+            snap = after
         self._last_end = hi
         return parts
 
@@ -683,7 +666,7 @@ class MedallionLakeDataSource(DataSource):
             )
         if p.startswith("file:"):
             # contexts that qualify paths hand the source a file: URI;
-            # the log resolvers speak plain filesystem paths. unquote
+            # the log store speaks plain filesystem paths. unquote
             # undoes the percent-encoding qualification applies (a
             # space becomes %20 on the way in)
             from urllib.parse import unquote, urlparse
@@ -697,7 +680,7 @@ class MedallionLakeDataSource(DataSource):
         if v is None:
             v = self._load_time_latest
         schema_json, _ = _declared_fields(
-            path, v, _opt(self.options, "columns"),
+            _snapshot(path, v), _opt(self.options, "columns"),
         )
         st = StructType.fromJson(schema_json)
         if _flag(self.options, "readChangeFeed"):
@@ -746,7 +729,7 @@ class MedallionLakeDataSource(DataSource):
 # SparkSession); the commit leg runs in the sink runner process, which
 # also has NO SparkSession — every check it performs (txn idempotence,
 # schema drift against the fresh tip, mapping drift) is pure-log, the
-# same resolvers the readers use. What therefore CANNOT run here:
+# same snapshot the readers use. What therefore CANNOT run here:
 # table constraints (SQL exprs need Spark) and bloom filters (Spark's
 # xxhash64). Constrained tables are refused by the write leg BEFORE any
 # file lands (a mid-stream ALTER ADD CONSTRAINT must not leak files) —
@@ -813,15 +796,12 @@ class _LakeArrowWriterCore:
             c.strip() for c in sc.split(",") if c.strip()
         ) if sc else ()
         self._allow_evolution = _flag(options, "allowSchemaEvolution")
-        exists = latest_version(path) is not None
+        snap = _snapshot(path)
         # the mapping generation the write-leg tasks rename under; the
         # commit leg learns it from the MESSAGES (see LakeWriteMessage)
         from ..operators.versioned import _derive_cm
 
-        self._prior_cm = (
-            _column_mapping_at(path) if exists
-            else {"map": {}, "retired": []}
-        )
+        self._prior_cm = snap.column_mapping
         # append semantics for the derivation even in overwrite mode:
         # the sink keeps the mapping (class docstring), so collisions
         # with live/retired physicals must still get fresh names
@@ -849,13 +829,10 @@ class _LakeArrowWriterCore:
                 "poison later pruning). Use run_append_stream for full "
                 "stats collection."
             )
-        if exists:
-            from ..operators.versioned import (
-                _check_append_drift,
-                _table_schema_json_logged,
-            )
+        if snap.version is not None:
+            from ..operators.versioned import _check_append_drift
 
-            logged = _table_schema_json_logged(path)
+            logged = snap.table_schema
             if logged is None:
                 # publishing the stream schema as authoritative over a
                 # pre-schema-recording log would silently NARROW the
@@ -963,16 +940,14 @@ class _LakeArrowWriterCore:
         from ..operators.versioned import (
             _check_append_drift,
             _publish,
-            _table_schema_json_logged,
-            latest_txn_version,
+            watermark_covered,
         )
 
         has_txn = batch_id is not None and self._app_id is not None
-        done = (
-            latest_txn_version(self._path, self._app_id)
-            if has_txn else None
-        )
-        if done is not None and done >= batch_id:
+        tw = ({"app_id": self._app_id, "version": int(batch_id)}
+              if has_txn else None)
+        snap = _snapshot(self._path)
+        if watermark_covered(snap, tw):
             # replay after a published commit: the retried tasks wrote
             # fresh files nothing references — drop them, keep the
             # original commit
@@ -995,12 +970,10 @@ class _LakeArrowWriterCore:
         table_schema = self._schema
         schema_changed = False
 
-        def build(version: int) -> dict | None:
+        def build(version: int, prev: Snapshot) -> dict | None:
             nonlocal table_schema, schema_changed
-            if has_txn:
-                done = latest_txn_version(self._path, self._app_id)
-                if done is not None and done >= batch_id:
-                    return None
+            if watermark_covered(prev, tw):
+                return None
             if version > 0:
                 # INSIDE the claim loop (re-runs on every lost race,
                 # like wap.publish_staged): the current mapping must be
@@ -1008,8 +981,7 @@ class _LakeArrowWriterCore:
                 # one this sink itself published (a collision-derived
                 # mapping lands with the first batch and stays current
                 # for the rest of the run)
-                current = _column_mapping_at(self._path)
-                if current not in (msg_prior, msg_cm):
+                if prev.column_mapping not in (msg_prior, msg_cm):
                     remedy = (
                         "restart the query" if self._kind == "stream sink"
                         else "retry the save"
@@ -1021,9 +993,7 @@ class _LakeArrowWriterCore:
                         f"physical layout — {remedy}."
                     )
             if self._mode == "append" and version > 0:
-                logged = _table_schema_json_logged(
-                    self._path, version - 1
-                )
+                logged = prev.table_schema
                 if logged is not None:
                     # THE shared drift rule, against the fresh tip
                     table_schema, schema_changed = _check_append_drift(
@@ -1031,9 +1001,7 @@ class _LakeArrowWriterCore:
                         self._schema, self._allow_evolution,
                         what=f"{self._kind} append",
                     )
-            removed = []
-            if self._mode == "overwrite" and version > 0:
-                removed, _ = _state_at(self._path, version - 1)
+            removed = prev.live if self._mode == "overwrite" else []
             entry = {
                 "version": version,
                 "timestamp": _time.time(),
@@ -1047,9 +1015,7 @@ class _LakeArrowWriterCore:
                 "table_schema": table_schema.jsonValue(),
             }
             if has_txn:
-                entry["txn"] = {
-                    "app_id": self._app_id, "version": int(batch_id)
-                }
+                entry["txn"] = tw
             if file_stats:
                 entry["file_stats"] = file_stats
             if schema_changed:
@@ -1062,7 +1028,7 @@ class _LakeArrowWriterCore:
             return entry
 
         try:
-            published = _publish(self._path, build)
+            published = _publish(self._path, build, planned=snap)
         except Exception:
             # SchemaDriftError / mapping drift / CommitConflict after
             # exhausted retries: the batch's files were never referenced

@@ -135,3 +135,47 @@ def bronze_root(tmp_path_factory):
             "\n".join(_env(table, "INSERT", "2024-01-01T00:00:00", r) for r in rows)
         )
     return str(root)
+
+
+class _CountingLogStore:
+    """The active LogStore with its ``list``/``read`` calls recorded
+    (every other method passes straight through)."""
+
+    def __init__(self, inner):
+        self._inner = inner
+        self.lists: list[str] = []
+        self.reads: list[str] = []
+
+    def list(self, dir_path):
+        self.lists.append(dir_path)
+        return self._inner.list(dir_path)
+
+    def read(self, file_path):
+        self.reads.append(file_path)
+        return self._inner.read(file_path)
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+    def reset(self) -> None:
+        self.lists.clear()
+        self.reads.clear()
+
+
+@pytest.fixture
+def log_access():
+    """Count the log touches of the code under test: installs a
+    :class:`_CountingLogStore` around the active store (``lists`` /
+    ``reads`` hold the paths, ``reset()`` clears them) and restores the
+    store afterwards."""
+    from medallion_data_lake_spark.operators.logstore import (
+        get_log_store,
+        set_log_store,
+    )
+
+    counting = _CountingLogStore(get_log_store())
+    prev = set_log_store(counting)
+    try:
+        yield counting
+    finally:
+        set_log_store(prev)

@@ -39,9 +39,9 @@ def _msg(op, ts, cid, email):
 
 
 def _live_files(path):
-    from medallion_data_lake_spark.operators.versioned import _state_at
+    from medallion_data_lake_spark.operators.versioned import _snapshot
 
-    return _state_at(path)[0]
+    return _snapshot(path).live
 
 
 def test_subset_compaction_leaves_big_files_alone(spark, tmp_path):

@@ -317,8 +317,7 @@ def test_rewrites_keep_skipping_metadata(spark, tmp_path):
     and bloom column the files they replace carried — a rewrite must
     not cost the table its file skipping."""
     from medallion_data_lake_spark.operators.versioned import (
-        _file_stats_at,
-        _state_at,
+        _snapshot,
         delete_rows,
         merge_into,
         optimize_table,
@@ -331,15 +330,15 @@ def test_rewrites_keep_skipping_metadata(spark, tmp_path):
                path, stats_cols=("vec_id", "g"), bloom_cols=("vec_id",))
 
     def rewritten_files_described(before):
-        live = _state_at(path)[0]
-        stats = _file_stats_at(path)
+        live = _snapshot(path).live
+        stats = _snapshot(path).file_stats
         new = set(live) - set(before)
         assert new
         for f in new:
             assert {"vec_id", "g", "vec_id__bloom"} <= set(stats[f]), stats[f]
         return live
 
-    live = _state_at(path)[0]
+    live = _snapshot(path).live
     # key range [5, 1000] overlaps every file: the merge rewrites them all
     merge_into(spark, path, spark.createDataFrame(
         [(5, 5, "m5"), (1000, 6, "new")], "vec_id long, g long, p string"),

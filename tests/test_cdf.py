@@ -163,7 +163,7 @@ def test_update_rows_file_granular_and_in_feed(spark, tmp_path):
     feed carries exactly the updated rows as pre/postimages."""
     from medallion_data_lake_spark.operators.versioned import (
         ConstraintViolation,
-        _state_at,
+        _snapshot,
         set_table_constraints,
         update_rows,
     )
@@ -177,7 +177,7 @@ def test_update_rows_file_granular_and_in_feed(spark, tmp_path):
                 "id", "CAST(id AS DOUBLE) AS amount", "'open' AS status"),
             path, stats_cols=("id",),
         )
-    before = set(_state_at(path)[0])
+    before = set(_snapshot(path).live)
 
     out = update_rows(
         spark, path,
@@ -186,7 +186,7 @@ def test_update_rows_file_granular_and_in_feed(spark, tmp_path):
     )
     assert out is not None and out["rows_updated"] == 5
     assert out["files_untouched"] > 0
-    after = set(_state_at(path)[0])
+    after = set(_snapshot(path).live)
     assert (before & after) and (before - after) == set(out["removed"])
 
     got = {r["id"]: (r["amount"], r["status"])

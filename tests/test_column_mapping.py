@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medallion_data_lake_spark.operators.versioned import (
-    _column_mapping_at,
+    _snapshot,
     commit,
     delete_rows,
     delete_rows_dv,
@@ -154,7 +154,7 @@ def test_drop_column_and_fresh_physical_on_readd(spark, tmp_path):
                               "id long, tag string, score double"),
         path, allow_schema_evolution=True,
     )
-    cm = _column_mapping_at(path)
+    cm = _snapshot(path).column_mapping
     assert cm["map"].get("score", "score") != "score"  # fresh physical
     got = {r["id"]: r["score"] for r in read_table(spark, path).collect()}
     assert got == {1: None, 2: None, 3: 99.0}
@@ -265,7 +265,7 @@ def test_rename_validation(spark, tmp_path):
         rename_column(spark, path, "score", "tag")
     # rename back to the original physical name: identity again
     rename_column(spark, path, "label", "tag")
-    assert _column_mapping_at(path) == {"map": {}, "retired": []}
+    assert _snapshot(path).column_mapping == {"map": {}, "retired": []}
     with pytest.raises(ValueError, match="only column"):
         p2 = str(tmp_path / "one")
         commit(spark.createDataFrame([(1,)], "id long"), p2)

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medallion_data_lake_spark.operators.versioned import (
-    _dv_at,
+    _snapshot,
     commit,
     delete_rows,
     delete_rows_dv,
@@ -64,7 +64,7 @@ def test_dv_redelete_is_noop_and_vectors_accumulate(spark, table):
     assert delete_rows_dv(spark, table, keys={"id": [7]}) is None
     delete_rows_dv(spark, table, keys={"id": [8, 9]})
     assert read_table(spark, table).count() == 197
-    dv = _dv_at(table)
+    dv = _snapshot(table).dv
     assert sum(len(ps) for ps in dv.values()) == 3
 
 
@@ -90,7 +90,7 @@ def test_rewrites_refuse_dv_files_until_materialized(spark, table):
 def test_optimize_materializes_vectors(spark, table):
     delete_rows_dv(spark, table, keys={"id": [7, 8, 150]})
     optimize_table(spark, table, target_file_bytes=1 << 30)
-    assert _dv_at(table) == {}                   # vectors died with the files
+    assert _snapshot(table).dv == {}  # vectors died with the files
     got = read_table(spark, table)
     assert got.count() == 197
     assert got.filter(F.col("id").isin(7, 8, 150)).count() == 0
@@ -178,7 +178,7 @@ def test_optimize_refuses_dv_landed_mid_rewrite(spark, table, monkeypatch):
     out = optimize_table(spark, table)
     assert out is not None
     assert read_table(spark, table).count() == 199
-    assert _dv_at(table) == {}  # vector folded into the rewrite
+    assert _snapshot(table).dv == {}  # vector folded into the rewrite
 
 
 def test_delete_rewrite_refuses_dv_landed_mid_rewrite(spark, table,
@@ -225,7 +225,7 @@ def test_dv_optimize_vacuum_time_travel_exact(spark, table):
     v3 = read_table(spark, table, version=3)              # materialized
     assert v3.count() == 198
     assert v3.filter(F.col("id").isin(7, 150)).count() == 0
-    assert _dv_at(table) == {}                            # vector died with the rewrite
+    assert _snapshot(table).dv == {}  # vector died with the rewrite
 
     vacuum(table, keep_last=1)                            # only v3 survives
     got = read_table(spark, table)

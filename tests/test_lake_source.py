@@ -510,7 +510,7 @@ def test_sink_roundtrip_exactly_once_with_stats(spark, tmp_path):
     watermark, and numeric per-file stats ride the log (usable by
     later merge/delete pruning on the destination)."""
     from medallion_data_lake_spark.operators.versioned import (
-        _file_stats_at,
+        _snapshot,
         history,
     )
 
@@ -528,7 +528,7 @@ def test_sink_roundtrip_exactly_once_with_stats(spark, tmp_path):
     assert got == [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)]
     ops = {h.get("operation") for h in history(dst)}
     assert ops == {"STREAM-SINK(t)"}
-    stats = _file_stats_at(dst)
+    stats = _snapshot(dst).file_stats
     assert stats and all("id" in s for s in stats.values())
 
 
@@ -688,12 +688,12 @@ def test_sink_overwrite_keeps_column_mapping(spark, tmp_path):
         MedallionLakeStreamWriter,
     )
     from medallion_data_lake_spark.operators.versioned import (
-        _column_mapping_at,
+        _snapshot,
     )
 
     dst = _mk(spark, tmp_path, "dst")
     rename_column(spark, dst, "score", "rating")
-    cm_before = _column_mapping_at(dst)
+    cm_before = _snapshot(dst).column_mapping
     st = spark.createDataFrame(
         [], "id long, tag string, rating double"
     ).schema
@@ -702,7 +702,7 @@ def test_sink_overwrite_keeps_column_mapping(spark, tmp_path):
         {"id": [7], "tag": ["g"], "rating": [70.0]}
     )]))
     w.commit([m], 0)
-    assert _column_mapping_at(dst) == cm_before  # mapping retained
+    assert _snapshot(dst).column_mapping == cm_before  # mapping retained
     got = read_table(spark, dst)
     assert got.columns == ["id", "tag", "rating"]
     assert [tuple(r) for r in got.collect()] == [(7, "g", 70.0)]

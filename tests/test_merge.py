@@ -7,8 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medallion_data_lake_spark.operators.versioned import (
-    _file_stats_at,
-    _state_at,
+    _snapshot,
     commit,
     history,
     merge_into,
@@ -51,15 +50,15 @@ def test_merge_rewrites_only_overlapping_files(spark, table):
     """The file-granular claim, asserted on physical paths: files whose
     recorded [min,max] id range misses the source batch keep their exact
     live paths; only the overlapping range is rewritten."""
-    live_before, _ = _state_at(table)
-    stats_before = _file_stats_at(table)
+    live_before = _snapshot(table).live
+    stats_before = _snapshot(table).file_stats
     # every base file carries its range
     assert all(f in stats_before for f in live_before)
 
     src = spark.createDataFrame([(12, "u"), (14, "u")], "id long, tag string")
     out = merge_into(spark, table, src, key="id")
 
-    live_after, _ = _state_at(table)
+    live_after = _snapshot(table).live
     touched = set(live_before) - set(live_after)
     kept = set(live_before) & set(live_after)
     # only the [10,19] file(s) were rewritten; [0,9] and [20,29] kept
@@ -72,7 +71,7 @@ def test_merge_rewrites_only_overlapping_files(spark, table):
     assert out["files_untouched"] == len(kept) and len(kept) >= 1
 
     # the rewrite's own output files carry fresh stats (stay prunable)
-    stats_after = _file_stats_at(table)
+    stats_after = _snapshot(table).file_stats
     new_files = set(live_after) - set(live_before)
     assert new_files and all(f in stats_after for f in new_files)
 
@@ -147,8 +146,8 @@ def test_optimize_zorder_clusters_and_records_stats(spark, tmp_path):
     assert "ZORDER(a,b)" in stats["operation"]
     assert stats["files_after"] > 3  # multi-file layout, else nothing to skip
 
-    ranges = _file_stats_at(path)
-    live, _ = _state_at(path)
+    ranges = _snapshot(path).file_stats
+    live = _snapshot(path).live
     assert set(ranges) == set(live)
     assert all(set(r) == {"a", "b"} for r in ranges.values())
 
@@ -180,21 +179,21 @@ def test_stats_survive_checkpoint_roundtrip(spark, tmp_path):
     # pre-checkpoint entries unnecessary for stats resolution
     for v in range(10):
         os.remove(os.path.join(path, "_log", f"{v:020d}.json"))
-    stats = _file_stats_at(path)
-    live, _ = _state_at(path)
+    stats = _snapshot(path).file_stats
+    live = _snapshot(path).live
     assert set(stats) == set(live) and len(live) >= 12
 
 
 def test_merge_insert_only_batch_rewrites_nothing(spark, table):
     """A source batch whose key range misses every file is a pure
     insert: zero files rewritten, all live paths preserved."""
-    live_before, _ = _state_at(table)
+    live_before = _snapshot(table).live
     src = spark.createDataFrame(
         [(500, "n1"), (501, "n2")], "id long, tag string"
     )
     out = merge_into(spark, table, src, key="id")
     assert out["files_matched"] == 0
-    live_after, _ = _state_at(table)
+    live_after = _snapshot(table).live
     assert set(live_before) <= set(live_after)  # nothing rewritten
     got = {r["id"]: r["tag"] for r in read_table(spark, table).collect()}
     assert len(got) == 32 and got[500] == "n1" and got[0] == "base0"
@@ -272,7 +271,7 @@ def test_delete_rows_is_file_granular_and_time_travels(spark, tmp_path):
     live by identity; history shows the rows until vacuum; no-match
     publishes nothing."""
     from medallion_data_lake_spark.operators.versioned import (
-        _state_at,
+        _snapshot,
         commit,
         delete_rows,
         history,
@@ -286,14 +285,14 @@ def test_delete_rows_is_file_granular_and_time_travels(spark, tmp_path):
                 "id", "CAST(id % 2 AS INT) AS parity"),
             path, stats_cols=("id",),
         )
-    before = set(_state_at(path)[0])
+    before = set(_snapshot(path).live)
 
     out = delete_rows(
         spark, path, predicates={"id": (110, 130)}, where="parity = 0"
     )
     assert out is not None and out["rows_deleted"] == 11  # evens in 110..130
     assert out["files_untouched"] > 0
-    after = set(_state_at(path)[0])
+    after = set(_snapshot(path).live)
     # untouched files are live by IDENTITY (not rewritten copies)
     assert (before & after) and (before - after) == set(out["removed"])
 
@@ -337,20 +336,20 @@ def test_delete_and_update_rewrite_only_files_holding_a_match(spark, tmp_path):
     for tag in ("a", "b"):
         commit(spark.range(0, 10).selectExpr("id", f"'{tag}' AS tag")
                .coalesce(1), path, stats_cols=("id",))
-    file_a, file_b = _state_at(path)[0]
+    file_a, file_b = _snapshot(path).live
 
     out = delete_rows(spark, path, predicates={"id": (0, 9)},
                       where="tag = 'a' AND id < 3")
     assert out["removed"] == [file_a] and out["rows_deleted"] == 3
     assert (out["files_matched"], out["files_untouched"]) == (1, 1)
-    live = _state_at(path)[0]
+    live = _snapshot(path).live
     assert file_b in live and file_a not in live
     (new_a,) = set(live) - {file_b}
 
     out = update_rows(spark, path, set_exprs={"tag": "'z'"},
                       predicates={"id": (0, 9)}, where="tag = 'b' AND id = 7")
     assert out["removed"] == [file_b] and out["rows_updated"] == 1
-    assert new_a in _state_at(path)[0]
+    assert new_a in _snapshot(path).live
     got = sorted(tuple(r) for r in read_table(spark, path).collect())
     assert got == sorted(
         [(i, "a") for i in range(3, 10)]
@@ -392,8 +391,8 @@ def test_update_and_delete_retry_past_append_race_and_abort_on_removal(
     assert read_table(spark, path).filter("tag = 'done'").count() == 5
 
     # concurrent removal of a rewritten file mid-flight: abort + cleanup
-    live, _ = V._state_at(path)
-    orig = V._state_at
+    live = V._snapshot(path).live
+    orig = V._snapshot
     calls = {"n": 0}
 
     def stale_then_fresh(p, version=None):
@@ -405,7 +404,7 @@ def test_update_and_delete_retry_past_append_race_and_abort_on_removal(
         return orig(p, version)
 
     n_dirs = len(_os.listdir(_os.path.join(path, "data")))
-    V._state_at = stale_then_fresh
+    V._snapshot = stale_then_fresh
     try:
         with open(_os.path.join(log, f"{3:020d}.json"), "x") as fh:
             _json.dump({"version": 3, "timestamp": 0.0, "mode": "append",
@@ -416,7 +415,7 @@ def test_update_and_delete_retry_past_append_race_and_abort_on_removal(
         with _pytest.raises(CommitConflict):
             delete_rows(spark, path, predicates={"id": (0, 50)})
     finally:
-        V._state_at = orig
+        V._snapshot = orig
     # stale rewrite cleaned up: no orphan commit dir
     assert len(_os.listdir(_os.path.join(path, "data"))) == n_dirs
 

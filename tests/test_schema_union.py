@@ -136,14 +136,14 @@ def test_full_optimize_resets_mixedness(spark, tmp_path):
     mergeSchema (flag reset via the entry's unified_schema marker),
     while a post-optimize evolved append re-raises it."""
     from medallion_data_lake_spark.operators.versioned import (
-        _mixed_schema_at,
+        _snapshot,
         optimize_table,
     )
 
     path = _vt(spark, tmp_path)
-    assert _mixed_schema_at(path)
+    assert _snapshot(path).mixed_schema
     optimize_table(spark, path, target_file_bytes=1 << 30)
-    assert not _mixed_schema_at(path), (
+    assert not _snapshot(path).mixed_schema, (
         "full compaction left the mergeSchema flag on"
     )
     got = read_table(spark, path)
@@ -155,7 +155,7 @@ def test_full_optimize_resets_mixedness(spark, tmp_path):
     commit(spark.createDataFrame([(3, "c", 1.0, 7)],
                                  "id long, tag string, score double, n long"),
            path, allow_schema_evolution=True)
-    assert _mixed_schema_at(path)
+    assert _snapshot(path).mixed_schema
 
 
 def test_expire_log_keeps_evolved_schema_via_checkpoint(spark, tmp_path):

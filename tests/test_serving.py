@@ -248,11 +248,39 @@ def test_curate_fields_are_type_checked():
     bad = [{"mix_alpha": "0.7"}, {"mix_alpha": [1]}, {"mix_alpha": True},
            {"mix_token_budget": [1]}, {"mix_token_budget": 2.5},
            {"max_pii_hits": "3"}, {"max_pii_hits": [1]},
-           {"blocklist": "spam"}, {"blocklist": ["spam", 1]}]
+           {"blocklist": "spam"}, {"blocklist": ["spam", 1]},
+           {"redact_pii": "false"}, {"redact_pii": 0},
+           {"table": 5}, {"table": ["documents"]}, {"release_name": 5}]
     for req in bad:
         name = next(iter(req))
         with pytest.raises(ValueError, match=f"{name}.*must be"):
             run_curate_dry(None, req)
+
+
+def test_curate_redact_pii_is_honoured(monkeypatch):
+    """/curate passes JSON true/false for ``redact_pii`` through as
+    given (absent = off) — ``bool("false")`` once turned it on."""
+    from types import SimpleNamespace
+
+    from medallion_data_lake_spark.operators import curation_pipeline
+    from medallion_data_lake_spark.serving_http import run_curate_dry
+
+    class Planned(Exception):
+        pass
+
+    seen = []
+
+    def capture(df, config, observations):
+        seen.append(config.redact_pii)
+        raise Planned
+
+    monkeypatch.setattr(curation_pipeline, "curate_corpus", capture)
+    serving = SimpleNamespace(show_tables=lambda: ["documents"],
+                              spark=SimpleNamespace(table=lambda t: t))
+    for req in ({"redact_pii": True}, {"redact_pii": False}, {}):
+        with pytest.raises(Planned):
+            run_curate_dry(serving, req)
+    assert seen == [True, False, False]
 
 
 def test_http_server_fault_is_500_and_server_survives(spark):

@@ -1,13 +1,14 @@
 """Unpinned-'latest' read races (ADVICE r8): every snapshot read must
 resolve files, DVs, stats, and column mapping at ONE pinned version.
 
-Left unpinned, the resolvers are independent 'latest' lookups, and a
-rewrite commit landing between them (e.g. OPTIMIZE purging DV'd rows)
-pops a removed file's deletion vector while the stale file list still
-includes the file — transiently RESURRECTING deleted rows. These tests
-land the rewrite inside the race window deterministically (driver-side
-monkeypatch for read_table/read_table_pruned; construct-then-rewrite
-for the data-source reader, whose partitions() runs later by design).
+Were they independent 'latest' lookups, a rewrite commit landing
+between them (e.g. OPTIMIZE purging DV'd rows) would pop a removed
+file's deletion vector while the stale file list still includes the
+file — transiently RESURRECTING deleted rows. These tests land the
+rewrite right after the read's first snapshot resolution
+deterministically (driver-side monkeypatch for
+read_table/read_table_pruned; construct-then-rewrite for the
+data-source reader, whose partitions() runs later by design).
 """
 
 from __future__ import annotations
@@ -30,20 +31,22 @@ from medallion_data_lake_spark.sources.lakehouse_source import (
 )
 
 
-def _ambush_dv_at(monkeypatch, spark, path):
-    """Patch _dv_at so the FIRST lookup for ``path`` lands an OPTIMIZE
-    (materializing the DVs and dropping the original files) before
-    delegating — the exact interleaving the version pin defends."""
-    orig = V._dv_at
+def _ambush_snapshot(monkeypatch, spark, path):
+    """Patch _snapshot so the FIRST resolution for ``path`` is followed
+    by an OPTIMIZE (materializing the DVs and dropping the original
+    files) — any later lookup of 'latest' by the same read would see
+    the new version: the exact interleaving the version pin defends."""
+    orig = V._snapshot
     state = {"armed": True}
 
     def ambushed(p, version=None):
+        snap = orig(p, version)
         if state["armed"] and p == path:
-            state["armed"] = False  # optimize itself resolves DVs
+            state["armed"] = False  # optimize itself resolves a snapshot
             optimize_table(spark, path, target_file_bytes=1 << 30)
-        return orig(p, version)
+        return snap
 
-    monkeypatch.setattr(V, "_dv_at", ambushed)
+    monkeypatch.setattr(V, "_snapshot", ambushed)
     return state
 
 
@@ -55,7 +58,7 @@ def test_read_table_pins_against_interleaved_optimize(
         [(i, f"v{i}") for i in range(100)], "id long, payload string"),
         path, stats_cols=("id",))
     delete_rows_dv(spark, path, keys={"id": [7, 42]})
-    _ambush_dv_at(monkeypatch, spark, path)
+    _ambush_snapshot(monkeypatch, spark, path)
 
     ids = {r.id for r in read_table(spark, path).collect()}
 
@@ -71,7 +74,7 @@ def test_read_table_pruned_pins_against_interleaved_optimize(
         [(i, f"v{i}") for i in range(100)], "id long, payload string"),
         path, stats_cols=("id",))
     delete_rows_dv(spark, path, keys={"id": [7, 42]})
-    _ambush_dv_at(monkeypatch, spark, path)
+    _ambush_snapshot(monkeypatch, spark, path)
 
     df, report = read_table_pruned(spark, path, col="id", lo=0, hi=99)
     ids = {r.id for r in df.collect()}
@@ -88,8 +91,8 @@ def test_batch_reader_pins_version_at_construction(spark, tmp_path):
         path, stats_cols=("id",))
     delete_rows_dv(spark, path, keys={"id": [7, 42]})
     pinned = latest_version(path)
-    pinned_files, _ = V._state_at(path, pinned)
-    pinned_dvs = V._dv_at(path, pinned)
+    pinned_files = V._snapshot(path, pinned).live
+    pinned_dvs = V._snapshot(path, pinned).dv
     assert pinned_dvs, "fixture must carry a DV"
 
     reader = MedallionLakeBatchReader(path, {})

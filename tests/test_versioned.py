@@ -213,13 +213,13 @@ def test_optimize_retries_past_append_race_and_aborts_on_delete(spark, tmp_path)
     assert read_table(spark, path).count() == 30
 
     # now race a DELETE of a live (compacted-set) file: must abort
-    live, _ = V._state_at(path)
+    live = V._snapshot(path).live
     with open(os.path.join(log, f"{5:020d}.json"), "x") as fh:
         json.dump({"version": 5, "timestamp": 0.0, "mode": "append",
                    "added": [], "removed": [live[0]], "operation": "DELETER"}, fh)
     n_data_dirs = len(os.listdir(os.path.join(path, "data")))
 
-    orig = V._state_at
+    orig = V._snapshot
     calls = {"n": 0}
 
     def stale_then_fresh(p, version=None):
@@ -230,12 +230,12 @@ def test_optimize_retries_past_append_race_and_aborts_on_delete(spark, tmp_path)
             return orig(p, 4)
         return orig(p, version)
 
-    V._state_at = stale_then_fresh
+    V._snapshot = stale_then_fresh
     try:
         with pytest.raises(CommitConflict):
             optimize_table(spark, path, target_file_bytes=1 << 30)
     finally:
-        V._state_at = orig
+        V._snapshot = orig
     # the stale rewrite's data directory was removed, nothing orphaned
     assert len(os.listdir(os.path.join(path, "data"))) == n_data_dirs
 

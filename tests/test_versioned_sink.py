@@ -11,7 +11,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from medallion_data_lake_spark.operators.versioned import (
-    _state_at,
+    _snapshot,
     history,
     read_table,
 )
@@ -56,7 +56,7 @@ def test_append_stream_exactly_once_and_time_travel(spark, tmp_path):
     # auto-compaction ran inside the loop and bounded the fragments
     ops = [h["operation"] for h in history(table)]
     assert any(o.startswith("OPTIMIZE(") for o in ops)
-    assert len(_state_at(table)[0]) < 5  # fewer live files than batches
+    assert len(_snapshot(table).live) < 5  # fewer live files than batches
 
     # checkpoint loss: same files redeliver with the same batch ids —
     # the commit-log txn watermark makes the replay a no-op

@@ -272,7 +272,7 @@ def test_overwrite_publish_resets_mapping_after_concurrent_rename(
     explicitly resets the mapping, reads speak the BATCH's names, and
     a later re-append of the batch column stays identity-mapped."""
     from medallion_data_lake_spark.operators.versioned import (
-        _column_mapping_at,
+        _snapshot,
     )
 
     path = _mk(spark, tmp_path)
@@ -283,11 +283,11 @@ def test_overwrite_publish_resets_mapping_after_concurrent_rename(
     now = read_table(spark, path)
     assert set(now.columns) == {"id", "tag", "score"}
     assert {(r["id"], r["score"]) for r in now.collect()} == {(7, 70.0)}
-    cm = _column_mapping_at(path)
+    cm = _snapshot(path).column_mapping
     assert cm == {"map": {}, "retired": []}  # identity again
     # appending 'score' keeps identity (no fresh col-uuid physical)
     commit(_batch(spark, [(8, "h", 80.0)]), path)
-    assert _column_mapping_at(path) == {"map": {}, "retired": []}
+    assert _snapshot(path).column_mapping == {"map": {}, "retired": []}
 
 
 def test_expire_staged_sweeps_manifestless_crash_dirs(spark, tmp_path):
