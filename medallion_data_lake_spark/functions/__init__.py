@@ -3,8 +3,15 @@
 Everything here is built from ``pyspark.sql.functions`` — JVM-side,
 whole-stage-codegen friendly. No Python UDFs: the reference pipeline
 itself uses zero UDFs (SURVEY.md §2.10) and the hot path of our engine
-keeps that property; the only pandas UDFs in the repo live in
-operators/multimodal.py where Python is genuinely unavoidable.
+keeps that property. Python code runs on rows only where it is the
+operator: the pandas UDFs of operators/text.py and operators/embeddings.py,
+the mapInPandas kernels of operators/multimodal.py, applyInPandasWithState
+in streaming/stateful.py, and the ``medallion_lake`` Python data source
+(sources/lakehouse_source.py). The rule: Python workers start only where
+Python code runs. Driver-held rows (manifests, deletion-vector positions,
+centroids, tombstone ids, empty frames) enter Spark through
+``session.local_frame`` as JVM-local frames, never as a Python RDD
+(tests/test_local_frame.py guards it).
 """
 
 from __future__ import annotations

@@ -62,6 +62,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import dot, l2_norm
+from ..session import local_frame
 
 DEFAULT_TARGET_BUCKET = 256    # aim: ~256 vectors/cell before splitting
 DEFAULT_MAX_BUCKET = 1024      # hard per-bucket bound after splitting
@@ -1144,8 +1145,8 @@ def append_to_ivf_index(
         spark = new_data.sparkSession
         from pyspark.sql import Window
 
-        cent = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(meta["centroids"])],
+        cent = local_frame(
+            spark, list(enumerate(meta["centroids"])),
             "cid long, centroid array<double>",
         )
         d2 = (
@@ -1419,7 +1420,7 @@ def delete_from_index(spark, index_path: str, ids, id_col: str = "vec_id") -> No
 
             # the contract above ("coerce HERE, where the dtype is
             # known") applies to decimals too: a raw CLI string would
-            # fail createDataFrame's type verification. Floats round-trip
+            # fail the frame's type conversion. Floats round-trip
             # through str so Decimal(0.1) artifacts never enter the probe.
             conv = lambda v: (  # noqa: E731
                 v if isinstance(v, _decimal.Decimal)
@@ -1427,8 +1428,8 @@ def delete_from_index(spark, index_path: str, ids, id_col: str = "vec_id") -> No
             )
         else:
             conv = int
-        doomed = spark.createDataFrame(
-            [(conv(i),) for i in ids], f"vec_id {id_type}"
+        doomed = local_frame(
+            spark, [(conv(i),) for i in ids], f"vec_id {id_type}"
         ).distinct()
     (
         doomed.withColumn("_tb_batch", F.lit(f"adhoc-{_uuid.uuid4().hex[:12]}"))
@@ -1748,8 +1749,8 @@ def search_index(
         q_cols.append(_adc_tables(vec, pq["centroids"]).alias("_tbl"))
     q = queries.select(*q_cols)
     if meta.get("kind") == "kmeans":
-        cent = spark.createDataFrame(
-            list(enumerate(meta["centroids"])),
+        cent = local_frame(
+            spark, list(enumerate(meta["centroids"])),
             "cid long, centroid array<double>",
         )
         # nearest-centroid ranking: ||q-c||² = ||q||² + ||c||² − 2⟨q,c⟩

@@ -64,6 +64,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.text import tokens  # THE tokenizer — shared with the oracle-checked text queries
+from ..session import local_frame
 from .versioned import latest_version, read_table, read_table_pruned
 
 BM25_K1 = 1.2
@@ -955,7 +956,7 @@ def phrase_search_pointread(
             "scan form for low-selectivity phrases"
         )
     if not ids:
-        empty = spark.createDataFrame([], "doc_id long, n_matches long")
+        empty = local_frame(spark, [], "doc_id long, n_matches long")
         return empty, report
     docs, doc_report = read_table_pruned(
         spark, docs_table, isin={id_col: ids}

@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024  # the classic HDFS-block target
 SMALL_FILE_RATIO = 0.5  # a file under half the target counts as "small"
 
@@ -79,7 +81,7 @@ def partition_manifest(spark: SparkSession, path: str) -> DataFrame:
     """
     files = list_data_files(spark, path)
     rows = [(f.partition, f.path, f.bytes) for f in files]
-    df = spark.createDataFrame(rows, "partition string, file string, bytes long")
+    df = local_frame(spark, rows, "partition string, file string, bytes long")
     small = int(DEFAULT_TARGET_FILE_BYTES * SMALL_FILE_RATIO)
     return df.groupBy("partition").agg(
         F.count("*").alias("n_files"),

@@ -4,7 +4,8 @@ Design (SURVEY.md §7.2 M4): image/audio/video content is an opaque
 ``BinaryType`` column with a typed metadata struct (schemas.MEDIA). The
 JVM never interprets the bytes; decode / feature-extraction / resize /
 frame-sampling run as Arrow-batched pandas functions over
-``mapInPandas`` — the one place Python is genuinely unavoidable.
+``mapInPandas`` — Python is genuinely unavoidable here, as in the other
+Python-running operators listed in ``functions/__init__.py``.
 
 The heavy codecs (PIL/cv2/librosa) are NOT in this container, so the
 decode kernels are gated behind import-tries with a deterministic fake

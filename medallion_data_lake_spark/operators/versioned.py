@@ -80,6 +80,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from .logstore import get_log_store
 
 CHECKPOINT_INTERVAL = 10  # write a log checkpoint every N commits
@@ -268,9 +269,12 @@ def _advance(snap: Snapshot, e: dict) -> Snapshot:
     return _snapshot(snap.path, v)
 
 
-def _resolve(path: str, names: list[str], version: int | None) -> Snapshot:
+def _resolve(path: str, names: list[str], version: int | None,
+             read: dict[int, dict] | None = None) -> Snapshot:
     """:func:`_snapshot` over an existing listing ``names`` of ``_log``
-    (the claim loop resolves the tip it just listed)."""
+    (the claim loop resolves the tip it just listed); ``read`` holds
+    entries the caller already read, by version (never re-read)."""
+    read = read or {}
     commits = _versions(names, _ENTRY_RE)
     ckpts = _versions(names, _CKPT_RE)
     snap = Snapshot(path, None, min(commits + ckpts, default=None), [], {},
@@ -286,8 +290,8 @@ def _resolve(path: str, names: list[str], version: int | None) -> Snapshot:
                                  **{k: ck[k] for k in _CKPT_FIELDS})
             base = cv
             break
-    return _fold(snap, [_read_entry(path, v) for v in commits
-                        if base < v <= at])
+    return _fold(snap, [read[v] if v in read else _read_entry(path, v)
+                        for v in commits if base < v <= at])
 
 
 def _snapshot(path: str, version: int | None = None) -> Snapshot:
@@ -316,7 +320,7 @@ def _apply_dvs(spark, df, files: list[str], dvs: dict[str, list[int]]):
     pairs = [
         (os.path.basename(f), int(p)) for f, ps in relevant.items() for p in ps
     ]
-    dv_df = spark.createDataFrame(pairs, "_dv_fn string, _dv_ri long")
+    dv_df = local_frame(spark, pairs, "_dv_fn string, _dv_ri long")
     out = (
         df.withColumn("_dv_fn", F.col("_metadata.file_name"))
         .withColumn("_dv_ri", F.col("_metadata.row_index"))
@@ -326,10 +330,13 @@ def _apply_dvs(spark, df, files: list[str], dvs: dict[str, list[int]]):
     return out
 
 
-def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
+def _write_checkpoint(path: str, version: int, upgrade: bool = False,
+                      snap: Snapshot | None = None) -> None:
     """Materialize the snapshot at ``version`` — its :data:`_CKPT_FIELDS`
     — as ``{version:020d}.checkpoint.json``. Best-effort: a racing
     checkpointer (or a crash here) costs nothing but replay length.
+    ``snap`` is that snapshot when the caller already holds it (the
+    claim loop folds the entry it just published), else it is resolved.
 
     ``upgrade=True`` (expire_log's path) additionally REPLACES a
     pre-existing checkpoint that lacks any current field: exclusive-
@@ -345,7 +352,8 @@ def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
     from entries."""
     # resolve BEFORE the exclusive-create: it lands an initially empty
     # checkpoint file that a resolution would pick up and fail to parse
-    snap = _snapshot(path, version)
+    if snap is None:
+        snap = _snapshot(path, version)
     target = os.path.join(_log_dir(path), f"{version:020d}.checkpoint.json")
     store = get_log_store()
     payload = json.dumps(
@@ -433,7 +441,7 @@ def _publish(
         except FileExistsError:
             continue  # lost the race; recompute against the new log tip
         if (version + 1) % CHECKPOINT_INTERVAL == 0:
-            _write_checkpoint(path, version)
+            _write_checkpoint(path, version, snap=_fold(prev, [entry]))
         return entry
     raise CommitConflict(f"lost {max_retries} version races on {path}")
 
@@ -708,7 +716,7 @@ def analyze_table(
     # live-set filter as a broadcast join, not an isin literal list — a
     # large table's snapshot can hold 10^5-10^6 files and a million-term
     # IN list does not belong in a plan
-    live_df = spark.createDataFrame([(f,) for f in live], "file string")
+    live_df = local_frame(spark, [(f,) for f in live], "file string")
     alive = partials.join(F.broadcast(live_df), "file")
     covered = {r["file"] for r in alive.select("file").distinct().collect()}
     report["files_covered"] = len(covered)
@@ -720,8 +728,8 @@ def analyze_table(
     # post-rename ANALYZE reads like the table the user queries
     cm = snap.column_mapping
     if not _cm_is_identity(cm) and "column" in out.columns:
-        rev = spark.createDataFrame(
-            [(p, l) for l, p in cm.get("map", {}).items()],
+        rev = local_frame(
+            spark, [(p, l) for l, p in cm.get("map", {}).items()],
             "column string, _logical string",
         )
         out = (
@@ -1251,12 +1259,22 @@ def version_at_timestamp(path: str, cutoff: float) -> int:
     epoch seconds) — shared by ``read_table(as_of_timestamp=...)`` and
     the ``medallion_lake`` data source's ``timestampAsOf`` option so
     the two surfaces can never resolve the same instant differently."""
-    eligible = [
-        e["version"] for e in _entries(path) if e["timestamp"] <= cutoff
-    ]
+    return _at_timestamp(path, cutoff)[0]
+
+
+def _at_timestamp(
+    path: str, cutoff: float
+) -> tuple[int, list[str], dict[int, dict]]:
+    """:func:`version_at_timestamp`'s version plus the ONE ``_log``
+    listing and the entries (by version) it read to find it — what
+    ``read_table`` hands :func:`_resolve` so timestamp travel lists
+    once and reads no entry twice."""
+    names = get_log_store().list(_log_dir(path))
+    read = {v: _read_entry(path, v) for v in _versions(names, _ENTRY_RE)}
+    eligible = [v for v, e in read.items() if e["timestamp"] <= cutoff]
     if not eligible:
         raise ValueError(f"no commit at or before ts={cutoff} on {path}")
-    return max(eligible)
+    return max(eligible), names, read
 
 
 def read_table(
@@ -1268,10 +1286,12 @@ def read_table(
     """Snapshot read: latest, a pinned ``version``, or the newest commit
     at/before ``as_of_timestamp`` (time travel). Latest/pinned reads
     resolve one snapshot (newest log checkpoint + tail); only timestamp
-    travel scans entry timestamps."""
+    travel reads every entry, and resolves from those same reads."""
     if as_of_timestamp is not None:
-        version = version_at_timestamp(path, as_of_timestamp)
-    snap = _snapshot(path, version)
+        version, names, read = _at_timestamp(path, as_of_timestamp)
+        snap = _resolve(path, names, version, read)
+    else:
+        snap = _snapshot(path, version)
     if snap.oldest is None:
         raise FileNotFoundError(f"no versioned table at {path}")
     if version is not None and version < snap.oldest:
@@ -1281,7 +1301,7 @@ def read_table(
         )
     if not snap.live:
         # a valid-but-empty snapshot (e.g. overwrite with 0 rows)
-        return spark.createDataFrame([], snap.schema(spark))
+        return local_frame(spark, [], snap.schema(spark))
     df = _scan(spark, snap, snap.live, snap.dv)
     # physical -> logical names (identity mapping returns df untouched)
     return _apply_column_mapping(spark, df, snap)
@@ -1369,7 +1389,7 @@ def read_table_pruned(
         "files_skipped": len(snap.live) - len(chosen),
     }
     if not chosen:
-        return spark.createDataFrame([], snap.schema(spark)), report
+        return local_frame(spark, [], snap.schema(spark)), report
     df = _scan(spark, snap, chosen, snap.dv)
     # project to logical names BEFORE the residual filter, which is
     # expressed (like the predicates) in logical terms
@@ -2078,11 +2098,19 @@ def optimize_table(
     Returns the commit entry plus before/after file counts. Sizing uses
     on-disk bytes-per-row like ``maintenance.compact_table``.
     """
-    from pyspark.sql import functions as F
-
     # files, vectors, mixedness and stats of ONE version (a commit
     # landing mid-plan is the publish check's job)
-    snap = _snapshot(path)
+    return _optimize(spark, _snapshot(path), target_file_bytes, zorder_by,
+                     stats_cols, analyze_stats, files, transform)
+
+
+def _optimize(spark, snap, target_file_bytes, zorder_by, stats_cols,
+              analyze_stats, files, transform) -> dict:
+    """:func:`optimize_table`'s body over a snapshot the caller already
+    resolved (:func:`compact_small_files` picks its subset from it)."""
+    from pyspark.sql import functions as F
+
+    path = snap.path
     # zorder/stats columns arrive logical; the rewrite is physical
     cm = snap.column_mapping
     zorder_by = _cm_phys_cols(cm, zorder_by)
@@ -2290,7 +2318,7 @@ def table_changes(
             for f in existing
             for p in dv[f]
         ]
-        pos = spark.createDataFrame(pairs, "_dv_fn string, _dv_ri long")
+        pos = local_frame(spark, pairs, "_dv_fn string, _dv_ri long")
         picked = (
             df.withColumn("_dv_fn", F.col("_metadata.file_name"))
             .withColumn("_dv_ri", F.col("_metadata.row_index"))
@@ -2368,7 +2396,7 @@ def table_changes(
                 parts.append(tag(added, "insert", v))
 
     if not parts:
-        empty = spark.createDataFrame([], prev.schema(spark))
+        empty = local_frame(spark, [], prev.schema(spark))
         return tag(empty, "insert", from_version).limit(0)
     out = parts[0]
     for p in parts[1:]:
@@ -2803,20 +2831,17 @@ def compact_small_files(
     fragment count keeps reads O(data), not O(batches), while the
     subset rewrite keeps the compaction itself O(fragments).
     """
+    snap = _snapshot(path)
     small = [
-        f for f in _snapshot(path).live
+        f for f in snap.live
         if os.path.exists(os.path.join(path, f))
         and os.path.getsize(os.path.join(path, f)) < small_bytes
     ]
     if len(small) < min_files:
         return None
-    return optimize_table(
-        spark, path,
-        target_file_bytes=target_file_bytes,
-        stats_cols=stats_cols,
-        analyze_stats=analyze_stats,
-        files=small,
-    )
+    return _optimize(spark, snap, target_file_bytes, zorder_by=(),
+                     stats_cols=stats_cols, analyze_stats=analyze_stats,
+                     files=small, transform=None)
 
 
 def merge_into(

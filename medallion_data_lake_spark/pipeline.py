@@ -26,6 +26,7 @@ from .catalog import Catalog
 from .operators import gold
 from .operators.cleaning import SAKILA_RULES, conform
 from .queries._parity import dsum
+from .session import local_frame
 from .sources.batch import read_bronze_json, split_corrupt
 from .sources.sinks import read_layer, write_partitioned, write_table
 
@@ -149,7 +150,7 @@ def reconcile(spark: SparkSession, bronze_root: str, silver_root: str, table: st
         # computed now, not when the caller collects, so that the split's
         # cache can be released before returning
         b = agg(bronze, "bronze", b_amount)
-        b = spark.createDataFrame(b.collect(), b.schema)
+        b = local_frame(spark, b.collect(), b.schema)
     finally:
         raw.unpersist()
     return b.unionByName(agg(silver, "silver", s_amount))

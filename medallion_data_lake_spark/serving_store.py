@@ -84,6 +84,7 @@ from .operators.inverted_index import (
 )
 from .operators.versioned import read_table
 from .serving_http import field
+from .session import local_frame
 from .sources.sinks import write_jdbc
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -866,7 +867,7 @@ def export_search_store(
     write_jdbc(termstats, url, T_TERMSTATS, driver=driver,
                createTableColumnTypes=f"term {vc}")
     write_jdbc(corpus_row, url, T_CORPUS, driver=driver)
-    manifest = spark.createDataFrame([(json.dumps(pins),)], "pins string")
+    manifest = local_frame(spark, [(json.dumps(pins),)], "pins string")
     write_jdbc(manifest, url, T_MANIFEST, driver=driver,
                createTableColumnTypes="pins VARCHAR(4096)")
     stat_tables = [T_POSTINGS, T_TERMSTATS]
@@ -946,8 +947,16 @@ def export_vector_store(
     if (embeddings is None) == (vec_index is None):
         raise ValueError("pass exactly one of embeddings= or vec_index=")
     if vec_index is not None:
+        from .operators.ann import _mask_tombstones, read_tombstones
+
+        # ONE tombstone-masked read of the index feeds both the graph and
+        # the query-id ledger: each spark.read.parquet of the bucket
+        # layout runs its own partition-discovery job
+        live = _mask_tombstones(
+            spark.read.parquet(vec_index), read_tombstones(spark, vec_index)
+        )
         graph = knn_graph_ivf(spark, vec_index, k_max=k_max,
-                              n_probes=n_probes)
+                              n_probes=n_probes, live_df=live)
         meta = {"mode": "ivf", "k_max": int(k_max),
                 "n_probes": int(n_probes), "vec_index": vec_index}
     else:
@@ -960,16 +969,11 @@ def export_vector_store(
     # neighbors table alone cannot distinguish "exported empty" from
     # "never exported" — the incremental update needs the exact set
     if vec_index is not None:
-        from .operators.ann import _mask_tombstones, read_tombstones
-
-        qids = _mask_tombstones(
-            spark.read.parquet(vec_index),
-            read_tombstones(spark, vec_index),
-        ).select("vec_id")
+        qids = live.select("vec_id")
     else:
         qids = embeddings.select(F.col(id_col).alias("vec_id"))
     write_jdbc(qids.distinct(), url, T_VEC_IDS, driver=driver)
-    mf = spark.createDataFrame([(json.dumps(meta),)], "meta string")
+    mf = local_frame(spark, [(json.dumps(meta),)], "meta string")
     write_jdbc(mf, url, T_VEC_MANIFEST, driver=driver,
                createTableColumnTypes="meta VARCHAR(1024)")
     with ServingStore(spark, url, driver=driver) as store:
@@ -1371,10 +1375,9 @@ def export_search_store_incremental(
         write_jdbc(bpos, url, T_BIGRAM_POS, mode="append", driver=driver)
 
     # -- totals + manifest replaced; stats refreshed
-    corpus_row = spark.createDataFrame(
-        [(n_new, avgdl_new)], "n_docs long, avgdl double")
-    manifest = spark.createDataFrame(
-        [(json.dumps(new_pins),)], "pins string")
+    corpus_row = local_frame(
+        spark, [(n_new, avgdl_new)], "n_docs long, avgdl double")
+    manifest = local_frame(spark, [(json.dumps(new_pins),)], "pins string")
     with ServingStore(spark, url, driver=driver) as store:
         store.execute(f"DELETE FROM {T_CORPUS}")
         store.execute(f"DELETE FROM {T_MANIFEST}")

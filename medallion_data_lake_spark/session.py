@@ -6,7 +6,9 @@ philosophy — declare plans, let Catalyst/AQE choose physical strategies —
 but pin the configs that matter at 100 TB:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy);
-- Arrow for any pandas interchange (the only Python-side hops we allow);
+- Arrow for any pandas interchange (the only Python-side hops we allow),
+  and driver-held rows enter Spark as JVM-local frames (:func:`local_frame`)
+  so no Python worker starts where no Python code runs;
 - UTC session timezone so timestamp semantics are reproducible across
   engines (the DuckDB oracle is naive-UTC as well);
 - shuffle partitions sized for the local harness; at cluster scale AQE
@@ -20,7 +22,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Tuned for the local test harness (32 cores / 128 GiB). On a real cluster
 # these come from spark-submit / cluster defaults instead; see SCALE.md.
@@ -111,3 +114,34 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """Driver-held ``rows`` (tuples or Rows in schema order, possibly
+    none) as a DataFrame of exactly ``schema`` (a StructType or a DDL
+    string; nullability kept as declared).
+
+    ``createDataFrame(<python list>)`` plans a Python RDD: its first
+    action forks ``pyspark.daemon`` plus a worker per task slot (on a
+    cluster: on every executor), and they stay up for the session
+    although no Python code ever runs on the rows. Handing Spark a
+    ``pyarrow.Table`` instead makes the JVM read it into a
+    ``LocalRelation`` (``LocalTableScan``), whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says — the frame is
+    JVM-local and starts no Python process. Every driver-held frame in
+    the package goes through here (tests/test_local_frame.py guards it)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -1069,3 +1069,55 @@ def test_http_store_routes_share_one_py4j_connection(spark, monkeypatch,
         assert [r[0] for r in out["rows"]] == list(range(8, 8 - k, -1))
     assert len(opened) <= 1, len(opened)
     assert any("POST /search" in r.getMessage() for r in caplog.records)
+
+
+def test_exports_and_dv_read_never_parallelize(spark, tmp_path, derby_url,
+                                               monkeypatch):
+    """The serving exports, an ANN tombstone delete and a read through a
+    deletion vector hand Spark no driver-side Python rows: with
+    ``SparkContext.parallelize`` raising (every ``createDataFrame(<list>)``
+    goes through it), each one still runs to completion — their
+    driver-held frames are JVM-local (``session.local_frame``) and start
+    no Python worker."""
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+
+    from medallion_data_lake_spark.operators.ann import (
+        build_ivf_index,
+        delete_from_index,
+    )
+    from medallion_data_lake_spark.operators.versioned import (
+        commit,
+        delete_rows_dv,
+        read_table,
+    )
+    from medallion_data_lake_spark.serving_store import export_vector_store
+
+    root = str(tmp_path / "idx")
+    docs = _docs(spark, PHRASE_DOCS)
+    create_bm25_index(spark, docs, root, n_files=2, bigrams=True)
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(_emb(spark, n=20), idx)
+    table = str(tmp_path / "dv")
+    commit(spark.range(50).withColumn("tag", F.col("id").cast("string")),
+           table)
+
+    def boom(self, *a, **k):
+        raise AssertionError("driver-held rows planned a Python RDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", boom)
+    url = derby_url.format("noworker")
+    pins = export_search_store(spark, root, url, docs=docs)
+    delete_from_index(spark, idx, [3, 4])
+    meta = export_vector_store(spark, url, vec_index=idx, k_max=5,
+                               n_probes=2)
+    delete_rows_dv(spark, table, keys={"id": [7, 21]})
+    ids = {r["id"] for r in read_table(spark, table).collect()}
+
+    assert pins and meta["mode"] == "ivf"
+    assert ids == set(range(50)) - {7, 21}
+    with ServingStore(spark, url) as store:
+        assert store.similar(3, k=5)["rows"] == []  # tombstoned: no list
+        assert any(store.similar(q, k=5)["rows"] for q in range(5, 21))
+        assert {tuple(r) for r in store.phrase(["a", "b", "a"])["rows"]} \
+            == {(7, 2)}

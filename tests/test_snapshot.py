@@ -13,6 +13,7 @@ import pytest
 from medallion_data_lake_spark.operators import versioned as V
 from medallion_data_lake_spark.operators.versioned import (
     commit,
+    compact_small_files,
     delete_rows,
     delete_rows_dv,
     read_table,
@@ -32,18 +33,22 @@ def test_each_operation_lists_the_log_once_and_reads_each_file_once(
     spark, tmp_path, log_access
 ):
     """5 commits of 10 rows with range stats and blooms on ``id``, no
-    checkpoint, no racing writer: reads list ``_log`` exactly once,
-    writers at most 3 times (plan, claim, checkpoint), and no operation
-    reads any log file twice."""
+    checkpoint, no racing writer: reads list ``_log`` exactly once (a
+    timestamp read too, though it reads every entry), writers at most 3
+    times (plan, claim, checkpoint), ``compact_small_files`` at most
+    twice (plan, claim), and no operation reads any log file twice."""
     path = str(tmp_path / "t")
     for i in range(5):
         commit(_df(spark, i * 10, i * 10 + 10), path,
                stats_cols=("id",), bloom_cols=("id",))
     log = os.path.join(path, "_log")
+    ts2 = V._read_entry(path, 2)["timestamp"]
     ops = [
         ("read_table", lambda: read_table(spark, path)),
         ("read_table_pruned",
          lambda: read_table_pruned(spark, path, eq={"id": 7})),
+        ("read_table(as_of_timestamp)",
+         lambda: read_table(spark, path, as_of_timestamp=ts2)),
         ("delete_rows", lambda: delete_rows(spark, path, keys={"id": [8]})),
         ("update_rows", lambda: update_rows(
             spark, path, {"tag": "'u'"}, keys={"id": [17]})),
@@ -52,6 +57,8 @@ def test_each_operation_lists_the_log_once_and_reads_each_file_once(
         ("commit", lambda: commit(_df(spark, 50, 60), path,
                                   stats_cols=("id",), bloom_cols=("id",))),
         ("_write_checkpoint", lambda: V._write_checkpoint(path, 8)),
+        ("compact_small_files",
+         lambda: compact_small_files(spark, path, min_files=2)),
     ]
     for name, op in ops:
         log_access.reset()
@@ -63,11 +70,18 @@ def test_each_operation_lists_the_log_once_and_reads_each_file_once(
         )
         if name.startswith("read_table"):
             assert lists == 1, f"{name} listed _log {lists} times"
+        elif name == "compact_small_files":
+            assert lists <= 2, f"{name} listed _log {lists} times"
         else:
             assert lists <= 3, f"{name} listed _log {lists} times"
-    assert V.latest_version(path) == 8
-    assert V._checkpoint_versions(path) == [8]
+    assert V.latest_version(path) == 9
+    assert V._read_entry(path, 9)["operation"].startswith("OPTIMIZE")
+    # 9 is a CHECKPOINT_INTERVAL commit: written from the folded entry
+    assert V._checkpoint_versions(path) == [8, 9]
     assert read_table(spark, path).count() == 58  # ids 0-59 but 8 and 23
+    # the one-listing timestamp read resolves the same version as before
+    assert V.version_at_timestamp(path, ts2) == 2
+    assert read_table(spark, path, as_of_timestamp=ts2).count() == 30
 
 
 @pytest.fixture(scope="module")
