@@ -10,7 +10,10 @@ and serves SQL over the session catalog (reference
 
 Unlike the reference we never run an eager ``count()`` per registration
 (reference ``query_datalake.py:51,66,81`` — a full job per table before any
-query; SURVEY.md §4.3.2): registration stays metadata-only.
+query; SURVEY.md §4.3.2). What runs at registration is schema discovery:
+a star fixture is read with its declared schema and starts no job, and
+``Catalog.register_path`` lets Spark infer a stored table's schema, which
+runs one footer-reading job per table.
 """
 
 from __future__ import annotations
@@ -30,8 +33,20 @@ def star_path(sf_dir: str, table: str) -> str:
     return os.path.join(sf_dir, f"{table}.parquet")
 
 
+def _events_ts_type(path: str) -> T.DataType:
+    """The type Spark's parquet inference gives ``events.ts``, read from
+    the file's footer on the driver, so no Spark job runs for it."""
+    import pyarrow.parquet as pq
+
+    ts = pq.read_schema(path).field("ts").type
+    if ts.unit == "ns":
+        return T.LongType()  # under nanosAsLong, tz-aware or not
+    return T.TimestampType() if ts.tz is not None else T.TimestampNTZType()
+
+
 def load_star_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one fixture table with its declared schema (no inference).
+    """Read one fixture table with its declared schema (no inference, so
+    no Spark job runs).
 
     Parquet carries its own schema; we still pass the expected one so a
     fixture drift fails loudly at analysis time instead of deep in a query.
@@ -39,24 +54,26 @@ def load_star_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ``events.ts`` has shipped in two fixture generations: TIMESTAMP(MICROS)
     (a native Spark type) and TIMESTAMP(NANOS), which Spark has no type
     for — under ``nanosAsLong`` the latter surfaces as raw long nanos. We
-    let Spark infer just that file's schema and convert only when the
-    nanos form appears, matching DuckDB's own ns→µs read truncation.
+    declare ``ts`` as the type the file's footer gives it and convert
+    only when the nanos form appears, matching DuckDB's own ns→µs read
+    truncation.
     """
-    if table == "events":
-        raw = spark.read.parquet(star_path(sf_dir, table))
-        if isinstance(raw.schema["ts"].dataType, T.LongType):
-            # TIMESTAMP(NANOS) generation: integer `div`, not `/` —
-            # epoch-nanos (~1.7e18) overflow double's 53-bit mantissa,
-            # so a float division would corrupt microseconds.
-            raw = raw.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-            )
-        else:
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        return raw.select(*[f.name for f in STAR_SCHEMAS[table].fields])
-    df = spark.read.schema(STAR_SCHEMAS[table]).parquet(star_path(sf_dir, table))
-    return df
+    path = star_path(sf_dir, table)
+    if table != "events":
+        return spark.read.schema(STAR_SCHEMAS[table]).parquet(path)
+    ts_type = _events_ts_type(path)
+    raw = spark.read.schema(T.StructType([
+        T.StructField("ts", ts_type) if f.name == "ts" else f
+        for f in STAR_SCHEMAS[table].fields
+    ])).parquet(path)
+    if isinstance(ts_type, T.LongType):
+        # TIMESTAMP(NANOS) generation: integer `div`, not `/` —
+        # epoch-nanos (~1.7e18) overflow double's 53-bit mantissa,
+        # so a float division would corrupt microseconds.
+        return raw.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
+        )
+    return raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def load_star_table_spread(
@@ -121,7 +138,9 @@ class Catalog:
         return name
 
     def register_path(self, layer: str, table: str, fmt: str = "parquet") -> str:
-        """Register a stored table by path; metadata-only, no job runs."""
+        """Register a stored table by path. Spark infers its schema when
+        the view is made: for parquet (every caller) that is one job that
+        reads the footers, not the rows."""
         path = os.path.join(self.roots[layer], table)
         df = self.spark.read.format(fmt).load(path)
         name = f"{layer}_{table}"

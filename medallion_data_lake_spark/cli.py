@@ -5,8 +5,10 @@ Mirrors the reference's CLI verbs (reference
 listing, S12), ``describe <table>`` (S13), ``sql "<query>"`` (ad-hoc,
 §3.2), ``samples`` (canned suite), plus ``bench-tables`` to mount the
 driver's star fixtures. Unlike the reference it never runs an eager
-count per registered view (SURVEY.md §4.3.2) — registration is
-metadata-only, so startup cost is one session, not 23 jobs.
+count per registered view (SURVEY.md §4.3.2). Registration reads schemas
+only: a star fixture loads with its declared schema and starts no job,
+and a lake table's schema is inferred in one footer-reading job per
+table.
 
 Usage:
   python -m medallion_data_lake_spark.cli tables [--lake ROOT]

@@ -11,6 +11,10 @@ but pin the configs that matter at 100 TB:
   so no Python worker starts where no Python code runs;
 - UTC session timezone so timestamp semantics are reproducible across
   engines (the DuckDB oracle is naive-UTC as well);
+- no Python call-site capture per Column call
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): it costs ~7
+  py4j round trips per call while a query is built, and only adds the
+  Python call site to a runtime error's message;
 - shuffle partitions sized for the local harness; at cluster scale AQE
   coalesces from a high initial partition count instead.
 
@@ -89,6 +93,24 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # columns (the events fixture) are read as raw long nanos and converted
     # to microsecond NTZ in the loader (catalog.load_star_table).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # --- Driver-side build cost (measured) ----------------------------------
+    # With this on (pyspark's default) every `functions` call and Column
+    # method captures its Python call site: it looks up the active session,
+    # reads `spark.sql.stackTracesInDataFrameContext`, walks the stack and
+    # sets and clears `PySparkCurrentOrigin` in the JVM — ~7 more py4j
+    # round trips. `(F.col("a") + F.lit(1)).alias("b")` sends 38 commands
+    # with it and 8 without, an 11-query perfbench sweep ~6,700 and
+    # ~3,400, and the sweep's build phase takes ~18% less CPU without it
+    # (4-vCPU VM, in-session A/B). Given up: the "DataFrame context" of a
+    # runtime error raised by a DataFrame-API expression names the JVM
+    # method and frame (`divide`, `NativeMethodAccessorImpl.invoke0`)
+    # instead of the Python one (`__truediv__`, `job.py:14`); its error
+    # class, message, SQL-text context and the action's Python traceback
+    # stay. pyspark reads the setting once per process, on the first
+    # Column call with an active session, so it only takes effect through
+    # the builder (`extra_conf` turns it back on), never through a later
+    # `spark.conf.set`.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # --- Noise control ----------------------------------------------------
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -69,10 +69,12 @@ def test_customer_key_is_unique(sf_dir):
 
 
 def test_events_nanos_and_micros_load_alike(spark, tmp_path):
-    """Both events.ts fixture generations load to the same frame: the
-    TIMESTAMP(NANOS) file (Spark reads it as long nanos) goes through
-    load_star_table's ns->us conversion, which drops the sub-microsecond
-    part exactly as DuckDB's read does."""
+    """Every events.ts fixture generation loads to the same frame, and
+    loading one starts no Spark job: the TIMESTAMP(NANOS) file (Spark
+    reads it as long nanos) goes through load_star_table's ns->us
+    conversion, which drops the sub-microsecond part exactly as DuckDB's
+    read does, and a UTC-adjusted TIMESTAMP(MICROS) file (Spark reads it
+    as an instant) is cast to wall-clock UTC."""
     import pyarrow as pa
 
     from pyspark.sql import types as T
@@ -81,25 +83,48 @@ def test_events_nanos_and_micros_load_alike(spark, tmp_path):
 
     n = 1000
     micros = [1_700_000_000_000_000 + i * 1_234_567 for i in range(n)]
-    for unit, ts in (("us", micros), ("ns", [m * 1000 + 789 for m in micros])):
-        (tmp_path / unit).mkdir()
+    files = {
+        "us": pa.array(micros, pa.timestamp("us")),
+        "ns": pa.array([m * 1000 + 789 for m in micros], pa.timestamp("ns")),
+        "us_utc": pa.array(micros, pa.timestamp("us", tz="UTC")),
+    }
+    for name, ts in files.items():
+        (tmp_path / name).mkdir()
         table = pa.table({
             "event_id": pa.array(range(n), pa.int64()),
-            "ts": pa.array(ts, pa.timestamp(unit)),
+            "ts": ts,
             "user_id": pa.array([i % 37 for i in range(n)], pa.int64()),
             "event_type": pa.array([("view", "click", "buy")[i % 3] for i in range(n)]),
             "value": pa.array([i / 8 for i in range(n)], pa.float64()),
             "props": pa.array([f'{{"k": {i}}}' for i in range(n)]),
         })
-        pq.write_table(table, str(tmp_path / unit / "events.parquet"))
+        pq.write_table(table, str(tmp_path / name / "events.parquet"))
 
-    raw = spark.read.parquet(str(tmp_path / "ns" / "events.parquet"))
-    assert isinstance(raw.schema["ts"].dataType, T.LongType)
+    inferred = {
+        name: spark.read.parquet(str(tmp_path / name / "events.parquet"))
+        .schema["ts"].dataType
+        for name in files
+    }
+    assert inferred == {"us": T.TimestampNTZType(), "ns": T.LongType(),
+                        "us_utc": T.TimestampType()}
 
-    us = load_star_table(spark, str(tmp_path / "us"), "events")
-    ns = load_star_table(spark, str(tmp_path / "ns"), "events")
-    assert us.schema == ns.schema
-    assert us.schema["ts"].dataType == T.TimestampNTZType()
-    assert us.count() == ns.count() == n
-    assert us.exceptAll(ns).count() == 0
-    assert ns.exceptAll(us).count() == 0
+    sc = spark.sparkContext
+    loaded = {}
+    for name in files:
+        group = f"load-events-{name}"
+        sc.setJobGroup(group, "load only, no action")
+        try:
+            loaded[name] = load_star_table(spark, str(tmp_path / name), "events")
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+
+    us = loaded.pop("us")
+    assert us.schema == STAR_SCHEMAS["events"]
+    assert us.count() == n
+    for name, other in loaded.items():
+        assert other.schema == us.schema, name
+        assert other.count() == n, name
+        assert us.exceptAll(other).count() == 0, name
+        assert other.exceptAll(us).count() == 0, name

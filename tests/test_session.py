@@ -58,3 +58,29 @@ def test_repeated_queries_compile_no_code_twice(sf_dir, tmp_path):
     cold, warm = json.loads(out.stdout.strip().splitlines()[-1])
     assert cold > 100, f"the set no longer overflows the default cache: {cold}"
     assert warm == 0, (cold, warm)
+
+
+def test_column_calls_capture_no_call_site(spark, monkeypatch):
+    """Column calls build their expression and nothing else: with
+    call-site capture off no command touches ``PySparkCurrentOrigin``,
+    and an expression of four calls sends at most 16 py4j commands
+    (8 warm, 14 on the first `functions` lookups; 38 with capture on)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    me, sent = threading.current_thread(), []
+    orig = ClientServerConnection.send_command
+
+    def counting(self, command, *a, **kw):
+        if threading.current_thread() is me:
+            sent.append(command)
+        return orig(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    (F.col("a") + F.lit(1)).alias("b")
+    monkeypatch.undo()
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c], sent
+    assert len(sent) <= 16, sent
