@@ -6,15 +6,15 @@ document can be kept per group. That's connected components, an
 iterative algorithm with no single-statement SQL form (the oracle for
 the registry entry uses a recursive CTE).
 
-``connected_components`` is a driver-coordinated min-label-propagation
-loop over DataFrames: each iteration joins labels with the symmetric
-edge list and takes the per-node minimum. Iterations = graph diameter
-(near-dup components are shallow — dup clusters are cliques-ish, so
-this converges in a handful of rounds). Each round is one shuffle on
-the node key; intermediate labels are cached and the loop stops at a
+``connected_components`` is a hybrid: a driver-side union-find when
+the edge list is small, else a driver-coordinated large-star/small-star
+contraction loop over DataFrames (Kiveris et al., "Connected Components
+in MapReduce and Beyond") that converges in O(log² n) rounds whatever
+the graph's diameter. Each round is a few keyed shuffles; the edge
+state is checkpointed per round and the loop stops at a verified
 fixpoint. This is the standard large-graph CC pattern when a graph
 library isn't available, and it shards naturally: no driver state
-beyond the loop counter and a convergence count.
+beyond the loop counter and a per-round fingerprint.
 
 ``ml_minhash_candidates`` wraps Spark MLlib's MinHashLSH
 (HashingTF → MinHashLSH → approxSimilarityJoin) — the production-scale
@@ -36,7 +36,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     driver_threshold: int = 1_000_000,
-    algorithm: str = "star",
 ) -> DataFrame:
     """(node, component) for every node in the edge list; component =
     smallest reachable node id. Deterministic.
@@ -45,13 +44,10 @@ def connected_components(
     list fits comfortably on the driver (≤ ``driver_threshold`` —
     near-dup graphs are tiny relative to the corpus because LSH already
     pruned them), solve with a local union-find in one pass instead of
-    paying one Spark job per propagation round. Larger graphs take a
-    distributed loop: ``algorithm="star"`` (default) is alternating
-    large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") converging in O(log² n) rounds
-    REGARDLESS of graph diameter; ``algorithm="label"`` is min-label
-    propagation, which needs ~diameter rounds — kept for comparison and
-    for graphs known to be shallow (near-dup clusters usually are).
+    paying Spark jobs per round. Larger graphs take the distributed
+    loop: alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond") converging in
+    O(log² n) rounds REGARDLESS of graph diameter.
     """
     # symmetrize in ONE pass: a union of two selects over the same input
     # evaluates the whole upstream plan twice (for LSH-derived edges that
@@ -97,63 +93,10 @@ def connected_components(
         spark = edges.sparkSession
         return spark.createDataFrame(rows, "node long, component long")
 
-    sym = sym.cache()  # big graph: the iterative paths re-read it per round
-
-    if algorithm == "star":
-        result = _star_contraction(sym, max_iter)
-        sym.unpersist()
-        return result
-
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iter):
-        # candidate label for each node: min over its neighbors' labels
-        neighbor_min = (
-            sym.join(labels, sym.a == labels.node)
-            .groupBy(F.col("b").alias("node2"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # localCheckpoint truncates lineage each round — without it the
-        # plan nests one join deeper per iteration and analysis cost grows
-        # superlinearly (observed: a 50-round chain blows past minutes in
-        # pure planning before any data moves).
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.node2, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # min-label propagation needs ~diameter rounds; a chain-shaped
-        # component longer than max_iter would otherwise return silently
-        # wrong component ids. Fail loudly — the caller can raise
-        # max_iter (or pre-shrink the graph with exact dedup first).
-        sym.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); the graph has a component "
-            f"with diameter > {max_iter} — increase max_iter"
-        )
+    sym = sym.cache()  # big graph: the contraction loop re-reads it
+    result = _star_contraction(sym, max_iter)
     sym.unpersist()
-    return labels.select(F.col("node"), F.col("label").alias("component"))
+    return result
 
 
 def _star_contraction(sym: DataFrame, max_iter: int) -> DataFrame:

@@ -504,9 +504,10 @@ _CC_ORACLE = (
     "dedup_groups_connected",
     oracle=_CC_ORACLE,
     doc="North-star dedup-group resolution: connected components over the "
-        "LSH candidate graph (operators/dedup_graph.py — iterative "
-        "min-label propagation, one keyed shuffle per round, rounds = "
-        "graph diameter). The oracle computes the same closure with a "
+        "LSH candidate graph (operators/dedup_graph.py — driver-side "
+        "union-find for small graphs, else large-star/small-star "
+        "contraction in O(log² n) keyed-shuffle rounds). The oracle "
+        "computes the same closure with a "
         "recursive CTE; component id = smallest doc_id reachable. This is "
         "the step that turns pairwise near-dup evidence into 'keep one "
         "canonical doc per group' at 100 TB.",

@@ -2,29 +2,27 @@
 
 A training corpus is not loaded once — it accrues (crawl drops, vendor
 deliveries, user uploads). This module ingests document drops as a
-file-source stream and admits only content never seen before, keeping a
-compact fingerprint LEDGER (fingerprint, batch id) alongside the corpus
-so dedup against ALL history is one anti-join against the ledger — the
-corpus itself (with its text/blob payload) is never re-read for dedup.
+file-source stream and admits only content never seen before. History
+lives in compact LEDGERS beside the output, so dedup against ALL history
+never re-reads the corpus itself (with its text/blob payload). Three
+flows keep one each, and all three are one :class:`_Ledger`: fingerprint
+(:func:`admit_batch`), LSH band (:func:`admit_batch_near`) and segment
+count (:func:`scrub_batch_segments`).
 
-Exactly-once without a transaction log: both corpus and ledger are
-written with dynamic partition-overwrite keyed by the micro-batch id,
-so a replayed batch rewrites exactly its own partition — idempotent by
-construction. The ledger read for the anti-join EXCLUDES the current
-batch id, so a replay does not see its own previous partial write and
-drop everything (the failure mode of a naive append).
+Exactly-once without a transaction log: every output and ledger is
+written with dynamic partition-overwrite keyed by the micro-batch id
+(:func:`_write_batch`), so a replayed batch rewrites exactly its own
+partition — idempotent by construction. Every history read EXCLUDES the
+current batch id, so a replay does not see its own previous partial
+write and drop everything (the failure mode of a naive append).
 
-Scale: per batch, work = fingerprint map over the new docs + one
-anti-join keyed on fingerprint. The ledger is (md5, long) — ~40 B/doc,
-so a 100-billion-doc history is a few TB of parquet. The flat form
-shuffles that history every batch; the TWO-TIER form (implemented:
-:func:`compact_ledger_base` / :func:`compact_band_ledger_base`) mirrors
-completed epochs into a fingerprint-bucketed base so the anti-join
-shuffles ONLY the new batch (plan-asserted), with the short
-post-compaction tail partition-pruned and broadcast. Near-dup admission
-control composes the same way (``admit_batch_near``): an LSH band
-ledger plus signature-level verification, corpus-free, with its own
-bucketed base.
+Scale: the fingerprint ledger is (md5, long) — ~40 B/doc, so a
+100-billion-doc history is a few TB of parquet. The flat form shuffles
+that history every batch; the TWO-TIER form (:meth:`_Ledger.compact`,
+public per ledger as ``compact_*_ledger_base``) mirrors completed epochs
+into a key-bucketed base, so the history join shuffles ONLY the new
+batch (plan-asserted), with the short post-compaction tail
+partition-pruned and broadcast.
 
 The reference has no incremental ingestion at all (its loads are
 overwrite-the-world batch — ``bronze_to_silver.py``); this is the
@@ -33,7 +31,11 @@ north-star upgrade for corpus workflows.
 
 from __future__ import annotations
 
+import glob
 import os
+from dataclasses import dataclass
+from functools import partial, reduce
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -66,55 +68,27 @@ def content_fingerprint(text_col: str = "text") -> F.Column:
 LEDGER_WATERMARK_PROP = "mdls.ledger.compacted_through"
 
 
-def compact_ledger_base(
-    spark: SparkSession,
-    ledger_dir: str,
-    base_table: str,
-    n_buckets: int = 64,
-    through_batch_id: int | None = None,
-) -> dict:
-    """Mirror the parquet ledger into a fingerprint-BUCKETED managed
-    table — the two-tier ledger's cold base. After this, the per-batch
-    anti-join against history shuffles ONLY the new batch (into the
-    bucket layout); the base is scanned in place, never re-shuffled —
-    the "bucket the ledger" production upgrade the module header names,
-    implemented rather than promised.
-
-    The highest mirrored batch id is recorded as a table property; the
-    admission path anti-joins base + the parquet ledger's TAIL
-    partitions above it (partition-pruned read, broadcast-sized by the
-    compaction cadence). Re-run this periodically — cost is one shuffle
-    of the compact (fingerprint, batch_id) ledger, amortized over every
-    batch until the next compaction; the corpus itself is never read.
-
-    Idempotence note: the tail read already excludes the current batch's
-    own partition; the base must mirror only COMPLETED batches (stream
-    checkpoint moved past them), or a replayed batch would meet its own
-    prior write through the base and admit nothing. Callers compacting
-    from INSIDE a running stream's foreachBatch therefore pass
-    ``through_batch_id = current_batch_id - 1`` — the current epoch is
-    not committed until after the hook returns. Between runs (no stream
-    active) the default full mirror is safe.
-    """
-    ledger = spark.read.parquet(ledger_dir)
-    if through_batch_id is not None:
-        ledger = ledger.filter(F.col("_batch_id") <= F.lit(through_batch_id))
-    hi = ledger.agg(F.max("_batch_id")).first()[0]
-    if hi is None:
-        return {"base_table": base_table, "compacted_through": None}
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Land ``df`` as the ``_batch_id=batch_id`` partition of ``path``.
+    Dynamic partition overwrite: a replayed batch rewrites exactly its
+    own partition and leaves every other batch's rows alone."""
     (
-        ledger.select("fingerprint", "_batch_id")
+        df.withColumn("_batch_id", F.lit(batch_id))
         .write.mode("overwrite")
-        .bucketBy(n_buckets, "fingerprint")
-        .sortBy("fingerprint")
-        .format("parquet")
-        .saveAsTable(base_table)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id")
+        .parquet(path)
     )
-    spark.sql(
-        f"ALTER TABLE {base_table} SET TBLPROPERTIES "
-        f"('{LEDGER_WATERMARK_PROP}'='{hi}')"
-    )
-    return {"base_table": base_table, "compacted_through": int(hi)}
+
+
+def _read_batches(spark: SparkSession, path: str) -> DataFrame | None:
+    """The batch partitions under ``path``; None while it has none. An
+    empty batch writes the directory but no partition, and parquet
+    schema inference over that fails (UNABLE_TO_INFER_SCHEMA): such a
+    directory holds no batch, same as an absent one."""
+    if glob.glob(os.path.join(glob.escape(path), "_batch_id=*")):
+        return spark.read.parquet(path)
+    return None
 
 
 def _ledger_watermark(spark: SparkSession, base_table: str) -> int:
@@ -124,33 +98,155 @@ def _ledger_watermark(spark: SparkSession, base_table: str) -> int:
     return int(row["value"])
 
 
-def historical_fingerprints(
-    spark: SparkSession,
-    ledger_dir: str,
-    batch_id: int,
-    base_table: str | None = None,
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """(base, tail) fingerprint sides for the admission anti-join.
-    base = the bucketed mirror (None until first compaction); tail = the
-    parquet ledger's partitions ABOVE the mirror's watermark (partition-
-    pruned — `_batch_id` is the partition key), always excluding the
-    current batch's own partition (replay safety)."""
-    base = None
-    wm = -1
-    if base_table is not None and spark.catalog.tableExists(base_table):
-        base = spark.table(base_table).select("fingerprint")
-        wm = _ledger_watermark(spark, base_table)
-    tail = None
-    if os.path.isdir(ledger_dir):
-        tail = (
-            spark.read.parquet(ledger_dir)
-            .filter(
-                (F.col("_batch_id") > F.lit(wm))
-                & (F.col("_batch_id") != F.lit(batch_id))
-            )
-            .select("fingerprint")
+@dataclass(frozen=True)
+class _Ledger:
+    """One batch-id-partitioned parquet ledger and its optional bucketed
+    base — the two-tier form. ``to_base`` turns ledger rows into base
+    rows (a projection or an aggregate); ``key`` is the column the base
+    is bucketed and sorted on, which is the join key of the flow's
+    history probe, so that side is scanned in its bucket layout and
+    never re-shuffled."""
+
+    key: str
+    to_base: Callable[[DataFrame], DataFrame]
+    path: str
+    base_table: str | None = None
+
+    def compact(self, spark: SparkSession, through: int | None = None,
+                n_buckets: int = 64) -> dict:
+        """Mirror the ledger's batches up to ``through`` (all when None)
+        into the bucketed base and record the highest mirrored batch id
+        as the table's watermark property. Cost is one shuffle of the
+        compact ledger, amortized over every batch until the next
+        compaction; the corpus itself is never read.
+
+        Idempotence: :meth:`history`'s tail excludes the current batch's
+        own partition, but the base must mirror only COMPLETED batches
+        (stream checkpoint moved past them), or a replayed batch would
+        meet its own prior write through the base and admit nothing.
+        Compacting from INSIDE a running stream's foreachBatch therefore
+        passes ``through = current_batch_id - 1`` — the current epoch is
+        not committed until after the hook returns (:func:`_run`).
+        Between runs (no stream active) the default full mirror is safe.
+        """
+        ledger, hi = _read_batches(spark, self.path), None
+        if ledger is not None:
+            if through is not None:
+                ledger = ledger.filter(F.col("_batch_id") <= F.lit(through))
+            hi = ledger.agg(F.max("_batch_id")).first()[0]
+        if hi is None:
+            return {"base_table": self.base_table, "compacted_through": None}
+        (
+            self.to_base(ledger)
+            .write.mode("overwrite")
+            .bucketBy(n_buckets, self.key)
+            .sortBy(self.key)
+            .format("parquet")
+            .saveAsTable(self.base_table)
         )
-    return base, tail
+        spark.sql(f"ALTER TABLE {self.base_table} SET TBLPROPERTIES "
+                  f"('{LEDGER_WATERMARK_PROP}'='{hi}')")
+        return {"base_table": self.base_table, "compacted_through": int(hi)}
+
+    def history(self, spark: SparkSession,
+                batch_id: int) -> tuple[DataFrame | None, DataFrame | None]:
+        """(base, tail) history sides for batch ``batch_id``. base = the
+        bucketed mirror (None until the first compaction); tail = the
+        ledger partitions ABOVE the base's watermark (partition-pruned:
+        ``_batch_id`` is the partition key), always excluding the
+        current batch's own partition (replay safety). None when the
+        ledger holds no batch yet."""
+        base, wm = None, -1
+        if self.base_table and spark.catalog.tableExists(self.base_table):
+            base = spark.table(self.base_table)
+            wm = _ledger_watermark(spark, self.base_table)
+        tail = _read_batches(spark, self.path)
+        if tail is not None:
+            tail = tail.filter((F.col("_batch_id") > F.lit(wm))
+                               & (F.col("_batch_id") != F.lit(batch_id)))
+        return base, tail
+
+
+def _compact_base(ledger: Callable[..., _Ledger], spark: SparkSession,
+                  ledger_dir: str, base_table: str, n_buckets: int = 64,
+                  through_batch_id: int | None = None) -> dict:
+    """Every public ``compact_*_ledger_base``: :meth:`_Ledger.compact`
+    of the ``ledger_dir`` ledger of one kind (``ledger``)."""
+    return ledger(ledger_dir, base_table).compact(
+        spark, through_batch_id, n_buckets)
+
+
+def _run(spark: SparkSession, input_dir: str, checkpoint_dir: str,
+         available_now: bool, process: Callable[[DataFrame, int], None],
+         ledgers: tuple[_Ledger, ...] = (), compact_every: int | None = None):
+    """Stream JSON-lines document drops from ``input_dir`` through
+    ``process(batch_df, batch_id)``; returns the StreamingQuery.
+    ``available_now`` bounds the run to the files present (exactly-once
+    catch-up); pass False for a continuous ingester. Every
+    ``compact_every`` batches the ``ledgers`` that have a base table are
+    re-mirrored, completed epochs only (:meth:`_Ledger.compact`)."""
+
+    def batch(df: DataFrame, bid: int) -> None:
+        process(df, bid)
+        if compact_every and bid > 0 and (bid + 1) % compact_every == 0:
+            for ledger in ledgers:
+                if ledger.base_table:
+                    ledger.compact(spark, through=bid - 1)
+
+    writer = (
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", "64")
+        .json(input_dir)
+        .writeStream.foreachBatch(batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+# ---------------------------------------------------------------------------
+# Exact admission (fingerprint ledger)
+# ---------------------------------------------------------------------------
+
+# the base is fingerprint-bucketed: the per-batch anti-join against
+# history shuffles ONLY the new batch (into the bucket layout), and the
+# base is scanned in place, never re-shuffled
+_fingerprint_ledger = partial(
+    _Ledger, "fingerprint", lambda df: df.select("fingerprint", "_batch_id")
+)
+compact_ledger_base = partial(_compact_base, _fingerprint_ledger)
+
+
+def _admit_exact(batch_df: DataFrame, batch_id: int,
+                 ledger: _Ledger) -> DataFrame:
+    """The exact stage of both admission flows: the batch's docs plus
+    ``fingerprint``, minus within-batch dups (deterministic min-id
+    winner per content) and minus every fingerprint in history. With a
+    base, its anti-join shuffles only the batch, and the tail — bounded
+    by the compaction cadence, which is the operator's contract — is
+    broadcast. Without one the whole parquet ledger shuffles per batch:
+    fine for modest histories, the thing the base exists to avoid at
+    corpus scale."""
+    fp = (
+        batch_df.withColumn("fingerprint", content_fingerprint())
+        .withColumn(
+            "_rn",
+            F.row_number().over(
+                Window.partitionBy("fingerprint").orderBy("doc_id")
+            ),
+        )
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    base, tail = ledger.history(batch_df.sparkSession, batch_id)
+    if base is not None:
+        fp = fp.join(base.select("fingerprint"), "fingerprint", "left_anti")
+    if tail is not None:
+        tail = tail.select("fingerprint")
+        fp = fp.join(F.broadcast(tail) if base is not None else tail,
+                     "fingerprint", "left_anti")
+    return fp
 
 
 def admit_batch(
@@ -176,11 +272,7 @@ def admit_batch(
 
     ``ledger_base_table`` switches history lookup to the TWO-TIER form
     (:func:`compact_ledger_base`): anti-join the bucketed base (zero
-    ledger-side shuffle), then the post-watermark tail (broadcast —
-    bounded by compaction cadence, which is the operator's contract).
-    Without it, the whole parquet ledger shuffles per batch — fine for
-    modest histories, the thing the base exists to avoid at corpus
-    scale.
+    ledger-side shuffle), then the post-watermark tail.
 
     ``embeddings_table`` (r14) maintains the corpus's persisted
     embedding COLUMN per batch: after the admitted docs land, the
@@ -192,44 +284,11 @@ def admit_batch(
     without a separate materialize step. Provenance is the embeddings
     module's own sidecar contract, enforced per batch."""
     spark = batch_df.sparkSession
-    fp = (
-        batch_df.withColumn("fingerprint", content_fingerprint())
-        # within-batch dedup: deterministic min-id winner per content
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("fingerprint").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    admitted = _admit_exact(
+        batch_df, batch_id, _fingerprint_ledger(ledger_dir, ledger_base_table)
     )
-    base, tail = historical_fingerprints(
-        spark, ledger_dir, batch_id, ledger_base_table
-    )
-    if base is not None:
-        fp = fp.join(base, "fingerprint", "left_anti")
-    if tail is not None:
-        fp = fp.join(
-            F.broadcast(tail) if base is not None else tail,
-            "fingerprint",
-            "left_anti",
-        )
-    admitted = fp.withColumn("_batch_id", F.lit(batch_id))
-    (
-        admitted.drop("fingerprint")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(corpus_dir)
-    )
-    (
-        admitted.select("fingerprint", "_batch_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(ledger_dir)
-    )
+    _write_batch(admitted.drop("fingerprint"), batch_id, corpus_dir)
+    _write_batch(admitted.select("fingerprint"), batch_id, ledger_dir)
     if embeddings_table is not None:
         from ..operators.embeddings import (
             DEFAULT_DIM,
@@ -240,29 +299,20 @@ def admit_batch(
         # the batch): replaying the `admitted` plan would re-run the
         # ledger anti-joins, and embedding the raw input would waste the
         # Arrow pass on rejected duplicates
-        batch_docs = (
-            spark.read.parquet(corpus_dir)
-            .filter(F.col("_batch_id") == batch_id)
-            .select("doc_id", "text")
-        )
-        materialize_corpus_embeddings(
-            spark, batch_docs, embeddings_table,
-            dim=embedding_dim or DEFAULT_DIM,
-        )
+        corpus = _read_batches(spark, corpus_dir)
+        if corpus is not None:  # None: no doc admitted yet
+            materialize_corpus_embeddings(
+                spark, corpus.filter(F.col("_batch_id") == batch_id)
+                .select("doc_id", "text"), embeddings_table,
+                dim=embedding_dim or DEFAULT_DIM)
     if chunks_dir is not None:
         from ..operators.curation_pipeline import chunk_documents
 
-        (
-            chunk_documents(
-                admitted.drop("fingerprint", "_batch_id"),
-                chunk_tokens=chunk_tokens,
-                chunk_stride=chunk_stride,
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(chunks_dir)
+        _write_batch(
+            chunk_documents(admitted.drop("fingerprint"),
+                            chunk_tokens=chunk_tokens,
+                            chunk_stride=chunk_stride),
+            batch_id, chunks_dir,
         )
 
 
@@ -280,44 +330,20 @@ def run_incremental_corpus_ingest(
     embedding_dim: int | None = None,
 ):
     """Stream JSON-lines document drops from ``input_dir`` into a
-    deduplicated corpus. ``available_now`` bounds the run to the files
-    present (exactly-once catch-up); pass False for a continuous
-    ingester. ``chunks_dir`` additionally materializes training chunks
-    per admitted batch. ``ledger_base_table`` (+ optionally
+    deduplicated corpus (:func:`_run` — ``available_now``, cadence).
+    ``chunks_dir`` additionally materializes training chunks per
+    admitted batch. ``ledger_base_table`` (+ optionally
     ``compact_base_every`` batches) engages the two-tier ledger: history
     anti-joins hit the bucketed base with zero ledger-side shuffle and
-    only the short post-compaction tail rides along. Returns the
-    StreamingQuery."""
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "64")
-        .json(input_dir)
-    )
-
-    def process(df: DataFrame, bid: int) -> None:
-        admit_batch(df, bid, corpus_dir, ledger_dir, chunks_dir=chunks_dir,
+    only the short post-compaction tail rides along."""
+    return _run(spark, input_dir, checkpoint_dir, available_now,
+                lambda df, bid: admit_batch(
+                    df, bid, corpus_dir, ledger_dir, chunks_dir=chunks_dir,
                     ledger_base_table=ledger_base_table,
                     embeddings_table=embeddings_table,
-                    embedding_dim=embedding_dim)
-        if (
-            ledger_base_table
-            and compact_base_every
-            and bid > 0
-            and (bid + 1) % compact_base_every == 0
-        ):
-            # only COMPLETED epochs may enter the base (this batch's
-            # checkpoint commit happens after this hook returns)
-            compact_ledger_base(
-                spark, ledger_dir, ledger_base_table,
-                through_batch_id=bid - 1,
-            )
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+                    embedding_dim=embedding_dim),
+                (_fingerprint_ledger(ledger_dir, ledger_base_table),),
+                compact_base_every)
 
 
 # ---------------------------------------------------------------------------
@@ -361,6 +387,21 @@ def _est_jaccard(sig_a: Column, sig_b: Column) -> Column:
     return est_jaccard(_items(sig_a), _items(sig_b))
 
 
+def _drop_verified(docs: DataFrame, probe: DataFrame, hist: DataFrame, on,
+                   min_est_jaccard: float) -> DataFrame:
+    """``docs`` minus each doc whose ``probe`` band rows collide with
+    ``hist`` (joined ``on``) AND verify: est Jaccard of ``sig`` and
+    ``h_sig`` >= ``min_est_jaccard``, so band false-positives never drop
+    unique content."""
+    hits = (
+        probe.join(hist, on)
+        .filter(_est_jaccard(F.col("sig"), F.col("h_sig")) >= min_est_jaccard)
+        .select("doc_id")
+        .distinct()
+    )
+    return docs.join(hits, "doc_id", "left_anti")
+
+
 def _band_key64(band, bkey) -> F.Column:
     """Composite 64-bit LSH key: (band, bkey) folded into ONE column so
     the bucketed band base can bucket, sort, and join on a single key
@@ -370,119 +411,16 @@ def _band_key64(band, bkey) -> F.Column:
     return F.xxhash64(band.cast("string"), bkey)
 
 
-def compact_band_ledger_base(
-    spark: SparkSession,
-    band_ledger_dir: str,
-    base_table: str,
-    n_buckets: int = 64,
-    through_batch_id: int | None = None,
-) -> dict:
-    """:func:`compact_ledger_base` for the NEAR-dup band ledger: mirror
-    (band, bkey, sig) history into a table bucketed on the composite
-    band key. The per-batch collision probe against history then
-    shuffles only the new batch's band rows; the signature payload
-    (~100 B/doc × N_BANDS rows) — the part that actually weighs — is
-    scanned in its bucket layout, never re-shuffled. Same completed-
-    epochs-only contract as the fingerprint base."""
-    ledger = spark.read.parquet(band_ledger_dir)
-    if through_batch_id is not None:
-        ledger = ledger.filter(F.col("_batch_id") <= F.lit(through_batch_id))
-    hi = ledger.agg(F.max("_batch_id")).first()[0]
-    if hi is None:
-        return {"base_table": base_table, "compacted_through": None}
-    (
-        ledger.select(
-            _band_key64(F.col("band"), F.col("bkey")).alias("band_key"),
-            "sig",
-            "_batch_id",
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "band_key")
-        .sortBy("band_key")
-        .format("parquet")
-        .saveAsTable(base_table)
-    )
-    spark.sql(
-        f"ALTER TABLE {base_table} SET TBLPROPERTIES "
-        f"('{LEDGER_WATERMARK_PROP}'='{hi}')"
-    )
-    return {"base_table": base_table, "compacted_through": int(hi)}
-
-
-def near_dedup_against_ledger(
-    batch_docs: DataFrame,
-    batch_id: int,
-    band_ledger_dir: str,
-    min_est_jaccard: float = 0.5,
-    id_col: str = "doc_id",
-    band_base_table: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split a batch into (admitted, band_rows_to_append).
-
-    Within-batch near-dups resolve to the min-id winner (band collision
-    + signature verification); survivors whose signatures verify against
-    any historical ledger row are dropped. Returns the admitted docs
-    (original columns) and their band rows for the ledger append.
-
-    ``band_base_table`` engages the two-tier history
-    (:func:`compact_band_ledger_base`): collision probe against the
-    bucketed base on the composite band key (zero ledger-side shuffle),
-    then against the post-watermark parquet tail only.
-    """
-    spark = batch_docs.sparkSession
-    bands = _signature_bands(batch_docs)
-
-    # in-batch: candidate pairs via band collision, verified by est
-    # Jaccard, greedy min-id winner (drop the larger id of each pair)
-    losers = (
-        band_self_join(_signatures(batch_docs), _items(F.col("sig")), "sig")
-        .filter(_est_jaccard(F.col("a.sig"), F.col("b.sig")) >= min_est_jaccard)
-        .select(F.col("b.doc_id").alias(id_col))
-        .distinct()
-    )
-    survivors = bands.join(losers, bands.doc_id == losers[id_col], "left_anti")
-
-    wm = -1
-    if band_base_table is not None and spark.catalog.tableExists(band_base_table):
-        wm = _ledger_watermark(spark, band_base_table)
-        base = spark.table(band_base_table).select(
-            F.col("band_key").alias("h_key"), F.col("sig").alias("h_sig")
-        )
-        probe = survivors.withColumn(
-            "band_key", _band_key64(F.col("band"), F.col("bkey"))
-        )
-        base_hits = (
-            probe.join(base, probe.band_key == base.h_key)
-            .filter(_est_jaccard(F.col("sig"), F.col("h_sig")) >= min_est_jaccard)
-            .select("doc_id")
-            .distinct()
-        )
-        survivors = survivors.join(base_hits, "doc_id", "left_anti")
-    if os.path.isdir(band_ledger_dir):
-        hist = (
-            spark.read.parquet(band_ledger_dir)
-            .filter(
-                (F.col("_batch_id") > F.lit(wm))
-                & (F.col("_batch_id") != F.lit(batch_id))
-            )
-            .select(F.col("band").alias("h_band"), F.col("bkey").alias("h_bkey"),
-                    F.col("sig").alias("h_sig"))
-        )
-        hist_hits = (
-            survivors.join(
-                hist,
-                (survivors.band == hist.h_band) & (survivors.bkey == hist.h_bkey),
-            )
-            .filter(_est_jaccard(F.col("sig"), F.col("h_sig")) >= min_est_jaccard)
-            .select("doc_id")
-            .distinct()
-        )
-        survivors = survivors.join(hist_hits, "doc_id", "left_anti")
-
-    admitted_ids = survivors.select("doc_id").distinct()
-    admitted = batch_docs.join(admitted_ids, "doc_id")
-    band_rows = survivors.select("doc_id", "sig", "band", "bkey")
-    return admitted, band_rows
+# the base mirrors (band_key, sig) bucketed on the composite band key:
+# the collision probe shuffles only the new batch's band rows, and the
+# signature payload (~100 B/doc × N_BANDS rows) — the part that actually
+# weighs — is scanned in its bucket layout, never re-shuffled
+_band_ledger = partial(
+    _Ledger, "band_key",
+    lambda df: df.select(_band_key64(F.col("band"), F.col("bkey"))
+                         .alias("band_key"), "sig", "_batch_id"),
+)
+compact_band_ledger_base = partial(_compact_base, _band_ledger)
 
 
 def admit_batch_near(
@@ -497,61 +435,48 @@ def admit_batch_near(
 ) -> None:
     """admit_batch + the near-dup band-ledger stage: exact fingerprint
     dedup first (cheapest, shrinks the LSH input), then band-collision +
-    signature-verified near-dup against all history. The two base-table
-    params engage the two-tier ledgers for both stages
-    (:func:`compact_ledger_base` / :func:`compact_band_ledger_base`)."""
-    spark = batch_df.sparkSession
-    fp = (
-        batch_df.withColumn("fingerprint", content_fingerprint())
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("fingerprint").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    base, tail = historical_fingerprints(
-        spark, ledger_dir, batch_id, ledger_base_table
-    )
-    if base is not None:
-        fp = fp.join(base, "fingerprint", "left_anti")
-    if tail is not None:
-        fp = fp.join(
-            F.broadcast(tail) if base is not None else tail,
-            "fingerprint",
-            "left_anti",
-        )
+    signature-verified near-dup against all history. Within-batch
+    near-dups resolve to the min-id winner; survivors whose signatures
+    verify against any historical ledger row are dropped, and the
+    admitted docs' band rows land as the batch's band-ledger partition.
 
-    admitted, band_rows = near_dedup_against_ledger(
-        fp.drop("fingerprint"), batch_id, band_ledger_dir, min_est_jaccard,
-        band_base_table=band_base_table,
+    The two base-table params engage the two-tier ledgers for both
+    stages (:func:`compact_ledger_base` /
+    :func:`compact_band_ledger_base`): the band collision probe then
+    hits the bucketed base on the composite band key (zero ledger-side
+    shuffle), and the post-watermark parquet tail on (band, bkey)."""
+    docs = _admit_exact(batch_df, batch_id,
+                        _fingerprint_ledger(ledger_dir, ledger_base_table))
+    bands = _signature_bands(docs)
+    # in-batch: candidate pairs via band collision, verified by est
+    # Jaccard, greedy min-id winner (drop the larger id of each pair)
+    losers = (
+        band_self_join(_signatures(docs), _items(F.col("sig")), "sig")
+        .filter(_est_jaccard(F.col("a.sig"), F.col("b.sig")) >= min_est_jaccard)
+        .select(F.col("b.doc_id").alias("doc_id"))
+        .distinct()
     )
-    # re-derive fingerprints for the admitted set's exact-ledger rows
-    admitted = admitted.withColumn("fingerprint", content_fingerprint())
-    stamped = admitted.withColumn("_batch_id", F.lit(batch_id))
-    (
-        stamped.drop("fingerprint")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(corpus_dir)
-    )
-    (
-        stamped.select("fingerprint", "_batch_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(ledger_dir)
-    )
-    (
-        band_rows.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(band_ledger_dir)
-    )
+    survivors = bands.join(losers, "doc_id", "left_anti")
+    base, tail = _band_ledger(band_ledger_dir, band_base_table).history(
+        docs.sparkSession, batch_id)
+    if base is not None:
+        probe = survivors.withColumn(
+            "band_key", _band_key64(F.col("band"), F.col("bkey")))
+        survivors = _drop_verified(
+            survivors, probe,
+            base.select("band_key", F.col("sig").alias("h_sig")),
+            "band_key", min_est_jaccard)
+    if tail is not None:
+        survivors = _drop_verified(
+            survivors, survivors,
+            tail.select("band", "bkey", F.col("sig").alias("h_sig")),
+            ["band", "bkey"], min_est_jaccard)
+
+    admitted = docs.join(survivors.select("doc_id").distinct(), "doc_id")
+    _write_batch(admitted.drop("fingerprint"), batch_id, corpus_dir)
+    _write_batch(admitted.select("fingerprint"), batch_id, ledger_dir)
+    _write_batch(survivors.select("doc_id", "sig", "band", "bkey"),
+                 batch_id, band_ledger_dir)
 
 
 def run_incremental_corpus_ingest_near(
@@ -572,36 +497,14 @@ def run_incremental_corpus_ingest_near(
     The base-table params engage BOTH two-tier ledgers; with
     ``compact_base_every`` the loop re-mirrors them every N batches —
     completed epochs only, same contract as the exact-only runner."""
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "64")
-        .json(input_dir)
-    )
-
-    def process(df: DataFrame, bid: int) -> None:
-        admit_batch_near(
-            df, bid, corpus_dir, ledger_dir, band_ledger_dir, min_est_jaccard,
-            ledger_base_table=ledger_base_table,
-            band_base_table=band_base_table,
-        )
-        if compact_base_every and bid > 0 and (bid + 1) % compact_base_every == 0:
-            if ledger_base_table:
-                compact_ledger_base(
-                    spark, ledger_dir, ledger_base_table,
-                    through_batch_id=bid - 1,
-                )
-            if band_base_table:
-                compact_band_ledger_base(
-                    spark, band_ledger_dir, band_base_table,
-                    through_batch_id=bid - 1,
-                )
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run(spark, input_dir, checkpoint_dir, available_now,
+                lambda df, bid: admit_batch_near(
+                    df, bid, corpus_dir, ledger_dir, band_ledger_dir,
+                    min_est_jaccard, ledger_base_table=ledger_base_table,
+                    band_base_table=band_base_table),
+                (_fingerprint_ledger(ledger_dir, ledger_base_table),
+                 _band_ledger(band_ledger_dir, band_base_table)),
+                compact_base_every)
 
 
 # ---------------------------------------------------------------------------
@@ -613,55 +516,25 @@ def run_incremental_corpus_ingest_near(
 # ever sees one drop at a time. Third ledger, same discipline as the
 # fingerprint and band ledgers: per batch, each segment's distinct-doc
 # count lands as the batch's own (seg key → count) partition rows —
-# ~16 B/segment, corpus-free, replay-idempotent (dynamic partition
-# overwrite on batch id). A batch's docs are scrubbed against the
-# HISTORY-SUM + WITHIN-BATCH counts, so boilerplate crossing the
-# threshold is removed from this batch forward.
+# ~16 B/segment, corpus-free, replay-idempotent. A batch's docs are
+# scrubbed against the HISTORY-SUM + WITHIN-BATCH counts, so boilerplate
+# crossing the threshold is removed from this batch forward. History
+# comes from the same two-tier _Ledger as the other two: its base holds
+# the per-key SUM of the completed epochs, probed with only this batch's
+# keys, and the partition-pruned tail adds the batches above it.
 #
 # Non-retroactivity is the documented trade: a segment that becomes
 # frequent at batch N stays in batches < N until a periodic batch
 # re-scrub of the corpus (remove_common_segments over the full corpus —
-# the compaction-style answer, run on the maintenance cadence). Counting
-# history sums the ledger per batch; at corpus scale the same two-tier
-# mirror as compact_ledger_base applies (bucketed base of completed
-# epochs + partition-pruned tail) — the ledger schema is already keyed
-# for it.
+# the compaction-style answer, run on the maintenance cadence).
 
-
-def compact_segment_ledger_base(
-    spark: SparkSession,
-    seg_ledger_dir: str,
-    base_table: str,
-    n_buckets: int = 64,
-    through_batch_id: int | None = None,
-) -> dict:
-    """Two-tier base for the segment-count ledger: SUM the per-batch
-    counts through ``through_batch_id`` into a key-bucketed managed
-    table (watermark in table properties — same contract as
-    :func:`compact_ledger_base`, including the completed-epochs-only
-    rule for in-stream compaction). After this, per-batch history
-    lookup scans the base ONCE with the batch's keys broadcast (no
-    base-side shuffle, ever) plus the partition-pruned tail."""
-    ledger = spark.read.parquet(seg_ledger_dir)
-    if through_batch_id is not None:
-        ledger = ledger.filter(F.col("_batch_id") <= F.lit(through_batch_id))
-    hi = ledger.agg(F.max("_batch_id")).first()[0]
-    if hi is None:
-        return {"base_table": base_table, "compacted_through": None}
-    (
-        ledger.groupBy("_k")
-        .agg(F.sum("_nd").alias("_nd"))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "_k")
-        .sortBy("_k")
-        .format("parquet")
-        .saveAsTable(base_table)
-    )
-    spark.sql(
-        f"ALTER TABLE {base_table} SET TBLPROPERTIES "
-        f"('{LEDGER_WATERMARK_PROP}'='{hi}')"
-    )
-    return {"base_table": base_table, "compacted_through": int(hi)}
+# the base SUMs the per-batch counts per key (`_k`-bucketed): per-batch
+# history lookup scans it ONCE with the batch's keys broadcast (no
+# base-side shuffle, ever) plus the partition-pruned tail
+_segment_ledger = partial(
+    _Ledger, "_k", lambda df: df.groupBy("_k").agg(F.sum("_nd").alias("_nd"))
+)
+compact_segment_ledger_base = partial(_compact_base, _segment_ledger)
 
 
 def scrub_batch_segments(
@@ -685,58 +558,33 @@ def scrub_batch_segments(
         _scrub_frequent_segments,
     )
 
-    spark = batch_df.sparkSession
     segs = _exploded_segments(batch_df, id_col, text_col, sep)
     batch_counts = (
         segs.groupBy("_k").agg(F.count_distinct(id_col).alias("_nd"))
     )
 
     parts = [batch_counts]
-    wm = -1
-    if seg_base_table is not None and spark.catalog.tableExists(seg_base_table):
-        wm = _ledger_watermark(spark, seg_base_table)
+    base, tail = _segment_ledger(seg_ledger_dir, seg_base_table).history(
+        batch_df.sparkSession, batch_id)
+    if base is not None:
         # base counts for ONLY this batch's keys: one in-place base scan
         # filtered by the broadcast batch key set — the base is never
         # shuffled, which is the whole point of the tier
-        parts.append(
-            spark.table(seg_base_table).join(
-                F.broadcast(batch_counts.select("_k")), "_k"
-            )
-        )
-    if os.path.isdir(seg_ledger_dir):
-        try:
-            parts.append(
-                spark.read.parquet(seg_ledger_dir)
-                .filter(
-                    (F.col("_batch_id") > F.lit(wm))        # above the base
-                    & (F.col("_batch_id") != F.lit(batch_id))  # replay safety
-                )
-                .select("_k", "_nd")
-            )
-        except Exception:
-            pass  # first batch: empty/absent ledger
-    totals = parts[0]
-    for p in parts[1:]:
-        totals = totals.unionByName(p.select("_k", "_nd"))
-    totals = totals.groupBy("_k").agg(F.sum("_nd").alias("_nd"))
-    frequent = totals.filter(F.col("_nd") >= min_docs).select("_k")
+        parts.append(base.join(F.broadcast(batch_counts.select("_k")), "_k"))
+    if tail is not None:
+        parts.append(tail)
+    totals = reduce(DataFrame.unionByName,
+                    [p.select("_k", "_nd") for p in parts])
+    frequent = (
+        totals.groupBy("_k").agg(F.sum("_nd").alias("_nd"))
+        .filter(F.col("_nd") >= min_docs).select("_k")
+    )
 
     cleaned = _scrub_frequent_segments(
         batch_df, segs, frequent, id_col, text_col, sep
-    ).withColumn("_batch_id", F.lit(batch_id))
-    (
-        cleaned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(out_dir)
     )
-    (
-        batch_counts.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(seg_ledger_dir)
-    )
+    _write_batch(cleaned, batch_id, out_dir)
+    _write_batch(batch_counts, batch_id, seg_ledger_dir)
 
 
 def run_incremental_segment_scrub(
@@ -756,34 +604,12 @@ def run_incremental_segment_scrub(
     the streaming checkpoint stops re-delivery, dynamic partition
     overwrite makes a replayed batch rewrite only its own output and
     ledger partitions. Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "64")
-        .json(input_dir)
-    )
-
-    def process(df: DataFrame, bid: int) -> None:
-        scrub_batch_segments(df, bid, out_dir, seg_ledger_dir,
-                             min_docs=min_docs, sep=sep,
-                             seg_base_table=seg_base_table)
-        if (
-            seg_base_table
-            and compact_base_every
-            and bid > 0
-            and (bid + 1) % compact_base_every == 0
-        ):
-            # completed epochs only (same rule as compact_ledger_base)
-            compact_segment_ledger_base(
-                spark, seg_ledger_dir, seg_base_table,
-                through_batch_id=bid - 1,
-            )
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run(spark, input_dir, checkpoint_dir, available_now,
+                lambda df, bid: scrub_batch_segments(
+                    df, bid, out_dir, seg_ledger_dir, min_docs=min_docs,
+                    sep=sep, seg_base_table=seg_base_table),
+                (_segment_ledger(seg_ledger_dir, seg_base_table),),
+                compact_base_every)
 
 
 # ---------------------------------------------------------------------------
@@ -836,23 +662,10 @@ def fuzzy_decon_batch(
     verifies at est Jaccard >= tau, land survivors under the batch's
     own partition (dynamic overwrite — replay rewrites exactly itself,
     the same exactly-once contract as every ledger here)."""
-    bands = _signature_bands(batch_df)
-    hits = (
-        bands.join(F.broadcast(bench_bands), ["band", "bkey"])
-        .filter(
-            _est_jaccard(F.col("sig"), F.col("h_sig")) >= min_est_jaccard
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    (
-        batch_df.join(hits, "doc_id", "left_anti")
-        .withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(out_dir)
-    )
+    kept = _drop_verified(batch_df, _signature_bands(batch_df),
+                          F.broadcast(bench_bands), ["band", "bkey"],
+                          min_est_jaccard)
+    _write_batch(kept, batch_id, out_dir)
 
 
 def run_streaming_fuzzy_decon(
@@ -881,18 +694,6 @@ def run_streaming_fuzzy_decon(
         durable_path=None if available_now
         else checkpoint_dir.rstrip("/") + "_bench_bands",
     )
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "64")
-        .json(input_dir)
-    )
-
-    def process(df: DataFrame, bid: int) -> None:
-        fuzzy_decon_batch(df, bid, bench_bands, out_dir, min_est_jaccard)
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run(spark, input_dir, checkpoint_dir, available_now,
+                lambda df, bid: fuzzy_decon_batch(df, bid, bench_bands,
+                                                  out_dir, min_est_jaccard))

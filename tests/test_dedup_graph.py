@@ -29,21 +29,11 @@ def test_distributed_star_path(spark):
     assert _cc(spark, EDGES, driver_threshold=0) == EXPECT
 
 
-def test_distributed_label_propagation_path(spark):
-    assert _cc(spark, EDGES, driver_threshold=0, algorithm="label") == EXPECT
-
-
 def test_distributed_nonconvergence_raises(spark):
-    # a 12-edge chain has diameter 12; 3 rounds of min-label propagation
-    # cannot converge — the operator must fail loudly, never return
-    # silently wrong component ids
+    # star contraction capped below its O(log² n) round need must fail
+    # loudly, never return silently wrong component ids
     import pytest
 
-    chain = [(i, i + 1) for i in range(12)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _cc(spark, chain, driver_threshold=0, max_iter=3, algorithm="label")
-    # star contraction likewise raises when capped below its O(log² n)
-    # round need
     long_chain = [(i, i + 1) for i in range(300)]
     with pytest.raises(RuntimeError, match="did not converge"):
         _cc(spark, long_chain, driver_threshold=0, max_iter=1)
@@ -53,11 +43,7 @@ def test_both_paths_agree_on_chain(spark):
     # a chain exercises multi-round propagation (diameter = length); kept
     # under max_iter so the distributed path must fully converge
     chain = [(i, i + 1) for i in range(12)]
-    assert (
-        _cc(spark, chain)
-        == _cc(spark, chain, driver_threshold=0)
-        == _cc(spark, chain, driver_threshold=0, algorithm="label")
-    )
+    assert _cc(spark, chain) == _cc(spark, chain, driver_threshold=0)
 
 
 def test_star_converges_on_deep_chain_in_log_rounds(spark):
