@@ -446,57 +446,8 @@ def _publish(
     raise CommitConflict(f"lost {max_retries} version races on {path}")
 
 
-def _per_file(spark: SparkSession, data_path: str, aggs) -> dict:
-    """{log-relative file: aggregate row} over a just-written commit
-    directory — one small aggregation over only the NEW files, grouped
-    by input_file_name (the shared scan of the stats and bloom
-    collectors)."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        spark.read.parquet(data_path)
-        .groupBy(F.input_file_name().alias("_f"))
-        .agg(*aggs)
-        .collect()
-    )
-    commit_dir = os.path.basename(data_path)
-    return {
-        os.path.join(
-            "data", commit_dir, os.path.basename(r["_f"].split("?")[0])
-        ): r
-        for r in rows
-    }
-
-
-def _collect_file_stats(
-    spark: SparkSession,
-    data_path: str,
-    stats_cols: tuple[str, ...],
-) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for ``stats_cols`` over a just-written commit
-    directory — the metadata every lakehouse format keeps per data
-    file. Values are JSON-rendered (numbers stay numbers; everything
-    else becomes its ISO string, which compares consistently)."""
-    from pyspark.sql import functions as F
-
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-
-    def render(v):
-        return v if isinstance(v, (int, float, bool)) or v is None else str(v)
-
-    return {
-        rel: {
-            c: [render(r[f"{c}__min"]), render(r[f"{c}__max"])]
-            for c in stats_cols
-        }
-        for rel, r in _per_file(spark, data_path, aggs).items()
-    }
-
-
 def _stat_probe(v, dtype=None):
-    """Render a RANGE-probe bound exactly as :func:`_collect_file_stats`
+    """Render a RANGE-probe bound exactly as :func:`_describe_files`
     rendered the stored min/max (numbers/bools native, everything else
     its ``str``) so overlap compares never cross Python types — a
     datetime bound against a string-rendered stat raised TypeError
@@ -547,7 +498,7 @@ def _bloom_hash(col, seed: int):
 
 def _probe_lit(v, dtype=None):
     """Probe-side literal rendered EXACTLY as the build side rendered
-    the column: :func:`_collect_bloom_filters` hashes
+    the column: :func:`_describe_files` hashes
     ``col.cast("string")`` — SPARK's rendering of the COLUMN's type —
     so the probe must cast the literal to the column's table-schema
     type before the shared string cast. Python's ``str(v)`` is not
@@ -572,43 +523,72 @@ def _column_dtypes(spark, snap: Snapshot) -> dict:
         return {}  # schema unresolvable: fall back to native-lit probes
 
 
-def _collect_bloom_filters(
+def _describe_files(
     spark: SparkSession,
     data_path: str,
+    schema,
+    stats_cols: tuple[str, ...],
     bloom_cols: tuple[str, ...],
-    bits: int = BLOOM_BITS,
-    k: int = BLOOM_HASHES,
-) -> dict[str, dict[str, str]]:
-    """Per-file Bloom bitsets for ``bloom_cols`` over a just-written
-    commit dir — the point-lookup complement of the [min,max] ranges
-    (an equality probe on a high-NDV key where every file's range
-    overlaps everything). collect_set of ≤ bits ints per file per hash
-    — KB-scale. Encoded ``"{bits}:{k}:" + base64(bitset)`` under the
-    reserved stats key ``"<col>__bloom"`` so it rides the existing
-    file_stats plumbing (log entry → checkpoint → snapshot) untouched."""
+) -> dict[str, dict]:
+    """{log-relative file: stats} over a just-written commit directory,
+    from ONE aggregation over only the NEW files, grouped by
+    input_file_name and read with the written frame's ``schema`` (so no
+    schema-inference job runs first):
+
+    - per-file [min, max] for ``stats_cols`` — the metadata every
+      lakehouse format keeps per data file. Values are JSON-rendered
+      (numbers stay numbers; everything else becomes its ISO string,
+      which compares consistently);
+    - per-file Bloom bitsets for ``bloom_cols`` — the point-lookup
+      complement of the ranges (an equality probe on a high-NDV key
+      where every file's range overlaps everything). collect_set of ≤
+      ``BLOOM_BITS`` ints per file per hash — KB-scale. Encoded
+      ``"{bits}:{k}:" + base64(bitset)`` under the reserved stats key
+      ``"<col>__bloom"`` so it rides the file_stats plumbing (log entry
+      → checkpoint → snapshot) untouched."""
     import base64
 
     from pyspark.sql import functions as F
 
-    aggs = [
+    bits, k = BLOOM_BITS, BLOOM_HASHES
+    aggs = []
+    for c in stats_cols:
+        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
+    aggs += [
         F.collect_set(
             F.pmod(_bloom_hash(F.col(c), i), F.lit(bits))
         ).alias(f"{c}__{i}")
         for c in bloom_cols
         for i in range(k)
     ]
-    out: dict[str, dict[str, str]] = {}
-    for rel, r in _per_file(spark, data_path, aggs).items():
-        enc: dict[str, str] = {}
+    rows = (
+        spark.read.schema(schema).parquet(data_path)
+        .groupBy(F.input_file_name().alias("_f"))
+        .agg(*aggs)
+        .collect()
+    )
+
+    def render(v):
+        return v if isinstance(v, (int, float, bool)) or v is None else str(v)
+
+    commit_dir = os.path.basename(data_path)
+    out: dict[str, dict] = {}
+    for r in rows:
+        desc = {
+            c: [render(r[f"{c}__min"]), render(r[f"{c}__max"])]
+            for c in stats_cols
+        }
         for c in bloom_cols:
             bitset = bytearray((bits + 7) // 8)
             for i in range(k):
                 for pos in r[f"{c}__{i}"] or []:
                     bitset[pos // 8] |= 1 << (pos % 8)
-            enc[f"{c}__bloom"] = (
+            desc[f"{c}__bloom"] = (
                 f"{bits}:{k}:" + base64.b64encode(bytes(bitset)).decode()
             )
-        out[rel] = enc
+        rel = os.path.join(
+            "data", commit_dir, os.path.basename(r["_f"].split("?")[0]))
+        out[rel] = desc
     return out
 
 
@@ -957,7 +937,7 @@ def _write_files(
     ``data/commit-<id>`` directory, invisible until a log entry names
     its files, and the new files are described for skipping — [min,
     max] for ``stats_cols`` and blooms for ``bloom_cols`` (one small
-    job each over only the new files) and, with ``analyze_stats``
+    job over only the new files) and, with ``analyze_stats``
     (True = all columns, or a tuple), mergeable stats partials under
     ``_stats/``. Column names are physical.
 
@@ -986,15 +966,9 @@ def _write_files(
     file_stats: dict[str, dict] = {}
     stats_rel = None
     try:
-        if stats_cols and added:
-            file_stats = _collect_file_stats(spark, data_path, stats_cols)
-        if bloom_cols and added:
-            # blooms ride the same per-file stats dict (reserved __bloom
-            # keys) so checkpoints and resolution need no new plumbing
-            for rel, enc in _collect_bloom_filters(
-                spark, data_path, bloom_cols
-            ).items():
-                file_stats.setdefault(rel, {}).update(enc)
+        if (stats_cols or bloom_cols) and added:
+            file_stats = _describe_files(
+                spark, data_path, df.schema, stats_cols, bloom_cols)
         if analyze_stats and added:
             stats_rel = _write_stats_partials(
                 spark, path, data_path,

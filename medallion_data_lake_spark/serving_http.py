@@ -100,9 +100,10 @@ _TYPE_NAMES = {str: "a string", int: "an integer", float: "a number",
 def field(req: dict, name: str, default=None):
     """``req[name]``, or ``default`` when it is absent or null, checked
     against its type in ``_FIELD_TYPES`` (a number is an int or a
-    float, and never a bool; a bool is only JSON true/false — the
-    string "false" is not; a list holds only strings). A wrong type is
-    the client's fault: ``ValueError``, answered 400."""
+    float, and never a bool; an integer fits in signed 64 bits; a bool
+    is only JSON true/false — the string "false" is not; a list holds
+    only strings). A wrong type is the client's fault: ``ValueError``,
+    answered 400."""
     v = req.get(name)
     if v is None:
         return default
@@ -117,6 +118,9 @@ def field(req: dict, name: str, default=None):
     if not ok:
         raise ValueError(f"field {name!r} must be {_TYPE_NAMES[kind]}, "
                          f"not {type(v).__name__}")
+    if kind is int and not -2**63 <= v < 2**63:
+        raise ValueError(f"field {name!r} must be a signed 64-bit "
+                         f"integer, not {v}")
     return v
 
 

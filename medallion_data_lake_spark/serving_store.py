@@ -116,8 +116,8 @@ class ServingStore:
 
     Every request is one prepared statement on the JVM — no Spark job,
     no scheduler, no shuffle. py4j round-trips are the residual cost:
-    one per bound parameter plus ONE for the whole bounded result
-    (:meth:`query`), whatever its row count.
+    ONE per statement (:meth:`query`), which binds the parameters and
+    returns the whole bounded result, whatever its row count.
 
     The connection is NOT thread-safe (JDBC connections never are):
     one thread at a time uses a store. The HTTP layer runs every store
@@ -180,24 +180,21 @@ class ServingStore:
               max_rows: int = ROW_CAP) -> dict:
         """Run one (optionally prepared) statement, return the bounded
         result as {"columns", "rows", "row_count"} — the same shape the
-        HTTP layer's run_bounded_df emits. The result comes back from
-        the JVM helper in one py4j call (:data:`_FETCH_SRC`)."""
+        HTTP layer's run_bounded_df emits. The parameters go to the JVM
+        helper (:data:`_FETCH_SRC`) as one pickle, and it binds them,
+        executes and returns the result in the same py4j call. An int
+        outside the signed 64-bit range raises there, never binding a
+        truncated value."""
         n = max(1, min(int(max_rows), ROW_CAP))
         ps = self._ps_cache.pop(sql, None)
         if ps is None:
             ps = self._conn.prepareStatement(sql)
+        # bool, int and float bind as they are; anything else as its str
+        bound = pickle.dumps([p if isinstance(p, (bool, int, float))
+                              else str(p) for p in params or []])
         try:
-            for i, p in enumerate(params or [], start=1):
-                if isinstance(p, bool):
-                    ps.setBoolean(i, p)
-                elif isinstance(p, int):
-                    ps.setLong(i, p)
-                elif isinstance(p, float):
-                    ps.setDouble(i, p)
-                else:
-                    ps.setString(i, str(p))
             # the pickle is our own helper's output: scalars and lists
-            labels, rows = pickle.loads(self._fetch.fetch(ps, n))
+            labels, rows = pickle.loads(self._fetch.fetch(ps, n, bound))
             out = {"columns": [c.lower() for c in labels],
                    "rows": [[_plain(v) for v in r] for r in rows],
                    "row_count": len(rows)}
@@ -262,24 +259,8 @@ class ServingStore:
         every query term's full posting list + group-by. Always exact;
         cost tracks the terms' total posting mass."""
         marks = ", ".join("?" for _ in terms)
-        # Spark's JDBC writer creates QUOTED lower-case columns; Derby
-        # folds unquoted identifiers to upper case, so every column
-        # reference here must stay quoted.
-        # ORDER BY the DECIMAL sum itself, casting to double only in
-        # the projection: the lake plan orders by the decimal(28,12)
-        # sum before casting, so ordering the double here could rank
-        # two docs differently at the k boundary when their decimal
-        # scores differ below double precision (r13 advice).
-        sql = (
-            'SELECT p."doc_id", COUNT(*) AS n_terms_matched, '
-            'CAST(SUM(CAST(p."impact" AS DECIMAL(28,12))) AS DOUBLE) '
-            "AS score "
-            f"FROM {T_POSTINGS} p "
-            f'WHERE p."term" IN ({marks}) '
-            'GROUP BY p."doc_id" '
-            'ORDER BY SUM(CAST(p."impact" AS DECIMAL(28,12))) DESC, '
-            f'p."doc_id" ASC FETCH FIRST {k} ROWS ONLY'
-        )
+        sql = _bm25_top_sql(
+            f'FROM {T_POSTINGS} p WHERE p."term" IN ({marks})', k)
         return self.query(sql, list(terms), max_rows=k)
 
     # pruned-path tuning — conservatism knobs, never correctness:
@@ -443,9 +424,7 @@ class ServingStore:
                 bucket *= 2
             ids = ids + [ids[0]] * (bucket - len(ids))
             vmarks = ", ".join("(?)" for _ in ids)
-            ref_sql = (
-                'SELECT CAST(SUM(CAST(p."impact" AS DECIMAL(28,12))) '
-                "AS DOUBLE) AS score "
+            ref_sql = _bm25_top_sql(
                 f'FROM {ovj}'
                 f'(SELECT DISTINCT "c1" AS "doc_id" FROM '
                 # Derby refuses an all-parameter VALUES column; the -1
@@ -453,15 +432,11 @@ class ServingStore:
                 f'(VALUES {vmarks}, (-1)) AS v("c1")) cand, '
                 f"{T_POSTINGS} p {ovt}"
                 'WHERE p."doc_id" = cand."doc_id" '
-                f'AND p."term" IN ({tmarks}) '
-                'GROUP BY p."doc_id" '
-                'ORDER BY SUM(CAST(p."impact" AS DECIMAL(28,12))) DESC '
-                f"FETCH FIRST {k} ROWS ONLY"
-            )
+                f'AND p."term" IN ({tmarks})', k)
             ref = self.query(ref_sql, ids + list(terms),
                              max_rows=k)["rows"]
-            if len(ref) >= k and float(ref[k - 1][0]) > theta:
-                theta = float(ref[k - 1][0])
+            if len(ref) >= k and float(ref[k - 1][2]) > theta:
+                theta = float(ref[k - 1][2])
                 split = _split_and_count(theta)
         if split is None:
             return None
@@ -470,17 +445,10 @@ class ServingStore:
         legs = " UNION ".join([leg] * n_legs)
         # final: exact re-score over the candidate union, which never
         # leaves the store engine
-        fin_sql = (
-            'SELECT p."doc_id", COUNT(*) AS n_terms_matched, '
-            'CAST(SUM(CAST(p."impact" AS DECIMAL(28,12))) AS DOUBLE) '
-            "AS score "
+        fin_sql = _bm25_top_sql(
             f"FROM {ovj}({legs}) cand, {T_POSTINGS} p {ovt}"
             'WHERE p."doc_id" = cand."doc_id" '
-            f'AND p."term" IN ({tmarks}) '
-            'GROUP BY p."doc_id" '
-            'ORDER BY SUM(CAST(p."impact" AS DECIMAL(28,12))) DESC, '
-            f'p."doc_id" ASC FETCH FIRST {k} ROWS ONLY'
-        )
+            f'AND p."term" IN ({tmarks})', k)
         out = self.query(fin_sql, cparams + list(terms), max_rows=k)
         if len(out["rows"]) < k:
             # matching docs may exist outside the candidate set; only
@@ -655,6 +623,28 @@ class ServingStore:
         return json.loads(out["rows"][0][0]) if out["rows"] else {}
 
 
+def _bm25_top_sql(source: str, k: int) -> str:
+    """The top-``k`` (doc_id, n_terms_matched, score) of the postings
+    that ``source`` (a FROM ... WHERE clause over postings ``p``)
+    selects: the full scan, the pruned path's final statement and its
+    refine step share it. The decimal(28,12) sum is aggregated once, in
+    a derived table, and the rows are ordered by it before the cast to
+    double: the lake plan orders by the decimal sum, so ordering the
+    double could rank two docs differently at the k boundary when
+    their decimal scores differ below double precision (r13 advice).
+    Spark's JDBC writer creates QUOTED lower-case columns and Derby
+    folds unquoted identifiers to upper case, so every exported column
+    stays quoted."""
+    return (
+        'SELECT t."doc_id", t.n_terms_matched, '
+        "CAST(t.s AS DOUBLE) AS score FROM ("
+        'SELECT p."doc_id", COUNT(*) AS n_terms_matched, '
+        'SUM(CAST(p."impact" AS DECIMAL(28,12))) AS s '
+        f'{source} GROUP BY p."doc_id") t '
+        f'ORDER BY t.s DESC, t."doc_id" ASC FETCH FIRST {k} ROWS ONLY'
+    )
+
+
 def _plain(v):
     """A fetched cell → JSON-safe Python value: a SQL DECIMAL becomes
     an int when its text is integral, else a float."""
@@ -666,17 +656,25 @@ def _plain(v):
         return float(v)
 
 
-# The JVM side of ServingStore.query: execute a bound statement, read
-# at most `max` rows, close the ResultSet and return [labels, rows] as
-# one pickle (Pyrolite, the pickler PySpark itself uses). Cells that
-# py4j would hand over as Python ints, floats, bools and strs pass
-# through (a REAL is widened through its text, as py4j does, so 0.1f
-# reads 0.1); DECIMAL stays a BigDecimal (Python: decimal.Decimal); any
-# other value (DATE, TIMESTAMP, ...) is sent as its toString().
+# The JVM side of ServingStore.query: bind the pickled parameter list
+# by type (bool, double, long, string; an int past 64 bits unpickles
+# as a BigInteger, whose longValueExact raises instead of truncating),
+# execute, read at most `max` rows, close the ResultSet and return
+# [labels, rows] as one pickle (Pyrolite, the pickler PySpark itself
+# uses). Cells that py4j would hand over as Python ints, floats, bools
+# and strs pass through (a REAL is widened through its text, as py4j
+# does, so 0.1f reads 0.1); DECIMAL stays a BigDecimal (Python:
+# decimal.Decimal); any other value (DATE, TIMESTAMP, ...) is sent as
+# its toString().
 _FETCH_SRC = """
 public class ServingStoreFetch {
-  public byte[] fetch(java.sql.PreparedStatement ps, int max)
-      throws Exception {
+  public byte[] fetch(java.sql.PreparedStatement ps, int max,
+      byte[] params) throws Exception {
+    java.util.List values =
+        (java.util.List) new net.razorvine.pickle.Unpickler().loads(params);
+    for (int i = 0; i < values.size(); i++) {
+      bind(ps, i + 1, values.get(i));
+    }
     ps.setMaxRows(max);
     java.sql.ResultSet rs = ps.executeQuery();
     try {
@@ -694,6 +692,21 @@ public class ServingStoreFetch {
           new Object[] {labels, rows});
     } finally {
       rs.close();
+    }
+  }
+
+  private static void bind(java.sql.PreparedStatement ps, int i, Object v)
+      throws Exception {
+    if (v instanceof Boolean) {
+      ps.setBoolean(i, ((Boolean) v).booleanValue());
+    } else if (v instanceof Double) {
+      ps.setDouble(i, ((Double) v).doubleValue());
+    } else if (v instanceof Integer || v instanceof Long) {
+      ps.setLong(i, ((Number) v).longValue());
+    } else if (v instanceof java.math.BigInteger) {
+      ps.setLong(i, ((java.math.BigInteger) v).longValueExact());
+    } else {
+      ps.setString(i, (String) v);
     }
   }
 
@@ -1022,9 +1035,11 @@ def run_store_search(store, req: dict, route: str = "/search",
     """HTTP dispatch for the store-backed search routes — same request
     and response shapes as the warm-session ``run_search``, plus
     ``"engine": "store"`` so callers can tell which tier answered.
-    Every route is one (or for /hybrid, two) prepared statements on the
-    exported store — zero Spark jobs. The caller owns the store's one
-    thread (the HTTP server's store worker)."""
+    Every route runs one to three prepared statements on the exported
+    store (/phrase and /similar one, /search two: the df dispatch and
+    the scan, /hybrid three), one py4j call each and zero Spark jobs.
+    The caller owns the store's one thread (the HTTP server's store
+    worker)."""
     k = max(1, min(field(req, "k", 10), ROW_CAP))
     t0 = time.time()
     if route == "/search":

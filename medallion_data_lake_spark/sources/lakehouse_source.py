@@ -321,7 +321,7 @@ class MedallionLakeBatchReader(DataSourceReader):
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         # logical -> physical for the stats keys; dtype for the probe
-        # rendering (same rendering _collect_file_stats stored)
+        # rendering (same rendering _describe_files stored)
         types = {
             f["name"]: StructField.fromJson(f).dataType
             for f in self._schema_json["fields"]

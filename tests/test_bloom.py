@@ -358,3 +358,44 @@ def test_rewrites_keep_skipping_metadata(spark, tmp_path):
     assert df.count() == 0 and report["files_skipped"] > 0, report
     df, report = read_table_pruned(spark, path, predicates={"g": (7, 9)})
     assert df.count() == 0 and report["files_read"] == 0, report
+
+
+def test_stats_and_bloom_commit_describes_files_in_one_job(
+        spark, tmp_path, monkeypatch):
+    """A commit with both ``stats_cols`` and ``bloom_cols`` describes its
+    new files in ONE Spark job after the data write: the ranges and the
+    blooms come from one aggregation, read with the written frame's
+    schema (no schema-inference job), and every file carries both.
+    AQE is off for the count: it runs an aggregation's shuffle map
+    stage as a job of its own, so with it on the one aggregation shows
+    as two jobs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    group = "describe-after-write"
+    write = DataFrameWriter.parquet
+
+    def parquet(self, *a, **kw):
+        write(self, *a, **kw)
+        sc.setJobGroup(group, "commit work after the data write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    df = spark.range(0, 200, numPartitions=2).select(
+        "id", F.col("id").cast("string").alias("tag"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        entry = commit(df, str(tmp_path / "vt"), stats_cols=("id", "tag"),
+                       bloom_cols=("id",))
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    stats = entry["file_stats"]
+    assert len(stats) == 2
+    for s in stats.values():
+        assert set(s) == {"id", "tag", "id__bloom"}
+        assert s["id__bloom"].startswith(f"{BLOOM_BITS}:")
+    assert sorted(s["id"] for s in stats.values()) == [[0, 99], [100, 199]]
+    assert sorted(s["tag"] for s in stats.values()) == [["0", "99"],
+                                                        ["100", "199"]]

@@ -238,6 +238,20 @@ def test_search_fields_are_type_checked():
         with pytest.raises(ValueError, match="n_per_branch.*must be"):
             run_store_search(None, {"terms": ["fox"], "vec_id": 7,
                                     "n_per_branch": n}, route="/hybrid")
+    # a JSON integer outside the signed 64-bit range is the client's
+    # fault too, not a store bind failure; k follows the same rule
+    far = [("/similar", {"vec_id": 2**63}), ("/similar", {"vec_id": 10**30}),
+           ("/similar", {"vec_id": -2**63 - 1}),
+           ("/hybrid", {"terms": ["fox"], "vec_id": 10**20}),
+           ("/search", {"terms": ["fox"], "k": 2**63})]
+    for route, req in far:
+        with pytest.raises(ValueError, match="signed 64-bit"):
+            run_store_search(None, req, route=route)
+        with pytest.raises(ValueError, match="signed 64-bit"):
+            run_search(None, route, req, default_rows=10)
+    with pytest.raises(ValueError, match="n_per_branch.*signed 64-bit"):
+        run_store_search(None, {"terms": ["fox"], "vec_id": 7,
+                                "n_per_branch": 2**64}, route="/hybrid")
 
 
 def test_curate_fields_are_type_checked():

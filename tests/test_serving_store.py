@@ -1015,6 +1015,144 @@ def test_store_query_is_one_round_trip_whatever_the_rows(spark, monkeypatch):
     assert counts[2] == counts[6], counts
 
 
+def _bound_per_call(store, sql: str, params: list) -> list:
+    """The rows of ``sql`` with each parameter bound by its own py4j
+    call (setBoolean/setLong/setDouble/setString, anything else as its
+    str) and each cell read with getObject — the reference that
+    :meth:`ServingStore.query`'s one-call binding must match."""
+    ps = store._conn.prepareStatement(sql)
+    try:
+        for i, p in enumerate(params, start=1):
+            if isinstance(p, bool):
+                ps.setBoolean(i, p)
+            elif isinstance(p, int):
+                ps.setLong(i, p)
+            elif isinstance(p, float):
+                ps.setDouble(i, p)
+            else:
+                ps.setString(i, str(p))
+        rs = ps.executeQuery()
+        n = rs.getMetaData().getColumnCount()
+        rows = []
+        while rs.next():
+            rows.append([rs.getObject(c) for c in range(1, n + 1)])
+        rs.close()
+        return rows
+    finally:
+        ps.close()
+
+
+def _params_store(spark, name: str) -> ServingStore:
+    store = ServingStore(spark, f"jdbc:derby:memory:{name};create=true")
+    store.execute('CREATE TABLE tp ("id" INT, "bo" BOOLEAN, "b" BIGINT, '
+                  '"d" DOUBLE, "v" VARCHAR(40))')
+    store.execute("INSERT INTO tp VALUES "
+                  "(1, TRUE, -5000000000, 0.25, 'fox'), "
+                  "(2, FALSE, 3000000000, -1.5, '2024-01-02'), "
+                  "(3, TRUE, 7, 1e300, 'héllo'), "
+                  "(4, FALSE, -9223372036854775808, 2.0, 'None')")
+    return store
+
+
+def test_store_query_binds_every_parameter_type(spark):
+    """Parameters bound inside the JVM helper select the same rows as
+    binding each one by its own py4j call: bools, a negative long, a
+    long above 2^31, a double, a string, and a non-primitive value
+    (a date, None), which binds as its str."""
+    import datetime
+
+    cases = [
+        ('SELECT "id" FROM tp WHERE "bo" = ? ORDER BY "id"', [True]),
+        ('SELECT "id" FROM tp WHERE "bo" = ? ORDER BY "id"', [False]),
+        ('SELECT "id" FROM tp WHERE "b" = ?', [-5000000000]),
+        ('SELECT "id" FROM tp WHERE "b" > ? ORDER BY "id"', [2**31]),
+        ('SELECT "id" FROM tp WHERE "d" = ?', [0.25]),
+        ('SELECT "id" FROM tp WHERE "v" = ?', ["héllo"]),
+        ('SELECT "id" FROM tp WHERE "v" = ?', [datetime.date(2024, 1, 2)]),
+        ('SELECT "id" FROM tp WHERE "v" = ?', [None]),
+        ('SELECT "id", "v" FROM tp WHERE "bo" = ? AND "b" < ? '
+         'AND "d" > ? AND "v" <> ? ORDER BY "id"', [True, 10, -1.0, "fox"]),
+    ]
+    with _params_store(spark, "params") as store:
+        for sql, params in cases:
+            got = store.query(sql, params)["rows"]
+            assert got, (sql, params)
+            assert got == _bound_per_call(store, sql, params), (sql, params)
+
+
+def test_store_query_refuses_an_int_past_64_bits(spark):
+    """A Python int outside the signed 64-bit range raises instead of
+    binding a truncated value: 2^63 wraps to the row holding -2^63 and
+    2^64 + 7 to the row holding 7, and neither is returned; the store
+    keeps serving."""
+    sql = 'SELECT "id" FROM tp WHERE "b" = ?'
+    with _params_store(spark, "overflow") as store:
+        for big in (2**63, 2**64 + 7, -2**63 - 1):
+            # the JVM's ArithmeticException, as pyspark re-raises it
+            with pytest.raises(Exception, match="BigInteger out of long"):
+                store.query(sql, [big])
+        assert store.query(sql, [-2**63])["rows"] == [[4]]
+        assert store.query(sql, [7])["rows"] == [[3]]
+
+
+def _routes_store(spark, name: str) -> ServingStore:
+    """An in-memory store, written by hand, that answers all four
+    routes, with /search on the df-dispatch path: the impact-ordered
+    index is present, and the terms' df is below ``PRUNE_MIN_DF``."""
+    store = _store_with_postings(spark, name)
+    for d in range(1, 9):
+        for t in ("quick", "brown"):
+            store.execute(
+                f"INSERT INTO mdls_postings VALUES ('{t}', {d}, {d / 16})")
+    store.execute('CREATE INDEX idx_postings_impact ON '
+                  'mdls_postings("term", "impact" DESC, "doc_id")')
+    store.execute('CREATE TABLE mdls_termstats ("term" VARCHAR(64), '
+                  '"df" BIGINT)')
+    store.execute("INSERT INTO mdls_termstats VALUES "
+                  "('fox', 8), ('quick', 8), ('brown', 8)")
+    store.execute('CREATE TABLE mdls_bigram_pos ("bigram" VARCHAR(129), '
+                  '"doc_id" BIGINT, "pos" INT)')
+    for d in range(1, 5):
+        store.execute("INSERT INTO mdls_bigram_pos VALUES "
+                      f"('the quick', {d}, 1), ('quick brown', {d}, 2), "
+                      f"('brown fox', {d}, 3)")
+    store.execute('CREATE TABLE mdls_neighbors ("vec_id" BIGINT, '
+                  '"cand_id" BIGINT, "rank" INT)')
+    for r in range(1, 6):
+        store.execute(f"INSERT INTO mdls_neighbors VALUES (1, {r + 1}, {r})")
+    store.execute('CREATE TABLE mdls_vec_manifest ("meta" VARCHAR(1024))')
+    store.execute("INSERT INTO mdls_vec_manifest VALUES "
+                  '(\'{"mode": "bruteforce", "k_max": 20}\')')
+    return store
+
+
+def test_store_routes_send_one_py4j_command_per_statement(spark,
+                                                          monkeypatch):
+    """Each store statement is one py4j command whatever its parameter
+    count: /search sends 2 (the df dispatch and the full scan) for 1
+    and for 3 terms, /phrase 1 for a 3-token phrase, /similar 1 and
+    /hybrid 3."""
+    calls = {
+        "bm25-1": lambda s: s.bm25(["fox"], k=5),
+        "bm25-3": lambda s: s.bm25(["fox", "quick", "brown"], k=5),
+        "phrase": lambda s: s.phrase(["quick", "brown", "fox"]),
+        "similar": lambda s: s.similar(1, k=5),
+        "hybrid": lambda s: s.hybrid(["fox", "quick"], 1, k=5),
+    }
+    with _routes_store(spark, "budget") as store:
+        for call in calls.values():  # prepare and cache the statements
+            assert call(store)["row_count"] > 0
+        assert store.last_bm25_mode == "full"
+        counts = {}
+        for name, call in calls.items():
+            sent = _counting_commands(spark, monkeypatch)
+            call(store)
+            counts[name] = len(sent)
+            monkeypatch.undo()
+    assert counts == {"bm25-1": 2, "bm25-3": 2, "phrase": 1, "similar": 1,
+                      "hybrid": 3}, counts
+
+
 def test_http_store_routes_share_one_py4j_connection(spark, monkeypatch,
                                                      caplog):
     """Store requests run on the server's one store thread: 20 HTTP
